@@ -1,10 +1,10 @@
-"""olap_project_spark — a PySpark-native analytics engine.
+"""olap_project_spark — the reference POS-analytics pipeline, on Spark.
 
-A from-scratch, Spark-first re-expression of the capabilities of the
-reference system ``pqkkkkk/olap-project`` (a Kafka → Spark Structured
-Streaming → partitioned Parquet → warehouse → OLAP-dashboard pipeline),
-plus the large-scale training-data operations (dedup, similarity search,
-text analysis, multimodal plumbing) such an engine needs at 100 TB.
+A Spark-first re-expression of the reference system
+``pqkkkkk/olap-project``: POS transactions stream through clean → route
+into four sinks, each day is exported to a warehouse, and the ten OLAP
+questions (Q0–Q9) are answered over it. The manifest-sink lakehouse
+gives the export atomic commits and row-level (GDPR) deletes.
 
 Layout
 ------
@@ -12,16 +12,18 @@ Layout
 - ``schemas``     canonical schemas (raw/processed transaction, rates, ...)
 - ``transforms``  clean / route / enrich — the streaming-ETL core as pure
                   batch-compatible DataFrame functions
-- ``queries``     the OLAP query library (reference Q0-Q9 shapes over both
-                  the transaction fact and the driver's star schema)
-- ``functions``   text analysis, dedup, similarity, multimodal ops
-- ``sources``     table registration + dimension providers (exchange rates)
-- ``streaming``   readStream pipelines, watermarks, windowed aggs, fan-out
-- ``export``      partition-pruned daily warehouse append (the DAG, as one job)
+- ``streaming``   readStream pipelines, the foreachBatch fan-out, windows
+- ``export``      daily warehouse export, its scheduler, and the
+                  manifest-sink lakehouse (commits, deletes, time travel)
+- ``queries``     Q0–Q9 over the cleaned transaction fact
+- ``sources``     exchange-rate dimension, POS simulator source, batch
+                  readers
+- ``functions``   the Arrow local-frame builder and the Z-order key
 
 Everything is DataFrame/SQL-declarative so Catalyst handles pushdown,
 pruning, join strategy, and whole-stage codegen; Python row-UDFs are
-banned from hot paths (see SURVEY.md §2.10, §4).
+banned from hot paths (see SURVEY.md §2.10, §4). The benchmark is
+``perfbench/`` at the repository root.
 """
 
 __version__ = "0.1.0"

@@ -796,35 +796,40 @@ class ManifestWriter(DataSourceArrowWriter):
                 )
                 pending, pending_rows = [], 0
 
-        if force_file:
-            flush()  # eager create: the empty file IS the payload
-        for batch in iterator:
-            if batch.num_rows == 0:
-                continue
-            if batch.schema != arrow_schema:
-                batch = pa.record_batch(
-                    [
-                        batch.column(
-                            batch.schema.get_field_index(c)
-                        ).cast(arrow_schema.field(c).type)
-                        for c in cols
-                    ],
-                    schema=arrow_schema,
-                )
-            n += batch.num_rows
-            feed_partition(batch)
-            feed_stats(batch)
-            if bloom is not None:
-                feed_bloom(batch)
-            if token_hashes is not None:
-                feed_tokens(batch)
-            pending.append(batch)
-            pending_rows += batch.num_rows
-            if pending_rows >= self.BATCH_ROWS:
-                flush()
-        flush()
-        if writer is not None:
-            writer.close()
+        try:
+            if force_file:
+                flush()  # eager create: the empty file IS the payload
+            for batch in iterator:
+                if batch.num_rows == 0:
+                    continue
+                if batch.schema != arrow_schema:
+                    batch = pa.record_batch(
+                        [
+                            batch.column(
+                                batch.schema.get_field_index(c)
+                            ).cast(arrow_schema.field(c).type)
+                            for c in cols
+                        ],
+                        schema=arrow_schema,
+                    )
+                n += batch.num_rows
+                feed_partition(batch)
+                feed_stats(batch)
+                if bloom is not None:
+                    feed_bloom(batch)
+                if token_hashes is not None:
+                    feed_tokens(batch)
+                pending.append(batch)
+                pending_rows += batch.num_rows
+                if pending_rows >= self.BATCH_ROWS:
+                    flush()
+            flush()
+        finally:
+            # a failing input (or flush) must not leak the open file
+            # handle; the partial file is an unreferenced staging
+            # orphan, collected by vacuum_snapshots
+            if writer is not None:
+                writer.close()
         if writer is None:
             return _PartCommit(file_name=None, n_rows=0)
         return _PartCommit(
@@ -5987,7 +5992,7 @@ def save_manifest(df: DataFrame, path: str, **options) -> dict:
     # commit stages its one empty file inside commit() itself
     return {
         "n_rows": sum(m.n_rows for m in msgs),
-        "n_files": sum(1 for m in msgs if m.file_name is not None),
+        "n_files": sum(1 for m in msgs if m.file_name is not None) or 1,
     }
 
 

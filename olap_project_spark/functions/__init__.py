@@ -1,3 +1,2 @@
-"""Column-level function library (text analysis, portable hashing,
-vector math, multimodal plumbing) — all JVM-native expressions or
-Arrow-batched Pandas UDFs; no row-at-a-time Python."""
+"""Small helpers shared by the library and its tests: the Arrow
+local-frame builder and the Z-order layout key."""

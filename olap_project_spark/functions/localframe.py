@@ -20,7 +20,7 @@ same rows, just slower."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, MapType, StructType, TimestampType
 
 
 def _as_struct(schema) -> StructType:
@@ -29,6 +29,33 @@ def _as_struct(schema) -> StructType:
     from pyspark.sql.types import _parse_datatype_string
 
     return _parse_datatype_string(schema)
+
+
+def _has_timestamp(dt) -> bool:
+    if isinstance(dt, TimestampType):
+        return True
+    if isinstance(dt, ArrayType):
+        return _has_timestamp(dt.elementType)
+    if isinstance(dt, MapType):
+        return _has_timestamp(dt.keyType) or _has_timestamp(dt.valueType)
+    if isinstance(dt, StructType):
+        return any(_has_timestamp(f.dataType) for f in dt.fields)
+    return False
+
+
+def _column(pa, values, spark_field, arrow_field):
+    """One Arrow column of the declared type. ``TimestampType`` values
+    go through the classic builder's own conversion (naive datetimes
+    are host-local wall clocks, aware ones are instants), so the frame
+    holds the same instants on any host time zone; nested timestamps
+    raise and take the classic path."""
+    dt = spark_field.dataType
+    if isinstance(dt, TimestampType):
+        micros = [dt.toInternal(v) for v in values]
+        return pa.array(micros, type=pa.int64()).cast(arrow_field.type)
+    if _has_timestamp(dt):
+        raise TypeError("nested timestamps take the classic builder")
+    return pa.array(list(values), type=arrow_field.type)
 
 
 def arrow_local_frame(spark: SparkSession, rows, schema) -> DataFrame:
@@ -48,7 +75,7 @@ def arrow_local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     data = [tuple(r) for r in rows]
     cols = list(zip(*data)) if data else [() for _ in asch]
     tbl = pa.Table.from_arrays(
-        [pa.array(list(c), type=f.type) for c, f in zip(cols, asch)],
+        [_column(pa, c, sf, af) for c, sf, af in zip(cols, st.fields, asch)],
         schema=asch,
     )
     df = spark.createDataFrame(tbl)

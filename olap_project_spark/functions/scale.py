@@ -1,308 +1,12 @@
-"""Scale tooling: bucketed co-located joins, salted aggregation, and
-salted joins for skewed keys (task brief "Partitioning & shuffle";
-SURVEY.md §4 shuffle-sizing row).
-
-These are the three manual levers that remain once AQE has done its
-part:
-- **bucketing** pre-shuffles a table ONCE at write time; every future
-  join/agg on the bucket key skips its exchange (the Spark analog of a
-  clustered index). Worth it for fact tables joined repeatedly on the
-  same key at 100 TB.
-- **salted aggregation** splits a hot grouping key across
-  ``n_salts`` partial groups, then merges — bounding any single task's
-  state when one key dominates (power-law user activity).
-- **salted join** spreads a skewed probe key over replicated build
-  rows. AQE's skew-join split handles moderate skew automatically;
-  salting is for the pathological single-key case AQE can't split
-  (one key larger than a whole executor).
-"""
+"""Z-order layout key: the clustering column a manifest-table rewrite
+sorts by so per-file min/max statistics prune on either of two
+columns (``export.manifest_sink`` compaction takes it as its sort
+key)."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# Aggregates that decompose into (partial, merge) with the same function.
-_SELF_MERGING = {"sum": F.sum, "min": F.min, "max": F.max}
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    path: str | None = None,
-) -> None:
-    """Persist ``df`` as a bucketed (and optionally sorted) table.
-    Joins/aggregations between tables bucketed identically on the join
-    key run with NO exchange (verified by plan in tests).
-
-    ``path`` makes the table EXTERNAL at that location instead of
-    managed under ``spark.sql.warehouse.dir`` — use it when the
-    warehouse dir (defaults to the process cwd) may not be writable;
-    bucketing metadata is preserved either way."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, str],
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation with a synthetic salt: ``aggs`` maps column
-    → one of sum/count/min/max. Result is identical to the direct
-    groupBy (all listed functions merge associatively); the benefit is
-    that a key with N rows contributes ≤ N/n_salts rows to any single
-    partial group.
-
-    The salt must vary WITHIN a key — it derives from
-    ``spark_partition_id`` + a row hash, never from the key itself."""
-    salt = F.pmod(
-        F.xxhash64(F.spark_partition_id(), F.monotonically_increasing_id()),
-        F.lit(n_salts),
-    ).alias("_salt")
-
-    partial_exprs, final_exprs = [], []
-    for col, fn in aggs.items():
-        out = f"{fn}_{col}"
-        if fn in _SELF_MERGING:
-            partial_exprs.append(_SELF_MERGING[fn](col).alias(out))
-            final_exprs.append(_SELF_MERGING[fn](out).alias(out))
-        elif fn == "count":
-            partial_exprs.append(F.count(col).alias(out))
-            final_exprs.append(F.sum(out).cast("bigint").alias(out))
-        else:
-            raise ValueError(f"unsupported salted aggregate: {fn}")
-
-    partial = df.withColumn("_salt", salt).groupBy(*keys, "_salt").agg(*partial_exprs)
-    return partial.groupBy(*keys).agg(*final_exprs)
-
-
-def salted_join(
-    skewed: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join where ``skewed``'s key distribution has pathological
-    hot keys: each skewed row picks a salt bucket, the small side is
-    replicated ``n_salts``× with every salt value, and the join runs on
-    (key, salt) — splitting each hot key across n_salts tasks.
-
-    Result rows are identical to the plain join; cost trades a
-    n_salts× replication of the small side for even task sizing."""
-    salt = F.pmod(
-        F.xxhash64(F.spark_partition_id(), F.monotonically_increasing_id()),
-        F.lit(n_salts),
-    )
-    left = skewed.withColumn("_salt", salt)
-    right = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    out = left.join(right, on=[key, "_salt"], how=how)
-    return out.drop("_salt")
-
-
-def hybrid_skew_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    hot_keys: DataFrame | None = None,
-    hot_min_rows: int = 1_000_000,
-) -> DataFrame:
-    """Hybrid hot/cold INNER equi-join — the fourth skew lever, for the
-    regime where the hot KEYS are few but their fact rows dwarf any
-    executor: the hot slice joins against a BROADCAST of the matching
-    dim rows (those fact rows never shuffle at all), while the cold
-    remainder takes the ordinary shuffle join. Output rows are exactly
-    the plain join's (each fact row lands in exactly one slice).
-
-    ``hot_keys``: one-column DataFrame named ``fact_key`` listing the
-    hot keys (callers with an exact hotness rule pass it directly);
-    when None, keys with more than ``hot_min_rows`` fact rows qualify —
-    derived by one map-side-combinable count over the fact, and small
-    by construction (≤ |fact| / hot_min_rows keys, so both the key
-    list and the dim slice are broadcast-safe).
-
-    vs ``salted_join``: salting spreads a hot key over n_salts tasks
-    but still shuffles every fact row and replicates the WHOLE small
-    side; the hybrid shuffles only cold rows and replicates only the
-    hot dim slice. Salting wins when the dim is tiny and skew is
-    pathological-single-key; the hybrid wins when the dim is too big
-    to replicate n_salts× but the hot slice of it is tiny."""
-    if hot_keys is None:
-        hot_keys = (
-            fact.groupBy(fact_key)
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") > hot_min_rows)
-            .select(fact_key)
-        )
-    fact_hot = fact.join(F.broadcast(hot_keys), fact_key, "left_semi")
-    fact_cold = fact.join(F.broadcast(hot_keys), fact_key, "left_anti")
-    dim_hot = dim.join(
-        F.broadcast(hot_keys.withColumnRenamed(fact_key, dim_key)),
-        dim_key,
-        "left_semi",
-    )
-    cond = F.col(fact_key) == F.col(dim_key)
-    joined_hot = fact_hot.join(F.broadcast(dim_hot), cond, "inner")
-    joined_cold = fact_cold.join(dim, cond, "inner")
-    return joined_hot.unionByName(joined_cold)
-
-
-def global_order_stats(
-    df: DataFrame,
-    order_by: list[Column],
-    sum_cols: dict[str, str] | None = None,
-    rank_col: str = "i",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Range-partitioned two-pass global ``row_number`` (and optional
-    exact prefix sums) — the scale-safe replacement for
-    ``Window.orderBy(...)`` with no partition spec, which serializes the
-    whole frame through ONE task (``Exchange SinglePartition``; a
-    straggler once the frame is an entity dimension that grows with the
-    data).
-
-    Pass 1: ``repartitionByRange`` on ``order_by`` (which must end in a
-    unique tiebreak column so no key straddles a boundary), then a
-    window PARTITIONED by ``spark_partition_id()`` computes each row's
-    local rank / local running sums — every partition sorts in
-    parallel. Pass 2: per-partition row counts (and per-partition sums
-    for each entry of ``sum_cols``: out_name → source column) roll up
-    to ≤ shuffle-partition rows; a triangular broadcast join over this
-    tiny frame turns them into per-partition OFFSETS, added back to the
-    local values. Global rank = local rank + rows in all lower ranges;
-    global prefix sum likewise. Results are EXACTLY the single-
-    partition window's output for any boundary placement, because every
-    rank/sum decomposes as (strictly-lower ranges) + (local prefix).
-
-    Determinism across the two passes: correctness requires BOTH
-    branches to observe identical post-shuffle partition ids. Exchange
-    reuse alone cannot be relied on — column pruning can make the two
-    exchange subtrees non-identical (the totals branch drops the
-    payload columns), and AQE coalesces each un-reused shuffle
-    independently by byte size, which would misalign ``_pid`` between
-    branches. The partition count is therefore ALWAYS explicit
-    (defaulting to ``spark.sql.shuffle.partitions``): an exchange with
-    a user-specified count (``REPARTITION_BY_NUM``) is never
-    AQE-coalesced, and ``RangePartitioner``'s boundary sampling is
-    seeded by partition index (deterministic for a given input), so
-    even two physically separate exchanges assign every row the same
-    partition id.
-
-    ``sum_cols`` columns should be exact types (decimal/bigint) —
-    prefix sums of doubles are summation-order-dependent by nature.
-
-    Returns ``df`` plus ``rank_col`` (bigint, 1-based) and one running-
-    sum column per ``sum_cols`` entry; the helper's ``_pid``/``_lrn``
-    scaffolding is dropped."""
-    from pyspark.sql.window import Window
-
-    sum_cols = sum_cols or {}
-    # Explicit partition count ALWAYS (see docstring): REPARTITION_BY_NUM
-    # exchanges are exempt from AQE coalescing, which pins identical
-    # _pid assignment across both branches even when column pruning
-    # prevents exchange reuse. Correctness never depends on boundary
-    # placement, only on branch agreement.
-    if not num_partitions:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    ranged = df.repartitionByRange(num_partitions, *order_by)
-    ranged = ranged.withColumn("_pid", F.spark_partition_id())
-    w_run = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    loc = ranged.withColumn("_lrn", F.row_number().over(w_run))
-    for out, src in sum_cols.items():
-        loc = loc.withColumn(f"_lsum_{out}", F.sum(src).over(w_run))
-
-    # Per-partition totals aggregate the RANGE-EXCHANGE output, not the
-    # windowed frame: partition count/sum don't need the running values,
-    # and hanging this branch off `ranged` lets AQE reuse the one range
-    # exchange while the Window executes exactly once (hanging it off
-    # `loc` would re-run the window on both branches — measured 2-4×
-    # slower, compounding when calls chain as in rfm_segments).
-    per_part = ranged.groupBy("_pid").agg(
-        F.count("*").alias("_cnt"),
-        *[F.sum(src).alias(f"_tot_{out}") for out, src in sum_cols.items()],
-    )
-    lower = per_part.select(
-        F.col("_pid").alias("_lpid"),
-        F.col("_cnt").alias("_lcnt"),
-        *[F.col(f"_tot_{out}").alias(f"_ltot_{out}") for out in sum_cols],
-    )
-    # triangular roll-up over ≤ n_parts rows — broadcast nested-loop on
-    # a bounded frame, never the data
-    offsets = (
-        per_part.join(
-            F.broadcast(lower), F.col("_lpid") < F.col("_pid"), "left"
-        )
-        .groupBy("_pid")
-        .agg(
-            F.coalesce(F.sum("_lcnt"), F.lit(0)).alias("_offcnt"),
-            *[
-                F.sum(f"_ltot_{out}").alias(f"_offsum_{out}")
-                for out in sum_cols
-            ],
-        )
-    )
-    out_df = loc.join(F.broadcast(offsets), "_pid").withColumn(
-        rank_col, (F.col("_offcnt") + F.col("_lrn")).cast("bigint")
-    )
-    for out in sum_cols:
-        out_df = out_df.withColumn(
-            out,
-            F.when(
-                F.col(f"_offsum_{out}").isNotNull(),
-                F.col(f"_offsum_{out}") + F.col(f"_lsum_{out}"),
-            ).otherwise(F.col(f"_lsum_{out}")),
-        )
-    drop = ["_pid", "_lrn", "_offcnt"] + [
-        c
-        for out in sum_cols
-        for c in (f"_lsum_{out}", f"_offsum_{out}")
-    ]
-    return out_df.drop(*drop)
-
-
-def ntile_from_rank(rank: Column, n: Column, k: int) -> Column:
-    """Exact ``ntile(k)`` tile id from a 1-based global rank and the
-    frame size ``n`` (SQL-standard semantics: the first ``n % k`` tiles
-    hold ``n div k + 1`` rows, the rest ``n div k``) — turns a
-    scale-safe global rank (``global_order_stats``) into the bucket id
-    without any single-partition window. True integer arithmetic (SQL
-    ``div``, exact at any bigint magnitude — never double true-division
-    with its 2^53 ceiling); matches
-    ``F.ntile(k).over(Window.orderBy(...))`` row-for-row. When
-    ``n < k`` every row lands in a size-1 "big" tile and the
-    small-tile branch (whose divisor would be zero) is guarded out
-    rather than relied on to be lazily skipped."""
-
-    def idiv(a: Column, b: Column | int) -> Column:
-        return F.call_function("div", a, F.lit(b) if isinstance(b, int) else b)
-
-    big = n % k
-    size_big = idiv(n - big, k) + 1  # n div k + 1
-    size_small = idiv(n - big, k)  # n div k; 0 when n < k
-    in_big = rank <= big * size_big
-    tile_big = idiv(rank - 1, size_big) + 1
-    tile_small = F.when(
-        size_small > 0, big + idiv(rank - big * size_big - 1, size_small) + 1
-    )
-    return F.when(in_big, tile_big).otherwise(tile_small).cast("int")
 
 
 def zorder_key(x: Column, y: Column, bits: int = 8) -> Column:
@@ -316,7 +20,7 @@ def zorder_key(x: Column, y: Column, bits: int = 8) -> Column:
 
     The interleaved terms occupy disjoint bit positions, so plain
     addition is a bitwise OR; everything stays in one codegen'd int64
-    expression. DuckDB equivalent: ``sql_zorder_key`` below.
+    expression.
 
     At 100 TB: ``df.repartitionByRange(n, zorder_key(...)).sortWithinPartitions(...)
     .write...`` produces the clustered layout; re-run per partition to
@@ -333,12 +37,3 @@ def zorder_key(x: Column, y: Column, bits: int = 8) -> Column:
         out = term if out is None else out + term
     assert out is not None
     return out.cast("bigint")
-
-
-def sql_zorder_key(x: str, y: str, bits: int = 8) -> str:
-    """The DuckDB-SQL text computing exactly ``zorder_key(x, y, bits)``."""
-    terms: list[str] = []
-    for i in range(bits):
-        terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
-        terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
-    return "CAST(" + " + ".join(terms) + " AS BIGINT)"

@@ -1,296 +1,2 @@
-"""The engine's query library.
-
-Every query is registered with:
-- a DataFrame implementation ``(spark, sf_dir) -> DataFrame`` — the
-  engine's native, Catalyst-optimized path;
-- optionally an ANSI-SQL oracle string DuckDB can run over the same
-  parquet tables (pre-registered views) — the driver's correctness gate.
-
-Cross-engine hash-stability conventions (every query obeys these):
-- calendar fields cast to INT on both sides (DuckDB's year()/hour()
-  return BIGINT natively, Spark's return INT);
-- counts stay BIGINT; DuckDB SUM(integer) is HUGEINT → CAST AS BIGINT;
-- money/doubles rounded to 2 dp, ratios to 6 dp, on both sides;
-- every LIMIT is preceded by a total order (unique tiebreaker) so the
-  selected rows are engine-independent;
-- matching column aliases in the DataFrame code and the SQL.
-"""
-
-from __future__ import annotations
-
-from collections.abc import Callable
-from dataclasses import dataclass
-
-from pyspark.sql import DataFrame, SparkSession
-
-
-@dataclass(frozen=True)
-class QueryDef:
-    name: str
-    fn: Callable[[SparkSession, str], DataFrame]
-    # ANSI SQL for DuckDB; None → rows-only check. May be registered as
-    # a zero-arg callable for oracles that are expensive to BUILD (the
-    # pos_* family embeds ~800 generated rows as a VALUES block) — the
-    # string is then materialized on first `.oracle` access and cached,
-    # so processes that never read oracles (bench, plan lint, most
-    # pytest workers) never pay the construction cost.
-    oracle_src: str | Callable[[], str] | None
-    doc: str
-
-    @property
-    def oracle(self) -> str | None:
-        src = self.oracle_src
-        if callable(src):
-            src = src()
-            object.__setattr__(self, "oracle_src", src)
-        return src
-
-
-QUERY_REGISTRY: dict[str, QueryDef] = {}
-
-
-def register(name: str, oracle: str | Callable[[], str] | None = None):
-    """Decorator registering a query implementation (+ optional oracle,
-    given as the SQL string or a zero-arg thunk returning it).
-
-    Duplicate names are an ERROR: a second registration would silently
-    shadow the first (and orphan its tests and driver-gate history).
-    Module re-imports are no-ops because the existing entry holds the
-    same function — only a genuinely different function collides."""
-
-    def deco(fn):
-        prev = QUERY_REGISTRY.get(name)
-        if prev is not None and (
-            prev.fn.__code__.co_filename != fn.__code__.co_filename
-            or prev.fn.__code__.co_firstlineno != fn.__code__.co_firstlineno
-        ):
-            raise ValueError(
-                f"query name {name!r} already registered by "
-                f"{prev.fn.__module__}.{prev.fn.__qualname__}; "
-                "pick a distinct name"
-            )
-        QUERY_REGISTRY[name] = QueryDef(name, fn, oracle, fn.__doc__ or "")
-        return fn
-
-    return deco
-
-
-# Session-scoped memo for intermediates shared by several queries (the
-# shingle set, the verified ngram pairs, the cast embeddings corpus). A
-# gate/bench run executes the whole registry against one corpus; without
-# this each consumer re-derives the intermediate from the raw scan. At
-# 100 TB the equivalent is materializing these once as bucketed tables.
-_SESSION_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def session_memo(
-    spark: SparkSession, sf_dir: str, kind: str, build: Callable[[], DataFrame]
-) -> DataFrame:
-    """Build-once, persist, and reuse ``kind`` for (session, corpus).
-
-    Keyed on ``applicationId`` — unique and stable for the life of the
-    context — not ``id()`` of a py4j proxy, which CPython can reuse
-    after the old proxy is collected (a stop/start cycle could then
-    hand a consumer a DataFrame bound to the dead context)."""
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    df = _SESSION_MEMO.get(key)
-    if df is None:
-        df = build().persist()
-        _SESSION_MEMO[key] = df
-    return df
-
-
-def clear_memo(spark: SparkSession | None = None, sf_dir: str | None = None) -> int:
-    """Unpersist and evict memoized intermediates; returns the number
-    evicted. Filters: only ``spark``'s context, only ``sf_dir``'s
-    corpus, or everything when both are None. A long-lived session
-    (notebook server, multi-corpus bench) calls this when it is done
-    with a corpus — otherwise the memo grows by (corpus × kinds)
-    persisted DataFrames for the life of the process."""
-    removed = 0
-    for key in list(_SESSION_MEMO):
-        app_id, key_sf, _kind = key
-        if spark is not None and app_id != spark.sparkContext.applicationId:
-            continue
-        if sf_dir is not None and key_sf != sf_dir:
-            continue
-        df = _SESSION_MEMO.pop(key)
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001 — context may already be stopped
-            pass
-        removed += 1
-    return removed
-
-
-def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Scan one star-schema table (ns-timestamp-normalizing). A plain
-    parquet scan: Catalyst pushes filters/projections into it, and
-    partition discovery applies when the table is a partitioned
-    directory (as our sinks write at scale)."""
-    from olap_project_spark.sources.registry import load_table
-
-    return load_table(spark, sf_dir, table)
-
-
-# The driver's correctness gate samples the FIRST 50 registered
-# queries. Rather than relying on module import order, the window is an
-# explicit name list and the registry is rebuilt in that order after all
-# modules import. Round-14 window (swapped in from the pre-staged r14
-# draft after the ts-encoding canaries passed 3/3): the 18 round-13
-# additions that have never had a driver CORRECTNESS row — the SQL/
-# lakehouse round-13 arc (constraints, NDV sketches, insert-overwrite,
-# warehouse DX, branch inventory, UPDATE/time-travel/CDF-tags/WAP SQL,
-# matview avg/join/minmax, log cache, merge breadth) plus the training
-# curation additions (SFT format, FIM transform, join-cardinality
-# estimate, stream-replace ingest) — and the 32 oldest remaining
-# round-7 refresh rows. Rotate the list each round to cycle coverage.
-GATE_WINDOW: tuple[str, ...] = (
-    "sft_format_stats",
-    "join_cardinality_estimate_stats",
-    "fim_transform_stats",
-    "stream_replace_ingest_stats",
-    "sql_constraints_stats",
-    "ndv_sketch_stats",
-    "insert_overwrite_stats",
-    "sql_warehouse_dx_stats",
-    "branch_inventory_stats",
-    "sql_update_stats",
-    "sql_time_travel_stats",
-    "matview_avg_stats",
-    "log_cache_stats",
-    "matview_join_stats",
-    "sql_merge_breadth_stats",
-    "matview_minmax_stats",
-    "sql_cdf_tags_stats",
-    "sql_wap_stats",
-    "sql_lateral_top_orders",
-    "knn_label_accuracy",
-    "lm_perplexity_buckets",
-    "ann_ivf_pq_topk",
-    "source_vocab_divergence",
-    "concurrent_session_peaks",
-    "char_entropy_buckets",
-    "bpe_merge_candidates",
-    "km_churn_survival",
-    "cuped_adjusted_metrics",
-    "mann_whitney_ab_test",
-    "media_phash_dup_pairs",
-    "temperature_mixture_plan",
-    "dedup_token_savings",
-    "ann_hubness_audit",
-    "chi2_type_dow_independence",
-    "readability_scores",
-    "cross_source_dup_matrix",
-    "zipf_law_fit",
-    "mixture_diversity_stats",
-    "value_outliers",
-    "cumulative_unique_users",
-    "hourly_spine_filled",
-    "hourly_spine_interpolated",
-    "kmv_distinct_users",
-    "props_variant_buckets",
-    "rolling_daily_active_users",
-    "salted_nation_event_stats",
-    "session_window_stats",
-    "timezone_business_hours",
-    "user_key_skew_profile",
-    "value_moment_shape",
-)
-
-
-# Round-15 window, pre-staged (swap into GATE_WINDOW at round-15 start
-# AFTER the ts-encoding canaries, per the standing procedure).
-# Composition: round 14 was an optimization round (no new queries), so
-# the draft is pure refresh — the 14 remaining round-7 rows
-# (CORRECTNESS_r07 order) + the 36 oldest round-8 rows
-# (CORRECTNESS_r08 order), all oracle-backed, none overlapping the
-# active round-14 window.
-GATE_WINDOW_R15_DRAFT: tuple[str, ...] = (
-    "value_robust_stats",
-    "weekly_value_growth",
-    "asof_last_order",
-    "bpe_token_stats",
-    "corpus_curation_report",
-    "customer_spend_deciles",
-    "discounted_revenue_or",
-    "doc_chunks",
-    "doc_fingerprints",
-    "doc_quality_scores",
-    "doc_rolling_hash",
-    "doc_split_assignment",
-    "dominant_part_suppliers",
-    "frame_sample_stats",
-    "ann_candidate_fraction",
-    "repeated_substring_spans",
-    "substring_dedup_savings",
-    "hard_negative_mining",
-    "source_embedding_drift",
-    "pos_stream_user_totals",
-    "pos_merchant_rollup",
-    "pos_fraud_rate_by_city",
-    "pos_rapid_transactions",
-    "pos_top_merchants",
-    "pos_weekend_comparison",
-    "pos_busiest_hours",
-    "pos_top_cities",
-    "pos_large_txn_profile",
-    "pos_fraud_trend",
-    "pos_above_avg_fraud_users",
-    "pos_daily_operations",
-    "lang_fertility_stats",
-    "revenue_increase_q6",
-    "priority_order_counts",
-    "local_supplier_volume",
-    "volume_shipping",
-    "national_market_share",
-    "returned_item_customers",
-    "promo_revenue_share",
-    "top_supplier_quarter",
-    "small_qty_revenue_loss",
-    "large_volume_customers",
-    "idle_rich_customers",
-    "q3_shipping_priority",
-    "supplier_nation_profit",
-    "min_cost_supplier",
-    "important_part_values",
-    "part_supplier_diversity",
-    "sole_late_suppliers",
-    "token_stats_by_source",
-)
-
-
-def _import_all() -> None:
-    # Import for registration side effects, then rebuild the registry
-    # with GATE_WINDOW first (the driver gate samples the first 50).
-    from olap_project_spark.queries import (  # noqa: F401
-        tpch_suite,
-        text,
-        temporal,
-        streaming_queries,
-        multimodal,
-        iterative,
-        relational,
-        similarity,
-        dedup,
-        curation,
-        events,
-        warehouse,
-        posfact,
-    )
-
-    ordered = [n for n in GATE_WINDOW if n in QUERY_REGISTRY]
-    ordered += [n for n in QUERY_REGISTRY if n not in GATE_WINDOW]
-    reordered = {n: QUERY_REGISTRY[n] for n in ordered}
-    QUERY_REGISTRY.clear()
-    QUERY_REGISTRY.update(reordered)
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    _import_all()
-    return {n: q.fn for n, q in QUERY_REGISTRY.items()}
-
-
-def all_oracles() -> dict[str, str]:
-    _import_all()
-    return {n: q.oracle for n, q in QUERY_REGISTRY.items() if q.oracle}
+"""OLAP queries over the cleaned transaction fact: the reference's ten
+questions (Q0–Q9) live in :mod:`olap_project_spark.queries.transactions`."""

@@ -6,9 +6,8 @@ queries the reference delegated to Power BI, owned natively here
 Each function takes a **cleaned** transactions DataFrame (the output of
 ``transforms.clean`` / ``transforms.enrich``) so the same library runs
 over the streaming sink, the warehouse export, or an ad-hoc batch load.
-They are exercised against a DuckDB oracle in
-``tests/test_transaction_queries.py`` (the driver's star-schema gate
-covers the same shapes via ``queries/events.py``).
+They are exercised against DuckDB in
+``tests/test_transaction_queries.py``.
 
 Scale: identical discipline to the rest of the library — map-side
 combinable aggregates, broadcast scalar stats, per-card windows,

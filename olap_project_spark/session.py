@@ -9,8 +9,8 @@ The reference hard-codes ``spark.sql.shuffle.partitions=3`` and
   tests and a 1000-executor cluster in production.
 - **UTC session timezone** so calendar extraction (hour/day/weekend keys)
   is deterministic and matches external oracles regardless of host TZ.
-- **Arrow enabled** for the few Pandas-UDF extension points (multimodal
-  decode, custom sketches) — never row-at-a-time Python UDFs.
+- **Arrow enabled** for the driver-local frames and the manifest sink's
+  ``mapInArrow`` writes — never row-at-a-time Python UDFs.
 - Shuffle partitions default to the local core count but AQE coalesces
   down; on a real cluster this is overridden per-deploy, not per-query.
 """

@@ -1,1 +1,3 @@
-from olap_project_spark.sources.registry import load_table, register_tables  # noqa: F401
+"""Input sources: the exchange-rate dimension (``rates``), the POS
+simulator data source (``pos_datasource``), batch CSV readers
+(``batch``) and the star-schema table loader (``registry``)."""

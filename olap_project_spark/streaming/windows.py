@@ -69,9 +69,8 @@ def session_event_counts(
     gap: str = "30 minutes",
     watermark: str = "30 minutes",
 ) -> DataFrame:
-    """Session windows (gap-based) per key: the streaming form of the
-    batch ``user_sessions`` query (queries/events.py) — same 30-minute
-    gap semantic, expressed with native session_window state."""
+    """Session windows (gap-based) per key: a 30-minute gap by
+    default, expressed with native session_window state."""
     return (
         events.withWatermark(ts_col, watermark)
         .groupBy(F.session_window(F.col(ts_col), gap).alias("sess"), F.col(key_col))

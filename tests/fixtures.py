@@ -61,5 +61,24 @@ def sample_rows():
     ]
 
 
-def raw_transactions_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(sample_rows(), schema=RAW_TRANSACTION_SCHEMA)
+def query_rows():
+    """``sample_rows()`` plus the rows the Q0–Q9 tests need beyond the
+    routing paths (FIXTURES.md §1): a second city and merchant so the
+    top-k queries rank, and one user/card with a 30-minute and a
+    5.5-hour gap so Q5's rapid-transaction window has one hit and one
+    miss."""
+    return sample_rows() + [
+        _row(user="10", day=22, time="09:00:00", ts="2024-01-22T09:00:00",
+             amount="$40.00", name="Target", city="Chicago", state="IL"),
+        _row(user="10", day=22, time="09:30:00", ts="2024-01-22T09:30:00",
+             amount="$2,500.00", name="Target", city="Chicago", state="IL"),
+        _row(user="10", day=22, time="15:00:00", ts="2024-01-22T15:00:00",
+             amount="$15.25", name="Walgreens", city="Chicago", state="IL",
+             fraud="Yes"),
+    ]
+
+
+def raw_transactions_df(spark: SparkSession, rows=None) -> DataFrame:
+    return spark.createDataFrame(
+        sample_rows() if rows is None else rows, schema=RAW_TRANSACTION_SCHEMA
+    )

@@ -446,7 +446,7 @@ class TestAddColumn:
 
     def test_add_via_sql(self, spark, tmp_path, sf_dir):
         from olap_project_spark.export.lakehouse_sql import LakehouseSQL
-        from olap_project_spark.sources import register_tables
+        from olap_project_spark.sources.registry import register_tables
 
         register_tables(spark, sf_dir)
         lk = LakehouseSQL(spark, str(tmp_path))
@@ -508,7 +508,7 @@ class TestWidenColumn:
         self, spark, tmp_path, sf_dir
     ):
         from olap_project_spark.export.lakehouse_sql import LakehouseSQL
-        from olap_project_spark.sources import register_tables
+        from olap_project_spark.sources.registry import register_tables
 
         register_tables(spark, sf_dir)
         lk = LakehouseSQL(spark, str(tmp_path))

@@ -10,34 +10,37 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from olap_project_spark.schemas import RAW_TRANSACTION_SCHEMA
-from olap_project_spark.sources.batch import read_raw_csv
 from olap_project_spark.streaming.pipeline import (
     decode_kafka_value,
     encode_kafka_payload,
 )
+from tests.fixtures import query_rows, raw_transactions_df
 
 
 class TestKafkaWireFormat:
-    def test_round_trip_preserves_rows(self, spark, raw_transactions_csv):
-        raw = read_raw_csv(spark, raw_transactions_csv)
+    def test_round_trip_preserves_rows(self, spark):
+        raw = raw_transactions_df(spark, query_rows())
         wire = encode_kafka_payload(raw)
         back = decode_kafka_value(wire)
         assert back.schema == raw.schema
-        orig = sorted(map(tuple, raw.collect()))
-        rt = sorted(map(tuple, back.collect()))
+        def none_safe(t):
+            return tuple((v is None, v) for v in t)
+
+        orig = sorted(map(tuple, raw.collect()), key=none_safe)
+        rt = sorted(map(tuple, back.collect()), key=none_safe)
         assert rt == orig
 
-    def test_key_is_card_string(self, spark, raw_transactions_csv):
-        raw = read_raw_csv(spark, raw_transactions_csv)
+    def test_key_is_card_string(self, spark):
+        raw = raw_transactions_df(spark, query_rows())
         wire = encode_kafka_payload(raw)
         assert [f.name for f in wire.schema.fields] == ["key", "value"]
         row = wire.filter(F.col("key").isNotNull()).first()
         assert isinstance(row["key"], str)
 
-    def test_decode_tolerates_binary_value(self, spark, raw_transactions_csv):
+    def test_decode_tolerates_binary_value(self, spark):
         """The real Kafka source surfaces value as BINARY — the decoder
         must cast, not assume string."""
-        raw = read_raw_csv(spark, raw_transactions_csv)
+        raw = raw_transactions_df(spark, query_rows())
         wire = encode_kafka_payload(raw).select(
             "key", F.col("value").cast("binary").alias("value")
         )

@@ -1446,3 +1446,43 @@ class TestReviewFixesB:
         after = read_committed(registered, path, self.NUM_SCHEMA)
         assert after.count() == 10
         assert after.filter("v = 9.0").count() == 4
+
+
+class TestMaxVersionsOfferLadder:
+    def test_offer_ladder_with_cap(self, spark):
+        """maxVersionsPerTrigger caps each offer: over a 5-version log
+        with cap 2 the reader offers versions 2, 4, then 5."""
+        import tempfile
+
+        from olap_project_spark.export.manifest_sink import (
+            ManifestStreamReader,
+            ensure_manifest_sink,
+        )
+
+        fmt = ensure_manifest_sink(spark)
+        path = tempfile.mkdtemp(prefix="bp_ladder_") + "/t"
+        for i in range(5):
+            (
+                spark.createDataFrame([(i, "x")], "k bigint, v string")
+                .repartition(1)
+                .write.format(fmt)
+                .option("path", path)
+                .mode("append")
+                .save()
+            )
+        from pyspark.sql.types import StructType
+
+        r = ManifestStreamReader(
+            {"path": path, "maxVersionsPerTrigger": "2"},
+            schema=StructType.fromDDL("k bigint, v string"),
+        )
+        offers = []
+        first = r.latestOffset()["version"]  # Spark polls before initial
+        offers.append(first)
+        r.initialOffset()
+        r.partitions({"version": 0}, {"version": first})
+        for _ in range(2):
+            end = r.latestOffset()["version"]
+            offers.append(end)
+            r.partitions({"version": offers[-2]}, {"version": end})
+        assert offers == [2, 4, 5]

@@ -1207,3 +1207,45 @@ class TestMultiFieldSpec:
         )
         kept_u, total = plan_pruned_files(path, "u", 3, 3)
         assert total == 8 and len(kept_u) < total
+
+
+class TestBatchReaderPlan:
+    def test_public_batch_reader_plan_and_pruning(self, spark, tmp_path):
+        """The public DataSource read compiles to a BatchScan of the
+        scoped source with the pushed filter RE-APPLIED above it in
+        the same codegen stage (the conservative-pruning contract),
+        and the pushdown shrinks the scan's input partitions to the
+        files the zone maps cannot exclude."""
+        from olap_project_spark.export.manifest_sink import (
+            ensure_manifest_sink,
+        )
+
+        child = spark.newSession()
+        child.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+        fmt = ensure_manifest_sink(child)
+        path = str(tmp_path / "reader_plan")
+        for lo in (0, 100, 200, 300):
+            (
+                child.range(lo, lo + 100)
+                .selectExpr("id as k", "cast(1.0 as double) as v")
+                .repartition(1)
+                .write.format(fmt)
+                .option("path", path)
+                .mode("append")
+                .save()
+            )
+        df = (
+            child.read.format(fmt)
+            .option("path", path)
+            .option("pushdown", "true")
+            .load()
+            .filter("k >= 250")
+        )
+        p = df._jdf.queryExecution().executedPlan().toString()
+        assert "BatchScan" in p
+        assert "(k#" in p and ">= 250" in p  # Spark re-applies the filter
+        assert df.rdd.getNumPartitions() == 2  # 2 of 4 files pruned
+        assert df.count() == 150
+        # restore the parent as the JVM-thread-active session for
+        # later writers in the suite
+        ensure_manifest_sink(spark)

@@ -968,3 +968,56 @@ class TestStreamTail:
         _write(registered, path, [(7, "x")])
         stream = registered.readStream.format(fmt).option("path", path).load()
         assert [f.name for f in stream.schema.fields] == ["k", "v"]
+
+
+class TestWriterFailureAndReporting:
+    def test_write_closes_parquet_writer_when_input_fails(
+        self, tmp_path, monkeypatch
+    ):
+        """An exception raised by the batch iterator part-way through a
+        task must still close the task's ParquetWriter."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        from olap_project_spark.export.manifest_sink import ManifestWriter
+
+        opened = []
+        real = pq.ParquetWriter
+
+        class Tracking(real):
+            def __init__(self, *a, **kw):
+                super().__init__(*a, **kw)
+                opened.append(self)
+
+        monkeypatch.setattr(pq, "ParquetWriter", Tracking)
+        schema = StructType([StructField("k", LongType())])
+        writer = ManifestWriter(
+            {"path": str(tmp_path / "t")}, overwrite=False, schema=schema
+        )
+        writer.BATCH_ROWS = 2  # flush (and open the file) on the first batch
+
+        def batches():
+            yield pa.record_batch([pa.array([1, 2, 3], pa.int64())], names=["k"])
+            raise RuntimeError("input failed mid-task")
+
+        with pytest.raises(RuntimeError, match="mid-task"):
+            writer.write(batches())
+        assert len(opened) == 1
+        assert not opened[0].is_open
+
+    def test_save_manifest_reports_files_of_all_empty_commit(
+        self, spark, tmp_path
+    ):
+        """An all-empty commit stages one empty file; the returned
+        n_files is the count the manifest records."""
+        from olap_project_spark.export.manifest_sink import (
+            save_manifest,
+            table_history,
+        )
+
+        path = str(tmp_path / "empty")
+        st = save_manifest(spark.range(0).selectExpr("id AS k"), path)
+        (entry,) = table_history(path)
+        assert st == {"n_rows": 0, "n_files": entry["n_files"]}
+        assert entry["n_files"] == 1

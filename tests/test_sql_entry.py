@@ -4,7 +4,7 @@ Spark SQL directly — same catalog names the DuckDB oracle uses."""
 
 from __future__ import annotations
 
-from olap_project_spark.sources import register_tables
+from olap_project_spark.sources.registry import register_tables
 
 
 class TestSqlEntry:

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from olap_project_spark.export.daily import export_partition
 from olap_project_spark.schemas import OUTPUT_COLUMNS
-from olap_project_spark.sources import load_table
+from olap_project_spark.sources.registry import load_table
 from olap_project_spark.streaming import (
     dedup_stream,
     read_file_stream,

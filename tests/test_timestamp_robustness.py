@@ -6,8 +6,8 @@ round 2: ``timestamp[us]``, which Spark 4 reads as TIMESTAMP_NTZ and
 which broke window queries, numeric casts, and ``withWatermark`` —
 see sources/registry.py module docstring). This test writes the same
 events fixture THREE ways and asserts the loader plus one window query
-plus one watermarked streaming query work identically on all of them,
-so no future encoding drift can zero a round again.
+work identically on all of them, so no future encoding drift can zero
+a round again.
 """
 
 from __future__ import annotations
@@ -99,29 +99,25 @@ class TestTimestampRobustness:
         got = sorted((r.user_id, r.gap_s) for r in gaps)
         assert got == [(1, 30.0), (1, 3970.0), (2, 30.0), (2, 7190.0)]
 
-    def test_watermark_streaming_query(self, spark, events_dir):
-        """withWatermark must accept the normalized column (the round-2
-        bench died here with EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE)."""
-        from olap_project_spark.queries.streaming_queries import _event_stream
 
-        child = spark.newSession()
-        child.conf.set("spark.sql.shuffle.partitions", "2")
-        stream = _event_stream(child, events_dir)
-        agg = (
-            stream.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count("*").alias("n"))
-        )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("ts_robustness_wm")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        # Emission rule: window_end <= max(ts) - 10 min. max ts = 02:00:30,
-        # so only the 00:00 window (end 01:00) emits: click×2, view×1;
-        # purchase at 01:06:40 is in the 01:00 window (unemitted).
-        rows = {(r.event_type, r.n) for r in child.table("ts_robustness_wm").collect()}
-        assert rows == {("click", 2), ("view", 1)}
+def test_load_table_pins_utc_on_non_utc_session(spark, sf_dir):
+    """The NTZ→TimestampType cast is wall-clock-preserving only under
+    a UTC session timezone; load_table must pin it so a driver session
+    in another zone still produces oracle-identical epoch values."""
+    import duckdb
+
+    ns = spark.newSession()
+    ns.conf.set("spark.sql.ansi.enabled", "true")
+    ns.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    ns.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    df = load_table(ns, sf_dir, "events")
+    got = df.selectExpr(
+        "CAST(min(ts) AS STRING) AS s", "min(unix_micros(ts)) AS u"
+    ).collect()[0]
+    exp = duckdb.sql(
+        "SELECT CAST(min(ts) AS VARCHAR),"
+        "       CAST(epoch_us(min(ts)) AS BIGINT)"
+        f" FROM read_parquet('{sf_dir}/events.parquet')"
+    ).fetchone()
+    assert got["s"][:19] == exp[0][:19]
+    assert got["u"] == exp[1]
