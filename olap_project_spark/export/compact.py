@@ -3,8 +3,8 @@
 The reference controlled file count with ``coalesce(1)`` before every
 sink (spark_streaming_consumer.py:317, :350) — one writer task, one
 file per micro-batch, and a single-threaded bottleneck at any real
-rate. Our sinks instead write with natural parallelism +
-``maxRecordsPerFile``; the cost is many small files accumulating in
+rate. Our sinks instead write one file per task, sink and day
+partition, in parallel; the cost is many small files accumulating in
 hot partitions. This job is the periodic fix: rewrite a partition's
 files into ~target-sized ones.
 

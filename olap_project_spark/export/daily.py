@@ -18,7 +18,7 @@ with its ``Year=`` vs ``year=`` casing bug, SURVEY.md §1.3)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from olap_project_spark.schemas import OUTPUT_COLUMNS
@@ -33,23 +33,23 @@ def export_partition(
     day: int,
 ) -> int:
     """Append one day's partition from the streaming sink to the
-    warehouse table. Returns the row count exported.
+    warehouse table. Returns the number of rows this call appended,
+    counted by an ``Observation`` on the append itself (no re-scan).
 
     Scale: partition pruning makes this O(day), not O(history); the
-    append is shuffle-free (narrow read → write). Idempotency at the
-    warehouse is by (partition, load date) — re-running a day appends
-    again, matching the reference's WRITE_APPEND semantics."""
+    append is shuffle-free (narrow read → write). Re-running a day
+    appends it again, matching the reference's WRITE_APPEND semantics."""
+    rows = Observation()
     day_df = (
         spark.read.parquet(source_dir)
         .where(
             (F.col("Year") == year) & (F.col("Month") == month) & (F.col("Day") == day)
         )
         .select(*OUTPUT_COLUMNS)  # schema contract (P19)
+        .observe(rows, F.count(F.lit(1)).alias("rows"))
     )
     day_df.write.mode("append").partitionBy("Year", "Month", "Day").parquet(target_dir)
-    return spark.read.parquet(target_dir).where(
-        (F.col("Year") == year) & (F.col("Month") == month) & (F.col("Day") == day)
-    ).count()
+    return rows.get["rows"]
 
 
 def read_warehouse(spark: SparkSession, target_dir: str) -> DataFrame:

@@ -1,37 +1,49 @@
 """The streaming ingest pipeline: source → clean/route (the *same* pure
-functions as batch) → multi-sink fan-out.
+functions as batch) → four sinks.
 
-Reference behavior reproduced, with its two structural defects fixed
-(SURVEY.md §3.1 step 4, §2.9):
-
-1. The reference starts up to five independent StreamingQueries, each
-   re-reading Kafka (:442-505). Here ONE query consumes the source and
-   ``foreachBatch`` fans out each micro-batch to every sink — the batch
-   is computed once, persisted, and the four routed filters are cheap
-   scans over it.
-2. ``coalesce(1)`` small-file control (:317, :350) becomes a
-   configurable sink parallelism: at 100 TB you want
-   ``maxRecordsPerFile`` + partitionBy, never a single writer task.
+The reference starts up to five independent StreamingQueries, each
+re-reading Kafka (:442-505; SURVEY.md §3.1 step 4, §2.9). Here ONE
+query consumes the source. ``clean`` and the ``route_flags`` predicates
+are applied once, to the stream, and each micro-batch is ONE Spark job:
+every ``mapInArrow`` task writes its own rows of all four sinks with
+pyarrow and returns its row count per sink.
 
 Sinks (K1-K3): valid/fraud → Parquet partitioned by Year/Month/Day
 (ST6); error → Parquet; invalid → CSV audit log with the
-``invalid_log`` projection (F4). All under one checkpointed query —
-exactly-once per sink directory via the batch-id-transactional file
-sink.
+``invalid_log`` columns (F4). The tasks write with ``os`` and pyarrow,
+so ``out_dir`` is a local or POSIX-mounted path.
+
+``foreachBatch`` is at-least-once: a batch that fails after its writes
+runs again when the query restarts from its checkpoint. Every file is
+named by (query id, batch id, task partition), and the query id is kept
+in the checkpoint, so the sinks are idempotent per (query, batch, task
+partition): a replayed batch overwrites its own files instead of
+appending them again, provided it is partitioned as before (a file
+source replays the same files).
 """
 
 from __future__ import annotations
 
+import os
+from collections import defaultdict
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from olap_project_spark.schemas import RAW_TRANSACTION_SCHEMA
-from olap_project_spark.transforms.clean import clean, to_output
-from olap_project_spark.transforms.route import invalid_log, route
+from olap_project_spark.schemas import (
+    DEFAULT_VND_PER_USD,
+    INVALID_LOG_COLUMNS,
+    OUTPUT_COLUMNS,
+    RAW_TRANSACTION_SCHEMA,
+)
+from olap_project_spark.transforms.clean import clean
+from olap_project_spark.transforms.route import invalid_reason, route_flags
 
 PARTITION_COLS = ["Year", "Month", "Day"]
+DATA_COLS = [c for c in OUTPUT_COLUMNS if c not in PARTITION_COLS]
+HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
 def read_file_stream(
@@ -49,8 +61,6 @@ def encode_kafka_payload(df: DataFrame, key_col: str = "Card") -> DataFrame:
     key is the card number (keeps a card's events ordered within a
     topic partition). Pure DataFrame→DataFrame so the format is
     testable without a broker — the sink merely appends the transport."""
-    from pyspark.sql import functions as F
-
     return df.select(
         F.col(key_col).cast("string").alias("key"),
         F.to_json(F.struct(*df.columns)).alias("value"),
@@ -62,8 +72,6 @@ def decode_kafka_value(df: DataFrame) -> DataFrame:
     spark_streaming_consumer.py:177-212): JSON-decode the string value
     against the fixed raw-transaction schema and flatten. Inverse of
     ``encode_kafka_payload`` (checked by test_kafka_wire_format)."""
-    from pyspark.sql import functions as F
-
     return df.select(
         F.from_json(F.col("value").cast("string"), RAW_TRANSACTION_SCHEMA).alias(
             "data"
@@ -130,6 +138,64 @@ def write_kafka_stream(
     )
 
 
+def _sink_task(out_dir: str, sink_format: str, schema, name: str):
+    """The ``mapInArrow`` function that writes one partition of a routed
+    micro-batch to all four sinks, as ``part-<name>-<partition id>``
+    files moved into place from hidden names, and yields its row count
+    per sink."""
+    day_csv = "_csv" if sink_format == "csv" else None
+    # sink -> (columns, CSV line column or None for parquet, partitioned)
+    layouts = {
+        "valid": (DATA_COLS, day_csv, True),
+        "fraud": (DATA_COLS, day_csv, True),
+        "error": (OUTPUT_COLUMNS, None, False),
+        "invalid": (INVALID_LOG_COLUMNS, "_log", False),
+    }
+
+    def write(batches):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        part = f"part-{name}-{ctx.partitionId():05d}"
+        batches = list(batches)
+        table = pa.Table.from_batches(batches) if batches else schema.empty_table()
+
+        def put(directory, rows, cols, csv_col):
+            os.makedirs(directory, exist_ok=True)
+            tmp = os.path.join(directory, f".{part}.{ctx.attemptNumber()}.tmp")
+            if csv_col is None:
+                pq.write_table(rows.select(cols), tmp, compression="snappy")
+            else:
+                with open(tmp, "w", encoding="utf-8") as f:
+                    for line in [",".join(cols), *rows[csv_col].to_pylist()]:
+                        f.write(f"{line}\n")
+            ext = "snappy.parquet" if csv_col is None else "csv"
+            os.replace(tmp, os.path.join(directory, f"{part}.{ext}"))
+
+        for sink, (cols, csv_col, partitioned) in layouts.items():
+            rows = table.filter(table[f"_{sink}"])
+            if partitioned:
+                days = defaultdict(list)
+                keys = zip(*(rows[c].to_pylist() for c in PARTITION_COLS))
+                for i, key in enumerate(keys):
+                    days["/".join(
+                        f"{c}={HIVE_NULL if v is None else v}"
+                        for c, v in zip(PARTITION_COLS, key)
+                    )].append(i)
+                parts = {d: rows.take(idx) for d, idx in days.items()}
+            else:
+                # partition 0 writes even an empty file, so a batch
+                # without such rows leaves the sink readable
+                parts = {"": rows} if rows.num_rows or ctx.partitionId() == 0 else {}
+            for sub, t in parts.items():
+                put(os.path.join(out_dir, sink, sub), t, cols, csv_col)
+            yield pa.RecordBatch.from_pydict({"sink": [sink], "rows": [rows.num_rows]})
+
+    return write
+
+
 def start_pipeline(
     raw_stream: DataFrame,
     out_dir: str,
@@ -138,65 +204,59 @@ def start_pipeline(
     mode: str = "reference",
     processed_at: str | None = None,
     trigger: dict | None = None,
-    max_records_per_file: int = 1_000_000,
     sink_format: str = "parquet",
     on_batch: Callable[[int, dict[str, int]], None] | None = None,
 ) -> StreamingQuery:
-    """Run the full ingest pipeline as ONE streaming query with
-    foreachBatch fan-out.
+    """Run the full ingest pipeline as ONE streaming query; each
+    micro-batch is one Spark job that writes all four sinks.
 
     Args:
         raw_stream: streaming DataFrame with the raw schema.
-        out_dir: sink root — writes {valid,fraud}/ (parquet, partitioned
-            Year/Month/Day), error/ (parquet), invalid/ (CSV audit).
+        out_dir: sink root — writes {valid,fraud}/ (parquet, or CSV with
+            ``sink_format="csv"``, partitioned Year/Month/Day), error/
+            (parquet), invalid/ (CSV audit).
         checkpoint_dir: one checkpoint for the single query (ST3).
         rate: literal VND rate (None → reference default). For daily
             rates run transforms.enrich inside a custom fan-out instead.
         trigger: e.g. {"availableNow": True} for replay/tests,
             {"processingTime": "5 seconds"} for the reference cadence.
-        on_batch: optional hook (batch_id, per-sink row counts) — test
-            observability without a console sink.
+        on_batch: optional hook (batch_id, per-sink row counts), called
+            after the batch's files are in place.
     """
-    from olap_project_spark.schemas import DEFAULT_VND_PER_USD
-
     rate_value = DEFAULT_VND_PER_USD if rate is None else rate
+    flags = route_flags(mode)
+    cleaned = clean(raw_stream, rate=rate_value, processed_at=processed_at)
+    cleaned = cleaned.withColumn("invalid_reason", invalid_reason())
+    # CSV rows are rendered by Spark's own CSV generator, so the files
+    # read back exactly as the DataFrameWriter's would.
+    lines = {"_log": F.when(flags["invalid"], F.to_csv(F.struct(*INVALID_LOG_COLUMNS)))}
+    if sink_format == "csv":
+        lines["_csv"] = F.when(
+            flags["valid"] | flags["fraud"], F.to_csv(F.struct(*DATA_COLS))
+        )
+    routed = cleaned.select(
+        *OUTPUT_COLUMNS,
+        *(e.alias(c) for c, e in lines.items()),
+        *(flag.alias(f"_{sink}") for sink, flag in flags.items()),
+    )
 
     def fan_out(batch_df: DataFrame, batch_id: int) -> None:
-        cleaned = clean(batch_df, rate=rate_value, processed_at=processed_at)
-        # One materialization; four filters scan the cached batch.
-        cleaned.persist()
-        # Per-sink counts are OBSERVABILITY, not pipeline logic: each is
-        # an extra job over the persisted batch, so pay for them only
-        # when a hook is listening.
-        want_counts = on_batch is not None
-        try:
-            streams = route(cleaned, mode=mode)
-            counts: dict[str, int] = {}
-            for name in ("valid", "fraud"):
-                out = to_output(streams[name])
-                writer = (
-                    out.write.mode("append")
-                    .option("maxRecordsPerFile", str(max_records_per_file))
-                    .partitionBy(*PARTITION_COLS)
-                )
-                if sink_format == "csv":  # reference K2 shape
-                    writer.option("header", True).csv(f"{out_dir}/{name}")
-                else:
-                    writer.parquet(f"{out_dir}/{name}")
-                if want_counts:
-                    counts[name] = out.count()
-            err = to_output(streams["error"])
-            err.write.mode("append").parquet(f"{out_dir}/error")
-            inv = invalid_log(streams["invalid"])
-            inv.write.mode("append").option("header", True).csv(f"{out_dir}/invalid")
-            if want_counts:
-                counts["error"] = err.count()
-                counts["invalid"] = inv.count()
-                on_batch(batch_id, counts)
-        finally:
-            cleaned.unpersist()
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-    writer = raw_stream.writeStream.foreachBatch(fan_out).option(
+        # The query id survives restarts from the checkpoint, so a
+        # replayed batch writes the same file names.
+        query_id = batch_df.sparkSession.sparkContext.getLocalProperty(
+            "sql.streaming.queryId"
+        )
+        task = _sink_task(out_dir, sink_format, to_arrow_schema(batch_df.schema),
+                          f"{query_id}-{batch_id}")
+        counts = dict.fromkeys(flags, 0)
+        for row in batch_df.mapInArrow(task, "sink string, rows long").collect():
+            counts[row.sink] += row.rows
+        if on_batch is not None:
+            on_batch(batch_id, counts)
+
+    writer = routed.writeStream.foreachBatch(fan_out).option(
         "checkpointLocation", checkpoint_dir
     )
     writer = writer.trigger(**(trigger or {"processingTime": "5 seconds"}))

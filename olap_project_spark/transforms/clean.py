@@ -75,15 +75,9 @@ def clean(
             event-timestamp calendar; True (spec mode) validates the raw
             CSV Year/Month/Day via ``make_date``.
     """
-    ts = F.try_to_timestamp(F.col("timestamp"))
-    dow = F.dayofweek(ts)  # 1=Sunday .. 7=Saturday
-
-    # Validate the raw CSV calendar without ANSI make_date errors. Two
-    # traps: (a) the non-ANSI parser is *lenient* (2024-02-30 rolls to
-    # 2024-03-01), so require the parsed date to round-trip back to the
-    # original string; (b) this must be evaluated BEFORE the chain below
-    # replaces Year/Month/Day with the timestamp-derived calendar —
-    # Column expressions bind at use-site, so materialize it now.
+    # Validate the raw CSV calendar without ANSI make_date errors. The
+    # non-ANSI parser is *lenient* (2024-02-30 rolls to 2024-03-01), so
+    # require the parsed date to round-trip back to the original string.
     raw_date_str = F.format_string(
         "%04d-%02d-%02d",
         F.col("Year").cast("int"),
@@ -91,56 +85,58 @@ def clean(
         F.col("Day").cast("int"),
     )
     raw_date_parsed = F.try_to_date(raw_date_str, "yyyy-MM-dd")
-    raw = raw.withColumn(
-        "_raw_date_valid",
-        F.coalesce(F.date_format(raw_date_parsed, "yyyy-MM-dd") == raw_date_str, F.lit(False)),
-    )
-
-    df = (
-        raw.withColumn("Amount_USD", parse_amount(F.col("Amount")))
-        .withColumn("Amount_VND", usd_to_vnd(F.col("Amount_USD"), rate))
-        .withColumn("Exchange_Rate", F.lit(int(rate)))
-        .withColumn("Transaction_Date", ts)
-        # Canonical calendar derived from event time (replaces raw Y/M/D,
-        # matching the reference's case-insensitive overwrite, §1.3).
-        .withColumn("Year", F.year(ts))
-        .withColumn("Month", F.month(ts))
-        .withColumn("Day", F.dayofmonth(ts))
-        .withColumn("Hour", F.hour(ts))
-        .withColumn("Minute", F.minute(ts))
-        .withColumn("Date_Formatted", F.date_format(ts, "dd/MM/yyyy"))
-        .withColumn("Time_Formatted", F.date_format(ts, "HH:mm:ss"))
-        .withColumn("Day_of_Week", F.date_format(ts, "EEEE"))
-        .withColumn(
-            "Is_Weekend", F.when(dow.isin(1, 7), F.lit("Yes")).otherwise(F.lit("No"))
-        )
-        .withColumn("DateTime_Hour_Key", F.date_format(ts, "yyyy-MM-dd-HH"))
-    )
-
-    for old, new in RENAMES.items():
-        df = df.withColumn(new, F.col(f"`{old}`")).drop(old)
-
+    # Inner projection: the event time is parsed once, not once per
+    # derived column, and the raw calendar is checked before the outer
+    # projection replaces Year/Month/Day with the derived one.
+    parsed = raw.withColumns({
+        "_ts": F.try_to_timestamp(F.col("timestamp")),
+        "_raw_date_valid": F.coalesce(
+            F.date_format(raw_date_parsed, "yyyy-MM-dd") == raw_date_str, F.lit(False)
+        ),
+    })
+    ts = F.col("_ts")
+    dow = F.dayofweek(ts)  # 1=Sunday .. 7=Saturday
     processed_ts = (
         F.lit(processed_at)
         if processed_at is not None
         else F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss")
     )
-
-    df = (
-        df.withColumn("Errors", F.trim(F.col("`Errors?`"))).drop("Errors?")
-        .withColumn("Is_Fraud", F.trim(F.col("`Is Fraud?`"))).drop("Is Fraud?")
-        .withColumn("Processed_Timestamp", processed_ts)
-        .withColumn(
-            "is_valid_date",
-            F.col("_raw_date_valid")
-            if validate_raw_date
-            # Reference mode: the derived calendar is whatever the event
-            # timestamp parsed to, so validity == "timestamp parsed".
-            else F.make_date(F.col("Year"), F.col("Month"), F.col("Day")).isNotNull(),
-        )
-        .drop("_raw_date_valid")
-    )
-    return df
+    amount_usd = parse_amount(F.col("Amount"))
+    derived = {
+        "Amount_USD": amount_usd,
+        "Amount_VND": usd_to_vnd(amount_usd, rate),
+        "Exchange_Rate": F.lit(int(rate)),
+        "Transaction_Date": ts,
+        # Canonical calendar derived from event time (replaces raw Y/M/D
+        # in place, matching the reference's case-insensitive overwrite,
+        # §1.3).
+        "Year": F.year(ts),
+        "Month": F.month(ts),
+        "Day": F.dayofmonth(ts),
+        "Hour": F.hour(ts),
+        "Minute": F.minute(ts),
+        "Date_Formatted": F.date_format(ts, "dd/MM/yyyy"),
+        "Time_Formatted": F.date_format(ts, "HH:mm:ss"),
+        "Day_of_Week": F.date_format(ts, "EEEE"),
+        "Is_Weekend": F.when(dow.isin(1, 7), F.lit("Yes")).otherwise(F.lit("No")),
+        "DateTime_Hour_Key": F.date_format(ts, "yyyy-MM-dd-HH"),
+        **{new: F.col(f"`{old}`") for old, new in RENAMES.items()},
+        "Errors": F.trim(F.col("`Errors?`")),
+        "Is_Fraud": F.trim(F.col("`Is Fraud?`")),
+        "Processed_Timestamp": processed_ts,
+        "is_valid_date": F.col("_raw_date_valid")
+        if validate_raw_date
+        # Reference mode: the derived calendar is whatever the event
+        # timestamp parsed to, so validity == "timestamp parsed".
+        else F.make_date(F.year(ts), F.month(ts), F.dayofmonth(ts)).isNotNull(),
+    }
+    gone = {*RENAMES, "Errors?", "Is Fraud?"}
+    kept = [
+        derived.pop(c).alias(c) if c in derived else F.col(f"`{c}`")
+        for c in raw.columns
+        if c not in gone
+    ]
+    return parsed.select(*kept, *(e.alias(c) for c, e in derived.items()))
 
 
 def to_output(df: DataFrame) -> DataFrame:

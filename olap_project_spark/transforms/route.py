@@ -10,10 +10,11 @@ SURVEY.md §2.3). Two modes (§1.3):
 - ``mode="spec"`` — what requirements.md:5-7 describes: the four streams
   partition the input (valid = well-formed ∧ ¬fraud ∧ ¬error).
 
-All four outputs share one parent plan; under ``foreachBatch`` fan-out
-(streaming.pipeline) the parent micro-batch is computed once and the four
-filters are cheap codegen'd scans over it — unlike the reference, which
-re-read Kafka once per sink (§3.1 step 4).
+``route_flags`` defines the four predicates once. ``route`` filters by
+them (four lazy DataFrames over one parent plan); the streaming pipeline
+evaluates them as columns of the micro-batch and writes all four sinks
+in one pass — unlike the reference, which re-read Kafka once per sink
+(§3.1 step 4).
 """
 
 from __future__ import annotations
@@ -45,27 +46,23 @@ def _well_formed() -> Column:
     )
 
 
-def route(df: DataFrame, mode: str = "reference") -> dict[str, DataFrame]:
-    """Split a cleaned DataFrame into valid / fraud / error / invalid.
+def route_flags(mode: str = "reference") -> dict[str, Column]:
+    """The four sink predicates as boolean columns over a cleaned frame.
 
-    Returns a dict of four DataFrames (lazy filters over the shared
-    parent — no materialization, no shuffle).
+    Each flag is coalesced to false, so a row whose predicate is null
+    belongs to no sink, exactly as ``filter`` drops it.
     """
     if mode not in ("reference", "spec"):
         raise ValueError(f"unknown routing mode: {mode}")
 
     is_fraud = F.col("Is_Fraud") == "Yes"
-
-    error_df = df.filter(_has_error())
-    fraud_df = df.filter(is_fraud)
-
     if mode == "reference":
-        valid_df = df.filter(_well_formed())
+        valid = _well_formed()
         # The literal reference invalid predicate (:271-278). Note it does
         # NOT test User/Card nullity (a null-Card row is neither valid nor
         # invalid there — null ``length(Card) < 16`` is three-valued-false),
         # and only audits non-fraud rows.
-        invalid_df = df.filter(
+        invalid = (
             ~_has_error()
             & (F.col("Is_Fraud") == "No")
             & (
@@ -76,22 +73,28 @@ def route(df: DataFrame, mode: str = "reference") -> dict[str, DataFrame]:
             )
         )
     else:
-        valid_df = df.filter(_well_formed() & ~is_fraud & ~_has_error())
-        invalid_df = df.filter(~_has_error() & ~is_fraud & ~_well_formed())
+        valid = _well_formed() & ~is_fraud & ~_has_error()
+        invalid = ~_has_error() & ~is_fraud & ~_well_formed()
+    flags = {"valid": valid, "fraud": is_fraud, "error": _has_error(), "invalid": invalid}
+    return {k: F.coalesce(v, F.lit(False)) for k, v in flags.items()}
 
-    invalid_df = invalid_df.withColumn(
-        "invalid_reason",
-        F.when(~F.col("is_valid_date"), F.lit(INVALID_REASON_DATE)).otherwise(
-            F.lit(INVALID_REASON_FORMAT)
-        ),
+
+def invalid_reason() -> Column:
+    """The audit reason of an ``invalid`` row."""
+    return F.when(~F.col("is_valid_date"), F.lit(INVALID_REASON_DATE)).otherwise(
+        F.lit(INVALID_REASON_FORMAT)
     )
 
-    return {
-        "valid": valid_df,
-        "fraud": fraud_df,
-        "error": error_df,
-        "invalid": invalid_df,
-    }
+
+def route(df: DataFrame, mode: str = "reference") -> dict[str, DataFrame]:
+    """Split a cleaned DataFrame into valid / fraud / error / invalid.
+
+    Returns a dict of four DataFrames (lazy filters over the shared
+    parent — no materialization, no shuffle).
+    """
+    out = {k: df.filter(flag) for k, flag in route_flags(mode).items()}
+    out["invalid"] = out["invalid"].withColumn("invalid_reason", invalid_reason())
+    return out
 
 
 def invalid_log(invalid_df: DataFrame) -> DataFrame:

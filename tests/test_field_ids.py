@@ -255,7 +255,7 @@ class TestPublicReaderAcrossRenames:
 # Python model folded in current-name space, and whenever the
 # metadata-only aggregate answers, its row count is the model's.
 # ---------------------------------------------------------------------------
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 _op = st.sampled_from(
@@ -270,6 +270,7 @@ _op = st.sampled_from(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(st.lists(_op, min_size=2, max_size=6))
+@example(ops=["append", "delete", "delete", "delete", "merge", "delete"])
 def test_era_read_matches_model_under_any_interleaving(
     registered, tmp_path, ops
 ):
@@ -316,15 +317,19 @@ def test_era_read_matches_model_under_any_interleaving(
             add_column(path, name, "int")
             extra.append(name)
         elif op == "delete":
-            victim = min(model)
+            # Once every row is gone, delete a key that never existed:
+            # the delete must then match nothing.
+            victim = min(model, default=next_k)
             delete_where(
                 registered,
                 path,
                 registered.createDataFrame([(victim,)], "k int"),
             )
-            model.pop(victim)
+            model.pop(victim, None)
         elif op == "merge":
-            target = min(model)
+            # On an emptied table the update key is fresh too, so the
+            # merge inserts both rows.
+            target = min(model, default=next_k + 1)
             merge_upsert(
                 registered,
                 path,
@@ -336,7 +341,7 @@ def test_era_read_matches_model_under_any_interleaving(
             )
             model[target] = "UP"
             model[next_k] = "NEW"
-            next_k += 1
+            next_k = max(next_k, target) + 1
         elif op == "setspec":
             from olap_project_spark.export.manifest_sink import (
                 set_partition_spec,

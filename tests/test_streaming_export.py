@@ -11,7 +11,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from olap_project_spark.export.daily import export_partition
-from olap_project_spark.schemas import OUTPUT_COLUMNS
+from olap_project_spark.schemas import (
+    INVALID_LOG_COLUMNS,
+    OUTPUT_COLUMNS,
+    RAW_TRANSACTION_SCHEMA,
+)
 from olap_project_spark.sources.registry import load_table
 from olap_project_spark.streaming import (
     dedup_stream,
@@ -21,7 +25,9 @@ from olap_project_spark.streaming import (
     windowed_event_stats,
 )
 from olap_project_spark.transforms import clean, route
-from tests.fixtures import sample_rows
+from olap_project_spark.transforms.clean import to_output
+from tests import txn_model as M
+from tests.fixtures import _row, sample_rows
 
 FIXED_TS = "2024-01-15 08:30:20"
 RAW_FIELDS = [
@@ -29,6 +35,9 @@ RAW_FIELDS = [
     "Merchant Name", "Merchant City", "Merchant State", "Zip", "MCC",
     "Errors?", "Is Fraud?", "timestamp",
 ]
+
+# a fraud row whose event time does not parse (no calendar partition)
+BAD_TS_FRAUD = _row(user="77", fraud="Yes", ts="not-a-timestamp")
 
 
 @pytest.fixture()
@@ -80,9 +89,10 @@ class TestIngestPipeline:
         assert "invalid_reason" in inv.columns
 
     def test_no_count_jobs_without_observer(self, spark, raw_json_dir, tmp_path):
-        """Per-sink counts are observability-only: with no on_batch hook
-        the fan-out must not run ANY count() job over the batch (four
-        extra jobs per micro-batch, pure waste at scale)."""
+        """Per-sink counts are observability-only: the fan-out must not
+        run ANY count() job over the batch, and with or without an
+        on_batch hook a micro-batch is exactly one Spark job (the sink
+        counts are the write tasks' own results)."""
         from pyspark.sql import DataFrame
 
         calls = {"n": 0}
@@ -92,20 +102,27 @@ class TestIngestPipeline:
             calls["n"] += 1
             return orig(self)
 
-        DataFrame.count = counting
-        try:
-            q = start_pipeline(
-                read_file_stream(spark, raw_json_dir, fmt="json"),
-                out_dir=str(tmp_path / "out_nc"),
-                checkpoint_dir=str(tmp_path / "ckpt_nc"),
-                processed_at=FIXED_TS,
-                trigger={"availableNow": True},
-                on_batch=None,
-            )
-            q.awaitTermination(120)
-        finally:
-            DataFrame.count = orig
-        assert calls["n"] == 0
+        tracker = spark.sparkContext.statusTracker()
+        for hook in (None, lambda bid, counts: None):
+            name = "hook" if hook else "nc"
+            DataFrame.count = counting
+            try:
+                q = start_pipeline(
+                    read_file_stream(spark, raw_json_dir, fmt="json"),
+                    out_dir=str(tmp_path / f"out_{name}"),
+                    checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
+                    processed_at=FIXED_TS,
+                    trigger={"availableNow": True},
+                    on_batch=hook,
+                )
+                q.awaitTermination(120)
+            finally:
+                DataFrame.count = orig
+            assert calls["n"] == 0
+            batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+            assert len(batches) == 1
+            # the query runs every job of its micro-batches in its runId group
+            assert len(tracker.getJobIdsForGroup(str(q.runId))) == len(batches)
 
     def test_csv_sink_mode(self, spark, raw_json_dir, tmp_path):
         """Reference K2 shape: valid/fraud as partitioned CSV."""
@@ -212,6 +229,150 @@ class TestIngestPipeline:
         # exactly-once: old batch not re-processed, new batch fully in
         assert base == per_batch
         assert valid.count() == 2 * per_batch
+
+
+    def test_replay_after_crash_overwrites_batch_files(
+        self, spark, raw_json_dir, tmp_path
+    ):
+        """A failure after the batch's files are written, then a restart
+        from the same checkpoint: the replayed batch rewrites its own
+        files, so every sink holds each routed row once."""
+        from tests.fixtures import raw_transactions_df
+
+        out = str(tmp_path / "out")
+        ckpt = str(tmp_path / "ckpt")
+
+        def crash(batch_id, counts):
+            raise RuntimeError("failure after the sink writes")
+
+        for hook in (crash, None):
+            q = start_pipeline(
+                read_file_stream(spark, raw_json_dir, fmt="json"),
+                out_dir=out,
+                checkpoint_dir=ckpt,
+                processed_at=FIXED_TS,
+                trigger={"availableNow": True},
+                on_batch=hook,
+            )
+            if hook is crash:
+                with pytest.raises(Exception, match="failure after the sink writes"):
+                    q.awaitTermination(120)
+            else:
+                q.awaitTermination(120)
+                assert q.exception() is None
+
+        want = route(clean(raw_transactions_df(spark), processed_at=FIXED_TS))
+        for sink in ("valid", "fraud", "error"):
+            got = spark.read.parquet(f"{out}/{sink}").select(*OUTPUT_COLUMNS)
+            assert _rows(got) == _rows(to_output(want[sink])), sink
+        inv = spark.read.option("header", True).csv(f"{out}/invalid")
+        assert _rows(inv.select("User", "invalid_reason")) == _rows(
+            want["invalid"].select("User", "invalid_reason")
+        )
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _run_pipeline(spark, rows, root, **kw):
+    """The fixture ``rows`` through ``start_pipeline`` as one JSON file;
+    returns the sink root."""
+    os.makedirs(f"{root}/in")
+    with open(f"{root}/in/batch0.json", "w") as f:
+        for row in rows:
+            f.write(json.dumps(dict(zip(RAW_FIELDS, row))) + "\n")
+    q = start_pipeline(
+        read_file_stream(spark, f"{root}/in", fmt="json"),
+        out_dir=f"{root}/out",
+        checkpoint_dir=f"{root}/ckpt",
+        processed_at=M.PROCESSED_AT,
+        trigger={"availableNow": True},
+        **kw,
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    return f"{root}/out"
+
+
+class TestSinkParity:
+    """The sinks as read back equal what ``DataFrameWriter`` writes for
+    the same routed rows: layout, column names, order, types, values."""
+
+    # sample rows, BAD_TS_FRAUD and a seeded batch of generated rows
+    # (FIXTURES.md §7)
+    ROWS = sample_rows() + [BAD_TS_FRAUD] + M.raw_rows(11)
+
+    @pytest.fixture(scope="class")
+    def sinks(self, spark, tmp_path_factory):
+        return _run_pipeline(spark, self.ROWS, str(tmp_path_factory.mktemp("parity")))
+
+    @pytest.fixture(scope="class")
+    def want(self, spark):
+        raw = spark.createDataFrame(self.ROWS, RAW_TRANSACTION_SCHEMA)
+        return route(clean(raw, processed_at=M.PROCESSED_AT))
+
+    @pytest.mark.parametrize("sink", ["valid", "fraud", "error"])
+    def test_parquet_sinks_match_dataframe_writer(
+        self, spark, sinks, want, sink, tmp_path
+    ):
+        ref = str(tmp_path / sink)
+        writer = to_output(want[sink]).write
+        if sink != "error":
+            writer = writer.partitionBy("Year", "Month", "Day")
+        writer.parquet(ref)
+        got = spark.read.parquet(f"{sinks}/{sink}")
+        exp = spark.read.parquet(ref)
+        assert got.schema == exp.schema
+        assert got.count() > 0
+        assert _rows(got) == _rows(exp)
+
+    def test_unparsed_fraud_row_lands_in_default_partition(self, spark, sinks):
+        assert os.path.isdir(f"{sinks}/fraud/Year=__HIVE_DEFAULT_PARTITION__")
+        nulls = spark.read.parquet(f"{sinks}/fraud").where(F.col("Year").isNull())
+        assert "77" in [r["User"] for r in nulls.collect()]
+
+    def test_invalid_log_values_match_model(self, spark, sinks):
+        model = [M.clean_row(r, processed_at=M.PROCESSED_AT) for r in self.ROWS]
+        raw_ts = [r[-1] for r in self.ROWS]
+        want = [
+            # CSV reads an empty string back as null
+            (m["Card"] or None, m["User"] or None, m["Amount_USD"],
+             M.invalid_reason(m), raw_ts[i] or None)
+            for i in M.route_ids(model, "reference")["invalid"]
+            for m in [model[i]]
+        ]
+        inv = spark.read.option("header", True).csv(f"{sinks}/invalid")
+        assert inv.columns == INVALID_LOG_COLUMNS
+        got = [
+            (r["Card"], r["User"], None if r["Amount_USD"] is None else float(r["Amount_USD"]),
+             r["invalid_reason"], r["timestamp"])
+            for r in inv.collect()
+        ]
+        assert len(want) > 10
+        assert sorted(got, key=repr) == sorted(want, key=repr)
+
+    def test_batch_without_error_or_invalid_rows_leaves_sinks_readable(
+        self, spark, tmp_path
+    ):
+        out = _run_pipeline(spark, sample_rows()[:2], str(tmp_path))
+        error = spark.read.parquet(f"{out}/error")
+        assert error.columns == OUTPUT_COLUMNS and error.count() == 0
+        inv = spark.read.option("header", True).csv(f"{out}/invalid")
+        assert inv.columns == INVALID_LOG_COLUMNS and inv.count() == 0
+        assert spark.read.parquet(f"{out}/valid").count() == 2
+
+    def test_csv_sinks_match_dataframe_writer(self, spark, want, tmp_path):
+        out = _run_pipeline(spark, self.ROWS, str(tmp_path / "csv"), sink_format="csv")
+        for sink in ("valid", "fraud"):
+            ref = str(tmp_path / f"ref_{sink}")
+            to_output(want[sink]).write.partitionBy("Year", "Month", "Day").option(
+                "header", True
+            ).csv(ref)
+            got = spark.read.option("header", True).csv(f"{out}/{sink}")
+            exp = spark.read.option("header", True).csv(ref)
+            assert got.schema == exp.schema
+            assert _rows(got) == _rows(exp)
 
 
 class TestWindowedOperators:
@@ -359,6 +520,23 @@ class TestDailyExport:
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "PartitionFilters" in plan and "Year" in plan
+
+    def test_export_returns_rows_appended_by_the_call(self, spark, tmp_path):
+        """The count is this call's append, also when the same day is
+        exported a second time (not the partition's cumulative rows)."""
+        from tests.fixtures import query_rows, raw_transactions_df
+
+        src = str(tmp_path / "sink")
+        wh = str(tmp_path / "warehouse")
+        cleaned = clean(raw_transactions_df(spark, query_rows()), processed_at=FIXED_TS)
+        to_output(route(cleaned)["valid"]).write.partitionBy("Year", "Month", "Day").parquet(src)
+
+        # user 10's three rows on 2024-01-22 are all valid in reference mode
+        assert export_partition(spark, src, wh, 2024, 1, 22) == 3
+        assert export_partition(spark, src, wh, 2024, 1, 22) == 3
+        assert export_partition(spark, src, wh, 2024, 1, 15) == 1
+        assert export_partition(spark, src, wh, 2024, 3, 1) == 0
+        assert spark.read.parquet(wh).count() == 7
 
 
 class TestDailyRates:
