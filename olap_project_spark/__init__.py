@@ -18,7 +18,7 @@ Layout
 - ``queries``     Q0–Q9 over the cleaned transaction fact
 - ``sources``     exchange-rate dimension, POS simulator source, batch
                   readers
-- ``functions``   the Arrow local-frame builder and the Z-order key
+- ``functions``   the Arrow local-frame builder
 
 Everything is DataFrame/SQL-declarative so Catalyst handles pushdown,
 pruning, join strategy, and whole-stage codegen; Python row-UDFs are

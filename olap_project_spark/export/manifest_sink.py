@@ -15,7 +15,14 @@ Python DataSource writer API:
    file lists — orphaned staging files from failed/aborted attempts are
    invisible, so the sink is effectively-exactly-once per query even
    under task retries (Spark de-duplicates task attempts before
-   ``commit``; ``abort`` removes this attempt's staging files).
+   ``commit``; the DataSource path's ``abort`` removes this attempt's
+   staging files). :func:`save_manifest` runs no ``abort``: when a task
+   fails mid-write, or the driver fails before the version claim or
+   after it but before the manifest is moved into place, readers still
+   see the pre-commit state, one retry commits the rows exactly once,
+   and :func:`vacuum_snapshots` collects the failed attempt's staging
+   files and its crashed claim (``test_manifest_sink.py::
+   test_failed_save_is_invisible_and_retry_commits_once``).
 
 This is the same fence Iceberg/Delta build on (manifest = the commit),
 reduced to its teachable core. At scale the manifest holds file paths +
@@ -49,8 +56,6 @@ import uuid
 from collections import OrderedDict
 from collections.abc import Iterator
 from dataclasses import dataclass
-
-from collections.abc import Iterator as _Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
@@ -263,8 +268,8 @@ def _transform_scalar(spec: dict, v) -> int:
     if kind == "days":
         d = v.date() if isinstance(v, _dt.datetime) else v
         return d.toordinal() - _EPOCH_ORDINAL
-    # hours: naive timestamps are wall-clock UTC by the engine's
-    # session-timezone pin (sources/registry.load_table). timedelta
+    # hours: naive timestamps are wall-clock UTC under the engine's
+    # UTC session timezone (session.build_session). timedelta
     # floor-division FLOORS (matching the writer's microsecond floor
     # for pre-epoch values); int(total_seconds()) would truncate
     # toward zero and disagree in the final second before the epoch
@@ -597,9 +602,8 @@ class ManifestWriter(DataSourceArrowWriter):
     # ``spark.sql.execution.arrow.maxRecordsPerBatch`` ≈ 10k rows).
     # Timestamp columns: the incoming batches carry
     # timestamp[us, tz=<session tz>] and the target schema is
-    # timestamp[us, tz=UTC]; the cast is epoch-preserving, and the
-    # engine pins a UTC session timezone on every load path
-    # (see sources/registry.load_table) so wall clocks agree too.
+    # timestamp[us, tz=UTC]; the cast is epoch-preserving, so the
+    # stored instant is the same whatever the session timezone.
     BATCH_ROWS = 65536
 
     def write(
@@ -787,8 +791,12 @@ class ManifestWriter(DataSourceArrowWriter):
         def flush() -> None:
             nonlocal pending, pending_rows, writer
             if writer is None and (pending or force_file):
+                # Spark, the table's reader, ignores pyarrow's
+                # ARROW:schema footer key (~1.2 KB per file)
                 writer = pq.ParquetWriter(
-                    os.path.join(out_dir, name), arrow_schema
+                    os.path.join(out_dir, name),
+                    arrow_schema,
+                    store_schema=False,
                 )
             if pending:
                 writer.write_table(
@@ -2153,22 +2161,6 @@ def drop_tag(path: str, name: str) -> bool:
         return False
 
 
-def list_branches(path: str) -> dict[str, int]:
-    """Every LIVE branch name → number of staged (unpublished)
-    commits — the WAP audit inventory. A branch 'exists' exactly while
-    branch-tagged manifests sit in the log (publish rewrites them into
-    main; abandon removes them), so the listing is a pure fold of the
-    raw log with no separate ref files to drift."""
-    out: dict[str, int] = {}
-    for _v, _entry, m in _scan_log(path):
-        if m is None:
-            continue  # in-flight claim / corrupt file
-        b = m.get("branch")
-        if b is not None:
-            out[b] = out.get(b, 0) + 1
-    return out
-
-
 def _commit_manifest_dict(path: str, manifest: dict) -> int:
     """Commit a driver-built manifest through the SAME claim protocol
     the Spark writer uses (claim the next version exclusively, write
@@ -3036,8 +3028,8 @@ def merge_upsert(
         "commit_token": token,
     }
     if props is not None:
-        # snapshot-summary provenance (e.g. the matview refresh range
-        # — the idempotence record its exactly-once recovery reads)
+        # snapshot-summary provenance: a caller's idempotence record,
+        # read back from table_history
         opts["commit_props"] = json.dumps(props)
     if branch is not None:
         opts["branch"] = branch
@@ -3047,124 +3039,6 @@ def merge_upsert(
         "version": version,
         "n_updates": m["n_rows"],
         "n_data_files": len(m["files"]),
-    }
-
-
-def update_where(
-    spark: SparkSession,
-    path: str,
-    assignments: dict[str, str],
-    predicate: str,
-    branch: str | None = None,
-) -> dict:
-    """``UPDATE t SET col = expr, ... WHERE pred`` as ONE ATOMIC
-    snapshot, compiled to the merge-on-read path: the matched rows are
-    read, the assignments applied (cast back to each column's declared
-    type — the standard UPDATE contract), and the result committed
-    through :func:`merge_upsert` with the UNTOUCHED columns as the
-    merge keys — so the one ``kind='merge'`` manifest tombstones
-    exactly the matched pre-update rows and inserts their rewritten
-    images. No data file is read twice or rewritten; a reader pinned
-    at any version sees exactly pre- or post-update state (the
-    delete-applied-but-not-reinserted window of a two-commit UPDATE
-    cannot be observed), and the CDF surface shows the delete+insert
-    pairs of a row-level update.
-
-    The merge expresses the update faithfully iff tombstoning on the
-    untouched projection kills ONLY matched rows — i.e. no unmatched
-    row shares its untouched-column values with a matched row. That is
-    checked with one aggregation BEFORE the commit; an ambiguous
-    UPDATE raises (the caller can widen the SET-free identity —
-    standard MERGE engines reject the analogous multi-match — or fall
-    back to an explicit DELETE + INSERT pair). Duplicated matched rows
-    update together and keep their multiplicity. Returns
-    {"version", "n_updated", "n_data_files"}."""
-    from pyspark.sql import functions as _F
-
-    if not assignments:
-        raise ValueError("UPDATE requires at least one SET assignment")
-    sch = table_schema(path)
-    if sch is None:
-        raise ValueError(f"no recorded schema in manifest log at {path}")
-    cols = [f.name for f in sch.fields]
-    types = {f.name: f.dataType for f in sch.fields}
-    unknown = sorted(set(assignments) - set(cols))
-    if unknown:
-        raise ValueError(f"UPDATE sets unknown columns: {unknown}")
-    untouched = [c for c in cols if c not in assignments]
-    if not untouched:
-        raise ValueError(
-            "UPDATE sets every column, leaving no row identity for the "
-            "atomic merge; keep at least one column out of SET (or "
-            "DELETE + INSERT)"
-        )
-    df = read_evolved(spark, path)
-    # NULL predicate results are non-matches (SQL WHERE semantics) in
-    # BOTH the match leg and the ambiguity probe, so they agree.
-    pred = _F.coalesce(_F.expr(predicate), _F.lit(False))
-    # Two-pass ambiguity probe, sized for 100 TB: pass 1 shuffles only
-    # (64-bit hash of the untouched projection, match flag) — ~9 bytes
-    # a row instead of the full-width tuple — and pass 2 re-checks the
-    # (rare) suspect hashes EXACTLY on the real columns, so a hash
-    # collision between a matched and an unmatched row can never
-    # produce a spurious rejection.
-    h = _F.xxhash64(*[_F.col(c) for c in untouched])
-    suspects = [
-        r["__h"]
-        for r in (
-            df.groupBy(h.alias("__h"))
-            .agg(
-                _F.max(pred).alias("__any_m"),
-                _F.min(pred).alias("__all_m"),
-            )
-            .filter("__any_m AND NOT __all_m")
-            .limit(101)
-            .collect()
-        )
-    ]
-    ambiguous = 0
-    if suspects:
-        if len(suspects) > 100:
-            ambiguous = 1  # overwhelmingly real; skip the exact pass
-        else:
-            ambiguous = (
-                df.filter(h.isin(suspects))
-                .groupBy(*[_F.col(c) for c in untouched])
-                .agg(
-                    _F.max(pred).alias("__any_m"),
-                    _F.min(pred).alias("__all_m"),
-                )
-                .filter("__any_m AND NOT __all_m")
-                .limit(1)
-                .count()
-            )
-    if ambiguous:
-        raise ValueError(
-            "ambiguous UPDATE: rows NOT matching the WHERE share their "
-            f"non-updated column values {untouched} with matched rows, "
-            "so the atomic merge would update them too; narrow the SET "
-            "list or use DELETE + INSERT"
-        )
-    new_rows = df.filter(pred).select(
-        *[
-            _F.expr(assignments[c]).cast(types[c]).alias(c)
-            if c in assignments
-            else _F.col(c)
-            for c in cols
-        ]
-    )
-    r = merge_upsert(
-        spark,
-        path,
-        new_rows,
-        keys=untouched,
-        branch=branch,
-        props={"update_where": predicate, "update_set": dict(assignments)},
-    )
-    return {
-        "version": r["version"],
-        "n_updated": r["n_updates"],
-        "n_data_files": r["n_data_files"],
     }
 
 
@@ -3270,16 +3144,7 @@ class MaintenancePolicy:
       (:func:`current_partition_spec`) instead;
     - ``checkpoint``: write a LOG CHECKPOINT (:func:`checkpoint_log`)
       at the end of every non-noop pass, so read planning parses one
-      bundled file + the tail instead of the whole manifest log;
-    - ``matviews``: paths of MATERIALIZED VIEWS over this table
-      (export/matview.py) the loop keeps fresh: each pass runs the
-      CDF-incremental ``mv_refresh`` (exactly-once by the view's own
-      commit-log stamps), then — when the view has accumulated at
-      least ``mv_vacuum_min_tombstones`` zero-count tombstone rows —
-      purges them and compacts the view's OWN manifest log, so the
-      view's small-file and tombstone pressure is serviced by the
-      same scheduler entry point as the base table's;
-    - ``mv_vacuum_min_tombstones``: the purge threshold above.
+      bundled file + the tail instead of the whole manifest log.
     """
 
     col: str
@@ -3291,42 +3156,7 @@ class MaintenancePolicy:
     vacuum: bool = True
     stale_claim_ttl_s: float | None = None
     partition_by: tuple | list | None = None
-    matviews: list[str] | None = None
-    mv_vacuum_min_tombstones: int = 16
     checkpoint: bool = False
-
-
-def _maintain_matview(
-    spark: SparkSession, mv_path: str, policy: MaintenancePolicy
-) -> dict:
-    """One maintenance pass over a registered MATERIALIZED VIEW:
-    CDF-incremental refresh (exactly-once via the view's own commit
-    stamps), then tombstone purge + view-manifest compaction once the
-    zero-count rows pass the policy threshold — the view's own
-    small-file/tombstone pressure serviced alongside the base's.
-    Lazy import: matview builds ON the sink, not the reverse."""
-    from pyspark.sql import functions as _F
-
-    from olap_project_spark.export import matview as _mv
-
-    r = _mv.mv_refresh(spark, mv_path)
-    out = {
-        "path": mv_path,
-        "mode": r["mode"],
-        "to_version": r["to_version"],
-        "tombstones_purged": 0,
-        "compacted": False,
-    }
-    state = read_committed(spark, mv_path, table_schema(mv_path))
-    n_dead = state.filter(
-        _F.col(_mv._COUNT_COL) <= 0
-    ).count()
-    if n_dead >= policy.mv_vacuum_min_tombstones:
-        _mv.mv_vacuum(spark, mv_path)
-        compact_snapshots(spark, mv_path, None)
-        out["tombstones_purged"] = n_dead
-        out["compacted"] = True
-    return out
 
 
 def maintain(
@@ -3340,9 +3170,6 @@ def maintain(
     advise→compact chain into a single entry point a scheduler calls
     (Delta auto-compaction / Iceberg maintenance-job shape):
 
-    0. registered MATERIALIZED VIEWS refresh first (CDF-incremental,
-       exactly-once), then purge+compact past the tombstone threshold
-       — before any base rewrite can truncate the CDF range;
     1. PLAN on metadata only (:func:`plan_compaction_ranges` over the
        zone maps — no data read);
     2. if tombstones (delete/merge snapshots) sit above the latest
@@ -3359,7 +3186,7 @@ def maintain(
     maintained table reports ``noop=True`` and commits nothing.
 
     Returns {"dry_run", "had_tombstones", "flagged_before", "actions",
-    "versions_written", "vacuum", "matviews", "noop"}."""
+    "versions_written", "vacuum", "noop"}."""
     log = _log(path)
     # a pending column rename/drop forces the FULL compaction path
     # exactly like tombstones do: the scoped rewrite is name-keyed and
@@ -3385,21 +3212,8 @@ def maintain(
         "actions": [],
         "versions_written": [],
         "vacuum": None,
-        "matviews": [],
         "noop": not flagged and not had_tombstones,
     }
-    # registered materialized views refresh BEFORE any base rewrite —
-    # the CDF is consumed while the unrefreshed range is still
-    # rewrite-free, so the refresh stays O(|changes|) incremental
-    # instead of falling back to a full recompute (the run-the-CDF-
-    # before-compacting rule, automated)
-    if not dry_run:
-        for mv_path in policy.matviews or []:
-            r = _maintain_matview(spark, mv_path, policy)
-            report["matviews"].append(r)
-            if r["mode"] != "noop" or r["compacted"]:
-                report["noop"] = False
-                report["actions"].append(f"matview[{mv_path}]")
     if dry_run or (not flagged and not had_tombstones):
         return report
     if had_tombstones:
@@ -3524,18 +3338,6 @@ def _log(
             continue
         out.append((version, m))
     return out if raw else _effective(out)
-
-
-def commit_rows(path: str, version: int, branch: str | None = None) -> int:
-    """Row count recorded by the commit at ``version`` — read from the
-    manifest metadata (driver-side, served by the log cache), zero
-    Spark actions. The scale-honest way for a write API's caller to
-    report "rows written": re-running the write's SELECT to count it
-    is a full second scan at 100 TB (guide §1.2)."""
-    for v, m in _log(path, branch=branch, raw=True):
-        if v == version:
-            return int(m.get("n_rows", 0))
-    raise ValueError(f"no commit at version {version} in {path}")
 
 
 def _checkpoint_names(path: str) -> list[str]:
@@ -4097,46 +3899,6 @@ def table_history(path: str) -> list[dict]:
             }
         )
     return out
-
-
-def version_at_timestamp(path: str, ts) -> int:
-    """Resolve a wall-clock instant to the snapshot version current AT
-    that instant — the latest committed version whose commit time is
-    at or before ``ts`` — enabling ``FOR TIMESTAMP AS OF`` /
-    BigQuery-style ``FOR SYSTEM_TIME AS OF`` reads (the reference's
-    warehouse time-travel verb, bigquery_update_scheduler.py:255-260,
-    re-expressed over the manifest log). Commit time is the manifest
-    file's modification time — the same mechanism Delta's
-    ``timestampAsOf`` uses (commit-file modification timestamps) — so
-    it applies retroactively to every existing table with no manifest
-    format change. ``ts`` is epoch seconds or an ISO-8601 string
-    (naive strings are UTC — the engine's wall-clock convention).
-    Raises when the table has no commit at or before ``ts``."""
-    if isinstance(ts, str):
-        from datetime import datetime, timezone
-
-        dt = datetime.fromisoformat(ts)
-        if dt.tzinfo is None:
-            dt = dt.replace(tzinfo=timezone.utc)
-        epoch = dt.timestamp()
-    else:
-        epoch = float(ts)
-    best = None
-    for version, entry, m in _scan_log(path):
-        if m is None or m.get("branch") is not None:
-            continue  # in-flight, corrupt, or staged: not main-visible
-        try:
-            mtime = os.path.getmtime(os.path.join(path, entry))
-        except OSError:
-            continue  # racing vacuum
-        if mtime <= epoch and (best is None or version > best):
-            best = version
-    if best is None:
-        raise ValueError(
-            f"no snapshot of {path} is as old as {ts!r}; the earliest "
-            "commit is newer (or the table is empty)"
-        )
-    return best
 
 
 def table_files(
@@ -5001,8 +4763,8 @@ def compact_snapshots(
     sorted within each, so the rewrite's per-file zone maps become
     tight ranges on the cluster key — the layout step that turns the
     manifest's data-skipping stats from "present" into "selective".
-    Pass a space-filling-curve column (functions/scale.zorder_key) to
-    cluster on two dimensions at once.
+    A space-filling-curve key column (e.g. a bit-interleaved Z-order
+    key) clusters on two dimensions at once.
 
     ``bucket_by``/``n_buckets`` make it a BUCKETED rewrite instead
     (Spark-native hash bucketing, the §2.5 co-location lever): the
@@ -5529,42 +5291,6 @@ def table_ndv(
         "ndv": int(round((kmin - 1) / u)),
         "exact": False,
         "n_files": len(live),
-    }
-
-
-def estimate_join_rows(
-    path_a: str, key_a: str, path_b: str, key_b: str
-) -> dict:
-    """EQUI-JOIN CARDINALITY ESTIMATE from metadata alone — the
-    classic CBO formula ``|A| * |B| / max(ndv_a, ndv_b)`` (System R's
-    containment-of-value-sets assumption, what Spark's CBO and every
-    warehouse optimizer compute from ANALYZE statistics): row counts
-    from :func:`metadata_aggregate`, distinct counts from the KMV
-    sketches (:func:`table_ndv`). ZERO data files are opened, so a
-    planner (or the partition-layout advisor) can ask "how big is
-    this join?" for a 100-TB pair of tables at the cost of two log
-    folds — the decision input for broadcast-vs-shuffle and
-    pre-aggregation choices.
-
-    Inherits table_ndv's strictness: unanalyzed columns or
-    unmaterialized tombstones raise (an estimate from known-stale
-    statistics is a wrong plan waiting to happen, not a fallback).
-    Returns {"rows_a", "rows_b", "ndv_a", "ndv_b", "estimated_rows",
-    "exact_ndv"} — ``exact_ndv`` is True when BOTH sides' sketches
-    merged exactly, making the estimate the true expectation under
-    uniformity rather than a doubly-approximate one."""
-    ra = metadata_aggregate(path_a)["n_rows"]
-    rb = metadata_aggregate(path_b)["n_rows"]
-    na = table_ndv(path_a, key_a)
-    nb = table_ndv(path_b, key_b)
-    denom = max(na["ndv"], nb["ndv"], 1)
-    return {
-        "rows_a": ra,
-        "rows_b": rb,
-        "ndv_a": na["ndv"],
-        "ndv_b": nb["ndv"],
-        "estimated_rows": int(round(ra * rb / denom)),
-        "exact_ndv": bool(na["exact"] and nb["exact"]),
     }
 
 

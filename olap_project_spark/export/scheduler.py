@@ -6,8 +6,8 @@ movement replaces:
 - cron ``0 23 * * *`` (daily 23:00), ``catchup=False``
 - ``retries=2`` with ``retry_delay=5 minutes``
 - task order read → upload (here: one Spark action, so the "order" is
-  the export function itself; the manifest sink in
-  export/manifest_sink.py supplies the atomic-commit half)
+  the export function itself). ``export_partition`` appends, so a retry
+  after a late failure appends the day again.
 
 This module is deliberately engine-side and dependency-free: a real
 deployment can hand ``ExportPolicy``/``run_with_retries`` to any
@@ -160,9 +160,10 @@ def run_with_retries(
 ) -> RunReport:
     """Execute ``job`` under the policy's retry contract: up to
     ``retries`` re-attempts, ``retry_delay`` apart — the engine-side
-    equivalent of Airflow's ``retries=2, retry_delay=5min``. The job
-    must be idempotent-or-append-safe (export/manifest_sink.py provides
-    the atomic-commit variant where double-append is unacceptable)."""
+    equivalent of Airflow's ``retries=2, retry_delay=5min``. A retried
+    job runs again from the start: a retried ``export_partition``
+    appends the day again, so a failure after its append doubles the
+    day."""
     report = RunReport(logical_date=logical_date)
     for attempt in range(policy.retries + 1):
         report.attempts = attempt + 1

@@ -1,2 +1,2 @@
 """Small helpers shared by the library and its tests: the Arrow
-local-frame builder and the Z-order layout key."""
+local-frame builder."""

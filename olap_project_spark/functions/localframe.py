@@ -4,8 +4,7 @@
 *pickled RDD* parallelized over ``defaultParallelism`` slices: counting a
 1-row result then schedules 32 near-empty tasks and deserializes Python
 rows in each (measured ~430 ms per action at 32 cores — and every
-lifecycle proof returns such a frame, and every LakehouseSQL statement
-returns one). Routing the same rows through one Arrow record batch makes
+manifest-table read of an empty file list returns such a frame). Routing the same rows through one Arrow record batch makes
 Catalyst plan a ``LocalTableScan`` instead: no Python workers, one task,
 ~4× faster per action (guide §4.1 — Arrow batches rather than pickled
 rows, applied to the driver-local boundary).

@@ -84,17 +84,3 @@ EXCHANGE_RATE_SCHEMA = StructType(
 
 # Reference fallback rate (scripts/exchange_rate_service.py:18).
 DEFAULT_VND_PER_USD = 25057.0
-
-# Driver star-schema table names (TESTDATA.md).
-STAR_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]

@@ -45,8 +45,8 @@ def build_session(
         # it is safe under ANSI sessions too).
         .config("spark.sql.ansi.enabled", "false")
         # Read INT64 TIMESTAMP(NANOS) parquet columns (which Spark cannot
-        # represent natively) as long nanoseconds; sources.registry
-        # converts them to µs TimestampType on load.
+        # represent natively) as long nanoseconds; a reader of such a
+        # file converts them to µs TimestampType itself.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # AQE: coalesce shuffle partitions, split skewed joins, convert
         # sort-merge→broadcast at runtime when a side turns out small.

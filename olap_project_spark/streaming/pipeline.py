@@ -166,7 +166,9 @@ def _sink_task(out_dir: str, sink_format: str, schema, name: str):
             os.makedirs(directory, exist_ok=True)
             tmp = os.path.join(directory, f".{part}.{ctx.attemptNumber()}.tmp")
             if csv_col is None:
-                pq.write_table(rows.select(cols), tmp, compression="snappy")
+                pq.write_table(
+                    rows.select(cols), tmp, compression="snappy", store_schema=False
+                )
             else:
                 with open(tmp, "w", encoding="utf-8") as f:
                     for line in [",".join(cols), *rows[csv_col].to_pylist()]:

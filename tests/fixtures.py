@@ -82,3 +82,22 @@ def raw_transactions_df(spark: SparkSession, rows=None) -> DataFrame:
     return spark.createDataFrame(
         sample_rows() if rows is None else rows, schema=RAW_TRANSACTION_SCHEMA
     )
+
+
+def load_table(spark: SparkSession, sf_dir: str, table: str = "events") -> DataFrame:
+    """Read ``<sf_dir>/<table>.parquet`` (a file or a partitioned
+    directory) with its timestamps as ``TimestampType``. The sf
+    ``events.ts`` has shipped as ``timestamp[us]``, which Spark reads as
+    ``TIMESTAMP_NTZ`` (cast; wall clock kept under the UTC session), and
+    as INT64 nanoseconds, which ``spark.sql.legacy.parquet.nanosAsLong``
+    reads as long (floor-divided to µs)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, TimestampNTZType
+
+    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    for f in df.schema.fields:
+        if isinstance(f.dataType, TimestampNTZType):
+            df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
+        elif f.name == "ts" and isinstance(f.dataType, LongType):
+            df = df.withColumn(f.name, F.timestamp_micros(F.expr("ts div 1000")))
+    return df

@@ -42,7 +42,9 @@ def test_mixed_type_write_round_trips_with_exact_metadata(
     ints (zone map + bloom), strings (zone map + token bloom), a
     nullable column (null counts + zone-map disable), timestamps
     (epoch-exact through the tz cast), and a bucket(4) hidden
-    partition transform (ranges + tuple histogram)."""
+    partition transform (ranges + tuple histogram). The staged parquet
+    carries no ``ARROW:schema`` footer key, and Spark reads the same
+    schema."""
     schema = "k bigint, txt string, maybe double, ts timestamp"
     rows = [
         (
@@ -98,6 +100,16 @@ def test_mixed_type_write_round_trips_with_exact_metadata(
         (r["k"], r["txt"], r["maybe"], r["ts"]) for r in back.collect()
     )
     assert got == sorted(rows)
+    # no pyarrow schema footer; Spark infers the declared schema
+    import pyarrow.parquet as pq
+
+    staged = os.path.join(path, "_staging", fname)
+    footer = pq.ParquetFile(staged).metadata.metadata or {}
+    assert b"ARROW:schema" not in footer
+    assert (
+        registered.read.parquet(staged).schema
+        == registered.createDataFrame(rows, schema).schema
+    )
 
 
 def test_multi_partition_write_one_file_per_task(registered, tmp_path):

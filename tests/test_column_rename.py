@@ -205,36 +205,6 @@ class TestRenameGuards:
 
 
 class TestRenameComposition:
-    def test_matview_refresh_across_base_rename(self, registered, tmp_path):
-        """A base rename inside the unrefreshed range forces the
-        materialized view's full-recompute fallback, which must read
-        the base era-aware — the pre-rename files still feed the
-        aggregate correctly."""
-        from olap_project_spark.export.matview import (
-            mv_create,
-            mv_read,
-            mv_refresh,
-        )
-
-        base, view = str(tmp_path / "b"), str(tmp_path / "v")
-        _write(
-            registered, base, [("a", 1, "x"), ("b", 2, "y")],
-            "k string, v bigint, note string",
-        )
-        spec = {"group_by": ["k"], "aggs": [{"expr": "v", "as": "sum_v"}]}
-        mv_create(registered, view, base, spec)
-        rename_column(base, "note", "memo")  # not a view column
-        _write(
-            registered, base, [("a", 10, "z")],
-            "k string, v bigint, memo string",
-        )
-        r = mv_refresh(registered, view)
-        assert r["mode"] == "full"  # the CDF refuses to cross a rename
-        rows = sorted(
-            (x.k, x.sum_v) for x in mv_read(registered, view).collect()
-        )
-        assert rows == [("a", 11), ("b", 2)]
-
     def test_stream_always_stops_at_rename(self, registered, tmp_path):
         """Even skipChangeCommits cannot cross a rename: a fixed-schema
         tail would silently null the renamed column on one side of the

@@ -86,7 +86,7 @@ class TestFormatDispatch:
 
     @pytest.fixture(scope="class")
     def events_sample(self, spark, sf_dir):
-        from olap_project_spark.sources.registry import load_table
+        from tests.fixtures import load_table
 
         return (
             load_table(spark, sf_dir, "events")

@@ -8,7 +8,6 @@ writers — a table-level constraint binds every write path."""
 import pytest
 from pyspark.sql import types as T
 
-from olap_project_spark.export.lakehouse_sql import LakehouseSQL
 from olap_project_spark.export.manifest_sink import (
     add_constraint,
     committed_versions,
@@ -132,77 +131,3 @@ class TestEnforcementSurfaces:
         good = spark.createDataFrame([(5, 7)], SCH)
         r = replace_where(spark, tbl, SCH, "k", 0, 9, good)
         assert r["version"] > 0
-
-
-class TestConstraintSQL:
-    @pytest.fixture()
-    def lk(self, spark, tmp_path):
-        lk = LakehouseSQL(spark, str(tmp_path / "wh"))
-        lk.sql("CREATE TABLE t (k BIGINT, cents BIGINT)")
-        lk.sql(
-            "INSERT INTO t SELECT id AS k, id * 10 AS cents "
-            "FROM range(50)"
-        )
-        return lk
-
-    def test_verbs_view_and_detail(self, lk):
-        lk.sql("ALTER TABLE t ADD CONSTRAINT nonneg CHECK (cents >= 0)")
-        rows = lk.sql("SELECT * FROM t__constraints").collect()
-        assert [(r.name, r.expr) for r in rows] == [
-            ("nonneg", "cents >= 0")
-        ]
-        d = lk.sql("DESCRIBE DETAIL t").collect()[0]
-        assert int(d.num_constraints) == 1
-        lk.sql("ALTER TABLE t DROP CONSTRAINT nonneg")
-        assert lk.sql("SELECT * FROM t__constraints").count() == 0
-
-    def test_insert_and_copy_paths_enforced(self, lk, tmp_path, spark):
-        lk.sql("ALTER TABLE t ADD CONSTRAINT nonneg CHECK (cents >= 0)")
-        with pytest.raises(ValueError, match="table constraints"):
-            lk.sql("INSERT INTO t SELECT 60 AS k, -1 AS cents")
-        stage = str(tmp_path / "stage")
-        spark.createDataFrame([(61, -2)], SCH).coalesce(1).write.parquet(
-            stage
-        )
-        with pytest.raises(ValueError, match="table constraints"):
-            lk.sql(f"COPY INTO t FROM '{stage}' FILEFORMAT = PARQUET")
-        assert (
-            lk.sql("SELECT COUNT(*) AS n FROM t WHERE cents < 0")
-            .collect()[0]
-            .n
-            == 0
-        )
-
-
-class TestCreateTableInlineConstraints:
-    def test_born_guarded_and_show_create_fixed_point(
-        self, spark, tmp_path
-    ):
-        lk = LakehouseSQL(spark, str(tmp_path / "wh3"))
-        lk.sql(
-            "CREATE TABLE t (k BIGINT, cents BIGINT, "
-            "CONSTRAINT nonneg CHECK (cents >= 0)) "
-            "PARTITIONED BY (truncate(k, 100))"
-        )
-        with pytest.raises(ValueError, match="table constraints"):
-            lk.sql("INSERT INTO t SELECT 1 AS k, -1 AS cents")
-        ddl = lk.sql("SHOW CREATE TABLE t").collect()[0].createtab_stmt
-        assert "CONSTRAINT nonneg CHECK (cents >= 0)" in ddl
-        # the emitted DDL is re-executable and reaches a fixed point
-        lk2 = LakehouseSQL(spark, str(tmp_path / "wh4"))
-        lk2.sql(ddl)
-        assert (
-            lk2.sql("SHOW CREATE TABLE t").collect()[0].createtab_stmt
-            == ddl
-        )
-        with pytest.raises(ValueError, match="table constraints"):
-            lk2.sql("INSERT INTO t SELECT 1 AS k, -1 AS cents")
-
-    def test_multiple_inline_constraints(self, spark, tmp_path):
-        lk = LakehouseSQL(spark, str(tmp_path / "wh5"))
-        lk.sql(
-            "CREATE TABLE t (k BIGINT, cents BIGINT, "
-            "CONSTRAINT a CHECK (cents >= 0), "
-            "CONSTRAINT b CHECK (k > 0))"
-        )
-        assert lk.sql("SELECT * FROM t__constraints").count() == 2

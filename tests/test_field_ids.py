@@ -449,20 +449,6 @@ class TestAddColumn:
         add_column(path, "amt", "double")  # guard cleared by rewrite
         assert "amt" in [f.name for f in table_schema(path).fields]
 
-    def test_add_via_sql(self, spark, tmp_path, sf_dir):
-        from olap_project_spark.export.lakehouse_sql import LakehouseSQL
-        from olap_project_spark.sources.registry import register_tables
-
-        register_tables(spark, sf_dir)
-        lk = LakehouseSQL(spark, str(tmp_path))
-        lk.sql("CREATE TABLE t AS SELECT n_nationkey AS k FROM nation")
-        lk.sql("ALTER TABLE t ADD COLUMN tag STRING")
-        got = lk.sql(
-            "SELECT COUNT(*) AS n FROM t WHERE tag IS NULL"
-        ).collect()[0]["n"]
-        assert got == 25
-
-
 class TestWidenColumn:
     """Explicit type widening as DDL — the Iceberg v3 promotion the
     append path already enforced, now one metadata-only commit."""
@@ -508,27 +494,3 @@ class TestWidenColumn:
             widen_column(path, "v", "bigint")
         with pytest.raises(ValueError, match="not in schema"):
             widen_column(path, "ghost", "bigint")
-
-    def test_widen_via_sql_and_composes_with_rename(
-        self, spark, tmp_path, sf_dir
-    ):
-        from olap_project_spark.export.lakehouse_sql import LakehouseSQL
-        from olap_project_spark.sources.registry import register_tables
-
-        register_tables(spark, sf_dir)
-        lk = LakehouseSQL(spark, str(tmp_path))
-        lk.sql(
-            "CREATE TABLE t AS SELECT CAST(n_nationkey AS INT) AS k, "
-            "n_name AS v FROM nation"
-        )
-        lk.sql("ALTER TABLE t ALTER COLUMN k TYPE BIGINT")
-        lk.sql("ALTER TABLE t RENAME COLUMN v TO label")
-        got = lk.sql(
-            "SELECT SUM(k) AS s, COUNT(label) AS n FROM t"
-        ).collect()[0]
-        assert (got["s"], got["n"]) == (300, 25)
-        desc = {
-            r["col_name"]: r["data_type"]
-            for r in lk.sql("DESCRIBE t").collect()
-        }
-        assert desc == {"k": "bigint", "label": "string"}

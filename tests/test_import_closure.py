@@ -5,7 +5,9 @@ Spark session, and the exact set of ``olap_project_spark`` modules that
 import loads is compared with the expected set. A new module-level
 import that drags another part of the package into the pipeline (or
 starts a JVM at import time) fails here instead of showing up as
-slower startup."""
+slower startup. Every module of the package must appear in some
+entry's closure, so a module no paper-surface import reaches (dead
+breadth) fails :func:`test_every_module_is_in_a_closure`."""
 
 from __future__ import annotations
 
@@ -26,6 +28,13 @@ CLOSURE = {
     },
     "export.daily": {"export", "export.daily", "schemas"},
     "export.scheduler": {"export", "export.daily", "export.scheduler", "schemas"},
+    "export.compact": {"export", "export.compact", "export.daily", "schemas"},
+    "sources.batch": {"schemas", "sources", "sources.batch"},
+    "sources.pos_datasource": {"schemas", "sources", "sources.pos_datasource"},
+    "transforms.enrich": {
+        "schemas", "transforms", "transforms.clean", "transforms.enrich",
+        "transforms.route",
+    },
     "sources.rates": {"schemas", "sources", "sources.rates"},
     "queries.transactions": {"queries", "queries.transactions"},
     "export.manifest_sink": {
@@ -68,3 +77,20 @@ def test_import_closure(module):
     got = json.loads(out.stdout.strip().splitlines()[-1])
     assert set(got["modules"]) == CLOSURE[module]
     assert not got["jvm"], "importing the module started a JVM"
+
+
+def test_every_module_is_in_a_closure():
+    pkg = os.path.join(REPO, "olap_project_spark")
+    modules = set()
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            rel = os.path.relpath(os.path.join(root, f), pkg)[: -len(".py")]
+            parts = rel.split(os.sep)
+            if parts[-1] == "__init__":
+                parts = parts[:-1]
+            if parts:  # the top-level package itself is always loaded
+                modules.add(".".join(parts))
+    covered = set().union(*CLOSURE.values())
+    assert sorted(modules - covered) == []

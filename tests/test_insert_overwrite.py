@@ -1,10 +1,8 @@
 """INSERT OVERWRITE — atomic truncate+insert (overwrite_table) and
 predicate-scoped replaceWhere (replace_where) as ONE rewrite commit.
 
-Covers the library surface (guards, NULL keys, retained-file pruning,
-hidden-partitioning preservation, time travel) and the SQL verbs
-(`INSERT OVERWRITE t [WHERE col BETWEEN lo AND hi | WHERE col = v]
-SELECT ...`).
+Covers the library surface: guards, NULL keys, retained-file pruning,
+hidden-partitioning preservation and time travel.
 
 Reference analogue: the loader's only write modes are append and
 wholesale WRITE_TRUNCATE (bigquery_update_scheduler.py:247-260)."""
@@ -16,7 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from olap_project_spark.export.lakehouse_sql import LakehouseSQL
 from olap_project_spark.export.manifest_sink import (
     committed_versions,
     delete_where,
@@ -191,70 +188,3 @@ class TestOverwriteTable:
         )
         files, total = plan_pruned_files(path, "k", 0, 49)
         assert 0 < len(files) < total  # new files still prune
-
-
-class TestInsertOverwriteSQL:
-    @pytest.fixture()
-    def lk(self, spark, tmp_path):
-        lk = LakehouseSQL(spark, str(tmp_path / "wh"))
-        lk.sql("CREATE TABLE t (k BIGINT, cents BIGINT)")
-        lk.sql(
-            "INSERT INTO t SELECT 1 AS k, 10 AS cents "
-            "UNION ALL SELECT 2, 20 UNION ALL SELECT 55, 550"
-        )
-        return lk
-
-    def test_replace_where_between(self, lk):
-        r = lk.sql(
-            "INSERT OVERWRITE t WHERE k BETWEEN 1 AND 2 "
-            "SELECT 1 AS k, 111 AS cents"
-        ).collect()[0]
-        assert int(r.version) >= 1 and int(r.rows) == 1
-        state = sorted(
-            (x.k, x.cents) for x in lk.sql("SELECT * FROM t").collect()
-        )
-        assert state == [(1, 111), (55, 550)]
-
-    def test_replace_where_equality(self, lk):
-        lk.sql("INSERT OVERWRITE t WHERE k = 55 SELECT 55 AS k, 0 AS cents")
-        assert (
-            lk.sql("SELECT cents FROM t WHERE k = 55").collect()[0].cents
-            == 0
-        )
-
-    def test_full_overwrite(self, lk):
-        lk.sql("INSERT OVERWRITE t SELECT 9 AS k, 900 AS cents")
-        assert [
-            (x.k, x.cents) for x in lk.sql("SELECT * FROM t").collect()
-        ] == [(9, 900)]
-
-    def test_violation_rejects(self, lk):
-        with pytest.raises(ValueError, match="violate"):
-            lk.sql(
-                "INSERT OVERWRITE t WHERE k = 1 SELECT 2 AS k, 0 AS cents"
-            )
-
-    def test_conforms_to_declared_schema(self, lk):
-        # literal INTs cast to the declared BIGINTs; column order by name
-        lk.sql(
-            "INSERT OVERWRITE t WHERE k = 1 "
-            "SELECT 5 AS cents, 1 AS k"
-        )
-        row = lk.sql("SELECT k, cents FROM t WHERE k = 1").collect()[0]
-        assert (row.k, row.cents) == (1, 5)
-
-    def test_string_range_literals(self, spark, tmp_path):
-        lk = LakehouseSQL(spark, str(tmp_path / "wh2"))
-        lk.sql("CREATE TABLE s (name STRING, v BIGINT)")
-        lk.sql(
-            "INSERT INTO s SELECT 'alpha' AS name, 1 AS v "
-            "UNION ALL SELECT 'beta', 2 UNION ALL SELECT 'zed', 3"
-        )
-        lk.sql(
-            "INSERT OVERWRITE s WHERE name BETWEEN 'alpha' AND 'beta' "
-            "SELECT 'beta' AS name, 99 AS v"
-        )
-        state = sorted(
-            (x.name, x.v) for x in lk.sql("SELECT * FROM s").collect()
-        )
-        assert state == [("beta", 99), ("zed", 3)]

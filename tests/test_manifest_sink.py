@@ -11,6 +11,7 @@ import pytest
 from olap_project_spark.export.manifest_sink import (
     ManifestSinkDataSource,
     read_committed,
+    save_manifest,
 )
 
 
@@ -1021,3 +1022,69 @@ class TestWriterFailureAndReporting:
         (entry,) = table_history(path)
         assert st == {"n_rows": 0, "n_files": entry["n_files"]}
         assert entry["n_files"] == 1
+
+
+@pytest.mark.parametrize("phase", ["task", "before_claim", "after_claim"])
+def test_failed_save_is_invisible_and_retry_commits_once(
+    registered, spark, tmp_path, phase
+):
+    """save_manifest fails at one commit phase: a task raises mid-write;
+    every task wrote and the driver fails before the version claim; or
+    the version is claimed and the driver fails before the manifest is
+    moved into place. The committed state is the pre-commit model, one
+    retry commits the rows exactly once, and vacuum (with a stale-claim
+    TTL for the crashed claim) removes the failed attempt's files."""
+    import time
+
+    from olap_project_spark.export import manifest_sink as ms
+
+    path = str(tmp_path / phase)
+    staging = os.path.join(path, "_staging")
+    _write(spark, path, [(0, "base")])
+    model = [(0, "base")]
+    rows = [(i, f"r{i}") for i in range(1, 41)]
+    df = spark.createDataFrame(rows, SCHEMA).repartition(4)
+
+    def state():
+        return sorted(
+            (r["k"], r["v"])
+            for r in read_committed(spark, path, SCHEMA).collect()
+        )
+
+    if phase == "task":
+
+        def lose_last_task(batches):
+            from pyspark import TaskContext
+
+            for b in batches:
+                yield b
+                if TaskContext.get().partitionId() == 3:
+                    time.sleep(1.0)  # let the other tasks stage their files
+                    raise RuntimeError("task lost mid-write")
+
+        with pytest.raises(Exception, match="task lost mid-write"):
+            save_manifest(df.mapInArrow(lose_last_task, df.schema), path)
+    else:
+
+        class LoseDriver(ms.PosixVersionClaimer):
+            def claim(self, p, version):
+                if phase == "after_claim":
+                    assert super().claim(p, version)
+                raise RuntimeError(f"driver lost {phase}")
+
+        prev = ms.set_version_claimer(LoseDriver())
+        try:
+            with pytest.raises(RuntimeError, match="driver lost"):
+                save_manifest(df, path)
+        finally:
+            ms.set_version_claimer(prev)
+    assert state() == model
+    assert len(os.listdir(staging)) > 1  # the failed attempt's residue
+    save_manifest(df, path)  # the retry
+    assert state() == sorted(model + rows)
+    stats = ms.vacuum_snapshots(path, stale_claim_ttl_s=0.0)
+    assert stats["orphans_deleted"] >= 1
+    assert stats["stale_claims_deleted"] == (phase == "after_claim")
+    referenced = {f for _v, m in ms._log(path) for f in m["files"]}
+    assert set(os.listdir(staging)) == referenced
+    assert state() == sorted(model + rows)

@@ -14,7 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from olap_project_spark.export.lakehouse_sql import LakehouseSQL
 from olap_project_spark.export.manifest_sink import (
     analyze_table,
     committed_versions,
@@ -183,31 +182,3 @@ class TestAnalyzeKindInvisible:
         repl = spark.createDataFrame([(0, "z")], SCH)
         r = replace_where(spark, tbl, SCH, "k", 0, 299, repl)
         assert r["version"] > 0  # no guard rejection
-
-
-class TestAnalyzeSQL:
-    def test_verb_and_view(self, spark, tmp_path):
-        lk = LakehouseSQL(spark, str(tmp_path / "wh"))
-        lk.sql("CREATE TABLE t (k BIGINT, st STRING)")
-        lk.sql(
-            "INSERT INTO t SELECT id AS k, CONCAT('s', CAST(id % 7 AS "
-            "STRING)) AS st FROM range(500)"
-        )
-        r = lk.sql(
-            "ANALYZE TABLE t COMPUTE STATISTICS FOR COLUMNS (k, st)"
-        ).collect()[0]
-        assert int(r.sketches) == 2 * int(r.files_analyzed) > 0
-        rows = {
-            x.column: (x.ndv, x.exact)
-            for x in lk.sql("SELECT * FROM t__ndv").collect()
-        }
-        assert rows["st"] == (7, True)
-        assert rows["k"] == (500, True)
-
-    def test_view_empty_under_tombstones(self, spark, tmp_path):
-        lk = LakehouseSQL(spark, str(tmp_path / "wh2"))
-        lk.sql("CREATE TABLE t (k BIGINT, st STRING)")
-        lk.sql("INSERT INTO t SELECT 1 AS k, 'a' AS st")
-        lk.sql("ANALYZE TABLE t COMPUTE STATISTICS FOR COLUMNS (st)")
-        lk.sql("DELETE FROM t WHERE k = 1")
-        assert lk.sql("SELECT * FROM t__ndv").count() == 0

@@ -6,8 +6,7 @@ history. Under the default 100-points-per-partition hint that made the
 physical layout of a clustered rewrite visibly run-dependent: the same
 ``compact_snapshots(cluster_by=...)`` could scatter a zone-map box over
 a different number of files depending on how many jobs the session had
-run before (observed once as a ``clustered_compaction_stats`` oracle
-flake: ``box_files_after_le_quarter`` 0 vs 1).
+run before.
 
 The fix scopes a 10_000-point sampling hint around every manifest
 layout-rewrite job (``_tight_range_boundaries``): at test/gate scale
@@ -52,21 +51,12 @@ def _shift_session_seed(spark, n: int) -> None:
 
 @pytest.fixture()
 def zpts(spark):
-    # 4096 points on a 64x64 grid, interleaved into a Morton-ish key:
-    # same shape as the clustered_compaction_stats fixture, small
-    # enough for an exact reservoir.
-    from olap_project_spark.functions.scale import zorder_key
-
-    df = (
-        spark.range(4096)
-        .select(
-            F.col("id"),
-            (F.col("id") % 64).alias("x"),
-            ((F.col("id") * 37) % 64).alias("y"),
-        )
-        .withColumn("zkey", zorder_key(F.col("x"), F.col("y")))
+    # 4096 rows whose cluster key is a permutation of 0..4095 (7919 is
+    # coprime to 4096), uncorrelated with `id`: small enough for an
+    # exact reservoir.
+    return spark.range(4096).select(
+        F.col("id"), ((F.col("id") * 7919) % 4096).alias("key")
     )
-    return df
 
 
 def test_clustered_rewrite_layout_is_session_independent(spark, zpts):
@@ -80,9 +70,9 @@ def test_clustered_rewrite_layout_is_session_independent(spark, zpts):
             save_manifest(zpts.repartition(8, "id"), path)
             _shift_session_seed(spark, burn)
             compact_snapshots(
-                spark, path, zpts.schema, cluster_by=["zkey"], n_files=8
+                spark, path, zpts.schema, cluster_by=["key"], n_files=8
             )
-            layouts.append(_last_commit_stats(path, "zkey"))
+            layouts.append(_last_commit_stats(path, "key"))
     finally:
         for r in roots:
             shutil.rmtree(r, ignore_errors=True)

@@ -4,9 +4,11 @@ trigger), asserting against the batch-computed truth (SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,7 +18,6 @@ from olap_project_spark.schemas import (
     OUTPUT_COLUMNS,
     RAW_TRANSACTION_SCHEMA,
 )
-from olap_project_spark.sources.registry import load_table
 from olap_project_spark.streaming import (
     dedup_stream,
     read_file_stream,
@@ -27,7 +28,7 @@ from olap_project_spark.streaming import (
 from olap_project_spark.transforms import clean, route
 from olap_project_spark.transforms.clean import to_output
 from tests import txn_model as M
-from tests.fixtures import _row, sample_rows
+from tests.fixtures import _row, load_table, sample_rows
 
 FIXED_TS = "2024-01-15 08:30:20"
 RAW_FIELDS = [
@@ -326,6 +327,12 @@ class TestSinkParity:
         assert got.schema == exp.schema
         assert got.count() > 0
         assert _rows(got) == _rows(exp)
+        # Spark ignores pyarrow's schema footer, so the sinks omit it
+        files = glob.glob(f"{sinks}/{sink}/**/*.parquet", recursive=True)
+        assert files and not any(
+            b"ARROW:schema" in (pq.ParquetFile(f).metadata.metadata or {})
+            for f in files
+        )
 
     def test_unparsed_fraud_row_lands_in_default_partition(self, spark, sinks):
         assert os.path.isdir(f"{sinks}/fraud/Year=__HIVE_DEFAULT_PARTITION__")
@@ -599,17 +606,13 @@ class TestStreamingManifestCommit:
         lacked — a failed batch leaves only invisible staging files,
         and downstream readers see batch-atomic state."""
         from olap_project_spark.export.manifest_sink import (
-            ManifestSinkDataSource,
             read_committed,
+            save_manifest,
             table_versions,
         )
         from olap_project_spark.streaming.pipeline import read_file_stream
         from olap_project_spark.transforms import clean
 
-        try:
-            spark.dataSource.register(ManifestSinkDataSource)
-        except Exception:  # noqa: BLE001 — already registered
-            pass
         path = str(tmp_path / "mtbl")
         ckpt = str(tmp_path / "mckpt")
         stream = read_file_stream(spark, raw_json_dir, fmt="json")
@@ -618,12 +621,7 @@ class TestStreamingManifestCommit:
             out = clean(batch_df, processed_at=FIXED_TS).select(
                 "User", "Amount_USD", "Is_Fraud"
             )
-            (
-                out.write.format("manifest_sink")
-                .option("path", path)
-                .mode("append")
-                .save()
-            )
+            save_manifest(out, path)
 
         q = (
             stream.writeStream.foreachBatch(commit_batch)

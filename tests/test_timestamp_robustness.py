@@ -3,11 +3,11 @@
 The driver's ``events.ts`` column has shipped in different physical
 parquet encodings between rounds (round 1: INT64 TIMESTAMP(NANOS);
 round 2: ``timestamp[us]``, which Spark 4 reads as TIMESTAMP_NTZ and
-which broke window queries, numeric casts, and ``withWatermark`` —
-see sources/registry.py module docstring). This test writes the same
-events fixture THREE ways and asserts the loader plus one window query
-work identically on all of them, so no future encoding drift can zero
-a round again.
+which broke window queries, numeric casts, and ``withWatermark``).
+This test writes the same events fixture THREE ways and asserts the
+test loader (``tests/fixtures.load_table``) plus one window query work
+identically on all of them, so no future encoding drift can zero a
+round again.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
-from olap_project_spark.sources.registry import load_table
+from tests.fixtures import load_table
 
 BASE = dt.datetime(2024, 3, 1, 0, 0, 0)
 ROWS = [
@@ -98,26 +98,3 @@ class TestTimestampRobustness:
         )
         got = sorted((r.user_id, r.gap_s) for r in gaps)
         assert got == [(1, 30.0), (1, 3970.0), (2, 30.0), (2, 7190.0)]
-
-
-def test_load_table_pins_utc_on_non_utc_session(spark, sf_dir):
-    """The NTZ→TimestampType cast is wall-clock-preserving only under
-    a UTC session timezone; load_table must pin it so a driver session
-    in another zone still produces oracle-identical epoch values."""
-    import duckdb
-
-    ns = spark.newSession()
-    ns.conf.set("spark.sql.ansi.enabled", "true")
-    ns.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
-    ns.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
-    df = load_table(ns, sf_dir, "events")
-    got = df.selectExpr(
-        "CAST(min(ts) AS STRING) AS s", "min(unix_micros(ts)) AS u"
-    ).collect()[0]
-    exp = duckdb.sql(
-        "SELECT CAST(min(ts) AS VARCHAR),"
-        "       CAST(epoch_us(min(ts)) AS BIGINT)"
-        f" FROM read_parquet('{sf_dir}/events.parquet')"
-    ).fetchone()
-    assert got["s"][:19] == exp[0][:19]
-    assert got["u"] == exp[1]
