@@ -21,7 +21,6 @@ import tempfile
 from pathlib import Path
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024
 

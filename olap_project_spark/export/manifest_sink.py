@@ -11,18 +11,26 @@ Python DataSource writer API:
 2. the DRIVER, only after every task succeeded, atomically renames a
    ``_manifest-<uuid>.json`` into place listing exactly the committed
    files;
-3. readers (:func:`read_committed`) take the union of all manifests'
-   file lists — orphaned staging files from failed/aborted attempts are
-   invisible, so the sink is effectively-exactly-once per query even
-   under task retries (Spark de-duplicates task attempts before
-   ``commit``; the DataSource path's ``abort`` removes this attempt's
-   staging files). :func:`save_manifest` runs no ``abort``: when a task
-   fails mid-write, or the driver fails before the version claim or
+3. readers (:func:`read_committed`) fold the manifests' file lists on
+   the driver into ONE scan of the live files — orphaned staging files
+   from failed/aborted attempts are invisible, so the sink is
+   effectively-exactly-once per query even under task retries (Spark
+   de-duplicates task attempts before ``commit``; the DataSource
+   path's ``abort`` removes this attempt's staging files).
+   :func:`save_manifest` runs no ``abort``: when a task fails
+   mid-write, or the driver fails before the version claim or
    after it but before the manifest is moved into place, readers still
    see the pre-commit state, one retry commits the rows exactly once,
    and :func:`vacuum_snapshots` collects the failed attempt's staging
    files and its crashed claim (``test_manifest_sink.py::
    test_failed_save_is_invisible_and_retry_commits_once``).
+
+Row-level deletes are tombstones: :func:`delete_where` writes the key
+set as one staging file and commits it from the driver, with no Spark
+job for a local key frame. A read turns each tombstone into one filter
+on that scan, built from keys the driver reads with pyarrow — no join
+and no broadcast job. The bound: a delete's key set must fit in driver
+memory.
 
 This is the same fence Iceberg/Delta build on (manifest = the commit),
 reduced to its teachable core. At scale the manifest holds file paths +
@@ -73,7 +81,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructField, StructType
 
-from olap_project_spark.functions.localframe import local_frame
+from olap_project_spark.functions.localframe import arrow_table, local_frame
 
 
 @dataclass
@@ -1915,14 +1923,21 @@ def _stream_visible_head(path: str) -> int:
     return head
 
 
-def _read_files(spark: SparkSession, path: str, schema, names) -> DataFrame:
+def _read_files(
+    spark: SparkSession, path: str, schema, names, drops=()
+) -> DataFrame:
     """Scan exactly the named committed staging files. Parquet is the
     data plane (columnar: the scan prunes columns and pushes predicates
     into row-group filters); legacy ``.jsonl`` files from pre-columnar
     commits are still read (extension dispatch + unionByName), so a
     table migrates formats by simply compacting. Missing-in-file
     columns read as NULL against the explicit schema in BOTH formats —
-    the add-only evolution contract."""
+    the add-only evolution contract.
+
+    Each ``drops`` predicate removes its matching rows. They apply to
+    each format's scan before the union: a predicate may name the
+    scan's ``_metadata.file_name``, which does not resolve over the
+    union."""
     names = sorted(names)
     if not names:
         return local_frame(spark, [], schema)
@@ -1934,10 +1949,85 @@ def _read_files(spark: SparkSession, path: str, schema, names) -> DataFrame:
         parts.append(spark.read.schema(schema).parquet(*pq))
     if js:
         parts.append(spark.read.schema(schema).json(js))
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
+    df = None
+    for p in parts:
+        for drop in drops:
+            p = p.filter(~drop)
+        df = p if df is None else df.unionByName(p)
     return df
+
+
+def _key_rows(path: str, names, key_schema: StructType) -> list[tuple]:
+    """The distinct key tuples stored in the named staging files, read
+    on the driver with pyarrow (key columns only). A tuple holding a
+    null is dropped: a null key never matches."""
+    import pyarrow.json as pj
+    import pyarrow.parquet as pq
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    asch = to_arrow_schema(key_schema)
+    staging = os.path.join(path, "_staging")
+    rows: dict[tuple, None] = {}
+    for n in names:
+        f = os.path.join(staging, n)
+        if n.endswith(".parquet"):
+            t = pq.read_table(f, columns=asch.names)
+        elif os.path.getsize(f):
+            t = pj.read_json(
+                f,
+                parse_options=pj.ParseOptions(
+                    explicit_schema=asch,
+                    unexpected_field_behavior="ignore",
+                ),
+            )
+        else:
+            continue
+        t = t.select(asch.names).cast(asch)
+        cols = [c.to_pylist() for c in t.columns]
+        rows.update(dict.fromkeys(r for r in zip(*cols) if None not in r))
+    return list(rows)
+
+
+def _key_hit(key_schema: StructType, rows: list[tuple]):
+    """Column that is true exactly on the rows whose key equals one of
+    ``rows`` — an anti-join's match as a predicate: ``isin`` for a
+    one-column key, an OR of ANDs otherwise, and false (never null)
+    when a key column is null."""
+    from functools import reduce
+    from operator import and_
+
+    from pyspark.sql import functions as _F
+
+    keys = [f.name for f in key_schema.fields]
+    if not rows:
+        return _F.lit(False)
+    if len(keys) == 1:
+        hit = _F.col(keys[0]).isin([r[0] for r in rows])
+    else:
+        terms = [
+            reduce(and_, [_F.col(k) == v for k, v in zip(keys, r)])
+            for r in rows
+        ]
+        while len(terms) > 1:  # a balanced OR: depth log2(|rows|)
+            terms = [
+                terms[i] | terms[i + 1] if i + 1 < len(terms) else terms[i]
+                for i in range(0, len(terms), 2)
+            ]
+        hit = terms[0]
+    return _F.coalesce(hit, _F.lit(False))
+
+
+def _tombstone_hit(path: str, m: dict, version: int):
+    """:func:`_key_hit` of a delete or merge snapshot, its keys read
+    from its own files: a delete's recorded key schema, or a merge's
+    ``merge_keys`` projected from its rows' recorded schema."""
+    if "schema" not in m:
+        raise ValueError(f"{m['kind']} snapshot {version} recorded no schema")
+    ks = StructType.fromJson(m["schema"])
+    if m["kind"] == "merge":
+        ks = StructType([ks[k] for k in m["merge_keys"]])
+    return _key_hit(ks, _key_rows(path, m["files"], ks))
 
 
 def _committed_entry_of(
@@ -1968,27 +2058,32 @@ def read_committed(
     invisible). ``as_of`` reads the table AS OF that snapshot version —
     the union of all commits with version <= as_of, so a reader can
     reproduce yesterday's training set after today's append.
-    Driver-side listing is O(#manifests); the data read is a parallel
-    columnar scan of exactly the committed files.
+    Driver-side listing is O(#manifests); the data read is ONE
+    parallel columnar scan of exactly the live files.
 
     Row-level DELETES (Iceberg-v2-style equality deletes, written via
-    :func:`delete_where`) apply MERGE-ON-READ: when the log contains
-    delete snapshots, the read folds it in commit order — appends
-    accumulate, a delete anti-joins the state-so-far on the tombstone
-    file's key columns (so a key re-inserted AFTER its delete
-    survives, the sequence-number rule), and a rewrite resets to its
-    consolidated state (compaction MATERIALIZES deletes: it rewrites
-    through this reader, so tombstones never outlive it). A MERGE
-    snapshot (atomic upsert, :func:`merge_upsert`) folds as
-    delete-then-insert from ONE commit: the state-so-far is
-    anti-joined on the merge's key columns projected from the merge's
-    OWN data files, then those files append — matched rows replaced,
-    unmatched inserted, no intermediate state ever readable. Logs
-    without deletes or merges take the single-scan fast path
-    unchanged. ``_keep`` restricts the DATA files scanned (zone-map
-    pruning); tombstone applications are never pruned — a pruned-out
-    merge file still anti-joins its keys, it just isn't scanned as
-    data — correctness over skipping.
+    :func:`delete_where`) apply MERGE-ON-READ: the log folds in commit
+    order on the driver — appends add live files, a rewrite resets the
+    state to its consolidated files (compaction MATERIALIZES deletes:
+    it rewrites through this reader, so tombstones never outlive it),
+    and each delete adds ONE filter to the scan. The filter drops the
+    rows whose key equals one of the delete's keys, which the driver
+    reads from the tombstone files with pyarrow (:func:`_key_hit`: a
+    null on either side never matches, as in an anti-join). A delete
+    that precedes only some of the scanned files is scoped to them by
+    ``_metadata.file_name``, so a key re-inserted AFTER its delete
+    survives (the sequence-number rule). A MERGE snapshot (atomic
+    upsert, :func:`merge_upsert`) folds as delete-then-insert from ONE
+    commit: a delete whose keys are the key projection of the merge's
+    OWN data files, then the append of those files — matched rows
+    replaced, unmatched inserted, no intermediate state ever readable.
+    The bound of this design: each delete's key set is held in driver
+    memory and planned as literals, so it must fit there.
+
+    ``_keep`` restricts the DATA files scanned (zone-map pruning);
+    tombstones are never pruned — a pruned-out merge file still
+    deletes its keys, it just isn't scanned as data — correctness
+    over skipping.
 
     RENAMED tables (live naming eras) are REJECTED here: this is the
     explicit-schema path, and scanning a pre-rename file under the
@@ -2003,59 +2098,32 @@ def read_committed(
             "null pre-rename columns — read through read_evolved or "
             "the public batch reader, or compact to collapse the eras"
         )
-    if not any(
-        m.get("kind", "append") in ("delete", "merge") for _, m in log
-    ):
-        committed = [f for f, _ in _committed_files(path, as_of, branch)]
-        if _keep is not None:
-            committed = [f for f in committed if f in _keep]
-        return _read_files(spark, path, schema, committed)
-
-    def flush(df: DataFrame | None, pending: list) -> DataFrame | None:
-        if _keep is not None:
-            pending = [f for f in pending if f in _keep]
-        if not pending:
-            return df
-        scan = _read_files(spark, path, schema, pending)
-        return scan if df is None else df.unionByName(scan)
-
-    df: DataFrame | None = None
-    pending: list = []
+    live: list[str] = []
+    tombs: list[tuple[int, int, dict]] = []  # (live files before, version, m)
     for version, m in log:
         kind = m.get("kind", "append")
-        if kind in ("alter", "analyze"):
-            continue  # metadata-only (rename / NDV sketches): no rows
-            # change; renamed tables read era-correctly via read_evolved
         if kind == "rewrite":
-            df, pending = None, list(m["files"])
-        elif kind == "append":
-            pending += m["files"]
-        elif kind == "merge":
-            # atomic upsert: tombstone the pre-merge state on the key
-            # projection of this commit's OWN files, then append them
-            df, pending = flush(df, pending), []
-            keys = m["merge_keys"]
-            if df is not None:
-                tomb = _read_files(spark, path, schema, m["files"]).select(
-                    *keys
-                )
-                df = df.join(tomb, on=keys, how="left_anti")
-            pending += m["files"]
-        else:  # delete
-            df, pending = flush(df, pending), []
-            if df is None:
-                continue
-            if "schema" not in m:
-                raise ValueError(
-                    f"delete snapshot {version} recorded no key schema"
-                )
-            key_schema = StructType.fromJson(m["schema"])
-            tomb = _read_files(spark, path, key_schema, m["files"])
-            df = df.join(
-                tomb, on=[f.name for f in key_schema.fields], how="left_anti"
+            live, tombs = [], []
+        if kind in ("delete", "merge"):
+            tombs.append((len(live), version, m))
+        if kind != "delete":
+            live += m["files"]  # metadata-only commits list no files
+    scanned = live if _keep is None else [f for f in live if f in _keep]
+    from pyspark.sql import functions as _F
+
+    drops = []
+    for n_before, version, m in tombs:
+        covered = set(live[:n_before])
+        later = [f for f in scanned if f not in covered]
+        if len(later) == len(scanned):
+            continue  # precedes no scanned file
+        drop = _tombstone_hit(path, m, version)
+        if later:  # scope to the files the delete precedes
+            drop = drop & ~_F.col("_metadata.file_name").isin(
+                [os.path.basename(f) for f in later]
             )
-    df = flush(df, pending)
-    return df if df is not None else local_frame(spark, [], schema)
+        drops.append(drop)
+    return _read_files(spark, path, schema, scanned, drops)
 
 
 def delete_where(
@@ -2066,21 +2134,28 @@ def delete_where(
 ) -> int:
     """Row-level DELETE from the manifest table without rewriting any
     data file — an equality-delete snapshot (Iceberg v2 merge-on-read):
-    ``keys``' rows are written as tombstone files through the same
-    exactly-once writer, and every committed row matching a tombstone
-    on ALL of ``keys``' columns disappears from subsequent reads (of
-    versions >= this one — earlier versions still time-travel to the
-    undeleted state). The delete costs O(|keys|) writes + one manifest,
-    never a table rewrite; the rewrite happens lazily at the next
+    ``keys``' rows are written as one tombstone file, and every
+    committed row matching a tombstone on ALL of ``keys``' columns
+    disappears from subsequent reads (of versions >= this one —
+    earlier versions still time-travel to the undeleted state). A key
+    holding a null matches nothing. The delete runs in the driver:
+    ``keys.collect()`` (no Spark job for a local frame such as
+    ``createDataFrame(pa.table(...))``, one job otherwise), then
+    :meth:`ManifestWriter.write` and :meth:`ManifestWriter.commit`,
+    the same steps every commit runs. So the key set must fit in
+    driver memory, as it must for every read that applies it
+    (:func:`read_committed`). The rewrite happens lazily at the next
     compaction, which materializes the deletes and drops the
     tombstones. ``branch`` stages the delete on a write-audit-publish
     branch instead of committing it to main directly. Returns the new
     snapshot version."""
     token = uuid.uuid4().hex
-    opts = {"kind": "delete", "commit_token": token}
+    opts = {"path": path, "kind": "delete", "commit_token": token}
     if branch is not None:
         opts["branch"] = branch
-    save_manifest(keys, path, **opts)
+    writer = ManifestWriter(opts, overwrite=False, schema=keys.schema)
+    batches = arrow_table(keys.collect(), keys.schema).to_batches()
+    writer.commit([writer.write(iter(batches))])
     return _committed_entry_of(path, token, branch)[0]
 
 
@@ -3175,7 +3250,10 @@ def maintain(
     2. if tombstones (delete/merge snapshots) sit above the latest
        rewrite, a scoped rewrite is unsafe (it would resurrect rows in
        retained files), so a FULL clustered compaction materializes
-       them — also resolving the flagged small-file pressure;
+       them — also resolving the flagged small-file pressure. It reads
+       the table as :func:`read_committed` does (one scan, one key
+       filter per tombstone), so the tombstones add no job; the
+       rewrite still reads and writes every live row;
     3. otherwise each flagged range gets a scoped
        :func:`compact_range` (pay I/O proportional to the range);
     4. a rewrite landed this pass → :func:`vacuum_snapshots` expires
@@ -4307,9 +4385,11 @@ def read_pruned(
     [lo, hi] — the Iceberg/Delta file-skipping contract. The caller
     still applies the actual row filter; this prunes the FILE LIST the
     scan opens (at 100 TB, the difference between touching 2 files and
-    2000). Tombstones from delete snapshots still apply (the pruned
-    scan routes through :func:`read_committed`'s fold) — skipping
-    never resurrects deleted rows."""
+    2000). Tombstones from delete snapshots still apply: the pruned
+    scan routes through :func:`read_committed`'s fold, so each delete
+    that precedes a kept file is one key filter on the one scan of the
+    kept files — skipping never resurrects deleted rows, and no
+    tombstone costs a job."""
     files, _ = plan_pruned_files(path, col, lo, hi, as_of)
     return read_committed(spark, path, schema, as_of=as_of, _keep=set(files))
 
@@ -4475,12 +4555,13 @@ def read_evolved(
     and each alter commit applies its renames/drops TO THE STATE as a
     metadata-only projection — Delta column-mapping semantics with the
     manifest-recorded schema standing in for field IDs. Because every
-    delete/merge tombstone anti-joins the state under the SAME names
-    it was written with (the names current at its sequence point),
-    row-level operations compose exactly with renames and drops in
-    ANY interleaving — delete-then-rename, rename-then-delete, and
-    drop-then-rename-reuse all fold to the correct rows (a rename is
-    a column bijection, so the per-segment fold is the
+    delete/merge tombstone filters the state (``filter(~hit)``, see
+    :func:`_key_hit`) under the SAME names it was written with (the
+    names current at its sequence point), row-level operations
+    compose exactly with renames and drops in ANY interleaving —
+    delete-then-rename, rename-then-delete, and drop-then-rename-reuse
+    all fold to the correct rows (a rename is a column bijection, so
+    the per-segment fold is the
     :func:`read_committed` fold expressed in each segment's own
     coordinate system). Columns added after a file's write-era
     null-backfill, so rename, drop, add-column, and type-widening
@@ -4555,25 +4636,15 @@ def read_evolved(
         elif kind == "merge":
             seg = data_schema(m, version)
             df, pending = flush(df), []
-            keys = m["merge_keys"]
             if df is not None:
-                tomb = _read_files(spark, path, seg, m["files"]).select(
-                    *keys
-                )
-                df = conform(df, seg).join(tomb, on=keys, how="left_anti")
+                hit = _tombstone_hit(path, m, version)
+                df = conform(df, seg).filter(~hit)
             pending += m["files"]
         else:  # delete: key names are the segment's names
             df, pending = flush(df), []
             if df is None:
                 continue
-            if "schema" not in m:
-                raise ValueError(
-                    f"delete snapshot {version} recorded no key schema"
-                )
-            key_schema = StructType.fromJson(m["schema"])
-            keys = [f.name for f in key_schema.fields]
-            tomb = _read_files(spark, path, key_schema, m["files"])
-            df = conform(df, seg).join(tomb, on=keys, how="left_anti")
+            df = conform(df, seg).filter(~_tombstone_hit(path, m, version))
     df = flush(df)
     if df is None:
         return local_frame(spark, [], sch)
@@ -5467,12 +5538,13 @@ def read_changes(
     ``_commit_version``. Appends contribute their files' rows as
     inserts (no diffing scan — exactly the committed files). A delete
     snapshot contributes the rows it REMOVED: the table state as of
-    the preceding version, semi-joined to the tombstone keys — a
-    distributed join against only the pre-delete state, never a full
-    history diff. A rewrite (compaction) inside the range still
-    raises: it reorganizes bytes without changing rows, so a
-    row-level feed crossing it would double-count (Delta's CDF makes
-    the same run-before-compacting demand).
+    the preceding version filtered to the tombstone keys
+    (``filter(hit)``, see :func:`_key_hit`) — a scan of only the
+    pre-delete state, never a full history diff. A rewrite
+    (compaction) inside the range still raises: it reorganizes bytes
+    without changing rows, so a row-level feed crossing it would
+    double-count (Delta's CDF makes the same run-before-compacting
+    demand).
 
     A RESTORE snapshot contributes its row-level symmetric diff: the
     rows the restore removed (pre-restore state minus the restored
@@ -5531,28 +5603,18 @@ def read_changes(
             # stamped with the ONE commit version (a CDF consumer
             # replaying them in (delete, insert) order reconstructs
             # exactly the post-merge state)
-            keys = m["merge_keys"]
             rows = _read_files(spark, path, schema, m["files"])
             before = read_committed(spark, path, schema, as_of=version - 1)
-            removed = before.join(
-                rows.select(*keys), on=keys, how="left_semi"
-            )
+            removed = before.filter(_tombstone_hit(path, m, version))
             parts.append(
                 removed.withColumn("_change_type", _F.lit("delete"))
                 .withColumn("_commit_version", _F.lit(version).cast("int"))
             )
             df = rows
         else:  # delete: emit the rows the tombstones removed
-            if "schema" not in m:
-                raise ValueError(
-                    f"delete snapshot {version} recorded no key schema"
-                )
-            key_schema = StructType.fromJson(m["schema"])
-            tomb = _read_files(spark, path, key_schema, m["files"])
+            hit = _tombstone_hit(path, m, version)
             before = read_committed(spark, path, schema, as_of=version - 1)
-            df = before.join(
-                tomb, on=[f.name for f in key_schema.fields], how="left_semi"
-            )
+            df = before.filter(hit)
         parts.append(
             df.withColumn(
                 "_change_type",

@@ -42,27 +42,43 @@ def _has_timestamp(dt) -> bool:
     return False
 
 
+def _local_instant(v):
+    """A naive datetime as the aware host-local instant it names,
+    honouring ``fold``: in the repeated hour of a DST fall-back,
+    ``time.mktime`` (the classic builder's conversion) ignores ``fold``
+    and guesses, so a collected timestamp would not round-trip. A wall
+    clock the host zone skips or cannot represent stays naive and
+    takes the classic conversion."""
+    if v is None or v.tzinfo is not None:
+        return v
+    try:
+        aware = v.astimezone()
+    except (OverflowError, ValueError):
+        return v
+    return aware if aware.replace(tzinfo=None) == v else v
+
+
 def _column(pa, values, spark_field, arrow_field):
     """One Arrow column of the declared type. ``TimestampType`` values
-    go through the classic builder's own conversion (naive datetimes
-    are host-local wall clocks, aware ones are instants), so the frame
-    holds the same instants on any host time zone; nested timestamps
-    raise and take the classic path."""
+    take the classic builder's conversion (naive datetimes are
+    host-local wall clocks, aware ones are instants) after
+    :func:`_local_instant`, so the frame holds the same instants on any
+    host time zone; nested timestamps raise and take the classic
+    path."""
     dt = spark_field.dataType
     if isinstance(dt, TimestampType):
-        micros = [dt.toInternal(v) for v in values]
+        micros = [dt.toInternal(_local_instant(v)) for v in values]
         return pa.array(micros, type=pa.int64()).cast(arrow_field.type)
     if _has_timestamp(dt):
         raise TypeError("nested timestamps take the classic builder")
     return pa.array(list(values), type=arrow_field.type)
 
 
-def arrow_local_frame(spark: SparkSession, rows, schema) -> DataFrame:
-    """The raising Arrow builder: one record batch with the declared
-    schema's exact Arrow types → ``LocalTableScan``. Raises on dict
-    rows (the classic builder binds those by NAME; a positional zip
-    would silently reorder), on values Arrow cannot take, and on any
-    Arrow round-trip that would alter the declared schema."""
+def arrow_table(rows, schema) -> "pa.Table":  # noqa: F821
+    """``rows`` as one Arrow table with the declared schema's exact
+    Arrow types. Raises on dict rows (the classic builder binds those
+    by NAME; a positional zip would silently reorder) and on values
+    Arrow cannot take."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -73,11 +89,18 @@ def arrow_local_frame(spark: SparkSession, rows, schema) -> DataFrame:
         raise TypeError("dict rows bind by name; use the classic builder")
     data = [tuple(r) for r in rows]
     cols = list(zip(*data)) if data else [() for _ in asch]
-    tbl = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [_column(pa, c, sf, af) for c, sf, af in zip(cols, st.fields, asch)],
         schema=asch,
     )
-    df = spark.createDataFrame(tbl)
+
+
+def arrow_local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """The raising Arrow builder: :func:`arrow_table` → one record
+    batch → ``LocalTableScan``. Raises where :func:`arrow_table` does
+    and on any Arrow round-trip that would alter the declared schema."""
+    st = _as_struct(schema)
+    df = spark.createDataFrame(arrow_table(rows, st))
     if df.schema != st:
         raise TypeError("Arrow round-trip altered the declared schema")
     return df

@@ -19,7 +19,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEC = "decimal(18,2)"

@@ -554,6 +554,48 @@ class TestColumnarDataPlane:
         )
         assert read_committed(registered, path, SCHEMA).count() == 2
 
+    def test_scoped_delete_reads_legacy_jsonl_files(self, registered, tmp_path):
+        """A delete followed by a re-insert scopes its filter to the files
+        it precedes by ``_metadata.file_name``; the legacy JSONL scan
+        takes that filter too, and a legacy JSONL tombstone still
+        deletes its keys."""
+        from olap_project_spark.export.manifest_sink import delete_where
+
+        path = str(tmp_path / "legacy_scoped")
+        _write(registered, path, [(1, "new")])
+        staging = os.path.join(path, "_staging")
+        legacy = {
+            "part-legacy0.jsonl": [{"k": k, "v": "old"} for k in (2, 3, 4)],
+            "part-legacy1.jsonl": [{"k": 3}],
+        }
+        for name, rows in legacy.items():
+            with open(os.path.join(staging, name), "w") as f:
+                f.write("".join(json.dumps(r) + "\n" for r in rows))
+        key_schema = {
+            "type": "struct",
+            "fields": [
+                {"name": "k", "type": "long", "nullable": True, "metadata": {}}
+            ],
+        }
+        for version, m in (
+            (2, {"kind": "append", "files": ["part-legacy0.jsonl"]}),
+            (3, {"kind": "delete", "files": ["part-legacy1.jsonl"],
+                 "schema": key_schema}),
+        ):
+            with open(
+                os.path.join(path, f"_manifest-{version:06d}.json"), "w"
+            ) as f:
+                json.dump({**m, "n_rows": 1, "version": version}, f)
+        delete_where(
+            registered, path, registered.createDataFrame([(1,), (2,)], "k bigint")
+        )
+        _write(registered, path, [(2, "again")])
+        back = read_committed(registered, path, SCHEMA)
+        assert sorted((r.k, r.v) for r in back.collect()) == [
+            (2, "again"),
+            (4, "old"),
+        ]
+
 
 class TestVacuumInFlightGuard:
     def test_orphan_gc_skipped_under_in_flight_commit(
