@@ -11,13 +11,15 @@ Everything the DAG hand-rolled is a Catalyst built-in here:
 - P19 column reorder        → schema-contract select
 - K4 staged CSV load        → direct parquet append
 
-The WHERE on partition columns prunes at *planning* time: the job reads
-only ``Year=Y/Month=M/Day=D`` files no matter how large the history —
+The read names the day's ``Year=Y/Month=M/Day=D`` directory (with the
+sink as ``basePath``, so the partition columns still materialize):
+planning lists that directory only, no matter how large the history —
 the property the DAG's path-arithmetic was trying to achieve (and broke
 with its ``Year=`` vs ``year=`` casing bug, SURVEY.md §1.3)."""
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,20 +38,38 @@ def export_partition(
     warehouse table. Returns the number of rows this call appended,
     counted by an ``Observation`` on the append itself (no re-scan).
 
-    Scale: partition pruning makes this O(day), not O(history); the
-    append is shuffle-free (narrow read → write). Re-running a day
-    appends it again, matching the reference's WRITE_APPEND semantics."""
+    Scale: the read lists only the day's directory, so this is O(day),
+    not O(history); the append is shuffle-free (narrow read → write). A
+    day with no directory appends nothing and returns 0. Re-running a
+    day appends it again, matching the reference's WRITE_APPEND
+    semantics."""
+    day_df = read_day(spark, source_dir, year, month, day)
+    if day_df is None:
+        return 0
     rows = Observation()
     day_df = (
-        spark.read.parquet(source_dir)
-        .where(
-            (F.col("Year") == year) & (F.col("Month") == month) & (F.col("Day") == day)
-        )
-        .select(*OUTPUT_COLUMNS)  # schema contract (P19)
+        day_df.select(*OUTPUT_COLUMNS)  # schema contract (P19)
         .observe(rows, F.count(F.lit(1)).alias("rows"))
     )
     day_df.write.mode("append").partitionBy("Year", "Month", "Day").parquet(target_dir)
     return rows.get["rows"]
+
+
+def read_day(
+    spark: SparkSession, source_dir: str, year: int, month: int, day: int
+) -> DataFrame | None:
+    """One day of a ``Year/Month/Day``-partitioned sink, read from that
+    day's directory alone (partition columns included), or ``None`` when
+    the sink has no such directory."""
+    try:
+        return (
+            spark.read.option("basePath", source_dir)
+            .parquet(f"{source_dir}/Year={year}/Month={month}/Day={day}")
+        )
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
 def read_warehouse(spark: SparkSession, target_dir: str) -> DataFrame:

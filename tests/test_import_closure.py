@@ -42,6 +42,7 @@ CLOSURE = {
         "functions.localframe", "schemas",
     },
     "session": {"session"},
+    "worker_daemon": {"worker_daemon"},
     "schemas": {"schemas"},
 }
 

@@ -12,7 +12,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from olap_project_spark.export.daily import export_partition
+from olap_project_spark.export.daily import export_partition, read_day
 from olap_project_spark.schemas import (
     INVALID_LOG_COLUMNS,
     OUTPUT_COLUMNS,
@@ -544,6 +544,22 @@ class TestDailyExport:
         assert export_partition(spark, src, wh, 2024, 1, 15) == 1
         assert export_partition(spark, src, wh, 2024, 3, 1) == 0
         assert spark.read.parquet(wh).count() == 7
+
+    def test_day_read_lists_only_that_day(self, spark, tmp_path):
+        src = str(tmp_path / "sink")
+        spark.createDataFrame(
+            [(2024, 1, day, i) for day in (14, 15, 16) for i in range(3)],
+            "Year int, Month int, Day int, v int",
+        ).write.partitionBy("Year", "Month", "Day").parquet(src)
+
+        df = read_day(spark, src, 2024, 1, 15)
+        files = df.inputFiles()
+        assert files and all("/Year=2024/Month=1/Day=15/" in f for f in files)
+        assert sorted(df.columns) == ["Day", "Month", "Year", "v"]
+        assert {tuple(r) for r in df.select("Year", "Month", "Day").distinct().collect()} == {
+            (2024, 1, 15)
+        }
+        assert read_day(spark, src, 2024, 1, 17) is None
 
 
 class TestDailyRates:
