@@ -32,6 +32,11 @@ on that scan, built from keys the driver reads with pyarrow — no join
 and no broadcast job. The bound: a delete's key set must fit in driver
 memory.
 
+A table keeps ONE schema (:func:`table_schema` raises on a commit whose
+columns or types differ), so every committed file reads under it. The
+log (:func:`_log`) refuses entries written by table verbs this module
+no longer has, rather than fold past them and misread the table.
+
 This is the same fence Iceberg/Delta build on (manifest = the commit),
 reduced to its teachable core. At scale the manifest holds file paths +
 stats, not data — commit cost is O(tasks), independent of row volume.
@@ -79,7 +84,7 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
     WriterCommitMessage,
 )
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import StructType
 
 from olap_project_spark.functions.localframe import arrow_table, local_frame
 
@@ -89,7 +94,6 @@ class _PartCommit(WriterCommitMessage):
     file_name: str
     n_rows: int
     col_stats: dict | None = None  # col -> [min, max] for orderable types
-    bloom_bits: list | None = None  # sorted set positions for bloom_col
     part_range: list | None = None  # [min, max] transform value
     # exact per-partition-tuple row counts for this file —
     # [[ [v1, v2, ...], n_rows ], ...] over the spec list's transform
@@ -97,9 +101,6 @@ class _PartCommit(WriterCommitMessage):
     # cap or when any spec slot saw nulls) — the record that powers
     # the table$partitions metadata surface with zero data scans
     part_rows: list | None = None
-    # packed token bloom for this file ({"m", "b64"}), when the writer
-    # ran with a token_bloom_col — powers plan_token_pruned_files
-    token_bloom: dict | None = None
     # exact per-column null counts (col -> n) — metadata-only
     # COUNT(col)/IS NULL accounting; recorded for every column
     col_nulls: dict | None = None
@@ -111,82 +112,6 @@ class _PartCommit(WriterCommitMessage):
 # well-laid-out file covers FEW partitions, which is the layout
 # write_partitioned produces.
 PART_VALUES_CAP = 128
-
-
-# Per-file bloom parameters (opt-in via the writer's ``bloom_col``
-# option): m bits / k hashes over an INTEGER column. With ~1k distinct
-# values per file the false-positive rate is ≈1% — the point-lookup
-# complement to zone maps (which prune nothing when every file spans
-# the full value range of an unsorted high-cardinality column). The
-# positions are exact integer arithmetic, reproducible anywhere.
-BLOOM_M = 16384
-BLOOM_K = 2
-
-# TOKEN bloom (opt-in via ``token_bloom_col``): per-file bloom over the
-# DISTINCT lowercase tokens of a text column — the pruning class
-# neither zone maps (min/max of whole strings) nor the integer bloom
-# can provide: "which files contain the word W" over a 100-TB document
-# corpus. The bitmap is sized adaptively to the file's distinct-token
-# count (10 bits/token, power of two, within [TOKEN_BLOOM_M_MIN,
-# TOKEN_BLOOM_M_MAX]) and stored base64-packed, so a file with a small
-# vocabulary costs ~128 B of manifest while a 100k-token file caps at
-# 16 KiB — bounded metadata, never a posting list. Tokenization is the
-# shared TOKEN_SPLIT_RE (lowercase, alnum runs), applied identically at
-# write (Arrow-vectorized), at plan (the probe token), and at read (the
-# residual filter), so pruning can never disagree with the filter.
-TOKEN_SPLIT_RE = "[^a-z0-9]+"
-TOKEN_BLOOM_K = 3
-TOKEN_BLOOM_M_MIN = 1024
-TOKEN_BLOOM_M_MAX = 131072
-
-
-def _token_hash(token: str) -> int:
-    """Portable 48-bit token hash (md5 prefix — the same convention the
-    engine's SQL-side portable_hash48 uses), exact integer arithmetic
-    everywhere."""
-    import hashlib as _hashlib
-
-    return int(_hashlib.md5(token.encode("utf-8")).hexdigest()[:12], 16)
-
-
-def _token_bloom_positions(th: int, m: int) -> tuple[int, ...]:
-    h1 = (th * 2654435761) % (1 << 32)
-    h2 = (th * 40503 + 2699) % (1 << 31)
-    return tuple((h1 + i * h2) % m for i in range(TOKEN_BLOOM_K))
-
-
-def _token_bloom_pack(hashes: set[int]) -> dict:
-    """Size and pack a token bloom: m = the smallest power of two
-    holding ~10 bits per distinct token, clamped to the global bounds;
-    returns {"m": m, "b64": base64 bitmap}."""
-    import base64 as _base64
-
-    m = TOKEN_BLOOM_M_MIN
-    target = 10 * max(1, len(hashes))
-    while m < target and m < TOKEN_BLOOM_M_MAX:
-        m *= 2
-    bits = bytearray(m // 8)
-    for th in hashes:
-        for p in _token_bloom_positions(th, m):
-            bits[p >> 3] |= 1 << (p & 7)
-    return {"m": m, "b64": _base64.b64encode(bytes(bits)).decode("ascii")}
-
-
-def _token_bloom_hit(packed: dict, th: int) -> bool:
-    import base64 as _base64
-
-    m = packed["m"]
-    bits = _base64.b64decode(packed["b64"])
-    return all(
-        bits[p >> 3] & (1 << (p & 7))
-        for p in _token_bloom_positions(th, m)
-    )
-
-
-def _bloom_positions(v: int) -> tuple[int, ...]:
-    h1 = (v * 2654435761) % (1 << 32)
-    h2 = (v * 40503 + 2699) % (1 << 31)
-    return tuple((h1 + i * h2) % BLOOM_M for i in range(BLOOM_K))
 
 
 # ---------------------------------------------------------------------------
@@ -528,19 +453,13 @@ class ManifestWriter(DataSourceArrowWriter):
         # counts are part of the layout the oracles pin. Accidental-
         # width writes leave this off and skip empty partitions' files.
         self.eager_files = str(options.get("eager_files", "")) == "1"
-        # opt-in per-file bloom filter over one integer column — the
-        # point-lookup skipping index zone maps cannot provide
-        self.bloom_col = options.get("bloom_col")
-        # opt-in per-file TOKEN bloom over one text column — the
-        # keyword-search skipping index (see TOKEN_SPLIT_RE block)
-        self.token_bloom_col = options.get("token_bloom_col")
         # opt-in BUCKETED layout (Spark-native bucketing): the caller
         # guarantees the incoming DataFrame is hash-partitioned
         # ``n_buckets``-ways on ``bucket_by`` (``df.repartition(n, col)``
         # — HashPartitioning's pmod(murmur3, n) IS Spark's bucket-id
         # function), each task embeds its partition id in the file name
         # as the bucket id Spark's scan parses, and the layout is
-        # recorded in the manifest like bloom_col — so a catalog
+        # recorded in the manifest — so a catalog
         # registration (:func:`register_bucketed_table`) gives every
         # future join/agg on the key an exchange-free plan.
         self.bucket_by = options.get("bucket_by")
@@ -592,8 +511,8 @@ class ManifestWriter(DataSourceArrowWriter):
         # free-form snapshot summary (Iceberg snapshot-summary /
         # Delta commitInfo shape): a JSON object recorded verbatim in
         # the manifest and surfaced by table_history — the seam write
-        # APIs use to make their provenance (e.g. the expectation
-        # contract a write enforced) part of the table's audit trail
+        # APIs use to make their provenance (e.g. a caller's
+        # idempotence record) part of the table's audit trail
         cp = options.get("commit_props")
         self.commit_props: dict | None = json.loads(cp) if cp else None
         if self.commit_props is not None and not isinstance(
@@ -601,7 +520,7 @@ class ManifestWriter(DataSourceArrowWriter):
         ):
             raise ValueError("commit_props must be a JSON object")
         # recorded in the manifest so readers can DISCOVER the table
-        # schema (and its evolution history) instead of knowing it
+        # schema instead of knowing it
         self.schema = schema
 
     # Rows buffered before flushing to the parquet writer — bounds task
@@ -684,39 +603,6 @@ class ManifestWriter(DataSourceArrowWriter):
                         s[0] = lo
                     if hi > s[1]:
                         s[1] = hi
-
-        bloom: set[int] | None = set() if self.bloom_col else None
-
-        def feed_bloom(batch: "pa.RecordBatch") -> None:
-            # unique-first: the bloom is a set of bit positions, so
-            # hashing each DISTINCT value once is exactly equivalent
-            arr = batch.column(batch.schema.get_field_index(self.bloom_col))
-            for v in pc.unique(arr.drop_null()).to_pylist():
-                bloom.update(_bloom_positions(int(v)))
-
-        token_hashes: set[int] | None = (
-            set() if self.token_bloom_col else None
-        )
-
-        def feed_tokens(batch: "pa.RecordBatch") -> None:
-            # Arrow-vectorized tokenization of the batch: lowercase,
-            # split on non-alnum runs, flatten, unique — only the
-            # UNIQUE tokens (bounded by the batch vocabulary) are
-            # hashed in Python
-            arr = batch.column(
-                batch.schema.get_field_index(self.token_bloom_col)
-            )
-            toks = pc.unique(
-                pc.list_flatten(
-                    pc.split_pattern_regex(
-                        pc.utf8_lower(pc.coalesce(arr, "")),
-                        pattern=TOKEN_SPLIT_RE,
-                    )
-                )
-            )
-            for t in toks.to_pylist():
-                if t:
-                    token_hashes.add(_token_hash(t))
 
         # per-file transform-value range PER SPEC (hidden
         # partitioning); a spec's slot falls to None on
@@ -831,10 +717,6 @@ class ManifestWriter(DataSourceArrowWriter):
                 n += batch.num_rows
                 feed_partition(batch)
                 feed_stats(batch)
-                if bloom is not None:
-                    feed_bloom(batch)
-                if token_hashes is not None:
-                    feed_tokens(batch)
                 pending.append(batch)
                 pending_rows += batch.num_rows
                 if pending_rows >= self.BATCH_ROWS:
@@ -854,7 +736,6 @@ class ManifestWriter(DataSourceArrowWriter):
             file_name=f"{self.subdir}/{name}" if self.subdir else name,
             n_rows=n,
             col_stats=stats,
-            bloom_bits=sorted(bloom) if bloom is not None else None,
             # flat [lo, hi] for a one-field spec (round-11 on-disk
             # form); list-of-ranges for multi-field specs; None when
             # no spec or every slot disabled
@@ -877,11 +758,6 @@ class ManifestWriter(DataSourceArrowWriter):
                     for t, c in sorted(part_counts.items())
                 ]
                 if part_counts
-                else None
-            ),
-            token_bloom=(
-                _token_bloom_pack(token_hashes)
-                if token_hashes is not None
                 else None
             ),
             col_nulls=dict(nulls),
@@ -924,22 +800,8 @@ class ManifestWriter(DataSourceArrowWriter):
                 if m.col_nulls is not None
             },
         }
-        if any(m.bloom_bits is not None for m in messages):
-            manifest["bloom_col"] = self.bloom_col
-            manifest["file_blooms"] = {
-                m.file_name: m.bloom_bits
-                for m in messages
-                if m.bloom_bits is not None
-            }
-        if any(m.token_bloom is not None for m in messages):
-            manifest["token_bloom_col"] = self.token_bloom_col
-            manifest["file_token_blooms"] = {
-                m.file_name: m.token_bloom
-                for m in messages
-                if m.token_bloom is not None
-            }
         if self.bucket_by is not None:
-            # layout metadata, recorded like bloom_col: readers can
+            # layout metadata: readers can
             # register the snapshot as a Spark bucketed table and run
             # exchange-free joins/aggs on the bucket key. Validate the
             # layout BEFORE it becomes a manifest: every bucket id in
@@ -970,10 +832,7 @@ class ManifestWriter(DataSourceArrowWriter):
             # PARTIAL rewrite (OPTIMIZE WHERE): the rewrite manifest
             # must list the FULL consolidated state, so the untouched
             # files — with their zone maps and row counts — are folded
-            # in beside the newly-written ones. Their per-file blooms
-            # are NOT carried (blooms are per-manifest, keyed by this
-            # manifest's bloom_col); bloom pruning then conservatively
-            # keeps retained files — correctness over skipping.
+            # in beside the newly-written ones.
             if self.kind != "rewrite":
                 raise ValueError("'retain' applies to rewrite commits only")
             manifest["files"] = sorted(
@@ -1179,38 +1038,8 @@ class ManifestStreamReader(DataSourceStreamReader):
             if version <= start["version"] or version > end["version"]:
                 continue
             kind = m.get("kind", "append")
-            if kind == "analyze":
-                continue  # NDV sketches: pure metadata, no rows change
             if kind == "alter":
-                if not (
-                    m.get("rename") or m.get("drop") or m.get("widen")
-                ):
-                    # a SPEC-ONLY or ADD-COLUMN alter moves no names,
-                    # changes no readable types, and commits no rows:
-                    # the fixed-schema tail reads on unchanged (an
-                    # added column becomes visible at the NEXT stream
-                    # start) — pure metadata, safe to pass by default
-                    continue
-                if m.get("widen"):
-                    raise ValueError(
-                        f"streaming tail hit a type widening at "
-                        f"version {version}; files written under the "
-                        "wider type cannot scan under the stream's "
-                        "started schema — restart the stream to pick "
-                        "up the widened schema"
-                    )
-                # a COLUMN RENAME/DROP always stops the stream, even
-                # under skipChangeCommits: the stream's schema is
-                # fixed at start, so appends across the rename
-                # boundary would silently null the renamed column —
-                # restart the consumer at the rename with the new
-                # schema
-                raise ValueError(
-                    f"streaming tail hit a column rename at version "
-                    f"{version}; restart the stream with the renamed "
-                    "schema (a fixed-schema tail cannot cross naming "
-                    "eras)"
-                )
+                continue  # a partition-spec alter commits no rows
             if kind != "append":
                 if self.skip_change_commits:
                     continue  # at-least-append-only: change commits
@@ -1246,21 +1075,12 @@ class ManifestStreamReader(DataSourceStreamReader):
 
         want = to_arrow_schema(StructType.fromJson(json.loads(partition.schema_json)))
         pf = pq.ParquetFile(partition.file_path)
-        for batch in pf.iter_batches():
-            # project/cast to the DISCOVERED table schema; files
-            # written before a schema-evolution column existed
-            # null-backfill it (the same add-only contract the batch
-            # read path honors), and files written at a narrower
-            # widened type up-cast
-            cols = []
-            for f in want:
-                if f.name in batch.schema.names:
-                    cols.append(
-                        batch.column(f.name).cast(f.type)
-                    )
-                else:
-                    cols.append(pa.nulls(batch.num_rows, type=f.type))
-            yield pa.record_batch(cols, schema=want)
+        for batch in pf.iter_batches(columns=want.names):
+            # project/cast to the DISCOVERED table schema
+            yield pa.record_batch(
+                [batch.column(f.name).cast(f.type) for f in want],
+                schema=want,
+            )
 
     def commit(self, end: dict) -> None:
         self._cursor = end["version"]  # versions are immutable; just
@@ -1269,22 +1089,18 @@ class ManifestStreamReader(DataSourceStreamReader):
 
 class _FileScan(InputPartition):
     """One batch input partition = one live data file, carrying the
-    version it committed at, the tombstone applications whose sequence
-    number exceeds it (the per-file equality-delete rule), and — for
-    files written before a column rename — the field-id-derived map
-    from CURRENT column names to this file's WRITE-ERA names."""
+    tombstone applications whose sequence number exceeds its commit
+    version (the per-file equality-delete rule)."""
 
     def __init__(
         self,
         file_path: str,
         schema_json: str,
-        tombs: list,  # [(era key cols, current key cols, [paths]), ...]
-        colmap: dict | None = None,  # {current name: era name | None}
+        tombs: list,  # [(key cols, [paths]), ...]
     ):
         self.file_path = file_path
         self.schema_json = schema_json
         self.tombs = tombs
-        self.colmap = colmap
 
 
 def _resolve_as_of(options) -> int | None:
@@ -1315,7 +1131,6 @@ class ManifestBatchReader(DataSourceReader):
     skips files the pushed-down filters provably exclude:
 
     - zone maps prune range/equality comparisons on any stats column;
-    - per-file blooms prune integer equality probes on the bloom_col;
     - HIDDEN-PARTITION transform ranges prune comparisons on the
       transform's source column — including TIMESTAMP predicates,
       which zone maps (int/float/string only) never see.
@@ -1341,20 +1156,11 @@ class ManifestBatchReader(DataSourceReader):
         self.as_of = _resolve_as_of(options)
         self.branch = options.get("branch")
         self.schema = schema
-        # optional explicit DATA-file restriction (JSON list) — the
-        # hook external index planners (token-bloom keyword search)
-        # use to surface their pruning as input-partition pruning.
-        # Restricts files SCANNED only; tombstone applications still
-        # attach to every surviving file — correctness over skipping.
-        kf = options.get("keepFiles")
-        self.keep_files: set | None = (
-            set(json.loads(kf)) if kf else None
-        )
         # (col, op, value) comparisons recorded by pushFilters
         self._pushed: list[tuple[str, str, object]] = []
 
     @staticmethod
-    def _excluded(stats: dict, bloom_col, bloom_bits, specs, pranges, pushed) -> bool:
+    def _excluded(stats: dict, specs, pranges, pushed) -> bool:
         import datetime as _dt
 
         for col, op, val in pushed:
@@ -1377,16 +1183,6 @@ class ManifestBatchReader(DataSourceReader):
                             return True
                         if op == "LessThanOrEqual" and lo > val:
                             return True
-                if (
-                    op == "EqualTo"
-                    and bloom_bits is not None
-                    and col == bloom_col
-                    and isinstance(val, int)
-                    and not all(
-                        p in bloom_bits for p in _bloom_positions(val)
-                    )
-                ):
-                    return True
             # HIDDEN-PARTITION pruning: map the comparison into
             # transform space against the file's recorded transform
             # range(s) — the path that prunes TIMESTAMP filters, which
@@ -1419,72 +1215,24 @@ class ManifestBatchReader(DataSourceReader):
     def partitions(self) -> list[InputPartition]:
         staging = os.path.join(self.path, "_staging")
         # fold the log driver-side: live file -> (commit version, zone
-        # map, bloom), plus the tombstone ledger (version, keys, files)
+        # map, specs, transform ranges, rows), plus the tombstone
+        # ledger (version, key cols, files)
         live: dict[str, tuple] = {}
-        tombs: list[tuple[int, tuple, tuple, list[str]]] = []
-        reader_log = _log(self.path, self.as_of, self.branch)
-        renamed = _alters_since_last_rewrite(reader_log)
-        per_index, current_ids, fid_ok = _field_id_history(reader_log)
-        if renamed and not fid_ok:
-            raise ValueError(
-                "the public batch reader cannot read across a column "
-                "rename on this log: a file-bearing manifest records "
-                "no schema, so field ids cannot be derived — read "
-                "through read_evolved, or compact to collapse the eras"
-            )
-        # per-manifest translation: field id -> write-era name, and
-        # current name -> write-era name (None = the file predates the
-        # column's current generation, so its rows are all-null for it)
-        id_to_cur = {i: n for n, i in current_ids.items()}
-
-        def cur2era(idx: int) -> dict[str, str | None] | None:
-            if not renamed:
-                return None  # identity: names never moved
-            pi = per_index[idx] or {}
-            inv = {i: n for n, i in pi.items()}
-            return {
-                cn: inv.get(cid) for cn, cid in current_ids.items()
-            }
-
-        for idx, (version, m) in enumerate(reader_log):
+        tombs: list[tuple[int, list[str], list[str]]] = []
+        for version, m in _log(self.path, self.as_of, self.branch):
             kind = m.get("kind", "append")
             if kind == "alter":
                 continue  # metadata-only: no files
             fs = m.get("file_stats", {})
-            bcol = m.get("bloom_col")
-            blooms = m.get("file_blooms", {})
             specs = _specs_of(m)
             fparts = m.get("file_partitions", {}) if specs else {}
             if kind in ("delete", "merge"):
-                # tombstone key names are the names CURRENT at this
-                # commit; translate them to the read schema's names so
-                # the anti-join runs in one coordinate system (a
-                # rename is a column bijection, so equality is
-                # preserved). A key column dropped later cannot be
-                # expressed in current coordinates — reject.
-                era_cols = (
-                    tuple(f["name"] for f in m["schema"]["fields"])
+                cols = (
+                    [f["name"] for f in m["schema"]["fields"]]
                     if kind == "delete"
-                    else tuple(m["merge_keys"])
+                    else list(m["merge_keys"])
                 )
-                if renamed:
-                    pi = per_index[idx] or {}
-                    cur_cols = tuple(
-                        id_to_cur.get(pi.get(c)) for c in era_cols
-                    )
-                    if any(c is None for c in cur_cols):
-                        raise ValueError(
-                            f"tombstone at version {version} is keyed "
-                            f"on {era_cols}, of which a column was "
-                            "later dropped; the flat batch reader "
-                            "cannot apply it — read through "
-                            "read_evolved, or compact first"
-                        )
-                else:
-                    cur_cols = era_cols
-                tombs.append(
-                    (version, era_cols, cur_cols, list(m["files"]))
-                )
+                tombs.append((version, cols, list(m["files"])))
                 if kind == "delete":
                     continue
             rows = m.get("file_rows", {})
@@ -1492,8 +1240,6 @@ class ManifestBatchReader(DataSourceReader):
                 f: (
                     version,
                     fs.get(f, {}),
-                    bcol,
-                    set(blooms[f]) if f in blooms else None,
                     specs,
                     (
                         _ranges_of(fparts[f], len(specs))
@@ -1501,7 +1247,6 @@ class ManifestBatchReader(DataSourceReader):
                         else None
                     ),
                     rows.get(f),
-                    idx,
                 )
                 for f in m["files"]
             }
@@ -1518,47 +1263,20 @@ class ManifestBatchReader(DataSourceReader):
                 "legacy files)"
             )
         sj = json.dumps(self.schema.jsonValue())
-        colmap_cache: dict[int, dict | None] = {}
         out: list[InputPartition] = []
         for name in sorted(live):
-            vf, stats, bcol, bits, specs, pranges, n_rows, idx = live[
-                name
-            ]
+            vf, stats, specs, pranges, n_rows = live[name]
             if n_rows == 0:
                 continue  # recorded empty: provably nothing to scan
-            if self.keep_files is not None and name not in self.keep_files:
-                continue  # external index (token blooms) excluded it
-            if idx not in colmap_cache:
-                colmap_cache[idx] = cur2era(idx)
-            colmap = colmap_cache[idx]
-            pushed = self._pushed
-            if colmap is not None and pushed:
-                # translate pushed probes into this file's write-era
-                # names so its name-keyed stats/blooms/transform
-                # ranges keep pruning after a rename. A probe on a
-                # column the file PREDATES excludes the file outright:
-                # its rows are all-null there, and every pushable
-                # comparison is null-rejecting.
-                pushed, skip = [], False
-                for col, op, val in self._pushed:
-                    era = colmap.get(col, col)
-                    if era is None:
-                        skip = True
-                        break
-                    pushed.append((era, op, val))
-                if skip:
-                    continue
-            if self._excluded(stats, bcol, bits, specs, pranges, pushed):
+            if self._excluded(stats, specs, pranges, self._pushed):
                 continue
             applicable = [
-                (ec, cc, [os.path.join(staging, t) for t in files])
-                for vt, ec, cc, files in tombs
+                (cols, [os.path.join(staging, t) for t in files])
+                for vt, cols, files in tombs
                 if vt > vf
             ]
             out.append(
-                _FileScan(
-                    os.path.join(staging, name), sj, applicable, colmap
-                )
+                _FileScan(os.path.join(staging, name), sj, applicable)
             )
         return out
 
@@ -1576,40 +1294,28 @@ class ManifestBatchReader(DataSourceReader):
         want = to_arrow_schema(
             StructType.fromJson(json.loads(partition.schema_json))
         )
-        colmap = partition.colmap or {}
-        # tombstone key tables: read under the key columns' WRITE-ERA
-        # names, rename to the current names, and cast to the read
-        # schema's key types so the anti-join compares like types (a
-        # delete written at int still removes rows read under a
-        # widened bigint schema)
+        # tombstone key tables, cast to the read schema's key types so
+        # the anti-join compares like types (a delete keyed on an int
+        # frame still removes rows of a bigint column)
         keysets: list[tuple[list[str], pa.Table]] = []
-        for era_cols, cur_cols, files in partition.tombs:
-            tables = [
-                pq.read_table(f, columns=list(era_cols)) for f in files
-            ]
+        for cols, files in partition.tombs:
+            tables = [pq.read_table(f, columns=cols) for f in files]
             t = pa.concat_tables(tables) if tables else None
             if t is None or t.num_rows == 0:
                 continue
-            t = t.rename_columns(list(cur_cols)).cast(
-                pa.schema(
-                    [pa.field(c, want.field(c).type) for c in cur_cols]
-                )
+            t = t.cast(
+                pa.schema([pa.field(c, want.field(c).type) for c in cols])
             )
-            keysets.append((list(cur_cols), t))
+            keysets.append((cols, t))
         pf = pq.ParquetFile(partition.file_path)
-        for batch in pf.iter_batches():
-            cols = []
-            for f in want:
-                # a pre-rename file serves the column under its
-                # write-era name (field-id column mapping); None means
-                # the file predates the column's current generation
-                src = colmap.get(f.name, f.name)
-                if src is not None and src in batch.schema.names:
-                    cols.append(batch.column(src).cast(f.type))
-                else:
-                    cols.append(pa.nulls(batch.num_rows, type=f.type))
+        for batch in pf.iter_batches(columns=want.names):
             tbl = pa.Table.from_batches(
-                [pa.record_batch(cols, schema=want)]
+                [
+                    pa.record_batch(
+                        [batch.column(f.name).cast(f.type) for f in want],
+                        schema=want,
+                    )
+                ]
             )
             for kcols, keys in keysets:
                 tbl = tbl.join(keys, keys=kcols, join_type="left anti")
@@ -1660,9 +1366,8 @@ class ManifestSinkDataSource(DataSource):
 
     def schema(self) -> StructType:
         # table schema DISCOVERED from the manifest log (readers never
-        # declare it) — the same discovery read_evolved uses; honors
-        # versionAsOf/tag so a time-travel read binds the schema AS OF
-        # that snapshot
+        # declare it); honors versionAsOf/tag so a time-travel read
+        # binds the schema AS OF that snapshot
         sch = table_schema(
             self.options.get("path"), _resolve_as_of(self.options)
         )
@@ -1931,8 +1636,7 @@ def _read_files(
     into row-group filters); legacy ``.jsonl`` files from pre-columnar
     commits are still read (extension dispatch + unionByName), so a
     table migrates formats by simply compacting. Missing-in-file
-    columns read as NULL against the explicit schema in BOTH formats —
-    the add-only evolution contract.
+    columns read as NULL against the explicit schema in BOTH formats.
 
     Each ``drops`` predicate removes its matching rows. They apply to
     each format's scan before the union: a predicate may name the
@@ -2083,24 +1787,10 @@ def read_committed(
     ``_keep`` restricts the DATA files scanned (zone-map pruning);
     tombstones are never pruned — a pruned-out merge file still
     deletes its keys, it just isn't scanned as data — correctness
-    over skipping.
-
-    RENAMED tables (live naming eras) are REJECTED here: this is the
-    explicit-schema path, and scanning a pre-rename file under the
-    current names would silently null the renamed columns. Read
-    through :func:`read_evolved` (the segmented era fold) or the
-    public batch reader (field-id column mapping) instead."""
-    log = _log(path, as_of, branch)
-    if _alters_since_last_rewrite(log):
-        raise ValueError(
-            "table has live naming eras (column rename/drop above the "
-            "last rewrite); the explicit-schema read would silently "
-            "null pre-rename columns — read through read_evolved or "
-            "the public batch reader, or compact to collapse the eras"
-        )
+    over skipping."""
     live: list[str] = []
     tombs: list[tuple[int, int, dict]] = []  # (live files before, version, m)
-    for version, m in log:
+    for version, m in _log(path, as_of, branch):
         kind = m.get("kind", "append")
         if kind == "rewrite":
             live, tombs = [], []
@@ -2325,378 +2015,6 @@ def _load_manifest_or_none(path: str, entry: str) -> dict | None:
         return None
 
 
-def rename_column(path: str, old: str, new: str) -> int:
-    """RENAME a column — Delta column-mapping / Iceberg field-ID rename
-    as a METADATA-ONLY ``kind='alter'`` commit: no data file is
-    touched; the manifest records the rename map and the post-rename
-    schema, and readers resolve each file under its WRITE-TIME schema
-    (every data manifest records the schema its files were written
-    with), aliasing to the current names — so files written before the
-    rename keep serving the column under its new name, which the plain
-    add-only evolution contract cannot express (it rejects renames at
-    discovery precisely because a name-based read would null them).
-
-    Reads of renamed tables go through :func:`read_evolved` (the
-    schema-discovery path — it performs the per-era aliasing) or the
-    public batch reader (which resolves each file's columns through
-    FIELD IDS, :func:`_field_id_history`); :func:`read_committed`
-    keeps its explicit-schema contract and documents that renamed
-    tables need one of those paths. The metadata surfaces — metadata
-    aggregates, table$partitions, the public reader's pushdown
-    pruning — likewise translate every probe current name → field id
-    → write-era name, so they answer EXACTLY across a rename with no
-    compaction, and pre-rename files keep being pruned by their stats
-    under the new name. Only legacy logs whose file-bearing manifests
-    record no schema still reject (ids underivable — compact first).
-
-    Rejected: renaming a column that does not exist, onto a name that
-    does, while unpublished WAP branches exist, or while the table has
-    no recorded schema. Returns the new snapshot version."""
-    sch = table_schema(path)
-    if sch is None:
-        raise ValueError(f"no recorded schema at {path}; nothing to rename")
-    names = [f.name for f in sch.fields]
-    if old not in names:
-        raise ValueError(f"column {old!r} not in schema {names}")
-    if new in names:
-        raise ValueError(f"column {new!r} already exists in {names}")
-    retired = _retired_since_last_rewrite(_log(path))
-    if new in retired:
-        raise ValueError(
-            f"column name {new!r} was dropped by an earlier alter and "
-            "pre-drop live files still hold that generation's bytes "
-            "and name-keyed stats; renaming onto it would serve the "
-            "dropped column's old values — compact to rewrite the "
-            "live files first"
-        )
-    staged = sorted(
-        {
-            m.get("branch")
-            for _v, entry in _list_manifests(path)
-            for m in (_load_manifest_or_none(path, entry),)
-            if m is not None and m.get("branch") is not None
-        }
-    )
-    if staged:
-        raise ValueError(
-            f"cannot rename while write-audit-publish branches {staged} "
-            "hold unpublished commits; publish or abandon them first"
-        )
-    _reject_constrained_column(path, old, "rename")
-    renamed = StructType(
-        [
-            StructField(new if f.name == old else f.name, f.dataType, f.nullable)
-            for f in sch.fields
-        ]
-    )
-    return _commit_manifest_dict(
-        path,
-        {
-            "kind": "alter",
-            "rename": {old: new},
-            "schema": renamed.jsonValue(),
-            "files": [],
-        },
-    )
-
-
-def drop_column(path: str, col: str) -> int:
-    """DROP a column — the other half of column mapping, the same
-    METADATA-ONLY ``kind='alter'`` commit: no data file is rewritten;
-    the column simply leaves the discovered schema, and the era read
-    (:func:`read_evolved`) stops projecting it (pre-drop files keep
-    their bytes — time travel below the drop still reads them, and a
-    RESTORE below the drop brings the column back entirely). Dropping
-    the last column is rejected, as is dropping while unpublished WAP
-    branches exist. RE-USING a dropped name in a later append is
-    rejected at schema discovery until a compaction rewrites the live
-    files without the column — a name-based era read would otherwise
-    resurrect the retired generation's values (Delta avoids this with
-    field IDs; the guard is the honest equivalent). Returns the new
-    snapshot version."""
-    sch = table_schema(path)
-    if sch is None:
-        raise ValueError(f"no recorded schema at {path}; nothing to drop")
-    names = [f.name for f in sch.fields]
-    if col not in names:
-        raise ValueError(f"column {col!r} not in schema {names}")
-    if len(names) == 1:
-        raise ValueError("cannot drop the table's only column")
-    staged = sorted(
-        {
-            m.get("branch")
-            for _v, entry in _list_manifests(path)
-            for m in (_load_manifest_or_none(path, entry),)
-            if m is not None and m.get("branch") is not None
-        }
-    )
-    if staged:
-        raise ValueError(
-            f"cannot drop a column while write-audit-publish branches "
-            f"{staged} hold unpublished commits; publish or abandon "
-            "them first"
-        )
-    _reject_constrained_column(path, col, "drop")
-    remaining = StructType([f for f in sch.fields if f.name != col])
-    return _commit_manifest_dict(
-        path,
-        {
-            "kind": "alter",
-            "drop": [col],
-            "schema": remaining.jsonValue(),
-            "files": [],
-        },
-    )
-
-
-def add_column(path: str, col: str, dtype: str) -> int:
-    """ADD a column — the third leg of the alter triple, a
-    METADATA-ONLY ``kind='alter'`` commit: no data file is touched;
-    the column joins the discovered schema with a fresh FIELD ID and
-    every pre-existing file reads NULL for it (the add-column
-    backfill contract the append-driven evolution already honors —
-    this makes the step an EXPLICIT one-JSON-write DDL instead of a
-    side effect of the next wider append). ``dtype`` is a Spark type
-    string (``int``, ``bigint``, ``string``, ``array<float>``, …).
-
-    Re-using a name retired by a live-era DROP is rejected exactly as
-    the append path rejects it (pre-drop files still hold that
-    generation's bytes and name-keyed stats); compaction clears the
-    guard. Returns the new snapshot version."""
-    from pyspark.sql.types import _parse_datatype_string
-
-    sch = table_schema(path)
-    if sch is None:
-        raise ValueError(f"no recorded schema at {path}; nothing to alter")
-    names = [f.name for f in sch.fields]
-    if col in names:
-        raise ValueError(f"column {col!r} already exists in {names}")
-    retired = _retired_since_last_rewrite(_log(path))
-    if col in retired:
-        raise ValueError(
-            f"column name {col!r} was dropped by an earlier alter and "
-            "pre-drop live files still hold that generation's bytes "
-            "and name-keyed stats — compact to rewrite the live files "
-            "first"
-        )
-    widened = StructType(
-        list(sch.fields)
-        + [StructField(col, _parse_datatype_string(dtype), True)]
-    )
-    return _commit_manifest_dict(
-        path,
-        {
-            "kind": "alter",
-            "add": [col],
-            "schema": widened.jsonValue(),
-            "files": [],
-        },
-    )
-
-
-def widen_column(path: str, col: str, dtype: str) -> int:
-    """WIDEN a column's type — Iceberg v3 type promotion as an
-    explicit METADATA-ONLY ``kind='alter'`` commit: no data file is
-    rewritten; the discovered schema changes and every existing file
-    reads losslessly under the wider type (the same safe-promotion
-    ladder the append-driven evolution enforces: int→bigint,
-    float→double, … — Spark's parquet scan natively up-casts).
-    Narrowing or lateral changes are rejected. Returns the new
-    snapshot version."""
-    from pyspark.sql.types import _parse_datatype_string
-
-    sch = table_schema(path)
-    if sch is None:
-        raise ValueError(f"no recorded schema at {path}; nothing to alter")
-    target = _parse_datatype_string(dtype)
-    fields = []
-    found = False
-    for f in sch.fields:
-        if f.name == col:
-            found = True
-            pair = (f.dataType.simpleString(), target.simpleString())
-            if pair[0] == pair[1]:
-                raise ValueError(
-                    f"column {col!r} is already {pair[0]}"
-                )
-            if pair not in _TYPE_WIDENINGS:
-                raise ValueError(
-                    f"cannot alter {col!r} from {pair[0]} to "
-                    f"{pair[1]}: not a safe widening (allowed: "
-                    f"{sorted(_TYPE_WIDENINGS)})"
-                )
-            fields.append(StructField(col, target, f.nullable))
-        else:
-            fields.append(f)
-    if not found:
-        raise ValueError(
-            f"column {col!r} not in schema "
-            f"{[f.name for f in sch.fields]}"
-        )
-    return _commit_manifest_dict(
-        path,
-        {
-            "kind": "alter",
-            "widen": {col: target.simpleString()},
-            "schema": StructType(fields).jsonValue(),
-            "files": [],
-        },
-    )
-
-
-def _reject_constrained_column(path: str, col: str, what: str) -> None:
-    """A column referenced by a live CHECK constraint cannot be
-    renamed or dropped (the expression would stop resolving and every
-    write would fail late) — Delta's contract: drop the constraint
-    first. Detection is a conservative word-boundary match of the
-    identifier in each expression (a false positive costs an explicit
-    DROP CONSTRAINT; a false negative would break writes)."""
-    import re as _re
-
-    for n, e in table_constraints(path).items():
-        if _re.search(rf"\b{_re.escape(col)}\b", e):
-            raise ValueError(
-                f"cannot {what} column {col!r}: constraint {n!r} "
-                f"references it in CHECK ({e}); DROP CONSTRAINT first"
-            )
-
-
-def table_constraints(path: str, as_of: int | None = None) -> dict:
-    """The table's live CHECK constraints: name → boolean SQL
-    expression — a pure fold of constraint alters in the log
-    (adds override nothing: re-adding a live name rejects; drops
-    retire)."""
-    out: dict[str, str] = {}
-    for _v, m in _log(path, as_of):
-        if m.get("kind") != "alter":
-            continue
-        for n, e in (m.get("constraint_add") or {}).items():
-            out[n] = e
-        for n in m.get("constraint_drop") or []:
-            out.pop(n, None)
-    return out
-
-
-def add_constraint(
-    spark: SparkSession, path: str, name: str, expr: str
-) -> int:
-    """``ALTER TABLE … ADD CONSTRAINT name CHECK (expr)`` — a
-    TABLE-LEVEL row contract recorded in the manifest log (Delta CHECK
-    constraints): every subsequent write through the engine's write
-    surfaces (INSERT / COPY INTO / MERGE / UPDATE / INSERT OVERWRITE /
-    write_partitioned) re-validates its rows against every live
-    constraint and REJECTS the whole commit on a violation — bad data
-    never lands, instead of being found by the next audit.
-
-    Delta's add-time contract travels too: the EXISTING committed
-    rows must already satisfy the expression (one validation scan
-    here, so the constraint is an invariant from birth, not a hope).
-    SQL NULL semantics: a row violates only when the expression is
-    FALSE — NULL passes, like SQL CHECK.
-
-    The commit is a pure-metadata alter (no file bytes change): it
-    passes streaming tails and partial rewrites, and costs one
-    manifest. Writes pay ONE extra aggregation over the written rows
-    per commit — the same pass Delta's writer makes.
-
-    Reference analogue: the reference validates rows in Python per
-    micro-batch and routes failures to an error stream
-    (spark_streaming_consumer.py:92-118) but nothing stops a later
-    batch job from appending garbage; a table-level constraint
-    guards every writer."""
-    from pyspark.sql import functions as _F
-
-    if not name.isidentifier():
-        raise ValueError(f"invalid constraint name: {name!r}")
-    if name in table_constraints(path):
-        raise ValueError(
-            f"constraint {name!r} already exists; drop it first"
-        )
-    sch = table_schema(path)
-    if sch is None:
-        raise ValueError(f"table at {path} records no schema")
-    # the expression must resolve against the declared schema (typo'd
-    # columns fail HERE, not at the first write)
-    probe = local_frame(spark, [], sch)
-    try:
-        probe.filter(_F.expr(expr)).schema
-    except Exception as e:  # noqa: BLE001 - surface the parse error
-        raise ValueError(
-            f"constraint expression {expr!r} does not resolve against "
-            f"the table schema: {e}"
-        ) from None
-    current = read_evolved(spark, path)
-    n_bad = current.filter(
-        _F.expr(expr).cast("boolean") == _F.lit(False)
-    ).count()
-    if n_bad:
-        raise ValueError(
-            f"cannot add constraint {name!r}: {n_bad} existing rows "
-            f"violate CHECK ({expr})"
-        )
-    return _commit_manifest_dict(
-        path,
-        {
-            "kind": "alter",
-            "constraint_add": {name: expr},
-            "files": [],
-        },
-    )
-
-
-def drop_constraint(path: str, name: str) -> int:
-    """Retire a CHECK constraint — pure metadata; the data it guarded
-    stays, later writes stop validating against it."""
-    if name not in table_constraints(path):
-        raise ValueError(f"no constraint {name!r} at {path}")
-    return _commit_manifest_dict(
-        path,
-        {"kind": "alter", "constraint_drop": [name], "files": []},
-    )
-
-
-def enforce_constraints(
-    spark: SparkSession,
-    path: str,
-    df: DataFrame,
-    what: str = "write",
-    extra: dict | None = None,
-):
-    """Validate ``df`` against every live CHECK constraint in ONE
-    aggregation pass (all constraints as parallel conditional sums);
-    raise naming each violated constraint and its violation count.
-    Called by every data-adding write surface BEFORE its commit.
-
-    ``extra`` piggy-backs caller aggregates (name → Column) onto the
-    SAME single pass — a validating write that also needs a row count
-    or a range check pays one scan, not two (guide §1.2) — and the
-    aggregated row is returned (None when there was nothing to run)."""
-    from pyspark.sql import functions as _F
-
-    cons = table_constraints(path)
-    if not cons and not extra:
-        return None
-    aggs = [
-        _F.sum(
-            _F.when(
-                _F.expr(e).cast("boolean") == _F.lit(False), 1
-            ).otherwise(0)
-        ).alias(n)
-        for n, e in cons.items()
-    ] + [v.alias(n) for n, v in (extra or {}).items()]
-    row = df.agg(*aggs).collect()[0]
-    bad = {
-        n: int(row[n]) for n in cons if row[n] is not None and row[n]
-    }
-    if bad:
-        detail = "; ".join(
-            f"{n}: {c} rows violate CHECK ({cons[n]})"
-            for n, c in sorted(bad.items())
-        )
-        raise ValueError(f"{what} rejected by table constraints — {detail}")
-    return row
-
-
 def set_partition_spec(
     path: str, transforms: list[tuple] | tuple | None
 ) -> int:
@@ -2720,15 +2038,15 @@ def set_partition_spec(
       (writers inherit the table's layout, Iceberg-style);
     - :func:`maintain` preserves it through full compactions (the
       rewrite re-partitions under the CURRENT spec, collapsing the
-      spec eras the way it collapses naming eras);
+      spec eras);
     - :func:`table_partitions` treats it as the reference spec: files
       written under an older spec report as unaccounted (their
       histograms describe different tuples) until a rewrite refreshes
       them.
 
-    A spec-only alter changes NO column names, so it never creates
-    naming eras: reads, metadata aggregates, and the CDF are
-    unaffected. Spec columns must exist in the current schema.
+    The alter changes no columns and no rows: reads, metadata
+    aggregates, and the CDF are unaffected. Spec columns must exist in
+    the current schema.
     Returns the new snapshot version."""
     sch = table_schema(path)
     if sch is None:
@@ -2879,160 +2197,6 @@ def clone_table(
     }
 
 
-def write_with_expectations(
-    spark: SparkSession,
-    path: str,
-    df: DataFrame,
-    rules: dict[str, str],
-    on_violation: str = "fail",
-    quarantine_path: str | None = None,
-) -> dict:
-    """Write-time data-quality EXPECTATIONS on the manifest table —
-    the Delta Live Tables expect / expect-or-drop / expect-or-fail
-    contract, Spark-first. ``rules`` maps rule names to SQL boolean
-    predicates every written row must satisfy.
-
-    - ``on_violation='fail'``: ALL-OR-NOTHING. The rows are written to
-      a private write-audit-publish branch with per-rule violation
-      counters attached as **observation metrics**
-      (``df.observe``/CollectMetrics — the counters ride the write
-      job itself, so auditing costs ZERO extra scans even at 100 TB).
-      A clean audit publishes the branch atomically; any violation
-      abandons it (nothing was ever visible to readers) and raises
-      with the counts — the WAP loop, driven by expectations.
-    - ``on_violation='drop'``: valid rows commit to main; violating
-      rows are dropped. The same observe-metrics trick counts
-      violations on the single write scan (the filter and the
-      counters share one pass over the input).
-    - ``on_violation='quarantine'``: like drop, but violating rows are
-      ALSO written — to a side manifest table (default
-      ``<path>_quarantine``) with a ``_violated`` array column naming
-      each rule the row broke, so triage reads the quarantine table
-      instead of re-scanning the source. Costs one extra scan of the
-      input for the violating-row projection (cache ``df`` upstream
-      if it is expensive to recompute).
-
-    Every commit records the enforced contract in its manifest
-    ``props`` (snapshot-summary style, surfaced by
-    :func:`table_history`) — the audit trail shows WHICH rules guarded
-    WHICH snapshot. Returns {"version", "violations": {rule: count},
-    "rows_written", "rows_quarantined", "quarantine_version"}.
-
-    Reference analogue: the reference's routing classifier tags
-    invalid rows with ``invalid_reason`` and writes them to a CSV
-    validation log (spark_streaming_consumer.py:270-281, :367-392) —
-    the same quarantine idea, here promoted to an enforced write-time
-    contract on a transactional table."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as _F
-
-    if on_violation not in ("fail", "drop", "quarantine"):
-        raise ValueError(f"unknown on_violation mode: {on_violation!r}")
-    if not rules:
-        raise ValueError("expectations need at least one rule")
-    names = list(rules)
-    ok = None
-    for pred in rules.values():
-        e = _F.expr(pred)
-        ok = e if ok is None else ok & e
-    counters = [_F.count(_F.lit(1)).alias("_rows_in")] + [
-        _F.sum(
-            _F.when(~_F.coalesce(_F.expr(p), _F.lit(False)), 1).otherwise(0)
-        ).alias(n)
-        for n, p in rules.items()
-    ]
-    token = uuid.uuid4().hex
-    props = json.dumps(
-        {"expectations": rules, "on_violation": on_violation}
-    )
-    obs = Observation()
-    if on_violation == "fail":
-        branch = f"_expect-{token[:12]}"
-        save_manifest(
-            df.observe(obs, *counters),
-            path,
-            branch=branch,
-            commit_token=token,
-            commit_props=props,
-        )
-        got = obs.get
-        violations = {n: int(got[n] or 0) for n in names}
-        if any(violations.values()):
-            abandon_branch(path, branch)
-            raise ValueError(
-                f"expectations violated, write rolled back: "
-                f"{ {n: c for n, c in violations.items() if c} }"
-            )
-        try:
-            version = publish_branch(path, branch)[0]
-        except ValueError as e:
-            # a concurrent main commit landed between our branch claim
-            # and this publish — the fast-forward condition fails.
-            # Roll the staged write back (pure GC: it was never
-            # visible) and surface a retryable conflict, the same
-            # shape as Delta's commit-conflict retry loop.
-            abandon_branch(path, branch)
-            raise RuntimeError(
-                "expect-or-fail write lost a commit race on "
-                f"{path}; the staged branch was rolled back — retry "
-                f"the write ({e})"
-            ) from e
-        return {
-            "version": version,
-            "violations": violations,
-            "rows_written": int(got["_rows_in"] or 0),
-            "rows_quarantined": 0,
-            "quarantine_version": None,
-        }
-    # drop / quarantine: filter AFTER observe so the counters see the
-    # pre-filter rows on the same scan the write consumes
-    valid = df.observe(obs, *counters).filter(
-        _F.coalesce(ok, _F.lit(False))
-    )
-    save_manifest(
-        valid, path, commit_token=token, commit_props=props
-    )
-    version, main_manifest = _committed_entry_of(path, token)
-    got = obs.get
-    violations = {n: int(got[n] or 0) for n in names}
-    n_bad = 0
-    q_version = None
-    if on_violation == "quarantine" and any(violations.values()):
-        qp = quarantine_path or f"{path}_quarantine"
-        q_token = uuid.uuid4().hex
-        # NULL predicate results count as violations on BOTH sides:
-        # valid keeps coalesce(ok, False); bad takes its complement,
-        # so no row can fall through the quarantine
-        bad = df.filter(~_F.coalesce(ok, _F.lit(False))).withColumn(
-            "_violated",
-            _F.array_compact(
-                _F.array(
-                    *[
-                        _F.when(
-                            ~_F.coalesce(_F.expr(p), _F.lit(False)),
-                            _F.lit(n),
-                        )
-                        for n, p in rules.items()
-                    ]
-                )
-            ),
-        )
-        save_manifest(
-            bad, qp, commit_token=q_token, commit_props=props
-        )
-        # quarantined row count straight from the quarantine commit's
-        # manifest — no extra count job
-        q_version, q_manifest = _committed_entry_of(qp, q_token)
-        n_bad = q_manifest.get("n_rows", 0)
-    return {
-        "version": version,
-        "violations": violations,
-        "rows_written": main_manifest.get("n_rows", 0),
-        "rows_quarantined": n_bad,
-        "quarantine_version": q_version,
-    }
-
-
 def merge_upsert(
     spark: SparkSession,
     path: str,
@@ -3068,34 +2232,17 @@ def merge_upsert(
     Returns {"version", "n_updates", "n_data_files"}."""
     if not keys:
         raise ValueError("merge_upsert requires at least one key column")
-    # a merge records its rows' schema as a table-schema step (it IS a
-    # data commit), so validate the evolution contract BEFORE the
-    # commit: an update frame missing a table column (or narrowing a
-    # type) would otherwise land and poison schema discovery for every
-    # subsequent reader
+    # a merge records its rows' schema (it IS a data commit), so check
+    # it against the table's one schema BEFORE the commit: a frame with
+    # other columns or types would otherwise land and make schema
+    # discovery raise for every subsequent reader
     current = table_schema(path)
-    if current is not None:
-        cur = {f.name: f.dataType for f in current.fields}
-        upd = {f.name: f.dataType for f in updates.schema.fields}
-        missing = set(cur) - set(upd)
-        if missing:
-            raise ValueError(
-                f"merge_upsert update rows lack table columns "
-                f"{sorted(missing)}; MERGE is whole-row — supply full "
-                "rows (read-modify-write the missing columns)"
-            )
-        for name, pt in cur.items():
-            ct = upd[name]
-            if ct != pt and (
-                pt.simpleString(),
-                ct.simpleString(),
-            ) not in _TYPE_WIDENINGS:
-                raise ValueError(
-                    f"merge_upsert changes {name!r} from "
-                    f"{pt.simpleString()} to {ct.simpleString()}, "
-                    "which is not a safe widening"
-                )
-    enforce_constraints(spark, path, updates, "MERGE")
+    if current is not None and _columns(updates.schema) != _columns(current):
+        raise ValueError(
+            f"merge_upsert update rows {_columns(updates.schema)} differ "
+            f"from the table schema {_columns(current)}; MERGE is "
+            "whole-row — supply full rows of the table's schema"
+        )
     token = uuid.uuid4().hex
     opts = {
         "kind": "merge",
@@ -3265,16 +2412,10 @@ def maintain(
 
     Returns {"dry_run", "had_tombstones", "flagged_before", "actions",
     "versions_written", "vacuum", "noop"}."""
-    log = _log(path)
-    # a pending column rename/drop forces the FULL compaction path
-    # exactly like tombstones do: the scoped rewrite is name-keyed and
-    # cannot cross eras, while the full pass collapses them. A
-    # spec-only alter (partition evolution) does NOT force it — the
+    # a partition-spec alter does NOT force the full path — the
     # flagged ranges decide, and the full path preserves the CURRENT
-    # spec when it runs.
-    had_tombstones = _tombstones_since_last_rewrite(
-        log
-    ) or _alters_since_last_rewrite(log)
+    # spec when it runs
+    had_tombstones = _tombstones_since_last_rewrite(_log(path))
     plan = plan_compaction_ranges(
         path,
         policy.col,
@@ -3402,6 +2543,9 @@ def _log(
     file-level CDF paths operate on (those either manage the manifest
     files themselves or must keep referencing pre-restore entries).
 
+    Every entry returned passes :func:`_check_entry`, so no fold ever
+    reads past an entry this module cannot interpret.
+
     Parsing is served by the fingerprint-validated process cache
     (:func:`_scan_log`): a call costs one stat pass over the log
     directory, not a re-parse of the checkpoint bundle + tail."""
@@ -3414,8 +2558,35 @@ def _log(
         tag = m.get("branch")
         if tag is not None and tag != branch:
             continue
+        _check_entry(version, m)
         out.append((version, m))
     return out if raw else _effective(out)
+
+
+# The log entry kinds this module folds, and what an alter may carry:
+# a partition-spec alter is the only alter left. Anything else was
+# written by a table verb that no longer exists (column evolution,
+# table-level row checks, per-file sketches); folding past it would
+# misread the table — columns renamed by it would read back null.
+_KINDS = ("append", "rewrite", "delete", "merge", "alter", "restore")
+_ALTER_KEYS = {"kind", "partition_spec", "schema", "files", "version"}
+
+
+def _check_entry(version: int, m: dict) -> None:
+    """Raise, naming the version, on a log entry of a retired or
+    unknown kind, or an alter carrying a key other than a spec."""
+    kind = m.get("kind", "append")
+    if kind not in _KINDS:
+        raise ValueError(
+            f"manifest version {version} has the retired kind {kind!r}; "
+            "this module cannot read the table"
+        )
+    extra = sorted(set(m) - _ALTER_KEYS) if kind == "alter" else []
+    if extra:
+        raise ValueError(
+            f"manifest version {version} is an alter carrying the retired "
+            f"key {extra[0]!r}; this module cannot read the table"
+        )
 
 
 def _checkpoint_names(path: str) -> list[str]:
@@ -3523,7 +2694,7 @@ def _last_rewrite_index(log: list[tuple[int, dict]]) -> int:
     """Index of the latest rewrite snapshot in the log, or -1. A
     rewrite holds the CONSOLIDATED table state: everything below it is
     history the live file set no longer reflects, so state-sensitive
-    checks (naming eras, unmaterialized tombstones) scope to the
+    checks (unmaterialized tombstones, spec alters) scope to the
     entries ABOVE it."""
     last_rw = -1
     for i, (_v, m) in enumerate(log):
@@ -3532,120 +2703,19 @@ def _last_rewrite_index(log: list[tuple[int, dict]]) -> int:
     return last_rw
 
 
-def _alters_since_last_rewrite(log: list[tuple[int, dict]]) -> bool:
-    """True when a column RENAME/DROP (``kind='alter'`` with a rename
-    map or drop list) sits ABOVE the latest rewrite — i.e. the live
-    file set still spans naming eras. Alters below a rewrite are
-    history: compaction rewrote every live file under the current
-    names, so name-keyed surfaces answer exactly again. Alters that
-    change no names — partition-spec evolution commits — never create
-    naming eras and are not counted."""
-    return any(
-        m.get("kind") == "alter"
-        and (m.get("rename") or m.get("drop"))
-        for _v, m in log[_last_rewrite_index(log) + 1 :]
-    )
-
-
 def _tombstones_since_last_rewrite(log: list[tuple[int, dict]]) -> bool:
     """True when an UNMATERIALIZED delete/merge tombstone sits above
     the latest rewrite. Tombstones below a rewrite are already folded
     into the consolidated files (compaction materializes them), so
     surfaces that cannot apply row-level tombstones — metadata
-    aggregates, table$partitions, the era read — must reject only the
-    ones above; rejecting on ANY historical tombstone would wedge
-    those surfaces forever (old manifests persist until snapshot
-    expiry, so 'compact first' would never clear the condition)."""
+    aggregates, table$partitions — must reject only the ones above;
+    rejecting on ANY historical tombstone would wedge those surfaces
+    forever (old manifests persist until snapshot expiry, so 'compact
+    first' would never clear the condition)."""
     return any(
         m.get("kind", "append") in ("delete", "merge")
         for _v, m in log[_last_rewrite_index(log) + 1 :]
     )
-
-
-def _field_id_history(
-    log: list[tuple[int, dict]],
-) -> tuple[list[dict[str, int] | None], dict[str, int], bool]:
-    """Derive per-column FIELD IDs from the manifest log — the Delta
-    column-mapping / Iceberg field-ID mechanism, computed as a PURE
-    FUNCTION of the log instead of stored state: every column is
-    assigned a stable integer id at its BIRTH (first appearance in a
-    data manifest's recorded schema, ids issued in log order and never
-    reused), renames carry the id to the new name, drops retire it.
-    Because the log already records each manifest's write schema and
-    each alter's rename/drop, the derivation is deterministic,
-    race-free (no writer coordination needed), and applies
-    RETROACTIVELY to every existing table.
-
-    Returns ``(per_index, current, ok)``:
-
-    - ``per_index[i]`` maps the WRITE-ERA column names of ``log[i]``'s
-      files to their field ids (for delete manifests: the tombstone
-      key names; ``None`` when the manifest records no schema);
-    - ``current`` maps the CURRENT names to ids;
-    - ``ok`` is False when a file-bearing manifest records no schema
-      (legacy log) — name-keyed surfaces then keep their strict
-      reject-on-rename behavior.
-
-    A name dropped and later re-used gets a NEW id, so the two
-    generations never alias: a stats probe for the new generation
-    finds NO id match in pre-drop manifests and conservatively treats
-    those files as predating the column — which they do."""
-    mapping: dict[str, int] = {}
-    next_id = 1
-    per_index: list[dict[str, int] | None] = []
-    ok = True
-    for _v, m in log:
-        kind = m.get("kind", "append")
-        sch = m.get("schema")
-        if kind == "alter":
-            for d in m.get("drop", []):
-                mapping.pop(d, None)
-            ren = m.get("rename", {})
-            mapping = {ren.get(n, n): i for n, i in mapping.items()}
-            for a in m.get("add", []):
-                if a not in mapping:
-                    mapping[a] = next_id
-                    next_id += 1
-            per_index.append(dict(mapping))
-            continue
-        if kind == "delete":
-            if sch is None:
-                per_index.append(None)
-                if m.get("files"):
-                    ok = False
-                continue
-            keys = [f["name"] for f in sch["fields"]]
-            per_index.append(
-                {n: mapping[n] for n in keys if n in mapping}
-            )
-            continue
-        if sch is None:
-            per_index.append(None)
-            if m.get("files"):
-                ok = False
-            continue
-        names = [f["name"] for f in sch["fields"]]
-        for n in names:
-            if n not in mapping:
-                mapping[n] = next_id
-                next_id += 1
-        per_index.append({n: mapping[n] for n in names})
-    return per_index, mapping, ok
-
-
-def _retired_since_last_rewrite(log: list[tuple[int, dict]]) -> set[str]:
-    """Column names DROPPED by an alter above the latest rewrite.
-    These names are radioactive until a compaction rewrites the live
-    files without them: pre-drop files still hold the retired
-    generation's bytes AND its name-keyed zone maps/blooms, so a new
-    column re-using the name (by append — guarded at schema
-    discovery — or by rename, guarded in :func:`rename_column`) would
-    make era reads and pruning probes serve the wrong generation."""
-    out: set[str] = set()
-    for _v, m in log[_last_rewrite_index(log) + 1 :]:
-        if m.get("kind") == "alter":
-            out |= set(m.get("drop", []))
-    return out
 
 
 def _committed_files(
@@ -3753,210 +2823,6 @@ def plan_pruned_files(
     return sorted(keep), len(live)
 
 
-def plan_bloom_pruned_files(
-    path: str, col: str, value: int, as_of: int | None = None
-) -> tuple[list[str], int]:
-    """Point-lookup data skipping against the per-file BLOOM filters:
-    (files that MIGHT contain ``col == value``, total committed files).
-    A file is skipped only when its bloom provably excludes the value
-    (all k positions unset) — no false negatives by construction; files
-    without a bloom for ``col`` (written before the option, or a
-    different bloom column) are conservatively kept. The complement to
-    :func:`plan_pruned_files`: zone maps prune RANGE predicates on
-    clustered columns; blooms prune EQUALITY probes on columns whose
-    per-file [min,max] spans everything."""
-    want = _bloom_positions(int(value))
-    keep: list[str] = []
-    total = 0
-    for _version, m in _log(path, as_of):
-        if m.get("kind", "append") == "delete":
-            continue
-        blooms = m.get("file_blooms", {}) if m.get("bloom_col") == col else {}
-        entries = []
-        for name in m["files"]:
-            bits = blooms.get(name)
-            if bits is None or all(p in set(bits) for p in want):
-                entries.append(name)
-        if m.get("kind", "append") == "rewrite":
-            keep, total = entries, len(m["files"])
-        else:
-            keep += entries
-            total += len(m["files"])
-    return sorted(keep), total
-
-
-def plan_token_pruned_files(
-    path: str, col: str, token: str, as_of: int | None = None
-) -> tuple[list[str], int]:
-    """Keyword-search data skipping against the per-file TOKEN blooms:
-    (files that MIGHT contain the word ``token`` in text column
-    ``col``, total committed files). The probe token passes through
-    the same normalization the writer applied (lowercase; it must be a
-    single TOKEN_SPLIT_RE token). A file is skipped only when its
-    token bloom provably excludes the word — no false negatives by
-    construction; files without a token bloom for ``col`` are
-    conservatively kept. This is the pruning class neither zone maps
-    (whole-string min/max) nor the integer bloom can serve: "which
-    files of a 100-TB document corpus contain the word W" becomes a
-    driver-side bitmap probe, with only the surviving files scanned."""
-    token = token.lower()
-    import re as _re
-
-    if not token or _re.search(TOKEN_SPLIT_RE, token):
-        raise ValueError(
-            f"probe {token!r} is not a single token under "
-            f"TOKEN_SPLIT_RE ({TOKEN_SPLIT_RE})"
-        )
-    th = _token_hash(token)
-    keep: list[str] = []
-    total = 0
-    for _version, m in _log(path, as_of):
-        if m.get("kind", "append") == "delete":
-            continue
-        blooms = (
-            m.get("file_token_blooms", {})
-            if m.get("token_bloom_col") == col
-            else {}
-        )
-        entries = []
-        for name in m["files"]:
-            packed = blooms.get(name)
-            if packed is None or _token_bloom_hit(packed, th):
-                entries.append(name)
-        if m.get("kind", "append") == "rewrite":
-            keep, total = entries, len(m["files"])
-        else:
-            keep += entries
-            total += len(m["files"])
-    return sorted(keep), total
-
-
-def read_token_search(
-    spark: SparkSession, path: str, schema, col: str, token: str
-) -> DataFrame:
-    """Keyword search over the manifest table: token-bloom pruning
-    (:func:`plan_token_pruned_files`) + the EXACT residual filter —
-    ``array_contains`` over the same lowercase/TOKEN_SPLIT_RE
-    tokenization the writer indexed, so the result equals a full scan
-    with the filter, having opened only the surviving files."""
-    from pyspark.sql import functions as _F
-
-    keep, _total = plan_token_pruned_files(path, col, token)
-    df = read_committed(spark, path, schema, _keep=set(keep))
-    return df.filter(
-        _F.array_contains(
-            _F.split(_F.lower(_F.col(col)), TOKEN_SPLIT_RE),
-            token.lower(),
-        )
-    )
-
-
-def plan_token_pruned_files_all(
-    path: str, col: str, tokens: list[str], as_of: int | None = None
-) -> tuple[list[str], int]:
-    """MULTI-TOKEN keyword-search data skipping: files that MIGHT
-    contain EVERY word of ``tokens`` in text column ``col``. AND is
-    free at the driver — a file survives only when every token hits
-    its bloom, i.e. the per-token surviving file sets intersect as a
-    bitmap operation, in ONE pass over the manifest log (not one pass
-    per token). Files without a token bloom are conservatively kept;
-    no false negatives by construction, so the exact residual filter
-    on top equals a full scan having opened only the intersection.
-
-    Scale: "which files of a 100-TB corpus contain w1 AND w2 AND w3"
-    costs O(#manifests + #files·#tokens) driver-side integer probes —
-    and the selectivities MULTIPLY, so each extra token shrinks the
-    scan geometrically."""
-    import re as _re
-
-    if not tokens:
-        raise ValueError("need at least one probe token")
-    norm = [t.lower() for t in tokens]
-    for t in norm:
-        if not t or _re.search(TOKEN_SPLIT_RE, t):
-            raise ValueError(
-                f"probe {t!r} is not a single token under "
-                f"TOKEN_SPLIT_RE ({TOKEN_SPLIT_RE})"
-            )
-    hashes = [_token_hash(t) for t in norm]
-    keep: list[str] = []
-    total = 0
-    for _version, m in _log(path, as_of):
-        if m.get("kind", "append") == "delete":
-            continue
-        blooms = (
-            m.get("file_token_blooms", {})
-            if m.get("token_bloom_col") == col
-            else {}
-        )
-        entries = []
-        for name in m["files"]:
-            packed = blooms.get(name)
-            if packed is None or all(
-                _token_bloom_hit(packed, th) for th in hashes
-            ):
-                entries.append(name)
-        if m.get("kind", "append") == "rewrite":
-            keep, total = entries, len(m["files"])
-        else:
-            keep += entries
-            total += len(m["files"])
-    return sorted(keep), total
-
-
-def read_token_search_all(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    tokens: list[str],
-    phrase: bool = False,
-    as_of: int | None = None,
-) -> DataFrame:
-    """Multi-token keyword search over the manifest table, routed
-    through the PUBLIC batch reader so the bloom pruning shows up as
-    INPUT-PARTITION pruning (``df.rdd.getNumPartitions()`` equals the
-    surviving non-empty file count): token-bloom AND-intersection
-    (:func:`plan_token_pruned_files_all`) shrinks the file list via
-    the reader's ``keepFiles`` option, then the EXACT residual filter
-    reproduces the full-scan answer —
-
-    - ``phrase=False``: the document's token array (same
-      lowercase/TOKEN_SPLIT_RE tokenization the writer indexed)
-      contains EVERY probe token, in any order;
-    - ``phrase=True``: the tokens appear CONSECUTIVELY in probe
-      order — checked on the space-joined token string with sentinel
-      spaces, so it is exact w.r.t. the tokenization (a phrase is an
-      AND plus an adjacency residual; the bloom prune set is
-      identical).
-
-    Tombstones still apply (the reader attaches them per surviving
-    file); pruning never skips a tombstone application."""
-    from pyspark.sql import functions as _F
-
-    keep, _total = plan_token_pruned_files_all(path, col, tokens, as_of)
-    fmt = ensure_manifest_sink(spark)
-    reader = (
-        spark.read.format(fmt)
-        .option("path", path)
-        .option("keepFiles", json.dumps(keep))
-    )
-    if as_of is not None:
-        reader = reader.option("versionAsOf", str(as_of))
-    df = reader.load()
-    toks = _F.split(_F.lower(_F.col(col)), TOKEN_SPLIT_RE)
-    if phrase:
-        joined = _F.concat(
-            _F.lit(" "), _F.array_join(toks, " "), _F.lit(" ")
-        )
-        needle = " " + " ".join(t.lower() for t in tokens) + " "
-        return df.filter(joined.contains(needle))
-    cond = None
-    for t in tokens:
-        c = _F.array_contains(toks, t.lower())
-        cond = c if cond is None else (cond & c)
-    return df.filter(cond)
-
-
 def table_history(path: str) -> list[dict]:
     """DESCRIBE HISTORY for the manifest table: one dict per committed
     snapshot — version, kind (append/rewrite), file count, row count,
@@ -4039,11 +2905,7 @@ def table_partitions(
     A file is counted toward a partition only when its histogram was
     recorded under the CURRENT spec — spec evolution invalidates older
     histograms for this surface (they describe different tuples), the
-    same rule compact_range applies to carried ranges. Spec identity
-    is by FIELD ID (:func:`_field_id_history`), so RENAMING the
-    transform's source column does not invalidate histograms — the
-    surface answers exactly across renames, and the returned ``spec``
-    shows the CURRENT column names.
+    same rule compact_range applies to carried ranges.
 
     Scale: driver-side O(#manifests + #files·#tuples-per-file) JSON
     work; answering "how many rows landed in yesterday's partition"
@@ -4064,40 +2926,17 @@ def table_partitions(
             "holds unmaterialized delete/merge tombstones that row "
             "counts cannot reflect — compact first"
         )
-    renamed = _alters_since_last_rewrite(log)
-    per_index, current_ids, fid_ok = _field_id_history(log)
-    if renamed and not fid_ok:
-        raise ValueError(
-            "table$partitions cannot answer across a column rename on "
-            "this log: a file-bearing manifest records no schema, so "
-            "field ids cannot be derived — compact to collapse the "
-            "eras first"
-        )
 
-    def canon(sp, idx: int):
-        """Spec identity by FIELD ID: a spec on a column keeps its
-        identity across renames of that column (the histograms it
-        produced describe the same physical tuples), while a spec
-        naming a dropped-and-reused name does NOT match the new
-        generation. None when any spec column is untranslatable."""
+    def canon(sp):
+        """Spec identity: (col, kind, arg) per field — a one-field spec
+        is recorded as a bare dict, a multi-field one as a list."""
         specs = sp if isinstance(sp, list) else [sp]
-        pi = per_index[idx] if fid_ok else None
-        out = []
-        for s in specs:
-            key = (
-                pi.get(s["col"])
-                if pi is not None
-                else s["col"]  # legacy identity (never-renamed)
-            )
-            if key is None:
-                return None
-            out.append((key, s.get("kind"), s.get("arg")))
-        return tuple(out)
+        return tuple((s["col"], s.get("kind"), s.get("arg")) for s in specs)
 
     live: dict[str, tuple] = {}
     spec_latest = None
     spec_latest_canon = None
-    for idx, (_version, m) in enumerate(log):
+    for _version, m in log:
         if m.get("kind", "append") == "delete":
             continue  # materialized tombstone files are not data
         if m.get("kind") == "alter" and "partition_spec" in m:
@@ -4105,12 +2944,10 @@ def table_partitions(
             # files written under older specs report as unaccounted
             sp2 = m["partition_spec"]
             spec_latest = sp2
-            spec_latest_canon = (
-                canon(sp2, idx) if sp2 is not None else None
-            )
+            spec_latest_canon = canon(sp2) if sp2 is not None else None
             continue
         sp = m.get("partition_transform")
-        spc = canon(sp, idx) if sp is not None else None
+        spc = canon(sp) if sp is not None else None
         pr = m.get("file_partition_rows", {})
         fr = m.get("file_rows", {})
         entries = {f: (spc, pr.get(f), fr.get(f)) for f in m["files"]}
@@ -4144,31 +2981,8 @@ def table_partitions(
             "strict=False for the accounted subset or compact to "
             "refresh the histograms"
         )
-    # report the spec under CURRENT column names (the recorded one may
-    # carry a pre-rename name)
-    if fid_ok:
-        id_to_cur = {i: n for n, i in current_ids.items()}
-        shown = []
-        for s, (key, _k, _a) in zip(
-            spec_latest
-            if isinstance(spec_latest, list)
-            else [spec_latest],
-            spec_latest_canon or (),
-        ):
-            s = dict(s)
-            if isinstance(key, int) and key in id_to_cur:
-                s["col"] = id_to_cur[key]
-            shown.append(s)
-        if not shown:
-            spec_shown = spec_latest  # canon-untranslatable: as recorded
-        elif isinstance(spec_latest, list):
-            spec_shown = shown
-        else:
-            spec_shown = shown[0]
-    else:
-        spec_shown = spec_latest
     return {
-        "spec": spec_shown,
+        "spec": spec_latest,
         "partitions": [
             {"partition": list(k), "n_rows": v[0], "n_files": v[1]}
             for k, v in sorted(agg.items())
@@ -4207,22 +3021,11 @@ def metadata_aggregate(
     - MIN/MAX (columns listed in ``minmax_cols``) → every live file
       holding at least one non-null value of the column must carry a
       zone map; a file that saw nulls (the zone map disables on the
-      first null) or predates the column makes min/max unanswerable —
-      ask for such columns via ``cols`` (counts only) instead. None
-      min/max is returned ONLY in the all-null case, which is exact;
+      first null) makes min/max unanswerable — ask for such columns
+      via ``cols`` (counts only) instead. None min/max is returned
+      ONLY in the all-null case, which is exact;
     - null counts for a column → every live file must carry a
-      ``file_nulls`` record; a post-evolution reader counts a file
-      that PREDATES the column as all-null for it — exactly what the
-      null-backfill read contract produces.
-
-    RENAMED tables answer EXACTLY without compaction: every probe
-    translates current name → FIELD ID → the file's write-era name
-    (:func:`_field_id_history` derives stable per-column ids from the
-    log itself), so pre-rename files' name-keyed stats keep serving
-    the column under its new name, and a dropped-then-reused name
-    never reads the retired generation's stats (the reuse gets a new
-    id). Only legacy logs whose file-bearing manifests record no
-    schema still reject on rename (ids underivable — compact first).
+      ``file_nulls`` record.
 
     Returns {"n_rows": N, "cols": {c: {"min", "max", "nulls",
     "non_null"}}}."""
@@ -4233,53 +3036,22 @@ def metadata_aggregate(
             "holds unmaterialized delete/merge tombstones — compact "
             "first"
         )
-    renamed = _alters_since_last_rewrite(log)
-    per_index, current_ids, fid_ok = _field_id_history(log)
-    if renamed and not fid_ok:
-        raise ValueError(
-            "metadata aggregates cannot answer across a column rename "
-            "on this log: a file-bearing manifest records no schema, "
-            "so field ids cannot be derived — compact to collapse the "
-            "eras first"
-        )
     live: dict[str, tuple] = {}
-    for idx, (_version, m) in enumerate(log):
+    for _version, m in log:
         if m.get("kind", "append") == "delete":
             continue  # materialized tombstone files are not data
         fr = m.get("file_rows", {})
         fs = m.get("file_stats", {})
         fn = m.get("file_nulls", {})
         entries = {
-            f: (fr.get(f), fs.get(f, {}), fn.get(f), idx)
-            for f in m["files"]
+            f: (fr.get(f), fs.get(f, {}), fn.get(f)) for f in m["files"]
         }
         if m.get("kind", "append") == "rewrite":
             live = entries
         else:
             live.update(entries)
-    # per-manifest inverse maps: field id -> that manifest's write-era
-    # name for it. A probe for a CURRENT column translates current
-    # name -> id -> era name, so per-file stats keyed by write-time
-    # names answer EXACTLY across renames — no compaction required.
-    inv_cache: dict[int, dict[int, str]] = {}
-
-    def era_name(idx: int, col: str) -> str | None:
-        """The write-era name of current column ``col`` in manifest
-        ``idx``; None when the file predates the column (its rows are
-        all-null for it, the backfill contract)."""
-        if not fid_ok:
-            return col  # legacy identity (never-renamed, checked above)
-        cid = current_ids.get(col)
-        if cid is None:
-            return None
-        if idx not in inv_cache:
-            pi = per_index[idx]
-            inv_cache[idx] = (
-                {} if pi is None else {i: n for n, i in pi.items()}
-            )
-        return inv_cache[idx].get(cid)
     n_rows = 0
-    for name, (rows, _s, _n, _i) in live.items():
+    for name, (rows, _s, _n) in live.items():
         if rows is None:
             raise ValueError(
                 f"live file {name} records no row count (pre-columnar "
@@ -4287,9 +3059,8 @@ def metadata_aggregate(
             )
         n_rows += rows
     # strictness extends to the REQUEST: a column name outside the
-    # discovered schema raises (a typo must never be indistinguishable
-    # from an all-null added column). Branch reads skip the check —
-    # branch commits may add columns main's schema has not seen.
+    # discovered schema raises (a typo must never read as an all-null
+    # column). Branch reads skip the check: the schema read is main's.
     if branch is None and (cols or minmax_cols):
         sch = table_schema(path, as_of)
         if sch is not None:
@@ -4307,7 +3078,7 @@ def metadata_aggregate(
     for c in list(cols or []) + sorted(want_minmax - set(cols or [])):
         nulls = 0
         lo = hi = None
-        for name, (rows, fstats, fnulls, idx) in live.items():
+        for name, (rows, fstats, fnulls) in live.items():
             if rows == 0:
                 continue
             if fnulls is None:
@@ -4315,16 +3086,11 @@ def metadata_aggregate(
                     f"live file {name} records no null counts; compact "
                     "to refresh metadata"
                 )
-            era = era_name(idx, c)
-            # a file predating an added column — or predating the
-            # column's CURRENT generation after a drop-and-reuse — is
-            # all-null for it: the null-backfill contract, counted
-            # exactly
-            c_nulls = rows if era is None else fnulls.get(era, rows)
+            c_nulls = fnulls.get(c, rows)
             nulls += c_nulls
             if c_nulls == rows or c not in want_minmax:
                 continue  # counts-only column, or nothing non-null
-            s = fstats.get(era)
+            s = fstats.get(c)
             if s is None:
                 raise ValueError(
                     f"live file {name} holds non-null {c!r} values but "
@@ -4361,8 +3127,6 @@ def read_version_delta(
         if version <= from_v or version > to_v:
             continue
         kind = m.get("kind", "append")
-        if kind == "analyze":
-            continue  # NDV sketches: pure metadata, no file changes
         if kind != "append":
             raise ValueError(
                 f"version delta ({from_v}, {to_v}] crosses the {kind} "
@@ -4394,261 +3158,35 @@ def read_pruned(
     return read_committed(spark, path, schema, as_of=as_of, _keep=set(files))
 
 
-# Safe type promotions (Iceberg v3 type-widening set restricted to
-# what Spark's parquet scan natively up-casts): a file written at the
-# narrower type reads losslessly under the wider schema; the reverse
-# direction fails the scan, so it is rejected at discovery time.
-_TYPE_WIDENINGS = {
-    ("tinyint", "smallint"),
-    ("tinyint", "int"),
-    ("tinyint", "bigint"),
-    ("smallint", "int"),
-    ("smallint", "bigint"),
-    ("int", "bigint"),
-    ("float", "double"),
-}
+def _columns(st: StructType) -> dict[str, str]:
+    """Column name → type string: what two schemas must agree on (the
+    recorded nullability may differ between writes of one table)."""
+    return {f.name: f.dataType.simpleString() for f in st.fields}
 
 
 def table_schema(path: str, as_of: int | None = None) -> StructType | None:
-    """Discover the table schema from the manifest log — the schema AS
-    OF the given version (latest recorded at or below it), so time
-    travel reads old snapshots with their OWN schema. Returns None if
-    no manifest in range recorded one (pre-evolution tables).
+    """Discover the table schema from the manifest log: the latest
+    schema recorded at or below ``as_of``, or None if no manifest in
+    range recorded one (pre-schema tables).
 
-    Enforces the EVOLUTION contract while walking the log: every
-    recorded schema must contain all field names of the previous one
-    (Iceberg v1-style additive evolution — drops/renames break old
-    readers and are rejected here at discovery time), and a common
-    field may only keep its type or WIDEN it along the safe promotion
-    ladder (int→bigint, float→double — the Iceberg v3 type-widening
-    set Spark's parquet scan natively up-casts; narrowing would fail
-    every pre-evolution file at scan time and is rejected here
-    instead). Delete snapshots are skipped: they record the TOMBSTONE
-    KEY schema (a subset by design), not a table-schema evolution
-    step."""
+    A table has ONE schema: a recorded schema whose column names or
+    types differ from the previous one raises, naming the version —
+    files written under it could not be read as one table. Delete
+    snapshots are skipped: they record the TOMBSTONE KEY schema, a
+    subset by design."""
     latest: StructType | None = None
-    # names retired by an alter DROP since the last rewrite: re-adding
-    # one would make the era read resurrect the retired column's OLD
-    # values from pre-drop files (name-based mapping has no field IDs
-    # to distinguish generations) — rejected until a compaction
-    # rewrites the live files without the column
-    retired: set[str] = set()
     for version, m in _log(path, as_of):
-        kind = m.get("kind", "append")
-        if kind == "delete":
+        if m.get("kind", "append") == "delete" or m.get("schema") is None:
             continue
-        if kind == "rewrite":
-            retired = set()  # the consolidated files carry no ghosts
-        sch = m.get("schema")
-        if sch is None:
-            continue
-        st = StructType.fromJson(sch)
-        if latest is not None:
-            prev = {f.name: f.dataType for f in latest.fields}
-            if kind == "alter":
-                # a RENAME/DROP/ADD commit: the recorded schema must
-                # be exactly the previous schema with the declared
-                # renames applied, the declared drops removed, and the
-                # declared adds appended (types unchanged otherwise) —
-                # the column-mapping evolution steps the plain
-                # add-only rule cannot express
-                ren = m.get("rename", {})
-                dropped = set(m.get("drop", []))
-                added = set(m.get("add", []))
-                expect = {
-                    ren.get(n, n): t
-                    for n, t in prev.items()
-                    if n not in dropped
-                }
-                cur = {f.name: f.dataType for f in st.fields}
-                for wcol, wtype in (m.get("widen") or {}).items():
-                    if wcol not in expect:
-                        raise ValueError(
-                            f"alter snapshot {version} widens "
-                            f"unknown column {wcol!r}"
-                        )
-                    pair = (expect[wcol].simpleString(), wtype)
-                    if pair not in _TYPE_WIDENINGS:
-                        raise ValueError(
-                            f"alter snapshot {version} changes "
-                            f"{wcol!r} from {pair[0]} to {pair[1]}, "
-                            "not a safe widening"
-                        )
-                    cur_t = cur.get(wcol)
-                    if cur_t is None or cur_t.simpleString() != wtype:
-                        raise ValueError(
-                            f"alter snapshot {version} declares "
-                            f"{wcol!r} widened to {wtype} but its "
-                            "schema disagrees"
-                        )
-                    expect[wcol] = cur_t
-                ghosts = retired & added
-                if ghosts:
-                    raise ValueError(
-                        f"alter snapshot {version} re-adds "
-                        f"{sorted(ghosts)}, dropped earlier by an "
-                        "alter — a name-based era read would "
-                        "resurrect the old values; compact before "
-                        "reusing a dropped name"
-                    )
-                if added - set(cur):
-                    raise ValueError(
-                        f"alter snapshot {version} declares adds "
-                        f"{sorted(added)} absent from its schema"
-                    )
-                if {
-                    n: t for n, t in cur.items() if n not in added
-                } != expect:
-                    raise ValueError(
-                        f"alter snapshot {version} declares renames "
-                        f"{ren} / drops {sorted(dropped)} / adds "
-                        f"{sorted(added)} but its schema does not "
-                        "match the previous schema with those changes "
-                        "applied"
-                    )
-                retired |= dropped
-                latest = st
-                continue
-            cur = {f.name: f.dataType for f in st.fields}
-            if not set(prev) <= set(cur):
-                raise ValueError(
-                    f"schema evolution at version {version} is not "
-                    f"add-only: dropped {sorted(set(prev) - set(cur))}"
-                )
-            ghosts = retired & (set(cur) - set(prev))
-            if ghosts:
-                raise ValueError(
-                    f"schema evolution at version {version} re-adds "
-                    f"{sorted(ghosts)}, dropped earlier by an alter — "
-                    "a name-based era read would resurrect the old "
-                    "values; compact before reusing a dropped name"
-                )
-            for name, pt in prev.items():
-                ct = cur[name]
-                if ct == pt:
-                    continue
-                pair = (pt.simpleString(), ct.simpleString())
-                if pair not in _TYPE_WIDENINGS:
-                    raise ValueError(
-                        f"schema evolution at version {version} "
-                        f"changes {name!r} from {pair[0]} to {pair[1]}"
-                        ", which is not a safe widening — old files "
-                        "could not be read under the new schema"
-                    )
+        st = StructType.fromJson(m["schema"])
+        if latest is not None and _columns(st) != _columns(latest):
+            raise ValueError(
+                f"schema at version {version} {_columns(st)} differs "
+                f"from the table schema {_columns(latest)}; a manifest "
+                "table keeps one schema"
+            )
         latest = st
     return latest
-
-
-def read_evolved(
-    spark: SparkSession, path: str, as_of: int | None = None
-) -> DataFrame:
-    """Read the committed table under schema evolution: the schema is
-    DISCOVERED from the manifest log (as of the requested version), and
-    files written before a column existed yield NULL for it — the JSON
-    reader backfills missing fields against the explicit schema, which
-    is exactly the Iceberg/Delta add-column read contract.
-
-    RENAMED tables (``kind='alter'`` commits in range) read by a
-    SEGMENTED FOLD: the log is replayed in commit order, the folded
-    state is kept in the naming of the segment being replayed (each
-    data manifest recorded the schema its files were written with),
-    and each alter commit applies its renames/drops TO THE STATE as a
-    metadata-only projection — Delta column-mapping semantics with the
-    manifest-recorded schema standing in for field IDs. Because every
-    delete/merge tombstone filters the state (``filter(~hit)``, see
-    :func:`_key_hit`) under the SAME names it was written with (the
-    names current at its sequence point), row-level operations
-    compose exactly with renames and drops in ANY interleaving —
-    delete-then-rename, rename-then-delete, and drop-then-rename-reuse
-    all fold to the correct rows (a rename is a column bijection, so
-    the per-segment fold is the
-    :func:`read_committed` fold expressed in each segment's own
-    coordinate system). Columns added after a file's write-era
-    null-backfill, so rename, drop, add-column, and type-widening
-    evolution all compose."""
-    sch = table_schema(path, as_of)
-    if sch is None:
-        raise ValueError(f"no recorded schema in manifest log at {path}")
-    log = _log(path, as_of)
-    if not _alters_since_last_rewrite(log):
-        # no live naming eras (never renamed, or compaction collapsed
-        # them): the ordinary committed read under the current schema
-        return read_committed(spark, path, sch, as_of=as_of)
-    from pyspark.sql import functions as _F
-
-    def conform(df: DataFrame, st: StructType) -> DataFrame:
-        """Project to exactly ``st``: present columns cast to the
-        (possibly widened) target type, absent ones null-backfill."""
-        have = set(df.columns)
-        return df.select(
-            *[
-                (
-                    _F.col(f.name).cast(f.dataType)
-                    if f.name in have
-                    else _F.lit(None).cast(f.dataType)
-                ).alias(f.name)
-                for f in st.fields
-            ]
-        )
-
-    def data_schema(m: dict, version: int) -> StructType:
-        if m.get("schema") is None:
-            raise ValueError(
-                f"manifest version {version} recorded no schema; its "
-                "files' write-era names are unknowable under a rename "
-                "— compact the table to collapse the eras"
-            )
-        return StructType.fromJson(m["schema"])
-
-    df: DataFrame | None = None  # state, in the segment's naming
-    pending: list = []  # buffered append files of this segment
-    seg: StructType | None = None  # latest write schema in segment
-
-    def flush(df: DataFrame | None) -> DataFrame | None:
-        if not pending:
-            return df
-        scan = _read_files(spark, path, seg, pending)
-        return scan if df is None else conform(df, seg).unionByName(scan)
-
-    for version, m in log:
-        kind = m.get("kind", "append")
-        if kind == "analyze":
-            continue  # NDV sketches: pure metadata, no rows change
-        if kind == "alter":
-            df, pending = flush(df), []
-            if df is not None:
-                ren = m.get("rename", {})
-                dropped = set(m.get("drop", []))
-                df = df.select(
-                    *[
-                        _F.col(c).alias(ren.get(c, c))
-                        for c in df.columns
-                        if c not in dropped
-                    ]
-                )
-            seg = data_schema(m, version)
-        elif kind == "rewrite":
-            seg = data_schema(m, version)
-            df, pending = None, list(m["files"])
-        elif kind == "append":
-            seg = data_schema(m, version)
-            pending += m["files"]
-        elif kind == "merge":
-            seg = data_schema(m, version)
-            df, pending = flush(df), []
-            if df is not None:
-                hit = _tombstone_hit(path, m, version)
-                df = conform(df, seg).filter(~hit)
-            pending += m["files"]
-        else:  # delete: key names are the segment's names
-            df, pending = flush(df), []
-            if df is None:
-                continue
-            df = conform(df, seg).filter(~_tombstone_hit(path, m, version))
-    df = flush(df)
-    if df is None:
-        return local_frame(spark, [], sch)
-    return conform(df, sch)
 
 
 def publish_branch(path: str, branch: str) -> list[int]:
@@ -4869,22 +3407,14 @@ def compact_snapshots(
             "bucket_by, cluster_by, and partition_by are mutually "
             "exclusive — a layout picks one clustering axis"
         )
-    if any(m.get("kind") == "alter" for _v, m in _log(path)):
-        # a renamed table compacts through the era-aware read, and the
-        # rewrite lands under the CURRENT names — eras collapse here,
-        # restoring every name-keyed metadata surface (stats, blooms,
-        # partitions, metadata aggregates) for the consolidated files
-        current = read_evolved(spark, path)
-        schema = current.schema
-    else:
+    if schema is None:
+        schema = table_schema(path)
         if schema is None:
-            schema = table_schema(path)
-            if schema is None:
-                raise ValueError(
-                    f"no recorded schema in manifest log at {path}; "
-                    "pass an explicit schema to compact"
-                )
-        current = read_committed(spark, path, schema)
+            raise ValueError(
+                f"no recorded schema in manifest log at {path}; "
+                "pass an explicit schema to compact"
+            )
+    current = read_committed(spark, path, schema)
     writer_opts: dict[str, str] = {}
     if partition_by is not None:
         fields = (
@@ -4937,16 +3467,9 @@ def _partial_rewrite_guards(log: list, what: str) -> None:
     only sound when nothing since the last full rewrite re-interprets
     them. Unmaterialized delete/merge tombstones would be RESURRECTED
     in retained files (tombstones stop applying at a rewrite), and a
-    column rename shifts the name-keyed stats the retained entries
-    carry. Both raise, naming the full-rewrite alternative."""
-    last_rw = -1
-    for i, (_v, m) in enumerate(log):
-        if m.get("kind", "append") == "rewrite":
-            last_rw = i
-    if any(
-        m.get("kind", "append") in ("delete", "merge")
-        for _v, m in log[last_rw + 1 :]
-    ):
+    partition-spec alter leaves retained files' ranges under the old
+    spec. Both raise, naming the full-rewrite alternative."""
+    if _tombstones_since_last_rewrite(log):
         raise ValueError(
             f"{what} over unmaterialized delete/merge "
             "snapshots would resurrect tombstoned rows in retained "
@@ -4954,20 +3477,13 @@ def _partial_rewrite_guards(log: list, what: str) -> None:
             "materialize them"
         )
     if any(
-        m.get("kind") == "alter"
-        and any(
-            k in m
-            for k in ("rename", "drop", "widen", "add", "partition_spec")
-        )
-        for _v, m in log[last_rw + 1 :]
+        m.get("kind") == "alter" and "partition_spec" in m
+        for _v, m in log[_last_rewrite_index(log) + 1 :]
     ):
-        # pure-metadata alters that move no names and change no file
-        # bytes (CHECK-constraint add/drop) are exempt — retained
-        # stats stay name-exact under them
         raise ValueError(
-            f"{what} cannot cross a column rename (the "
-            "scoped read and retained stats are name-keyed); run a "
-            "full compact_snapshots() first to collapse the eras"
+            f"{what} cannot cross a partition-spec alter (retained "
+            "files carry the old spec's ranges); run a full "
+            "compact_snapshots() first to re-partition them"
         )
 
 
@@ -5056,7 +3572,7 @@ def replace_where(
     middle a DELETE+INSERT pair exposes (and a crash between the pair
     can strand permanently).
 
-    Delta's constraint travels too: every row of ``df`` must satisfy
+    Delta's rule travels too: every row of ``df`` must satisfy
     the predicate — a violation RAISES before anything commits
     (silently widening the replaced range is how backfills corrupt
     neighboring partitions).
@@ -5068,9 +3584,10 @@ def replace_where(
     (stats, row counts, nulls, partition ranges — :func:`_retain_entries`),
     byte-identical on disk. Replacing one day of a 100-TB,
     day-partitioned fact costs I/O proportional to that day, and the
-    enforcement pass scans only ``df``. Unmaterialized delete/merge
-    tombstones or a pending rename reject with the full-rewrite
-    alternative named (same contract as :func:`compact_range`).
+    range check scans only ``df``. Unmaterialized delete/merge
+    tombstones or a pending partition-spec alter reject with the
+    full-rewrite alternative named (same contract as
+    :func:`compact_range`).
 
     Returns {"version", "n_replaced_files", "n_retained", "n_new",
     "n_insert_rows"}.
@@ -5084,27 +3601,21 @@ def replace_where(
     log = _log(path)
     _partial_rewrite_guards(log, "replace_where")
     # NULL-safe on both sides: a NULL key cannot satisfy the range, so
-    # it is a constraint violation in df — and in the keep-filter
-    # below a NULL-key row is KEPT (it provably isn't being replaced);
-    # a bare ~between would silently drop it. The range check, the
-    # CHECK constraints, and the caller-reported insert-row count all
-    # ride ONE aggregation pass over df (guide §1.2).
-    probe = enforce_constraints(
-        spark,
-        path,
-        df,
-        "INSERT OVERWRITE",
-        extra={
-            "__rw_bad": F.sum(
-                F.when(
-                    F.col(col).isNull()
-                    | ~F.col(col).between(F.lit(lo), F.lit(hi)),
-                    1,
-                ).otherwise(0)
-            ),
-            "__rw_n": F.count(F.lit(1)),
-        },
-    )
+    # it is a range violation in df — and in the keep-filter below a
+    # NULL-key row is KEPT (it provably isn't being replaced); a bare
+    # ~between would silently drop it. The range check and the
+    # caller-reported insert-row count ride ONE aggregation pass over
+    # df (guide §1.2).
+    probe = df.agg(
+        F.sum(
+            F.when(
+                F.col(col).isNull()
+                | ~F.col(col).between(F.lit(lo), F.lit(hi)),
+                1,
+            ).otherwise(0)
+        ).alias("__rw_bad"),
+        F.count(F.lit(1)).alias("__rw_n"),
+    ).collect()[0]
     bad = int(probe["__rw_bad"] or 0)
     if bad:
         raise ValueError(
@@ -5159,14 +3670,13 @@ def overwrite_table(
     ``mode("overwrite")`` / the reference's BigQuery WRITE_TRUNCATE,
     bigquery_update_scheduler.py:247-260, made snapshot-isolated).
     Unlike a scoped replace, a full rewrite needs NO guards: it
-    materializes every pending tombstone and collapses alter eras by
-    construction, because nothing is retained. Every earlier version
-    stays time-travelable from the untouched old files until vacuum.
-    The table's declared hidden-partitioning spec survives: new files
-    are range-clustered on the spec's source columns and their
-    transform ranges recorded, so pruning keeps working after the
-    swap. Returns the new snapshot version."""
-    enforce_constraints(spark, path, df, "INSERT OVERWRITE")
+    materializes every pending tombstone by construction, because
+    nothing is retained. Every earlier version stays time-travelable
+    from the untouched old files until vacuum. The table's declared
+    hidden-partitioning spec survives: new files are range-clustered
+    on the spec's source columns and their transform ranges recorded,
+    so pruning keeps working after the swap. Returns the new snapshot
+    version."""
     spec = current_partition_spec(path)
     out = df
     if spec:
@@ -5181,188 +3691,6 @@ def overwrite_table(
     with _tight_range_boundaries(spark):
         save_manifest(out, path, **opts)
     return _committed_entry_of(path, token)[0]
-
-
-def analyze_table(
-    spark: SparkSession,
-    path: str,
-    cols: list[str],
-    k: int = 256,
-) -> dict:
-    """``ANALYZE TABLE`` — record a PER-FILE KMV distinct-value sketch
-    for each named column as a metadata-only ``kind='analyze'`` commit
-    (Iceberg's puffin NDV blobs / Delta's column stats, folded into
-    the manifest log). The sketch is the ``k`` smallest ``xxhash64``
-    values of the column's distinct non-null values in that file; a
-    file with fewer than ``k`` distinct values stores them ALL and is
-    marked complete (the sketch IS the distinct-hash set, so merges
-    of complete sketches count exactly).
-
-    INCREMENTAL by construction: files that already carry a sketch
-    for a column (at this ``k``) are skipped, so the steady-state cost
-    of keeping a 100-TB table analyzed is one pass over each NEW
-    commit's files — and the whole computation is JVM-side
-    (xxhash64 + distinct + per-file top-k window: one shuffle of
-    8-byte hashes, never values).
-
-    Rewrites invalidate naturally: sketches key on file NAMES, a
-    compaction's new files simply have none until the next analyze.
-    Returns {"version", "n_files_analyzed", "n_sketches"} (version is
-    the current head when nothing needed analyzing — no empty commit).
-
-    Reference analogue: the reference has no statistics surface at
-    all; its BigQuery tables re-scan for every COUNT(DISTINCT)
-    (bigquery_update_scheduler.py:255-260)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    sch = table_schema(path)
-    if sch is None:
-        raise ValueError(f"table at {path} records no schema")
-    have = {f.name for f in sch.fields}
-    missing = [c for c in cols if c not in have]
-    if missing:
-        raise ValueError(f"analyze_table: unknown columns {missing}")
-    live = [name for name, _ in _committed_files(path)]
-    existing = _ndv_sketches(path)
-    todo: dict[str, list[str]] = {}
-    for c in cols:
-        for f in live:
-            s = existing.get((f, c))
-            if s is None or s["k"] != k:
-                todo.setdefault(f, []).append(c)
-    head = max(committed_versions(path), default=0)
-    if not todo:
-        return {"version": head, "n_files_analyzed": 0, "n_sketches": 0}
-    base_map = {os.path.basename(n): n for n in todo}
-    payload: dict[str, dict] = {}
-    n_sketches = 0
-    for c in cols:
-        cfiles = [f for f in sorted(todo) if c in todo[f]]
-        if not cfiles:
-            continue
-        fld = next(f for f in sch.fields if f.name == c)
-        scan = _read_files(spark, path, StructType([fld]), cfiles)
-        d = (
-            scan.where(F.col(c).isNotNull())
-            .select(
-                F.input_file_name().alias("f"),
-                F.xxhash64(F.col(c)).alias("h"),
-            )
-            .distinct()
-        )
-        w = Window.partitionBy("f").orderBy("h")
-        topk = (
-            d.withColumn("r", F.row_number().over(w))
-            .where(F.col("r") <= k)
-            .groupBy("f")
-            .agg(
-                F.sort_array(F.collect_list("h")).alias("hs"),
-                F.max("r").alias("n"),
-            )
-        )
-        seen = set()
-        for row in topk.collect():
-            fname = base_map[os.path.basename(row.f)]
-            payload.setdefault(fname, {})[c] = {
-                "h": [int(x) for x in row.hs],
-                # n == k is treated as truncated even when the file
-                # held exactly k distinct values — the estimator is
-                # then merely approximate, never wrong-exact
-                "complete": int(row.n) < k,
-            }
-            seen.add(fname)
-            n_sketches += 1
-        for f in cfiles:
-            if f not in seen:  # all-NULL or empty file: zero distinct
-                payload.setdefault(f, {})[c] = {"h": [], "complete": True}
-                n_sketches += 1
-    v = _commit_manifest_dict(
-        path,
-        {"kind": "analyze", "files": [], "ndv": payload, "ndv_k": k},
-    )
-    return {
-        "version": v,
-        "n_files_analyzed": len(todo),
-        "n_sketches": n_sketches,
-    }
-
-
-def _ndv_sketches(
-    path: str, as_of: int | None = None
-) -> dict[tuple, dict]:
-    """Latest recorded sketch per (file, column) — a pure fold of the
-    analyze commits in the log (later analyzes override earlier)."""
-    out: dict[tuple, dict] = {}
-    for _v, m in _log(path, as_of):
-        if m.get("kind") != "analyze":
-            continue
-        kk = int(m.get("ndv_k", 0))
-        for f, cmap in m.get("ndv", {}).items():
-            for c, sk in cmap.items():
-                out[(f, c)] = {
-                    "h": sk["h"],
-                    "complete": bool(sk["complete"]),
-                    "k": kk,
-                }
-    return out
-
-
-def table_ndv(
-    path: str, col: str, as_of: int | None = None
-) -> dict:
-    """DISTINCT-VALUE COUNT from metadata alone — zero data files
-    opened: merge the live files' KMV sketches (union of hash sets;
-    KMV closure: the union's k smallest hashes are the table's k
-    smallest, so per-file sketches merge losslessly). When every live
-    file's sketch is COMPLETE the merged count is exact (modulo
-    64-bit hash collisions — vanishing below billions of distincts);
-    otherwise the classic KMV estimator (k-1)/U(k) over the merged
-    k-minimum.
-
-    STRICT like :func:`metadata_aggregate`: unmaterialized
-    delete/merge tombstones make every per-file sketch an overcount
-    (raises — OPTIMIZE first), and live files missing a sketch for
-    ``col`` raise naming :func:`analyze_table` (a silent partial
-    answer would undercount). A rename retires sketches with the old
-    name — re-analyze under the new one.
-
-    Returns {"ndv", "exact", "n_files"}."""
-    log = _log(path, as_of)
-    if _tombstones_since_last_rewrite(log):
-        raise ValueError(
-            "table_ndv: unmaterialized delete/merge tombstones make "
-            "file sketches an overcount; run compact_snapshots() / "
-            "OPTIMIZE first to materialize them"
-        )
-    live = [n for n, _ in _committed_files(path, as_of)]
-    if not live:
-        return {"ndv": 0, "exact": True, "n_files": 0}
-    sk = _ndv_sketches(path, as_of)
-    missing = [f for f in live if (f, col) not in sk]
-    if missing:
-        raise ValueError(
-            f"table_ndv: {len(missing)} live files carry no NDV "
-            f"sketch for {col!r}; run analyze_table(spark, path, "
-            f"[{col!r}]) to (incrementally) cover them"
-        )
-    union: set[int] = set()
-    complete = True
-    kmin: int | None = None
-    for f in live:
-        s = sk[(f, col)]
-        union.update(s["h"])
-        complete = complete and s["complete"]
-        kmin = s["k"] if kmin is None else min(kmin, s["k"])
-    if complete:
-        return {"ndv": len(union), "exact": True, "n_files": len(live)}
-    hs = sorted(union)[:kmin]
-    u = (hs[-1] + 2**63 + 1) / 2.0**64
-    return {
-        "ndv": int(round((kmin - 1) / u)),
-        "exact": False,
-        "n_files": len(live),
-    }
 
 
 def compact_range(
@@ -5503,7 +3831,6 @@ def write_partitioned(
                 "transforms=[...], or declare one with "
                 "set_partition_spec first"
             )
-    enforce_constraints(spark, path, df, "write_partitioned")
     token = uuid.uuid4().hex
     pt_cols = [f"_pt{i}" for i in range(len(specs))]
     out = df.select(
@@ -5564,15 +3891,8 @@ def read_changes(
         if version <= from_v or version > to_v:
             continue
         kind = m.get("kind", "append")
-        if kind == "analyze":
-            continue  # NDV sketches: pure metadata, no row changes
         if kind == "alter":
-            raise ValueError(
-                f"row-level CDF ({from_v}, {to_v}] crosses the rename "
-                f"snapshot {version}; earlier versions' files carry "
-                "the pre-rename column names — consume the feed before "
-                "renaming, or restart it at the rename"
-            )
+            continue  # a partition-spec alter changes no rows
         if kind == "rewrite":
             raise ValueError(
                 f"row-level CDF ({from_v}, {to_v}] crosses the rewrite "
@@ -5731,7 +4051,7 @@ def save_manifest(df: DataFrame, path: str, **options) -> dict:
     """Fast-path manifest commit: byte-identical write semantics to
     ``df.write.format(ensure_manifest_sink(spark)).options(...).save()``
     — the same :class:`ManifestWriter` runs in each task (one staging
-    file per partition, same zone maps/blooms/transform ranges), and
+    file per partition, same zone maps/transform ranges), and
     the same driver-side :meth:`ManifestWriter.commit` claims the next
     version — minus the Python-DataSource write protocol's
     per-statement planner round-trips (datasource lookup + writer
@@ -5742,7 +4062,7 @@ def save_manifest(df: DataFrame, path: str, **options) -> dict:
     them.
 
     ``options`` take the exact option names/values of the DataSource
-    API (``kind``, ``merge_keys``, ``bloom_col``, ``branch``, ...).
+    API (``kind``, ``merge_keys``, ``branch``, ...).
 
     Failure semantics: a failed job leaves unreferenced staging files
     (the DataSource path's best-effort ``abort`` cleanup does not run);

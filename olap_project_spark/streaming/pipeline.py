@@ -141,8 +141,11 @@ def write_kafka_stream(
 def _sink_task(out_dir: str, sink_format: str, schema, name: str):
     """The ``mapInArrow`` function that writes one partition of a routed
     micro-batch to all four sinks, as ``part-<name>-<partition id>``
-    files moved into place from hidden names, and yields its row count
-    per sink."""
+    files moved into place from hidden ``.part-….tmp`` names, and yields
+    its row count per sink. A write that raises removes its hidden file
+    before re-raising; a worker killed mid-write can still leave one
+    behind, which every reader skips (Spark ignores names that start
+    with a dot)."""
     day_csv = "_csv" if sink_format == "csv" else None
     # sink -> (columns, CSV line column or None for parquet, partitioned)
     layouts = {
@@ -165,16 +168,21 @@ def _sink_task(out_dir: str, sink_format: str, schema, name: str):
         def put(directory, rows, cols, csv_col):
             os.makedirs(directory, exist_ok=True)
             tmp = os.path.join(directory, f".{part}.{ctx.attemptNumber()}.tmp")
-            if csv_col is None:
-                pq.write_table(
-                    rows.select(cols), tmp, compression="snappy", store_schema=False
-                )
-            else:
-                with open(tmp, "w", encoding="utf-8") as f:
-                    for line in [",".join(cols), *rows[csv_col].to_pylist()]:
-                        f.write(f"{line}\n")
             ext = "snappy.parquet" if csv_col is None else "csv"
-            os.replace(tmp, os.path.join(directory, f"{part}.{ext}"))
+            try:
+                if csv_col is None:
+                    pq.write_table(
+                        rows.select(cols), tmp, compression="snappy", store_schema=False
+                    )
+                else:
+                    with open(tmp, "w", encoding="utf-8") as f:
+                        for line in [",".join(cols), *rows[csv_col].to_pylist()]:
+                            f.write(f"{line}\n")
+                os.replace(tmp, os.path.join(directory, f"{part}.{ext}"))
+            except BaseException:
+                if os.path.exists(tmp):
+                    os.remove(tmp)
+                raise
 
         for sink, (cols, csv_col, partitioned) in layouts.items():
             rows = table.filter(table[f"_{sink}"])

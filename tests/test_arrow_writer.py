@@ -2,8 +2,8 @@
 ``ManifestWriter`` is a ``DataSourceArrowWriter`` — write tasks consume
 Arrow record batches straight from the JVM instead of pickled Rows —
 and every manifest artifact the old row path produced (zone maps, null
-counts, value/token blooms, hidden-partition ranges, tuple histograms)
-is preserved bit-for-bit in meaning."""
+counts, hidden-partition ranges, tuple histograms) is preserved
+bit-for-bit in meaning."""
 
 from __future__ import annotations
 
@@ -39,7 +39,7 @@ def test_mixed_type_write_round_trips_with_exact_metadata(
     registered, tmp_path
 ):
     """One write through the Arrow path carrying every tracker at once:
-    ints (zone map + bloom), strings (zone map + token bloom), a
+    ints (zone map), strings (zone map), a
     nullable column (null counts + zone-map disable), timestamps
     (epoch-exact through the tz cast), and a bucket(4) hidden
     partition transform (ranges + tuple histogram). The staged parquet
@@ -61,8 +61,6 @@ def test_mixed_type_write_round_trips_with_exact_metadata(
         .coalesce(1)
         .write.format("manifest_sink")
         .option("path", path)
-        .option("bloom_col", "k")
-        .option("token_bloom_col", "txt")
         .option(
             "partition_transform",
             json.dumps({"kind": "bucket", "arg": 4, "col": "k"}),
@@ -84,10 +82,6 @@ def test_mixed_type_write_round_trips_with_exact_metadata(
     # exact per-column null counts survive the batch path
     assert m["file_nulls"][fname]["maybe"] == 200 // 5
     assert m["file_nulls"][fname]["k"] == 0
-    # value bloom + token bloom recorded
-    assert m["bloom_col"] == "k" and m["file_blooms"][fname]
-    assert m["token_bloom_col"] == "txt"
-    assert m["file_token_blooms"][fname]
     # hidden-partition range + exact tuple histogram (4 buckets, 200 rows)
     assert fname in m["file_partitions"]
     hist = dict(

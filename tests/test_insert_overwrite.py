@@ -21,8 +21,8 @@ from olap_project_spark.export.manifest_sink import (
     overwrite_table,
     plan_pruned_files,
     read_committed,
-    rename_column,
     replace_where,
+    set_partition_spec,
     table_files,
     write_partitioned,
 )
@@ -129,10 +129,10 @@ class TestReplaceWhere:
         with pytest.raises(ValueError, match="compact_snapshots"):
             replace_where(spark, tbl, SCH, "k", 100, 199, repl)
 
-    def test_rejects_pending_rename(self, spark, tbl):
-        rename_column(tbl, "cents", "pennies")
+    def test_rejects_pending_spec_alter(self, spark, tbl):
+        set_partition_spec(tbl, ("k", "truncate", 100))
         repl = spark.createDataFrame([(100, 0)], SCH)
-        with pytest.raises(ValueError, match="rename"):
+        with pytest.raises(ValueError, match="partition-spec alter"):
             replace_where(spark, tbl, SCH, "k", 100, 199, repl)
 
     def test_preserves_hidden_partitioning(self, spark, tmp_path):

@@ -144,8 +144,8 @@ def test_external_file_mutation_invalidates(registered, tmp_path):
     _write(spark, path, [(1, "a")])
     clear_log_cache()
     assert len(_log(path)) == 1
-    # hand-crafted external commit: version 2, no files (metadata-only)
-    m = {"kind": "alter", "add": ["w"], "n_rows": 0, "files": []}
+    # hand-crafted external commit: version 2, no files
+    m = {"kind": "append", "n_rows": 0, "files": []}
     final = os.path.join(path, "_manifest-000002.json")
     tmp = os.path.join(path, "._ext.tmp")
     with open(tmp, "w") as f:

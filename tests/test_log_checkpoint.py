@@ -23,7 +23,6 @@ from olap_project_spark.export.manifest_sink import (
     metadata_aggregate,
     publish_branch,
     read_committed,
-    read_evolved,
     restore_table,
     table_schema,
     vacuum_snapshots,
@@ -258,23 +257,23 @@ class TestCheckpointSemantics:
         assert _state(registered, path) == before
 
     def test_era_reads_through_the_cache(self, registered, tmp_path):
-        from olap_project_spark.export.manifest_sink import rename_column
-
         path = str(tmp_path / "t")
         _write(registered, path, [(1, "a")])
-        rename_column(path, "v", "label")
+        _write(registered, path, [(2, "b")])
         checkpoint_log(path)
-        rows = [
-            (r.k, r.label)
-            for r in read_evolved(registered, path).collect()
-        ]
-        assert rows == [(1, "a")]
-        agg = metadata_aggregate(path, minmax_cols=["label"])
-        assert agg["cols"]["label"] == {
+        rows = sorted(
+            (r.k, r.v)
+            for r in read_committed(
+                registered, path, table_schema(path)
+            ).collect()
+        )
+        assert rows == [(1, "a"), (2, "b")]
+        agg = metadata_aggregate(path, minmax_cols=["v"])
+        assert agg["cols"]["v"] == {
             "nulls": 0,
-            "non_null": 1,
+            "non_null": 2,
             "min": "a",
-            "max": "a",
+            "max": "b",
         }
 
 

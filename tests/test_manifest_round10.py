@@ -787,95 +787,6 @@ class TestCompactionPolicyAdvisor:
         )
 
 
-class TestTypeWidening:
-    def test_widening_reads_old_files_under_new_schema(
-        self, registered, tmp_path
-    ):
-        from olap_project_spark.export.manifest_sink import (
-            read_evolved,
-            table_schema,
-        )
-
-        path = str(tmp_path / "widen")
-        (
-            registered.range(0, 5)
-            .selectExpr("cast(id as int) as a", "cast(id as float) as b")
-            .repartition(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
-        )
-        (
-            registered.range(5, 10)
-            .selectExpr("cast(id as bigint) as a", "cast(id as double) as b")
-            .repartition(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
-        )
-        assert table_schema(path).simpleString() == "struct<a:bigint,b:double>"
-        got = read_evolved(registered, path)
-        assert got.count() == 10
-        assert got.agg({"a": "sum"}).collect()[0][0] == 45
-        # time travel reads v1 under ITS OWN (narrow) schema
-        assert (
-            table_schema(path, as_of=1).simpleString()
-            == "struct<a:int,b:float>"
-        )
-
-    def test_narrowing_rejected(self, registered, tmp_path):
-        from olap_project_spark.export.manifest_sink import table_schema
-
-        path = str(tmp_path / "narrow")
-        (
-            registered.range(0, 5)
-            .selectExpr("cast(id as bigint) as a")
-            .repartition(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
-        )
-        (
-            registered.range(5, 10)
-            .selectExpr("cast(id as int) as a")
-            .repartition(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
-        )
-        with pytest.raises(ValueError, match="not a safe widening"):
-            table_schema(path)
-
-    def test_incompatible_type_change_rejected(self, registered, tmp_path):
-        from olap_project_spark.export.manifest_sink import table_schema
-
-        path = str(tmp_path / "strswap")
-        (
-            registered.range(0, 3)
-            .selectExpr("cast(id as int) as a")
-            .repartition(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
-        )
-        (
-            registered.range(3, 6)
-            .selectExpr("cast(id as string) as a")
-            .repartition(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
-        )
-        with pytest.raises(ValueError, match="not a safe widening"):
-            table_schema(path)
-
-
 class TestSnapshotTags:
     def test_tag_resolves_forever_and_is_immutable(
         self, registered, tmp_path
@@ -908,7 +819,7 @@ class TestSnapshotTags:
 
 class TestNestedTypes:
     def test_array_and_struct_columns_round_trip(self, registered, tmp_path):
-        from olap_project_spark.export.manifest_sink import read_evolved
+        from olap_project_spark.export.manifest_sink import table_schema
 
         path = str(tmp_path / "nested")
         df = registered.range(5).selectExpr(
@@ -921,7 +832,7 @@ class TestNestedTypes:
         ).mode("append").save()
         # schema DISCOVERY round-trips the nested types (nullability
         # normalizes to nullable on read, as in every table format)
-        back = read_evolved(registered, path)
+        back = read_committed(registered, path, table_schema(path))
         assert back.schema.simpleString() == df.schema.simpleString()
         rows = back.orderBy("k").collect()
         assert rows[2]["s"]["b"] == "2" and list(rows[2]["arr"]) == [2.0, 3.0]
@@ -1211,49 +1122,6 @@ class TestReviewFixes:
             vacuum_snapshots(registered_path, keep_from=3)
         got = read_committed(registered, path, SCHEMA)
         assert sorted(r["k"] for r in got.collect()) == [1, 2]
-
-    def test_stream_backfills_pre_evolution_files(self, registered, tmp_path):
-        """A fresh tail over a schema-evolved table must null-backfill
-        the added column for files written before it existed — the
-        same add-only contract the batch path honors."""
-        fmt = ensure_manifest_sink(registered)
-        path = str(tmp_path / "fix_evo")
-        (
-            registered.createDataFrame([(1, "a")], SCHEMA)
-            .repartition(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
-        )
-        (
-            registered.createDataFrame(
-                [(2, "b", 7)], "k bigint, v string, extra int"
-            )
-            .repartition(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
-        )
-        got: list[tuple] = []
-
-        def sink(df, epoch):
-            got.extend(
-                (r["k"], r["v"], r["extra"]) for r in df.collect()
-            )
-
-        q = (
-            registered.readStream.format(fmt)
-            .option("path", path)
-            .load()
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", str(tmp_path / "fix_evo_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        assert sorted(got) == [(1, "a", None), (2, "b", 7)]
 
     def test_stream_head_holds_below_fileless_claim(
         self, registered, tmp_path

@@ -309,43 +309,12 @@ def test_vacuum_preserves_committed_state(registered, spark, tmp_path, ops):
 
 
 class TestSchemaEvolution:
-    def test_add_column_null_backfill_and_versioned_schema(
-        self, registered, tmp_path
-    ):
-        from olap_project_spark.export.manifest_sink import (
-            read_evolved,
-            table_schema,
-        )
-
-        path = str(tmp_path / "evo")
-        _write(registered, path, [(1, "a"), (2, "b")])
-        (
-            registered.createDataFrame(
-                [(3, "c", 30)], "k bigint, v string, extra int"
-            )
-            .coalesce(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
-        )
-        # schema discovery: v1 is the old 2-column schema, latest has 3
-        assert [f.name for f in table_schema(path, as_of=1).fields] == ["k", "v"]
-        assert "extra" in [f.name for f in table_schema(path).fields]
-        # time travel reads the OLD schema
-        v1 = read_evolved(registered, path, as_of=1)
-        assert v1.columns == ["k", "v"] and v1.count() == 2
-        # latest read null-backfills the added column for old files
-        latest = read_evolved(registered, path).collect()
-        got = {r["k"]: r["extra"] for r in latest}
-        assert got == {1: None, 2: None, 3: 30}
-
     def test_non_additive_evolution_rejected(self, registered, tmp_path):
         from olap_project_spark.export.manifest_sink import table_schema
 
         path = str(tmp_path / "evo_bad")
         _write(registered, path, [(1, "a")])
-        # a write that DROPS column v (rename/delete) must be caught
+        # a write that DROPS column v must be caught, naming its version
         (
             registered.createDataFrame([(2,)], "k bigint")
             .coalesce(1)
@@ -354,7 +323,39 @@ class TestSchemaEvolution:
             .mode("append")
             .save()
         )
-        with pytest.raises(ValueError, match="not\\s+add-only"):
+        with pytest.raises(ValueError, match="version 2 .* differs"):
+            table_schema(path)
+        # as of the first version the table still has its one schema
+        assert table_schema(path, as_of=1).simpleString() == (
+            "struct<k:bigint,v:string>"
+        )
+
+    @pytest.mark.parametrize(
+        "entry, key",
+        [
+            ({"kind": "alter", "rename": {"v": "label"}}, "rename"),
+            ({"kind": "analyze", "ndv": {}}, "analyze"),
+        ],
+        ids=["rename", "analyze"],
+    )
+    def test_retired_log_entries_rejected(
+        self, registered, tmp_path, entry, key
+    ):
+        """A log entry written by a retired table verb (here a column
+        rename and a distinct-value sketch) is refused by every fold,
+        naming its version and key — a read past the rename would
+        return the renamed column as nulls."""
+        from olap_project_spark.export.manifest_sink import table_schema
+
+        path = str(tmp_path / "retired")
+        _write(registered, path, [(1, "a")])
+        m = {**entry, "files": [], "version": 2}
+        with open(os.path.join(path, "_manifest-000002.json"), "w") as f:
+            json.dump(m, f)
+        want = f"version 2 .*'{key}'"
+        with pytest.raises(ValueError, match=want):
+            read_committed(registered, path, SCHEMA)
+        with pytest.raises(ValueError, match=want):
             table_schema(path)
 
     def test_schemaless_legacy_manifests_tolerated(
@@ -798,68 +799,6 @@ class TestWriteAuditPublish:
             publish_branch(path, "b")
         # main unaffected by the failed publish
         assert read_committed(registered, path, SCHEMA).count() == 2
-
-
-class TestBloomSkipping:
-    def test_bloom_prunes_absent_keeps_present(self, registered, tmp_path):
-        """Opt-in per-file blooms: a present value's file is never
-        skipped (no false negatives); an absent value inside the range
-        — which zone maps cannot exclude — skips almost everything."""
-        from olap_project_spark.export.manifest_sink import (
-            plan_bloom_pruned_files,
-            plan_pruned_files,
-        )
-
-        path = str(tmp_path / "bloomwh")
-        (
-            registered.createDataFrame(
-                [(i, f"v{i}") for i in range(0, 400, 2)], SCHEMA
-            )
-            .repartition(4)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .option("bloom_col", "k")
-            .mode("append")
-            .save()
-        )
-        # present (even) probes: bloom keeps at least the true file,
-        # and reading only bloom-kept files finds the row
-        from olap_project_spark.export.manifest_sink import _read_files
-
-        for v in (0, 100, 398):
-            files, total = plan_bloom_pruned_files(path, "k", v)
-            assert total == 4
-            got = (
-                _read_files(registered, path, SCHEMA, files)
-                .filter(f"k = {v}")
-                .count()
-            )
-            assert got == 1, v
-        # absent (odd) probes: inside [0, 398], zone maps keep all
-        # hash-distributed files; bloom keeps almost none
-        bloom_kept = zone_kept = 0
-        for v in (1, 101, 399):
-            bfiles, _ = plan_bloom_pruned_files(path, "k", v)
-            zfiles, _ = plan_pruned_files(path, "k", v, v)
-            bloom_kept += len(bfiles)
-            zone_kept += len(zfiles)
-        # zone maps prune little for in-range probes (file [min,max]
-        # on 100 hash-distributed evens mostly spans the probes);
-        # blooms exclude them almost entirely
-        assert bloom_kept < zone_kept
-        assert bloom_kept <= 2
-
-    def test_files_without_bloom_conservatively_kept(
-        self, registered, tmp_path
-    ):
-        from olap_project_spark.export.manifest_sink import (
-            plan_bloom_pruned_files,
-        )
-
-        path = str(tmp_path / "bloomwh2")
-        _write(registered, path, [(1, "a")])  # no bloom_col option
-        files, total = plan_bloom_pruned_files(path, "k", 999)
-        assert len(files) == total  # never skip un-bloomed files
 
 
 # ---------------------------------------------------------------------------

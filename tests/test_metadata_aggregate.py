@@ -1,7 +1,7 @@
 """Metadata-only aggregates over the manifest table: COUNT(*)/MIN/MAX/
 null counts answered from the log with zero data files opened, the
-strict exactness contract, schema-evolution null-backfill accounting,
-and survival through partial compaction."""
+strict exactness contract, and survival through partial and full
+compaction."""
 
 from __future__ import annotations
 
@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from olap_project_spark.export.manifest_sink import (
     ManifestSinkDataSource,
     compact_range,
+    compact_snapshots,
     delete_where,
     metadata_aggregate,
 )
@@ -80,19 +81,6 @@ class TestExactness:
         after = metadata_aggregate(path, cols=["nv"], minmax_cols=["k"])
         assert after == before
 
-    def test_added_column_counts_as_null_backfill(
-        self, registered, frame, tmp_path
-    ):
-        path = str(tmp_path / "t")
-        _write(frame.select("k", "name"), path)  # pre-evolution
-        wide = frame.select("k", "name", F.lit(7).alias("extra"))
-        _write(wide.filter("k < 10"), path, n_parts=1)
-        agg = metadata_aggregate(path, cols=["extra"])
-        # old files' rows are all-null for the added column — exactly
-        # what the null-backfill read produces
-        assert agg["cols"]["extra"] == {"nulls": 1000, "non_null": 10}
-
-
 class TestStrictness:
     def test_rejects_minmax_on_null_bearing_column(
         self, registered, frame, tmp_path
@@ -113,3 +101,27 @@ class TestStrictness:
         )
         with pytest.raises(ValueError, match="tombstones"):
             metadata_aggregate(path)
+
+    def test_materialized_tombstones_dont_block(
+        self, registered, frame, tmp_path
+    ):
+        """delete → compact: the old delete manifest persists below the
+        rewrite but is already materialized, so it must not block."""
+        path = str(tmp_path / "t")
+        _write(frame.filter("k < 2"), path, n_parts=1)
+        delete_where(
+            registered, path, registered.createDataFrame([(1,)], "k int")
+        )
+        compact_snapshots(registered, path, None)
+        assert metadata_aggregate(path, cols=["k"])["n_rows"] == 1
+        compact_snapshots(registered, path, None)
+        assert metadata_aggregate(path, cols=["k"])["n_rows"] == 1
+
+    def test_rejects_unknown_column(self, registered, frame, tmp_path):
+        """A typo must never read as an all-null column."""
+        path = str(tmp_path / "t")
+        _write(frame.filter("k < 2"), path, n_parts=1)
+        with pytest.raises(ValueError, match="unknown column"):
+            metadata_aggregate(path, cols=["nam"])
+        with pytest.raises(ValueError, match="unknown column"):
+            metadata_aggregate(path, minmax_cols=["kk"])

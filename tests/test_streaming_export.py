@@ -271,6 +271,52 @@ class TestIngestPipeline:
             want["invalid"].select("User", "invalid_reason")
         )
 
+    @pytest.mark.parametrize("fault", ["write", "replace"])
+    def test_failed_sink_write_leaves_no_hidden_file(
+        self, tmp_path, monkeypatch, fault
+    ):
+        """A sink write that raises midway (a full disk while writing
+        the hidden file, or a failed move into place) re-raises and
+        leaves no ``.tmp`` file under any sink. The task runs in this
+        process: an empty partition 0 still writes the error sink."""
+        import pyarrow as pa
+        import pyspark
+
+        from olap_project_spark.streaming.pipeline import _sink_task
+
+        class Ctx:
+            def partitionId(self):
+                return 0
+
+            def attemptNumber(self):
+                return 0
+
+        monkeypatch.setattr(pyspark.TaskContext, "get", staticmethod(Ctx))
+
+        def boom(*_args, **_kwargs):
+            raise OSError("injected sink fault")
+
+        if fault == "write":
+
+            def partial_write(_table, where, **_kwargs):
+                with open(where, "wb") as f:
+                    f.write(b"PAR1")
+                boom()
+
+            monkeypatch.setattr(pq, "write_table", partial_write)
+        else:
+            monkeypatch.setattr(os, "replace", boom)
+        names = dict.fromkeys([*OUTPUT_COLUMNS, *INVALID_LOG_COLUMNS, "_log"])
+        schema = pa.schema(
+            [(c, pa.string()) for c in names]
+            + [(f"_{s}", pa.bool_()) for s in ("valid", "fraud", "error", "invalid")]
+        )
+        task = _sink_task(str(tmp_path), "parquet", schema, "q-0")
+        with pytest.raises(OSError, match="injected sink fault"):
+            list(task(iter([])))
+        left = [f for _d, _s, fs in os.walk(tmp_path) for f in fs if f.endswith(".tmp")]
+        assert os.path.isdir(tmp_path / "error") and left == []
+
 
 def _rows(df):
     return sorted((tuple(r) for r in df.collect()), key=repr)
