@@ -5,9 +5,9 @@ movement replaces:
 
 - cron ``0 23 * * *`` (daily 23:00), ``catchup=False``
 - ``retries=2`` with ``retry_delay=5 minutes``
-- task order read → upload (here: one Spark action, so the "order" is
-  the export function itself). ``export_partition`` appends, so a retry
-  after a late failure appends the day again.
+- task order read → upload (here: the export function itself, which
+  replaces the day's warehouse file, so a retry after a late failure
+  writes the day once again, not twice).
 
 This module is deliberately engine-side and dependency-free: a real
 deployment can hand ``ExportPolicy``/``run_with_retries`` to any
@@ -129,10 +129,8 @@ class RunReport:
 
 def due_runs(policy: ExportPolicy, last_run: datetime | None, now: datetime) -> list[datetime]:
     """Fire times in (last_run, now]. With ``catchup=False`` (the
-    reference's setting) only the MOST RECENT missed window runs —
-    re-exporting every missed day would double-append under
-    WRITE_APPEND semantics; a backfill is an explicit operator action,
-    not an automatic catch-up.
+    reference's setting) only the MOST RECENT missed window runs; a
+    backfill is an explicit operator action, not an automatic catch-up.
 
     With no prior run the scan DELIBERATELY starts 24h back (the
     ``lookback`` parameter), not at an Airflow-style start_date: a
@@ -161,9 +159,8 @@ def run_with_retries(
     """Execute ``job`` under the policy's retry contract: up to
     ``retries`` re-attempts, ``retry_delay`` apart — the engine-side
     equivalent of Airflow's ``retries=2, retry_delay=5min``. A retried
-    job runs again from the start: a retried ``export_partition``
-    appends the day again, so a failure after its append doubles the
-    day."""
+    job runs again from the start, so it must be safe to repeat:
+    ``export_partition`` is, because it replaces its day's file."""
     report = RunReport(logical_date=logical_date)
     for attempt in range(policy.retries + 1):
         report.attempts = attempt + 1

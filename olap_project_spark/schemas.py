@@ -68,6 +68,11 @@ OUTPUT_COLUMNS = [
     "Processed_Timestamp",
 ]
 
+# The Hive-style ``Year=/Month=/Day=`` directories of the partitioned
+# sinks and the warehouse; their files hold the other columns.
+PARTITION_COLUMNS = ["Year", "Month", "Day"]
+DATA_COLUMNS = [c for c in OUTPUT_COLUMNS if c not in PARTITION_COLUMNS]
+
 # v1 golden adds these three (sample_data/processed_transactions.csv:1).
 V1_EXTRA_COLUMNS = ["Transaction_Date", "Date_Formatted", "Time_Formatted"]
 

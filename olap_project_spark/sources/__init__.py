@@ -1,3 +1,2 @@
-"""Input sources: the exchange-rate dimension (``rates``), the POS
-simulator data source (``pos_datasource``) and batch CSV readers
-(``batch``)."""
+"""Input sources: the exchange-rate dimension (``rates``) and the POS
+simulator data source (``pos_datasource``)."""

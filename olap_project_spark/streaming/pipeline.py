@@ -33,16 +33,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from olap_project_spark.schemas import (
+    DATA_COLUMNS,
     DEFAULT_VND_PER_USD,
     INVALID_LOG_COLUMNS,
     OUTPUT_COLUMNS,
+    PARTITION_COLUMNS,
     RAW_TRANSACTION_SCHEMA,
 )
 from olap_project_spark.transforms.clean import clean
 from olap_project_spark.transforms.route import invalid_reason, route_flags
 
-PARTITION_COLS = ["Year", "Month", "Day"]
-DATA_COLS = [c for c in OUTPUT_COLUMNS if c not in PARTITION_COLS]
 HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
@@ -149,8 +149,8 @@ def _sink_task(out_dir: str, sink_format: str, schema, name: str):
     day_csv = "_csv" if sink_format == "csv" else None
     # sink -> (columns, CSV line column or None for parquet, partitioned)
     layouts = {
-        "valid": (DATA_COLS, day_csv, True),
-        "fraud": (DATA_COLS, day_csv, True),
+        "valid": (DATA_COLUMNS, day_csv, True),
+        "fraud": (DATA_COLUMNS, day_csv, True),
         "error": (OUTPUT_COLUMNS, None, False),
         "invalid": (INVALID_LOG_COLUMNS, "_log", False),
     }
@@ -188,11 +188,11 @@ def _sink_task(out_dir: str, sink_format: str, schema, name: str):
             rows = table.filter(table[f"_{sink}"])
             if partitioned:
                 days = defaultdict(list)
-                keys = zip(*(rows[c].to_pylist() for c in PARTITION_COLS))
+                keys = zip(*(rows[c].to_pylist() for c in PARTITION_COLUMNS))
                 for i, key in enumerate(keys):
                     days["/".join(
                         f"{c}={HIVE_NULL if v is None else v}"
-                        for c, v in zip(PARTITION_COLS, key)
+                        for c, v in zip(PARTITION_COLUMNS, key)
                     )].append(i)
                 parts = {d: rows.take(idx) for d, idx in days.items()}
             else:
@@ -242,7 +242,7 @@ def start_pipeline(
     lines = {"_log": F.when(flags["invalid"], F.to_csv(F.struct(*INVALID_LOG_COLUMNS)))}
     if sink_format == "csv":
         lines["_csv"] = F.when(
-            flags["valid"] | flags["fraud"], F.to_csv(F.struct(*DATA_COLS))
+            flags["valid"] | flags["fraud"], F.to_csv(F.struct(*DATA_COLUMNS))
         )
     routed = cleaned.select(
         *OUTPUT_COLUMNS,

@@ -28,8 +28,6 @@ CLOSURE = {
     },
     "export.daily": {"export", "export.daily", "schemas"},
     "export.scheduler": {"export", "export.daily", "export.scheduler", "schemas"},
-    "export.compact": {"export", "export.compact", "export.daily", "schemas"},
-    "sources.batch": {"schemas", "sources", "sources.batch"},
     "sources.pos_datasource": {"schemas", "sources", "sources.pos_datasource"},
     "transforms.enrich": {
         "schemas", "transforms", "transforms.clean", "transforms.enrich",

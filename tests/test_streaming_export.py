@@ -7,12 +7,14 @@ from __future__ import annotations
 import glob
 import json
 import os
+from datetime import datetime
 
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from olap_project_spark.export.daily import export_partition, read_day
+from olap_project_spark.export.daily import DAY_FILE, export_partition
+from olap_project_spark.export.scheduler import ExportPolicy, run_with_retries
 from olap_project_spark.schemas import (
     INVALID_LOG_COLUMNS,
     OUTPUT_COLUMNS,
@@ -36,6 +38,8 @@ RAW_FIELDS = [
     "Merchant Name", "Merchant City", "Merchant State", "Zip", "MCC",
     "Errors?", "Is Fraud?", "timestamp",
 ]
+
+DAY_22 = "Year=2024/Month=1/Day=22"
 
 # a fraud row whose event time does not parse (no calendar partition)
 BAD_TS_FRAUD = _row(user="77", fraud="Yes", ts="not-a-timestamp")
@@ -380,6 +384,24 @@ class TestSinkParity:
             for f in files
         )
 
+    @pytest.mark.parametrize("writer", ["pipeline", "spark"])
+    def test_export_keeps_the_sink_schema(self, spark, sinks, want, writer, tmp_path):
+        """Every day of the valid sink, exported, reads back with the
+        sink's schema and rows, whichever writer produced the sink."""
+        src = f"{sinks}/valid"
+        if writer == "spark":
+            src = str(tmp_path / "valid")
+            to_output(want["valid"]).write.partitionBy("Year", "Month", "Day").parquet(src)
+        wh = str(tmp_path / "warehouse")
+        days = glob.glob(f"{src}/Year=*/Month=*/Day=*")
+        exported = 0
+        for path in days:
+            y, m, d = (int(p.split("=")[1]) for p in path.split(os.sep)[-3:])
+            exported += export_partition(spark, src, wh, y, m, d)
+        got, exp = spark.read.parquet(wh), spark.read.parquet(src)
+        assert len(days) > 1 and got.schema == exp.schema
+        assert exported == exp.count() and _rows(got) == _rows(exp)
+
     def test_unparsed_fraud_row_lands_in_default_partition(self, spark, sinks):
         assert os.path.isdir(f"{sinks}/fraud/Year=__HIVE_DEFAULT_PARTITION__")
         nulls = spark.read.parquet(f"{sinks}/fraud").where(F.col("Year").isNull())
@@ -550,6 +572,29 @@ class TestWindowedOperators:
 
 
 class TestDailyExport:
+    @pytest.fixture()
+    def sink(self, spark, tmp_path):
+        """The fixture's valid rows as a Spark-written sink, one file per
+        row: 2024-01-22 holds user 10's three rows in three files."""
+        from tests.fixtures import query_rows, raw_transactions_df
+
+        src = str(tmp_path / "sink")
+        cleaned = clean(raw_transactions_df(spark, query_rows()), processed_at=FIXED_TS)
+        to_output(route(cleaned)["valid"]).write.option("maxRecordsPerFile", 1).partitionBy(
+            "Year", "Month", "Day"
+        ).parquet(src)
+        return src
+
+    @staticmethod
+    def _assert_day_once(spark, src, wh):
+        """The warehouse's 2024-01-22 holds the sink day's rows exactly
+        once, in the one day file and nothing beside it."""
+        got = spark.read.parquet(f"{wh}/{DAY_22}")
+        want = spark.read.parquet(f"{src}/{DAY_22}")
+        assert got.count() == want.count() > 0
+        assert _rows(got) == _rows(want.select(*got.columns))
+        assert os.listdir(f"{wh}/{DAY_22}") == [DAY_FILE]
+
     def test_partition_pruned_export(self, spark, tmp_path):
         from tests.fixtures import raw_transactions_df
         from olap_project_spark.transforms.clean import to_output
@@ -574,38 +619,115 @@ class TestDailyExport:
         )
         assert "PartitionFilters" in plan and "Year" in plan
 
-    def test_export_returns_rows_appended_by_the_call(self, spark, tmp_path):
-        """The count is this call's append, also when the same day is
-        exported a second time (not the partition's cumulative rows)."""
-        from tests.fixtures import query_rows, raw_transactions_df
-
-        src = str(tmp_path / "sink")
+    def test_reexport_replaces_the_day(self, spark, sink, tmp_path):
+        """Each call returns the day's rows it wrote, and a second
+        export of a day replaces it instead of appending it again."""
         wh = str(tmp_path / "warehouse")
-        cleaned = clean(raw_transactions_df(spark, query_rows()), processed_at=FIXED_TS)
-        to_output(route(cleaned)["valid"]).write.partitionBy("Year", "Month", "Day").parquet(src)
-
         # user 10's three rows on 2024-01-22 are all valid in reference mode
-        assert export_partition(spark, src, wh, 2024, 1, 22) == 3
-        assert export_partition(spark, src, wh, 2024, 1, 22) == 3
-        assert export_partition(spark, src, wh, 2024, 1, 15) == 1
-        assert export_partition(spark, src, wh, 2024, 3, 1) == 0
-        assert spark.read.parquet(wh).count() == 7
+        assert export_partition(spark, sink, wh, 2024, 1, 22) == 3
+        assert export_partition(spark, sink, wh, 2024, 1, 22) == 3
+        assert export_partition(spark, sink, wh, 2024, 1, 15) == 1
+        assert export_partition(spark, sink, wh, 2024, 3, 1) == 0
+        assert spark.read.parquet(wh).count() == 4
 
-    def test_day_read_lists_only_that_day(self, spark, tmp_path):
-        src = str(tmp_path / "sink")
-        spark.createDataFrame(
-            [(2024, 1, day, i) for day in (14, 15, 16) for i in range(3)],
-            "Year int, Month int, Day int, v int",
-        ).write.partitionBy("Year", "Month", "Day").parquet(src)
+    @pytest.mark.parametrize("fault", ["after_first_read", "temp_write", "after_replace"])
+    def test_retried_export_lands_the_day_once(self, spark, sink, tmp_path, monkeypatch, fault):
+        """One failure at each point of the export, retried by the
+        scheduler's policy: the day ends up in the warehouse exactly
+        once, with no temp file left."""
+        wh = str(tmp_path / "warehouse")
+        fired = []
 
-        df = read_day(spark, src, 2024, 1, 15)
-        files = df.inputFiles()
-        assert files and all("/Year=2024/Month=1/Day=15/" in f for f in files)
-        assert sorted(df.columns) == ["Day", "Month", "Year", "v"]
-        assert {tuple(r) for r in df.select("Year", "Month", "Day").distinct().collect()} == {
-            (2024, 1, 15)
-        }
-        assert read_day(spark, src, 2024, 1, 17) is None
+        def fail():
+            if not fired:
+                fired.append(fault)
+                raise OSError(f"injected fault: {fault}")
+
+        if fault == "after_first_read":
+            real_read, reads = pq.ParquetFile.read, []
+
+            def read(self, *args, **kwargs):
+                if reads:  # sink file 1 of 3 was read
+                    fail()
+                reads.append(self)
+                return real_read(self, *args, **kwargs)
+
+            monkeypatch.setattr(pq.ParquetFile, "read", read)
+        elif fault == "temp_write":
+            real_write = pq.ParquetWriter.write_table
+
+            def write_table(self, *args, **kwargs):
+                fail()
+                return real_write(self, *args, **kwargs)
+
+            monkeypatch.setattr(pq.ParquetWriter, "write_table", write_table)
+        else:
+            real_replace = os.replace
+
+            def replace(*args, **kwargs):
+                real_replace(*args, **kwargs)
+                fail()
+
+            monkeypatch.setattr(os, "replace", replace)
+
+        report = run_with_retries(
+            lambda: export_partition(spark, sink, wh, 2024, 1, 22),
+            ExportPolicy(retries=2),
+            datetime(2024, 1, 22, 23),
+            sleep=lambda _s: None,
+        )
+        assert fired == [fault]
+        assert report.succeeded and report.attempts == 2 and report.result == 3
+        self._assert_day_once(spark, sink, wh)
+
+    def test_late_sink_file_lands_once_on_reexport(self, spark, sink, tmp_path):
+        wh = str(tmp_path / "warehouse")
+        assert export_partition(spark, sink, wh, 2024, 1, 22) == 3
+        late = spark.read.parquet(sink).where(F.col("Day") == 22).limit(1)
+        late.write.mode("append").partitionBy("Year", "Month", "Day").parquet(sink)
+        assert export_partition(spark, sink, wh, 2024, 1, 22) == 4
+        self._assert_day_once(spark, sink, wh)
+
+    def test_hidden_files_in_the_sink_day_are_skipped(self, spark, sink, tmp_path):
+        """A killed sink worker's ``.part-*.tmp``, checksum files and
+        ``_``-prefixed files are not data, as for Spark's reader."""
+        day = f"{sink}/{DAY_22}"
+        assert any(n.endswith(".crc") for n in os.listdir(day))
+        for name in (".part-killed-00000.0.tmp", "_SUCCESS", "_committed_123"):
+            with open(f"{day}/{name}", "wb") as f:
+                f.write(b"PAR1 not parquet")
+        wh = str(tmp_path / "warehouse")
+        assert export_partition(spark, sink, wh, 2024, 1, 22) == 3
+        self._assert_day_once(spark, sink, wh)
+
+    def test_corrupt_neighbour_day_is_not_read(self, spark, sink, tmp_path):
+        with open(f"{sink}/Year=2024/Month=1/Day=15/part-corrupt.snappy.parquet", "wb") as f:
+            f.write(b"PAR1 not parquet")
+        wh = str(tmp_path / "warehouse")
+        assert export_partition(spark, sink, wh, 2024, 1, 22) == 3
+        self._assert_day_once(spark, sink, wh)
+        assert os.listdir(wh) == ["Year=2024"]
+        assert os.listdir(f"{wh}/Year=2024/Month=1") == ["Day=22"]
+        with pytest.raises(Exception, match="(?i)parquet"):  # the file is corrupt
+            export_partition(spark, sink, wh, 2024, 1, 15)
+
+    def test_foreign_file_in_warehouse_day_raises(self, spark, sink, tmp_path):
+        wh = str(tmp_path / "warehouse")
+        os.makedirs(f"{wh}/{DAY_22}")
+        with open(f"{wh}/{DAY_22}/part-00003-appended.snappy.parquet", "wb") as f:
+            f.write(b"")
+        with pytest.raises(ValueError, match="part-00003-appended.snappy.parquet"):
+            export_partition(spark, sink, wh, 2024, 1, 22)
+
+    def test_export_runs_no_spark_job(self, spark, sink, tmp_path):
+        sc = spark.sparkContext
+        sc.setJobGroup("export_partition", "export_partition")
+        try:
+            n = export_partition(spark, sink, str(tmp_path / "warehouse"), 2024, 1, 22)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert n == 3
+        assert sc.statusTracker().getJobIdsForGroup("export_partition") == []
 
 
 class TestDailyRates:
