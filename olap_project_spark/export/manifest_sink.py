@@ -30,7 +30,9 @@ set as one staging file and commits it from the driver, with no Spark
 job for a local key frame. A read turns each tombstone into one filter
 on that scan, built from keys the driver reads with pyarrow — no join
 and no broadcast job. The bound: a delete's key set must fit in driver
-memory.
+memory. :func:`maintain` materializes tombstones on the driver, also
+with no Spark job: it rewrites, with pyarrow, only the files a
+tombstone hits, and retains every other file by name.
 
 A table keeps ONE schema (:func:`table_schema` raises on a commit whose
 columns or types differ), so every committed file reads under it. The
@@ -86,7 +88,11 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from olap_project_spark.functions.localframe import arrow_table, local_frame
+from olap_project_spark.functions.localframe import (
+    _as_struct,
+    arrow_table,
+    local_frame,
+)
 
 
 @dataclass
@@ -775,9 +781,10 @@ class ManifestWriter(DataSourceArrowWriter):
         # drop their messages here. A commit whose EVERY partition was
         # empty still stages one empty file (driver-side) so
         # schema-recording commits (CREATE TABLE) keep their on-disk
-        # shape and the table directory exists before the claim.
+        # shape and the table directory exists before the claim — unless
+        # it retains files (a rewrite whose new files all came out empty).
         messages = [m for m in messages if m.file_name is not None]
-        if not messages:
+        if not messages and not self.retain:
             messages = [self.write(iter(()), force_file=True)]
         manifest = {
             "kind": self.kind,
@@ -1661,36 +1668,49 @@ def _read_files(
     return df
 
 
-def _key_rows(path: str, names, key_schema: StructType) -> list[tuple]:
-    """The distinct key tuples stored in the named staging files, read
-    on the driver with pyarrow (key columns only). A tuple holding a
-    null is dropped: a null key never matches."""
+def _read_staged(path: str, name: str, asch, columns=None) -> "pa.Table":  # noqa: F821
+    """One committed staging file as an Arrow table under ``asch``,
+    read on the driver with pyarrow: parquet, or a legacy ``.jsonl``
+    file (an empty one reads as no rows). ``columns`` reads only those
+    columns."""
+    import pyarrow as pa
     import pyarrow.json as pj
     import pyarrow.parquet as pq
 
+    if columns is not None:
+        asch = pa.schema([asch.field(c) for c in columns])
+    f = os.path.join(path, "_staging", name)
+    if name.endswith(".parquet"):
+        t = pq.read_table(f, columns=asch.names)
+    elif os.path.getsize(f):
+        t = pj.read_json(
+            f,
+            parse_options=pj.ParseOptions(
+                explicit_schema=asch, unexpected_field_behavior="ignore"
+            ),
+        )
+    else:
+        return asch.empty_table()
+    return t.select(asch.names)
+
+
+def _tombstone_keys(path: str, m: dict, version: int):
+    """(key schema, key table) of a delete or merge snapshot, read from
+    its own files with pyarrow: a delete's recorded key schema, or a
+    merge's ``merge_keys`` projected from its rows' recorded schema.
+    Rows holding a null are dropped: a null key never matches."""
+    import pyarrow as pa
+
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    asch = to_arrow_schema(key_schema)
-    staging = os.path.join(path, "_staging")
-    rows: dict[tuple, None] = {}
-    for n in names:
-        f = os.path.join(staging, n)
-        if n.endswith(".parquet"):
-            t = pq.read_table(f, columns=asch.names)
-        elif os.path.getsize(f):
-            t = pj.read_json(
-                f,
-                parse_options=pj.ParseOptions(
-                    explicit_schema=asch,
-                    unexpected_field_behavior="ignore",
-                ),
-            )
-        else:
-            continue
-        t = t.select(asch.names).cast(asch)
-        cols = [c.to_pylist() for c in t.columns]
-        rows.update(dict.fromkeys(r for r in zip(*cols) if None not in r))
-    return list(rows)
+    if "schema" not in m:
+        raise ValueError(f"{m['kind']} snapshot {version} recorded no schema")
+    ks = StructType.fromJson(m["schema"])
+    if m["kind"] == "merge":
+        ks = StructType([ks[k] for k in m["merge_keys"]])
+    asch = to_arrow_schema(ks)
+    parts = [_read_staged(path, n, asch).cast(asch) for n in m["files"]]
+    return ks, pa.concat_tables([asch.empty_table(), *parts]).drop_null()
 
 
 def _key_hit(key_schema: StructType, rows: list[tuple]):
@@ -1723,15 +1743,10 @@ def _key_hit(key_schema: StructType, rows: list[tuple]):
 
 
 def _tombstone_hit(path: str, m: dict, version: int):
-    """:func:`_key_hit` of a delete or merge snapshot, its keys read
-    from its own files: a delete's recorded key schema, or a merge's
-    ``merge_keys`` projected from its rows' recorded schema."""
-    if "schema" not in m:
-        raise ValueError(f"{m['kind']} snapshot {version} recorded no schema")
-    ks = StructType.fromJson(m["schema"])
-    if m["kind"] == "merge":
-        ks = StructType([ks[k] for k in m["merge_keys"]])
-    return _key_hit(ks, _key_rows(path, m["files"], ks))
+    """:func:`_key_hit` of a delete or merge snapshot's distinct keys."""
+    ks, keys = _tombstone_keys(path, m, version)
+    rows = dict.fromkeys(zip(*(c.to_pylist() for c in keys.columns)))
+    return _key_hit(ks, list(rows))
 
 
 def _committed_entry_of(
@@ -1748,6 +1763,25 @@ def _committed_entry_of(
         f"commit with token {token!r} not found at {path}; the write "
         "did not land"
     )
+
+
+def _fold(
+    log: list[tuple[int, dict]],
+) -> tuple[list[str], list[tuple[int, int, dict]]]:
+    """The live data files of ``log`` in commit order, and each delete
+    or merge since the last rewrite as (live files before it — the ones
+    it applies to —, version, manifest). A rewrite resets both."""
+    live: list[str] = []
+    tombs: list[tuple[int, int, dict]] = []
+    for version, m in log:
+        kind = m.get("kind", "append")
+        if kind == "rewrite":
+            live, tombs = [], []
+        if kind in ("delete", "merge"):
+            tombs.append((len(live), version, m))
+        if kind != "delete":
+            live += m["files"]  # metadata-only commits list no files
+    return live, tombs
 
 
 def read_committed(
@@ -1767,11 +1801,12 @@ def read_committed(
 
     Row-level DELETES (Iceberg-v2-style equality deletes, written via
     :func:`delete_where`) apply MERGE-ON-READ: the log folds in commit
-    order on the driver — appends add live files, a rewrite resets the
-    state to its consolidated files (compaction MATERIALIZES deletes:
-    it rewrites through this reader, so tombstones never outlive it),
-    and each delete adds ONE filter to the scan. The filter drops the
-    rows whose key equals one of the delete's keys, which the driver
+    order on the driver (:func:`_fold`) — appends add live files, a
+    rewrite resets the state to its files (every rewrite holds the
+    deletes before it applied: compaction rewrites through this reader,
+    and :func:`maintain` rewrites each file a delete hits and retains
+    only files none hits), and each delete adds ONE filter to the
+    scan. The filter drops the rows whose key equals one of the delete's keys, which the driver
     reads from the tombstone files with pyarrow (:func:`_key_hit`: a
     null on either side never matches, as in an anti-join). A delete
     that precedes only some of the scanned files is scoped to them by
@@ -1788,16 +1823,7 @@ def read_committed(
     tombstones are never pruned — a pruned-out merge file still
     deletes its keys, it just isn't scanned as data — correctness
     over skipping."""
-    live: list[str] = []
-    tombs: list[tuple[int, int, dict]] = []  # (live files before, version, m)
-    for version, m in _log(path, as_of, branch):
-        kind = m.get("kind", "append")
-        if kind == "rewrite":
-            live, tombs = [], []
-        if kind in ("delete", "merge"):
-            tombs.append((len(live), version, m))
-        if kind != "delete":
-            live += m["files"]  # metadata-only commits list no files
+    live, tombs = _fold(_log(path, as_of, branch))
     scanned = live if _keep is None else [f for f in live if f in _keep]
     from pyspark.sql import functions as _F
 
@@ -1834,9 +1860,11 @@ def delete_where(
     :meth:`ManifestWriter.write` and :meth:`ManifestWriter.commit`,
     the same steps every commit runs. So the key set must fit in
     driver memory, as it must for every read that applies it
-    (:func:`read_committed`). The rewrite happens lazily at the next
-    compaction, which materializes the deletes and drops the
-    tombstones. ``branch`` stages the delete on a write-audit-publish
+    (:func:`read_committed`). The rows stay on disk until
+    :func:`maintain` rewrites the files that hold them and vacuums the
+    old files, tombstones and manifests; only this table is erased —
+    the ingest sinks (``streaming.pipeline``) still keep the card.
+    ``branch`` stages the delete on a write-audit-publish
     branch instead of committing it to main directly. Returns the new
     snapshot version."""
     token = uuid.uuid4().hex
@@ -2036,9 +2064,9 @@ def set_partition_spec(
 
     - :func:`write_partitioned` with no explicit transform follows it
       (writers inherit the table's layout, Iceberg-style);
-    - :func:`maintain` preserves it through full compactions (the
-      rewrite re-partitions under the CURRENT spec, collapsing the
-      spec eras);
+    - :func:`maintain` and the scoped rewrites record it: the files
+      they write carry ranges under the CURRENT spec, and a retained
+      file keeps its ranges only when they were recorded under it;
     - :func:`table_partitions` treats it as the reference spec: files
       written under an older spec report as unaccounted (their
       histograms describe different tuples) until a rewrite refreshes
@@ -2213,7 +2241,7 @@ def merge_upsert(
     files exist). Matched keys are replaced, unmatched keys are
     inserted, and NO existing data file is read or rewritten. Cost is
     O(|updates|) writes + one manifest; the reconciliation happens
-    lazily in :func:`read_committed`'s fold (a later compaction
+    lazily in :func:`read_committed`'s fold (:func:`maintain`
     materializes it). This is the Iceberg-v2 single-snapshot
     delete-file + data-file shape — the merge economics that make CDC
     upserts tractable at 100 TB, where the copy-on-write alternative
@@ -2351,19 +2379,10 @@ class MaintenancePolicy:
       flagging thresholds (many files, each small — see
       :func:`plan_compaction_ranges`);
     - ``n_files_per_range``: rewrite width for a scoped compaction;
-    - ``full_n_files``: consolidation width when a FULL compaction is
-      needed (unmaterialized delete/merge tombstones block scoped
-      rewrites, so the loop materializes them first);
     - ``vacuum``: expire pre-rewrite snapshots + collect orphans after
-      a rewrite landed this pass;
+      a rewrite landed this pass (this is what takes deleted rows and
+      their tombstones off the disk);
     - ``stale_claim_ttl_s``: forwarded to vacuum's crashed-claim GC;
-    - ``partition_by``: ``(col, kind[, arg])`` or a list of such
-      tuples (multi-field spec) — the table's HIDDEN PARTITIONING
-      layout, preserved through any full compaction this loop
-      performs (otherwise the rewrite would drop the transform
-      metadata and time-window pruning with it); when absent the loop
-      preserves the table's DECLARED spec
-      (:func:`current_partition_spec`) instead;
     - ``checkpoint``: write a LOG CHECKPOINT (:func:`checkpoint_log`)
       at the end of every non-noop pass, so read planning parses one
       bundled file + the tail instead of the whole manifest log.
@@ -2374,11 +2393,87 @@ class MaintenancePolicy:
     min_files: int = 4
     max_avg_rows: float = 100_000
     n_files_per_range: int = 4
-    full_n_files: int = 16
     vacuum: bool = True
     stale_claim_ttl_s: float | None = None
-    partition_by: tuple | list | None = None
     checkpoint: bool = False
+
+
+def _hit_rows(
+    data: "pa.Table", keys: list["pa.Table"]  # noqa: F821
+) -> "pa.BooleanArray":  # noqa: F821
+    """Boolean mask of ``data``'s rows whose key equals a row of one of
+    ``keys`` (each a null-free key table). The keys are cast to the
+    file's types and matched by a hash semi-join, which never matches a
+    null (``pc.is_in`` would match a null against a null in its value
+    set). A key the file's type cannot hold exactly (a bigint beyond an
+    int column's range) matches no row, as in the read's comparison."""
+    from functools import reduce
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    row = pa.array(np.arange(data.num_rows, dtype=np.int64))
+    hit = pa.array([], pa.int64())
+    for k in keys:
+        cols = k.column_names
+        fit = [k[c].cast(data[c].type, safe=False) for c in cols]
+        exact = [
+            pc.equal(f.cast(k[c].type, safe=False), k[c])
+            for f, c in zip(fit, cols)
+        ]
+        k = pa.table(fit, names=cols).filter(reduce(pc.and_, exact))
+        probe = data.select(cols).append_column("__row", row)
+        found = probe.join(k, cols, join_type="left semi")["__row"]
+        hit = pa.concat_arrays([hit, *found.chunks])
+    return pc.is_in(row, value_set=hit)
+
+
+def _materialize_tombstones(path: str, schema: StructType) -> int:
+    """Apply the deletes and merges since the last rewrite, on the
+    driver with pyarrow (no Spark job), as ONE rewrite commit: each live
+    file a tombstone precedes (:func:`_fold`) with a key hit
+    (:func:`_hit_rows`) is rewritten minus its hit rows through
+    :meth:`ManifestWriter.write`; every other live file is retained by
+    name, so the rewrite's reset of the fold drops no row. Memory is one
+    data file plus the key sets. Returns the rewrite's version."""
+    import pyarrow.compute as pc
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    log = _log(path)
+    live, tombs = _fold(log)
+    asch = to_arrow_schema(schema)
+    keys = {v: _tombstone_keys(path, m, v)[1] for _n, v, m in tombs}
+    # the keys of the tombstones that precede each live file
+    scope = {
+        name: [keys[v] for n, v, _m in tombs if i < n and keys[v].num_rows]
+        for i, name in enumerate(live)
+    }
+    hits = {}  # hit file -> its hit rows
+    for name, ks in scope.items():
+        if ks:
+            cols = sorted({c for k in ks for c in k.column_names})
+            mask = _hit_rows(_read_staged(path, name, asch, cols), ks)
+            if mask.true_count:
+                hits[name] = mask
+    retain, spec = _retain_entries(path, log, set(hits))
+    token = uuid.uuid4().hex
+    opts = {
+        "path": path,
+        "kind": "rewrite",
+        "retain": json.dumps(retain),
+        "commit_token": token,
+    }
+    if spec is not None:
+        opts["partition_transform"] = json.dumps(spec)
+    writer = ManifestWriter(opts, overwrite=False, schema=schema)
+    msgs = []
+    for name, mask in sorted(hits.items()):
+        rest = _read_staged(path, name, asch).filter(pc.invert(mask))
+        msgs.append(writer.write(iter(rest.to_batches())))
+    writer.commit(msgs)
+    return _committed_entry_of(path, token)[0]
 
 
 def maintain(
@@ -2395,35 +2490,45 @@ def maintain(
     1. PLAN on metadata only (:func:`plan_compaction_ranges` over the
        zone maps — no data read);
     2. if tombstones (delete/merge snapshots) sit above the latest
-       rewrite, a scoped rewrite is unsafe (it would resurrect rows in
-       retained files), so a FULL clustered compaction materializes
-       them — also resolving the flagged small-file pressure. It reads
-       the table as :func:`read_committed` does (one scan, one key
-       filter per tombstone), so the tombstones add no job; the
-       rewrite still reads and writes every live row;
-    3. otherwise each flagged range gets a scoped
-       :func:`compact_range` (pay I/O proportional to the range);
+       rewrite, MATERIALIZE them (:func:`_materialize_tombstones`): the
+       driver rewrites, with pyarrow and no Spark job, only the files
+       that hold deleted rows, and retains every other file, in one
+       rewrite commit. Time is proportional to the bytes of the files
+       hit, not to the table. Then PLAN again;
+    3. each flagged range gets a scoped :func:`compact_range` (pay I/O
+       proportional to the range);
     4. a rewrite landed this pass → :func:`vacuum_snapshots` expires
-       pre-rewrite history and collects orphans (per policy).
+       pre-rewrite history and collects orphans (per policy). With
+       ``policy.vacuum`` a deleted key is then gone from every file
+       under the table: data files, tombstones, manifests and log
+       checkpoints. Only this table is erased: the ingest sinks
+       (``streaming.pipeline``) still keep the card.
 
     ``dry_run=True`` returns the same report with ZERO writes — the
     operator preview. The pass is IDEMPOTENT: a second call on a
-    maintained table reports ``noop=True`` and commits nothing.
+    maintained table reports ``noop=True`` and commits nothing. A pass
+    that failed before its rewrite committed is redone by calling it
+    again: it left only unreferenced staging files and at most a
+    crashed version claim, which vacuum collects (the claim once
+    ``stale_claim_ttl_s`` has passed). One that failed after the
+    commit left the deleted rows out of every read, and on disk until
+    the next :func:`vacuum_snapshots`.
 
     Returns {"dry_run", "had_tombstones", "flagged_before", "actions",
     "versions_written", "vacuum", "noop"}."""
-    # a partition-spec alter does NOT force the full path — the
-    # flagged ranges decide, and the full path preserves the CURRENT
-    # spec when it runs
+
+    def flagged_ranges() -> list[dict]:
+        plan = plan_compaction_ranges(
+            path,
+            policy.col,
+            n_ranges=policy.n_ranges,
+            min_files=policy.min_files,
+            max_avg_rows=policy.max_avg_rows,
+        )
+        return [r for r in plan if r["needs_compaction"]]
+
     had_tombstones = _tombstones_since_last_rewrite(_log(path))
-    plan = plan_compaction_ranges(
-        path,
-        policy.col,
-        n_ranges=policy.n_ranges,
-        min_files=policy.min_files,
-        max_avg_rows=policy.max_avg_rows,
-    )
-    flagged = [r for r in plan if r["needs_compaction"]]
+    flagged = flagged_ranges()
     report: dict = {
         "dry_run": dry_run,
         "had_tombstones": had_tombstones,
@@ -2433,54 +2538,28 @@ def maintain(
         "vacuum": None,
         "noop": not flagged and not had_tombstones,
     }
-    if dry_run or (not flagged and not had_tombstones):
+    if dry_run or report["noop"]:
         return report
     if had_tombstones:
-        # materialize tombstones + consolidate in ONE clustered
-        # rewrite; the sort also turns the zone maps on the policy
-        # axis from "present" into "selective". A declared hidden-
-        # partitioning layout takes precedence as the rewrite axis so
-        # the loop never strips the table's transform metadata — the
-        # policy's declared layout first, else the table's CURRENT
-        # spec (set_partition_spec / latest partitioned write), so a
-        # maintenance pass after a spec evolution collapses the spec
-        # eras under the NEW spec rather than silently dropping it.
-        pby = policy.partition_by
-        if pby is None:
-            cur = current_partition_spec(path)
-            if cur is not None:
-                pby = [
-                    (s["col"], s["kind"], s["arg"])
-                    if s.get("arg") is not None
-                    else (s["col"], s["kind"])
-                    for s in cur
-                ]
-        v = compact_snapshots(
+        struct = table_schema(path) or _as_struct(schema)
+        report["versions_written"].append(_materialize_tombstones(path, struct))
+        report["actions"].append("materialize")
+        flagged = flagged_ranges()
+    for r in flagged:
+        res = compact_range(
             spark,
             path,
             schema,
-            cluster_by=None if pby else [policy.col],
-            partition_by=pby,
-            n_files=policy.full_n_files,
+            policy.col,
+            r["range_lo"],
+            r["range_hi"],
+            n_files=policy.n_files_per_range,
         )
-        report["actions"].append("full_compact")
-        report["versions_written"].append(v)
-    else:
-        for r in flagged:
-            res = compact_range(
-                spark,
-                path,
-                schema,
-                policy.col,
-                r["range_lo"],
-                r["range_hi"],
-                n_files=policy.n_files_per_range,
+        if res["n_rewritten"]:
+            report["actions"].append(
+                f"compact_range[{r['range_lo']}, {r['range_hi']}]"
             )
-            if res["n_rewritten"]:
-                report["actions"].append(
-                    f"compact_range[{r['range_lo']}, {r['range_hi']}]"
-                )
-                report["versions_written"].append(res["version"])
+            report["versions_written"].append(res["version"])
     if policy.vacuum and report["versions_written"]:
         report["vacuum"] = vacuum_snapshots(
             path, stale_claim_ttl_s=policy.stale_claim_ttl_s
@@ -3495,7 +3574,7 @@ def _retain_entries(
     count, null counts and (current-spec) hidden-partition ranges
     preserved verbatim — so metadata-only aggregates and pruning keep
     answering exactly for the files the rewrite does not touch.
-    Returns (retain, latest recorded partition spec or None)."""
+    Returns (retain, the declared partition spec or None)."""
     retain: dict = {}
     for name, st in _committed_files(path):
         if name in exclude:
@@ -3525,14 +3604,18 @@ def _retain_entries(
     # HIDDEN-PARTITIONING preservation: a scoped rewrite must not
     # strip the table's transform metadata (the round-11 layout —
     # otherwise every later time-window read stops pruning). The
-    # LATEST recorded spec survives: retained files carry their
+    # DECLARED spec survives (the latest alter or spec-bearing write,
+    # as in current_partition_spec): retained files carry their
     # recorded transform range (only if recorded under that same
     # spec), and the writer recomputes ranges for the new files.
     live_spec_parts: dict[str, tuple] = {}
     spec_latest = None
     for _v2, m2 in log:
         kind2 = m2.get("kind", "append")
-        if kind2 == "delete":
+        if kind2 == "alter":
+            sp = m2.get("partition_spec")
+            spec_latest = (sp[0] if len(sp) == 1 else sp) if sp else None
+        if kind2 in ("delete", "alter"):
             continue
         sp = m2.get("partition_transform")
         fp = m2.get("file_partitions", {})
@@ -3725,9 +3808,10 @@ def compact_range(
     files it retains (the tombstones stop applying at the rewrite, but
     retained files were never re-folded — a merge's key-tombstones
     carry the same hazard as a standalone delete). Deletes/merges
-    BEFORE the latest full rewrite are fine — that rewrite already
-    materialized them. Run a FULL :func:`compact_snapshots` first,
-    then range-compact freely.
+    BEFORE the latest rewrite are fine — that rewrite already
+    materialized them. Run :func:`maintain` (which materializes them
+    and then compacts the flagged ranges) or a FULL
+    :func:`compact_snapshots` first, then range-compact freely.
 
     Returns {"version", "n_rewritten", "n_retained", "n_new"}."""
     log = _log(path)
@@ -4117,9 +4201,10 @@ def vacuum_snapshots(
 
     1. **Orphan GC** (``delete_orphans``): staging files referenced by
        NO committed manifest — the residue of failed attempts whose
-       ``abort`` never ran — are deleted. Run it in a maintenance
-       window (no in-flight writers), the same precondition Delta's
-       retention check encodes.
+       ``abort`` never ran — are deleted, and so are the manifest temp
+       files of commits that failed before their commit point. Run it
+       in a maintenance window (no in-flight writers), the same
+       precondition Delta's retention check encodes.
     2. **Snapshot expiry**: every manifest with version < ``keep_from``
        is removed, along with any staging file only those expired
        manifests reference. ``keep_from`` MUST be a rewrite
@@ -4132,9 +4217,10 @@ def vacuum_snapshots(
        time travel is shortened, exactly as in Iceberg/Delta.
 
     Returns counts: orphans_deleted, expired_manifests, expired_files,
-    expired_checkpoints (log-checkpoint generations beyond the newest,
-    collected here because vacuum IS the maintenance window the
-    ``keep=2`` retirement in :func:`checkpoint_log` defers to),
+    expired_checkpoints (log-checkpoint generations beyond the newest —
+    every generation when manifests expired — collected here because
+    vacuum IS the maintenance window the ``keep=2`` retirement in
+    :func:`checkpoint_log` defers to),
     kept_versions. Driver-side O(#manifests + #staging-files) metadata
     work; no data is read or rewritten.
 
@@ -4293,6 +4379,13 @@ def vacuum_snapshots(
                 if rel not in referenced_any:
                     os.remove(full)
                     stats["orphans_deleted"] += 1
+        # a commit that failed between its version claim and the
+        # os.replace left its manifest's temp file (a delete's holds
+        # the tombstone's key stats); with no claim in flight, no
+        # committer will move one into place
+        for fname in os.listdir(path):
+            if fname.startswith("._manifest-") and fname.endswith(".tmp"):
+                os.remove(os.path.join(path, fname))
     if keep_from is not None:
         retained = {
             f
@@ -4319,10 +4412,15 @@ def vacuum_snapshots(
     # LOG-CHECKPOINT GC: checkpoint_log() keeps the newest `keep`
     # generations alive for racing readers; vacuum — a maintenance
     # window by the same contract that arms orphan GC — collects every
-    # generation but the newest. A checkpoint is a pure parse cache,
-    # so removing one can never change what is read; the next plan
-    # call falls back to the survivor (or per-file parsing).
-    for entry in _checkpoint_names(path)[1:]:
+    # generation but the newest, and the newest too once expiry
+    # removed a manifest: a bundle copies every manifest at or below
+    # its version, so it would keep an expired tombstone's key stats
+    # on disk. A checkpoint is a pure parse cache, so removing one can
+    # never change what is read; the next plan call falls back to the
+    # survivor (or per-file parsing).
+    for entry in _checkpoint_names(path)[
+        0 if stats["expired_manifests"] else 1 :
+    ]:
         try:
             os.remove(os.path.join(path, entry))
             stats["expired_checkpoints"] += 1

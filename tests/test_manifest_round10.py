@@ -950,9 +950,9 @@ def test_round10_lifecycle_preserves_state_and_tags(
                     tags.pop(name)
                     tag_versions.pop(name)
         elif op == "maintain":
-            # round-11: one scheduler pass of the auto-maintenance
-            # loop — plan, compact (scoped or full over tombstones),
-            # vacuum — must preserve the model and every retained tag
+            # one scheduler pass of the auto-maintenance loop —
+            # materialize tombstones, compact flagged ranges, vacuum —
+            # must preserve the model and every retained tag
             if not table_versions(path) or not model:
                 continue
             from olap_project_spark.export.manifest_sink import (
@@ -970,7 +970,6 @@ def test_round10_lifecycle_preserves_state_and_tags(
                     min_files=3,
                     max_avg_rows=10,
                     n_files_per_range=1,
-                    full_n_files=2,
                 ),
             )
             kept = table_versions(path)

@@ -559,8 +559,12 @@ class TestColumnarDataPlane:
         """A delete followed by a re-insert scopes its filter to the files
         it precedes by ``_metadata.file_name``; the legacy JSONL scan
         takes that filter too, and a legacy JSONL tombstone still
-        deletes its keys."""
-        from olap_project_spark.export.manifest_sink import delete_where
+        deletes its keys, also when ``maintain`` materializes them."""
+        from olap_project_spark.export.manifest_sink import (
+            MaintenancePolicy,
+            delete_where,
+            maintain,
+        )
 
         path = str(tmp_path / "legacy_scoped")
         _write(registered, path, [(1, "new")])
@@ -591,11 +595,14 @@ class TestColumnarDataPlane:
             registered, path, registered.createDataFrame([(1,), (2,)], "k bigint")
         )
         _write(registered, path, [(2, "again")])
-        back = read_committed(registered, path, SCHEMA)
-        assert sorted((r.k, r.v) for r in back.collect()) == [
-            (2, "again"),
-            (4, "old"),
-        ]
+        for _ in range(2):  # the fold, then the materialized table
+            back = read_committed(registered, path, SCHEMA)
+            assert sorted((r.k, r.v) for r in back.collect()) == [
+                (2, "again"),
+                (4, "old"),
+            ]
+            maintain(registered, path, SCHEMA, MaintenancePolicy(col="k"))
+        assert not [n for n in os.listdir(staging) if n.endswith(".jsonl")]
 
 
 class TestVacuumInFlightGuard:

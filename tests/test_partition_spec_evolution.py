@@ -2,7 +2,7 @@
 as a metadata-only alter commit (``set_partition_spec``): the declared
 spec changes, old files keep pruning under their own recorded spec,
 new files under the new one, writers inherit the declared spec, and
-maintenance collapses the spec eras under the CURRENT spec."""
+maintenance's rewrites record the CURRENT spec."""
 
 from __future__ import annotations
 
@@ -154,9 +154,10 @@ class TestMixedSpecPruning:
 
 
 class TestMaintenancePreservesSpec:
-    def test_full_compaction_lands_under_current_spec(
-        self, registered, tmp_path
-    ):
+    def test_materialize_keeps_the_spec(self, registered, tmp_path):
+        """maintain materializes a delete by rewriting only the file it
+        hits: the reads equal the model, the rewritten file records the
+        CURRENT (month) spec, and the declared spec survives."""
         from olap_project_spark.export.manifest_sink import delete_where
 
         path = str(tmp_path / "t")
@@ -165,7 +166,6 @@ class TestMaintenancePreservesSpec:
             n_files=4,
         )
         set_partition_spec(path, ("ts", "month"))
-        # tombstones force maintain()'s full-compaction arm
         delete_where(
             registered,
             path,
@@ -177,16 +177,24 @@ class TestMaintenancePreservesSpec:
             None,
             MaintenancePolicy(col="v", vacuum=False),
         )
-        assert "full_compact" in report["actions"]
-        # the rewrite re-partitioned under the CURRENT (month) spec:
-        # table$partitions is exact again, under the new spec
-        tp = table_partitions(path)
+        assert report["actions"] == ["materialize"]
+        want = sorted(
+            tuple(r) for r in _events(registered, 1, 9).collect() if r.v != 100
+        )
+        got = read_committed(registered, path, table_schema(path)).collect()
+        assert sorted(tuple(r) for r in got) == want
+        assert current_partition_spec(path)[0]["kind"] == "month"
+        # the one rewritten file (days 1-2 less the deleted row) is
+        # accounted under the month spec; the three retained files
+        # were written under the days spec
+        tp = table_partitions(path, strict=False)
         spec = tp["spec"]
         spec = spec[0] if isinstance(spec, list) else spec
         assert spec["kind"] == "month"
-        assert tp["unaccounted_files"] == 0
-        assert sum(e["n_rows"] for e in tp["partitions"]) == 15
-        assert current_partition_spec(path)[0]["kind"] == "month"
+        assert tp["unaccounted_files"] == 3
+        assert [(e["partition"], e["n_rows"]) for e in tp["partitions"]] == [
+            ([648], 3)
+        ]
 
 
 class TestStreamAcrossMetadataAlters:
