@@ -1,28 +1,31 @@
 """Exactly-once warehouse append via a manifest-commit sink — the
 commit protocol the reference's DAG lacks (bigquery_update_scheduler.py
 :249-282 stages a CSV and issues WRITE_APPEND with no transactional
-fence: a retried task double-loads). Implemented on the PySpark 4
-Python DataSource writer API:
+fence: a retried task double-loads). One write path,
+:func:`save_manifest`, and one read path, :func:`read_committed` /
+:func:`read_pruned`; the table has no ``spark.read`` or ``readStream``
+format:
 
-1. every task writes its rows to a uniquely-named ``part-*.parquet``
-   under ``<path>/_staging/`` (Arrow-batched columnar writes — bounded
-   memory per task, column pruning and predicate pushdown for every
-   reader) and returns the file name + row count as its commit message;
+1. every task of one ``mapInArrow`` job writes its rows to a
+   uniquely-named ``part-*.parquet`` under ``<path>/_staging/``
+   (Arrow-batched columnar writes — bounded memory per task, column
+   pruning and predicate pushdown for every reader) and returns the
+   file name + row count as its commit message;
 2. the DRIVER, only after every task succeeded, atomically renames a
    ``_manifest-<uuid>.json`` into place listing exactly the committed
    files;
 3. readers (:func:`read_committed`) fold the manifests' file lists on
    the driver into ONE scan of the live files — orphaned staging files
-   from failed/aborted attempts are invisible, so the sink is
-   effectively-exactly-once per query even under task retries (Spark
-   de-duplicates task attempts before ``commit``; the DataSource
-   path's ``abort`` removes this attempt's staging files).
-   :func:`save_manifest` runs no ``abort``: when a task fails
-   mid-write, or the driver fails before the version claim or
-   after it but before the manifest is moved into place, readers still
-   see the pre-commit state, one retry commits the rows exactly once,
-   and :func:`vacuum_snapshots` collects the failed attempt's staging
-   files and its crashed claim (``test_manifest_sink.py::
+   from failed attempts are invisible, so the sink is
+   effectively-exactly-once per query even under task retries
+   (``collect`` returns each partition's commit message once, from
+   the attempt that succeeded).
+   When a task fails mid-write, or the driver fails before the version
+   claim or after it but before the manifest is moved into place,
+   readers still see the pre-commit state, one retry commits the rows
+   exactly once, and :func:`vacuum_snapshots` collects the failed
+   attempt's staging files and its crashed claim
+   (``test_manifest_sink.py::
    test_failed_save_is_invisible_and_retry_commits_once``).
 
 Row-level deletes are tombstones: :func:`delete_where` writes the key
@@ -73,19 +76,6 @@ from collections.abc import Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    DataSourceStreamReader,
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
-    InputPartition,
-    LessThan,
-    LessThanOrEqual,
-    WriterCommitMessage,
-)
 from pyspark.sql.types import StructType
 
 from olap_project_spark.functions.localframe import (
@@ -96,7 +86,7 @@ from olap_project_spark.functions.localframe import (
 
 
 @dataclass
-class _PartCommit(WriterCommitMessage):
+class _PartCommit:
     file_name: str
     n_rows: int
     col_stats: dict | None = None  # col -> [min, max] for orderable types
@@ -294,11 +284,10 @@ class VersionClaimer:
     stale-claim GC) — a no-op where the claim IS the manifest file
     (POSIX), a store delete where it lives elsewhere.
 
-    Every consumer of the commit-in-flight signal (the streaming
-    head, vacuum's orphan-GC guard, publish's main-head computation)
-    derives it from THIS interface — a version claimed here but with
-    no readable manifest file is in flight, whether or not any file
-    exists yet — so the not-yet-readable-gap guarantees survive a
+    Every consumer of the commit-in-flight signal (vacuum's orphan-GC
+    guard, publish's main-head computation) derives it from THIS
+    interface — a version claimed here but with no readable manifest
+    file is in flight, whether or not any file exists yet — so the not-yet-readable-gap guarantees survive a
     claimer whose claims live outside the filesystem."""
 
     def claim(self, path: str, version: int) -> bool:
@@ -323,16 +312,13 @@ class VersionClaimer:
     def in_flight_versions(self, path: str) -> set[int]:
         """Claimed versions whose manifest content is not yet
         readable — the commit-in-flight set every gap-rule consumer
-        (the streaming head, publish's main-head computation, vacuum's
-        orphan-GC guard) obtains from THIS method. Derived, not
-        overridden: (claims ∪ on-disk version files) minus
+        (publish's main-head computation, vacuum's orphan-GC guard)
+        obtains from THIS method. Derived, not overridden: (claims ∪
+        on-disk version files) minus
         readable-manifest versions — the union covers both claim
         shapes (POSIX claims ARE the version files; conditional-PUT
         claims live in the store while an unparseable on-disk file can
-        still appear mid-``os.replace``). The hot streaming path
-        (:func:`_stream_visible_head`) inlines this same formula over
-        one shared parse pass rather than parsing the log twice per
-        trigger."""
+        still appear mid-``os.replace``)."""
         files, parsed = _parse_all(path)
         return (set(self.claimed_versions(path)) | set(files)) - set(
             parsed
@@ -391,9 +377,8 @@ class ConditionalPutClaimer(VersionClaimer):
     def release(self, path: str, version: int) -> None:
         """Remove the claim from the store — without this, an
         abandoned branch's or stale-claim GC's freed version stays a
-        permanent phantom claim (the streaming head blocks at it
-        forever and vacuum counts it in-flight forever). ``delete`` is
-        the store's delete-object callable (S3 DeleteObject / the lock
+        permanent phantom claim (vacuum counts it in-flight forever).
+        ``delete`` is the store's delete-object callable (S3 DeleteObject / the lock
         table's delete item); constructing the claimer without one
         keeps the old never-release behavior and is rejected HERE, at
         release time, so read-only deployments still work."""
@@ -418,8 +403,8 @@ def set_version_claimer(claimer: VersionClaimer) -> VersionClaimer:
     return prev
 
 
-class ManifestWriter(DataSourceArrowWriter):
-    def __init__(self, options, overwrite: bool, schema: StructType | None = None):
+class ManifestWriter:
+    def __init__(self, options, schema: StructType | None = None):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("manifest_sink requires a 'path' option")
@@ -909,492 +894,6 @@ class ManifestWriter(DataSourceArrowWriter):
             os.replace(tmp, final)  # the atomic commit point
             break
 
-    def abort(self, messages: list[_PartCommit]) -> None:
-        for m in messages:
-            if m.file_name is None:
-                continue  # empty partition: nothing was staged
-            try:
-                os.remove(os.path.join(self.path, "_staging", m.file_name))
-            except FileNotFoundError:
-                pass
-
-
-class _VersionFiles(InputPartition):
-    """One streaming input partition = one data file of one committed
-    version — executor-parallel tailing, schema shipped as JSON."""
-
-    def __init__(self, version: int, file_path: str, schema_json: str):
-        self.version = version
-        self.file_path = file_path
-        self.schema_json = schema_json
-
-
-class ManifestStreamReader(DataSourceStreamReader):
-    """STREAM the manifest table — the Delta ``readStream`` contract on
-    the teachable log: the offset IS the snapshot version, each
-    micro-batch reads exactly the files committed by the versions in
-    ``(start, end]``, and a checkpoint restart resumes from the
-    committed version — exactly-once tailing with no extra machinery,
-    because the commit protocol already made versions atomic and
-    immutable. APPEND-ONLY by contract: a delete or rewrite snapshot
-    inside the range raises (Delta's default ``ignoreChanges=false``
-    semantics — a file-level tail cannot represent row removals; run
-    consumers before compacting, or restart them from the rewrite).
-    Two Delta-parity opt-outs relax it: ``ignoreDeletes`` skips
-    equality-delete snapshots, and ``skipChangeCommits`` skips every
-    non-append kind (delete/merge/rewrite/restore) — the tail then
-    delivers exactly the rows plain appends committed, never
-    re-delivering reorganized or updated bytes (see __init__).
-
-    Exactly-once under concurrency: the offset never advances past a
-    version that is claimed but not yet readable. An in-flight commit
-    (claimed version file, content not yet replaced) and an
-    unpublished write-audit-publish branch commit (parseable but
-    branch-tagged — it may become visible at exactly that version when
-    published) both HOLD the stream head at the version before them —
-    the Delta rule that a log gap is not-yet-readable, never skippable.
-    A version HOLE (no file at all — an abandoned branch or a
-    vacuumed-away stale claim) is genuinely unreachable: commit always
-    claims above the observed maximum, so holes below it are permanent
-    and the head skips them.
-
-    Backpressure: ``maxVersionsPerTrigger`` (Delta's
-    ``maxFilesPerTrigger`` analog, per-version granularity) bounds how
-    many versions one micro-batch may drain, so a 100-TB backlog
-    arrives as bounded batches instead of one giant one. The cap
-    applies from the first trigger of a fresh stream (the Python
-    stream API polls ``latestOffset`` before the start offset is
-    knowable, so the first poll assumes a fresh start); on a
-    checkpoint-restart the reader learns the true position only when
-    Spark plans a batch, so the first restarted batch under a
-    processing-time trigger is uncapped catch-up and every subsequent
-    trigger is capped again. Trigger interplay (probed on Spark 4.1):
-    ``processingTime`` drains a backlog as a sequence of capped
-    batches; ``availableNow`` captures its target from the FIRST poll,
-    so one fresh run processes one capped batch — and a RESTARTED
-    availableNow run whose checkpoint is at or past the cap makes no
-    progress that run (the capped first-poll target lands at or below
-    the checkpoint). Drain deep backlogs with a processing-time
-    trigger; use availableNow throttling for fresh bounded ingest.
-
-    Scale: ``latestOffset`` is O(#manifests) driver-side metadata; the
-    data reads are per-file executor tasks (Arrow record batches)."""
-
-    def __init__(self, options, schema: StructType):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("manifest stream source requires 'path'")
-        mv = options.get("maxVersionsPerTrigger")
-        self.max_versions = int(mv) if mv is not None else None
-        if self.max_versions is not None and self.max_versions < 1:
-            raise ValueError("maxVersionsPerTrigger must be >= 1")
-        # Delta-parity relaxations of the append-only contract, both
-        # default-off (the raise is the safe default):
-        # - ignoreDeletes: SKIP equality-delete snapshots (their
-        #   removals simply never reach the tail — correct for
-        #   retention/GDPR deletes whose consumers only accrete, the
-        #   exact use Delta documents for its option of the same name);
-        # - skipChangeCommits: additionally skip merge/rewrite/restore
-        #   snapshots (Delta's skipChangeCommits): the tail delivers
-        #   ONLY rows committed by plain appends, at-least-append-only
-        #   semantics — updates from merges and reorganized bytes from
-        #   compactions never re-deliver, at the documented cost of
-        #   missing merge-inserted rows.
-        self.ignore_deletes = str(
-            options.get("ignoreDeletes", "false")
-        ).lower() in ("true", "1")
-        self.skip_change_commits = str(
-            options.get("skipChangeCommits", "false")
-        ).lower() in ("true", "1")
-        # last offset this reader planned/committed — the base the
-        # per-trigger version cap counts from (None until known)
-        self._cursor: int | None = None
-        self._unknown_polls = 0
-        self.schema = schema
-
-    def initialOffset(self) -> dict:
-        self._cursor = 0
-        return {"version": 0}
-
-    def latestOffset(self) -> dict:
-        head = _stream_visible_head(self.path)
-        if self.max_versions is not None:
-            if self._cursor is not None:
-                head = min(head, self._cursor + self.max_versions)
-            else:
-                # Spark polls latestOffset BEFORE initialOffset (probed
-                # on 4.1), so the first poll runs with an unknown start.
-                # A fresh stream starts at 0 — cap against that, and
-                # initialOffset/partitions pin the cursor right after.
-                # On a checkpoint RESTART initialOffset never runs; if
-                # the guess undershoots the checkpointed start, Spark
-                # plans no batch and the NEXT poll lifts the cap (one
-                # uncapped batch beats a permanent stall).
-                self._unknown_polls += 1
-                if self._unknown_polls == 1:
-                    head = min(head, self.max_versions)
-        if self._cursor is not None:
-            head = max(head, self._cursor)  # an offset never regresses
-        return {"version": head}
-
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        self._cursor = end["version"]
-        out: list[InputPartition] = []
-        sj = json.dumps(self.schema.jsonValue())
-        for version, m in _log(self.path, raw=True):
-            if version <= start["version"] or version > end["version"]:
-                continue
-            kind = m.get("kind", "append")
-            if kind == "alter":
-                continue  # a partition-spec alter commits no rows
-            if kind != "append":
-                if self.skip_change_commits:
-                    continue  # at-least-append-only: change commits
-                    # (delete/merge/rewrite/restore) pass silently
-                if self.ignore_deletes and kind == "delete":
-                    continue  # removals never reach the tail
-                raise ValueError(
-                    f"streaming tail hit a {kind} snapshot at version "
-                    f"{version}; the file-level CDF is append-only — "
-                    "restart the consumer from the rewrite, or opt in "
-                    "to ignoreDeletes / skipChangeCommits"
-                )
-            legacy = [f for f in m["files"] if not f.endswith(".parquet")]
-            if legacy:
-                raise ValueError(
-                    f"version {version} commits pre-columnar staging "
-                    f"files ({legacy[0]}, …); the streaming tail reads "
-                    "the parquet data plane only — compact the table "
-                    "to parquet before streaming it"
-                )
-            staging = os.path.join(self.path, "_staging")
-            out += [
-                _VersionFiles(version, os.path.join(staging, f), sj)
-                for f in m["files"]
-            ]
-        return out
-
-    def read(self, partition: _VersionFiles):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        want = to_arrow_schema(StructType.fromJson(json.loads(partition.schema_json)))
-        pf = pq.ParquetFile(partition.file_path)
-        for batch in pf.iter_batches(columns=want.names):
-            # project/cast to the DISCOVERED table schema
-            yield pa.record_batch(
-                [batch.column(f.name).cast(f.type) for f in want],
-                schema=want,
-            )
-
-    def commit(self, end: dict) -> None:
-        self._cursor = end["version"]  # versions are immutable; just
-        # advance the backpressure base — nothing to release
-
-
-class _FileScan(InputPartition):
-    """One batch input partition = one live data file, carrying the
-    tombstone applications whose sequence number exceeds its commit
-    version (the per-file equality-delete rule)."""
-
-    def __init__(
-        self,
-        file_path: str,
-        schema_json: str,
-        tombs: list,  # [(key cols, [paths]), ...]
-    ):
-        self.file_path = file_path
-        self.schema_json = schema_json
-        self.tombs = tombs
-
-
-def _resolve_as_of(options) -> int | None:
-    """Time-travel option resolution shared by the batch reader and
-    schema discovery: ``versionAsOf`` pins a snapshot version, ``tag``
-    resolves a named ref; both together is ambiguous and rejected."""
-    v = options.get("versionAsOf")
-    tag = options.get("tag")
-    if v is not None and tag is not None:
-        raise ValueError("pass versionAsOf OR tag, not both")
-    if v is not None:
-        return int(v)
-    if tag is not None:
-        return read_tag(options.get("path"), tag)
-    return None
-
-
-class ManifestBatchReader(DataSourceReader):
-    """BATCH-read the manifest table through the public DataSource API —
-    ``spark.read.format(fmt).option('path', …).load()`` on a vanilla
-    session, no library import needed on the read side. Plans the same
-    committed-file list :func:`read_committed` folds (time travel via
-    ``versionAsOf`` or ``tag``, WAP staging via ``branch``), applies
-    row-level tombstones per task by the SEQUENCE-NUMBER rule (a
-    tombstone committed at version vt removes matching rows from files
-    committed at vf < vt — exactly Iceberg's equality-delete sequence
-    semantics, so a key re-inserted after its delete survives), and
-    skips files the pushed-down filters provably exclude:
-
-    - zone maps prune range/equality comparisons on any stats column;
-    - HIDDEN-PARTITION transform ranges prune comparisons on the
-      transform's source column — including TIMESTAMP predicates,
-      which zone maps (int/float/string only) never see.
-
-    Every pushed filter is RETURNED to Spark for re-evaluation — the
-    pruning only shrinks the FILE list, so it is transparently
-    conservative. Tombstone applications are never pruned. One input
-    partition per live data file keeps the scan executor-parallel and
-    the tombstone anti-joins local Arrow joins against the (delta-
-    sized) key files.
-
-    Pushdown is OPT-IN via ``.option('pushdown', 'true')`` (which
-    requires ``spark.sql.python.filterPushdown.enabled=true``): Spark
-    4.1 refuses to plan a Python reader that merely IMPLEMENTS
-    pushFilters while that conf is off, so the base reader stays
-    pushdown-free and a vanilla session can read the table with zero
-    configuration."""
-
-    def __init__(self, options, schema: StructType):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("manifest batch read requires a 'path' option")
-        self.as_of = _resolve_as_of(options)
-        self.branch = options.get("branch")
-        self.schema = schema
-        # (col, op, value) comparisons recorded by pushFilters
-        self._pushed: list[tuple[str, str, object]] = []
-
-    @staticmethod
-    def _excluded(stats: dict, specs, pranges, pushed) -> bool:
-        import datetime as _dt
-
-        for col, op, val in pushed:
-            if not isinstance(val, (_dt.datetime, _dt.date)):
-                rng = (stats or {}).get(col)
-                if rng is not None:
-                    lo, hi = rng[0], rng[1]
-                    # compare only like-typed values (zone maps hold
-                    # the column's native type; a mistyped literal
-                    # never prunes)
-                    same = isinstance(val, str) == isinstance(lo, str)
-                    if same:
-                        if op == "EqualTo" and (val < lo or val > hi):
-                            return True
-                        if op == "GreaterThan" and hi <= val:
-                            return True
-                        if op == "GreaterThanOrEqual" and hi < val:
-                            return True
-                        if op == "LessThan" and lo >= val:
-                            return True
-                        if op == "LessThanOrEqual" and lo > val:
-                            return True
-            # HIDDEN-PARTITION pruning: map the comparison into
-            # transform space against the file's recorded transform
-            # range(s) — the path that prunes TIMESTAMP filters, which
-            # zone maps (int/float/string only) never see, and the
-            # bucket-field equality probes of a multi-field spec. The
-            # comparison bound maps CONSERVATIVELY (inclusive), which
-            # is always safe for monotone transforms.
-            for i, spec in enumerate(specs or ()):
-                prng = pranges[i] if pranges is not None else None
-                if prng is None or col != spec["col"]:
-                    continue
-                try:
-                    t = _transform_scalar(spec, val)
-                except (TypeError, ValueError, AttributeError):
-                    continue  # untransformable literal: keep the file
-                if spec["kind"] == "bucket":
-                    if op == "EqualTo" and not (prng[0] <= t <= prng[1]):
-                        return True
-                    continue
-                if op == "EqualTo" and (t < prng[0] or t > prng[1]):
-                    return True
-                if op in ("GreaterThan", "GreaterThanOrEqual") and (
-                    prng[1] < t
-                ):
-                    return True
-                if op in ("LessThan", "LessThanOrEqual") and prng[0] > t:
-                    return True
-        return False
-
-    def partitions(self) -> list[InputPartition]:
-        staging = os.path.join(self.path, "_staging")
-        # fold the log driver-side: live file -> (commit version, zone
-        # map, specs, transform ranges, rows), plus the tombstone
-        # ledger (version, key cols, files)
-        live: dict[str, tuple] = {}
-        tombs: list[tuple[int, list[str], list[str]]] = []
-        for version, m in _log(self.path, self.as_of, self.branch):
-            kind = m.get("kind", "append")
-            if kind == "alter":
-                continue  # metadata-only: no files
-            fs = m.get("file_stats", {})
-            specs = _specs_of(m)
-            fparts = m.get("file_partitions", {}) if specs else {}
-            if kind in ("delete", "merge"):
-                cols = (
-                    [f["name"] for f in m["schema"]["fields"]]
-                    if kind == "delete"
-                    else list(m["merge_keys"])
-                )
-                tombs.append((version, cols, list(m["files"])))
-                if kind == "delete":
-                    continue
-            rows = m.get("file_rows", {})
-            entries = {
-                f: (
-                    version,
-                    fs.get(f, {}),
-                    specs,
-                    (
-                        _ranges_of(fparts[f], len(specs))
-                        if f in fparts
-                        else None
-                    ),
-                    rows.get(f),
-                )
-                for f in m["files"]
-            }
-            if kind == "rewrite":
-                live = entries
-            else:
-                live.update(entries)
-        legacy = [f for f in live if not f.endswith(".parquet")]
-        if legacy:
-            raise ValueError(
-                f"the batch DataSource reads the parquet data plane "
-                f"only and {legacy[0]} is pre-columnar; compact the "
-                "table to parquet first (read_committed still reads "
-                "legacy files)"
-            )
-        sj = json.dumps(self.schema.jsonValue())
-        out: list[InputPartition] = []
-        for name in sorted(live):
-            vf, stats, specs, pranges, n_rows = live[name]
-            if n_rows == 0:
-                continue  # recorded empty: provably nothing to scan
-            if self._excluded(stats, specs, pranges, self._pushed):
-                continue
-            applicable = [
-                (cols, [os.path.join(staging, t) for t in files])
-                for vt, cols, files in tombs
-                if vt > vf
-            ]
-            out.append(
-                _FileScan(os.path.join(staging, name), sj, applicable)
-            )
-        return out
-
-    def read(self, partition: _FileScan | None):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        if partition is None:
-            # an empty partitions() list (empty table, or every file
-            # pruned by the pushed filters) reaches the task as ONE
-            # None partition — Spark's empty-scan convention
-            return
-        want = to_arrow_schema(
-            StructType.fromJson(json.loads(partition.schema_json))
-        )
-        # tombstone key tables, cast to the read schema's key types so
-        # the anti-join compares like types (a delete keyed on an int
-        # frame still removes rows of a bigint column)
-        keysets: list[tuple[list[str], pa.Table]] = []
-        for cols, files in partition.tombs:
-            tables = [pq.read_table(f, columns=cols) for f in files]
-            t = pa.concat_tables(tables) if tables else None
-            if t is None or t.num_rows == 0:
-                continue
-            t = t.cast(
-                pa.schema([pa.field(c, want.field(c).type) for c in cols])
-            )
-            keysets.append((cols, t))
-        pf = pq.ParquetFile(partition.file_path)
-        for batch in pf.iter_batches(columns=want.names):
-            tbl = pa.Table.from_batches(
-                [
-                    pa.record_batch(
-                        [batch.column(f.name).cast(f.type) for f in want],
-                        schema=want,
-                    )
-                ]
-            )
-            for kcols, keys in keysets:
-                tbl = tbl.join(keys, keys=kcols, join_type="left anti")
-            for out in tbl.to_batches():
-                if out.num_rows:
-                    yield out
-
-
-class ManifestBatchReaderPushdown(ManifestBatchReader):
-    """The pushdown-enabled variant, selected by
-    ``.option('pushdown', 'true')`` — separate because Spark 4.1
-    refuses any Python reader that implements pushFilters under the
-    default ``spark.sql.python.filterPushdown.enabled=false``."""
-
-    def pushFilters(self, filters):
-        import datetime as _dt
-
-        for f in filters:
-            if (
-                isinstance(
-                    f,
-                    (
-                        EqualTo,
-                        GreaterThan,
-                        GreaterThanOrEqual,
-                        LessThan,
-                        LessThanOrEqual,
-                    ),
-                )
-                and len(f.attribute) == 1
-                and isinstance(
-                    f.value, (int, float, str, _dt.datetime, _dt.date)
-                )
-                and not isinstance(f.value, bool)
-            ):
-                self._pushed.append(
-                    (f.attribute[0], type(f).__name__, f.value)
-                )
-        # everything is handed back: Spark re-applies the row filters,
-        # the recorded comparisons only prune the file list
-        return filters
-
-
-class ManifestSinkDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return "manifest_sink"
-
-    def schema(self) -> StructType:
-        # table schema DISCOVERED from the manifest log (readers never
-        # declare it); honors versionAsOf/tag so a time-travel read
-        # binds the schema AS OF that snapshot
-        sch = table_schema(
-            self.options.get("path"), _resolve_as_of(self.options)
-        )
-        if sch is None:
-            raise ValueError(
-                "manifest table has no recorded schema; cannot read"
-            )
-        return sch
-
-    def reader(self, schema: StructType) -> ManifestBatchReader:
-        if str(self.options.get("pushdown", "")).lower() == "true":
-            return ManifestBatchReaderPushdown(self.options, schema)
-        return ManifestBatchReader(self.options, schema)
-
-    def writer(self, schema: StructType, overwrite: bool) -> ManifestWriter:
-        return ManifestWriter(self.options, overwrite, schema)
-
-    def streamReader(self, schema: StructType) -> ManifestStreamReader:
-        return ManifestStreamReader(self.options, schema)
-
 
 def _list_manifests(path: str) -> list[tuple[int, str]]:
     """(version, filename) for every committed manifest. Legacy
@@ -1413,10 +912,9 @@ def _list_manifests(path: str) -> list[tuple[int, str]]:
 # In-process parsed-log cache.
 #
 # Every driver-side planning step — read planning, schema resolution,
-# pruning, metadata tables, field-id derivation, the streaming head's
-# latestOffset poll — funnels through _log()/_parse_all(). Without a
-# cache each call re-opens and re-JSON-parses the latest checkpoint
-# bundle PLUS the log tail; a lifecycle operation makes dozens of such
+# pruning, metadata tables — funnels through _log()/_parse_all().
+# Without a cache each call re-opens and re-JSON-parses the latest
+# checkpoint bundle PLUS the log tail; a lifecycle operation makes dozens of such
 # calls, so driver work grows quadratically in log depth per session.
 # The cache makes each call O(#log files) stat()s instead: a scandir
 # fingerprint of every manifest + checkpoint file's (name, mtime_ns,
@@ -1484,8 +982,8 @@ def _scan_log(path: str) -> list[tuple[int, str, dict | None]]:
     pass behind :func:`_log` and :func:`_parse_all`, cached per
     process and validated by :func:`_log_fingerprint` on every call.
     ``None`` marks an unreadable entry (an in-flight claim mid-write,
-    a corrupt file) — the in-flight signal the streaming head and the
-    claimer derivation consume."""
+    a corrupt file) — the in-flight signal the claimer derivation
+    consumes."""
     fp = _log_fingerprint(path)
     if fp is None:
         return []
@@ -1575,10 +1073,8 @@ def _extend_scan(
 
 def _parse_all(path: str) -> tuple[dict[int, str], dict[int, dict]]:
     """ONE parse pass over the manifest log: (version → filename,
-    version → parsed manifest for the readable subset). The shared
-    substrate of the in-flight derivation and the streaming head, so
-    a latestOffset poll costs one cached :func:`_scan_log` pass, not
-    two parses."""
+    version → parsed manifest for the readable subset), the substrate
+    of the in-flight derivation."""
     scan = _scan_log(path)
     files = {version: entry for version, entry, _m in scan}
     last: dict[int, dict | None] = {}
@@ -1600,39 +1096,6 @@ def committed_versions(path: str) -> list[int]:
     claimed-file listing (vacuum's bookkeeping axis). Versions behind
     a later RESTORE stay listed — they remain time-travel targets."""
     return sorted(v for v, _m in _log(path, raw=True))
-
-
-def _stream_visible_head(path: str) -> int:
-    """The largest version a streaming tail may deliver THROUGH: walk
-    claimed versions ascending and stop before the first one that is
-    not yet main-readable — an in-flight commit (claimed, content not
-    yet written) or an unpublished branch commit (could become visible
-    at exactly this version when published). Either would otherwise be
-    skipped by the checkpoint and its rows lost when it completes; the
-    stream waits instead (Delta's not-yet-readable-gap rule). Version
-    holes with NO file AND no live claim (abandoned branches, vacuumed
-    stale claims) are safe to walk over: a hole BELOW a higher claimed
-    version is permanent (commit always claims above the observed
-    max), and a freed TOP version can only be reclaimed while the head
-    still holds below it — nothing was ever delivered past it either
-    way. The in-flight signal is the
-    :meth:`VersionClaimer.in_flight_versions` derivation — (claims ∪
-    on-disk) − readable — inlined over ONE shared parse pass
-    (:func:`_parse_all`), so a claimer whose claims live outside the
-    filesystem (conditional PUT) still holds the head below its
-    file-less claims and a latestOffset poll parses each manifest
-    exactly once."""
-    files, parsed = _parse_all(path)
-    claimed = set(_VERSION_CLAIMER.claimed_versions(path))
-    in_flight = (claimed | set(files)) - set(parsed)
-    head = 0
-    for version in sorted(claimed | set(files)):
-        if version in in_flight:
-            break  # commit in flight: not yet readable — wait
-        if parsed[version].get("branch") is not None:
-            break  # staged WAP commit: may publish at this version — wait
-        head = version
-    return head
 
 
 def _read_files(
@@ -1871,7 +1334,7 @@ def delete_where(
     opts = {"path": path, "kind": "delete", "commit_token": token}
     if branch is not None:
         opts["branch"] = branch
-    writer = ManifestWriter(opts, overwrite=False, schema=keys.schema)
+    writer = ManifestWriter(opts, schema=keys.schema)
     batches = arrow_table(keys.collect(), keys.schema).to_batches()
     writer.commit([writer.write(iter(batches))])
     return _committed_entry_of(path, token, branch)[0]
@@ -1990,8 +1453,7 @@ def restore_table(path: str, version: int) -> int:
     pre-restore history unchanged — restore never rewrites the past,
     it appends a new head. History (``table_history``) shows the
     restore event; :func:`read_changes` emits its row-level symmetric
-    diff; the streaming tail treats it like every other non-append
-    snapshot (restart-from-snapshot rule); vacuum refuses snapshot
+    diff; vacuum refuses snapshot
     expiry that would cut a retained restore's target out from under
     it. Restoring PAST a restore chains correctly (the target's own
     effective state is what returns).
@@ -2467,7 +1929,7 @@ def _materialize_tombstones(path: str, schema: StructType) -> int:
     }
     if spec is not None:
         opts["partition_transform"] = json.dumps(spec)
-    writer = ManifestWriter(opts, overwrite=False, schema=schema)
+    writer = ManifestWriter(opts, schema=schema)
     msgs = []
     for name, mask in sorted(hits.items()):
         rest = _read_staged(path, name, asch).filter(pc.invert(mask))
@@ -2540,8 +2002,8 @@ def maintain(
     }
     if dry_run or report["noop"]:
         return report
+    struct = table_schema(path) or _as_struct(schema)
     if had_tombstones:
-        struct = table_schema(path) or _as_struct(schema)
         report["versions_written"].append(_materialize_tombstones(path, struct))
         report["actions"].append("materialize")
         flagged = flagged_ranges()
@@ -2549,7 +2011,7 @@ def maintain(
         res = compact_range(
             spark,
             path,
-            schema,
+            struct,
             policy.col,
             r["range_lo"],
             r["range_hi"],
@@ -3278,8 +2740,8 @@ def publish_branch(path: str, branch: str) -> list[int]:
     history into main's past (rejected, as Iceberg rejects
     non-fast-forward refs). Returns the published versions.
 
-    The WAP loop this implements: write to the branch (the same
-    exactly-once writer with ``.option('branch', name)``), AUDIT the
+    The WAP loop this implements: write to the branch
+    (``save_manifest(df, path, branch=name)``), AUDIT the
     branch read (``read_committed(..., branch=name)`` sees main + the
     staged commits while main readers see nothing), then publish on a
     green audit or :func:`abandon_branch` on a red one."""
@@ -3348,8 +2810,8 @@ def abandon_branch(path: str, branch: str) -> int:
     if staged and not _VERSION_CLAIMER.can_release():
         # fail BEFORE any destructive step: removing manifests and
         # then failing to release their store claims would leave
-        # permanent phantom in-flight versions (stream head blocked,
-        # orphan GC disarmed forever)
+        # permanent phantom in-flight versions (orphan GC disarmed
+        # forever)
         raise NotImplementedError(
             "the installed VersionClaimer cannot release claims; "
             "abandon_branch needs a delete-capable claimer"
@@ -3545,24 +3007,17 @@ def _partial_rewrite_guards(log: list, what: str) -> None:
     replace_where): a scoped rewrite retains files verbatim, so it is
     only sound when nothing since the last full rewrite re-interprets
     them. Unmaterialized delete/merge tombstones would be RESURRECTED
-    in retained files (tombstones stop applying at a rewrite), and a
-    partition-spec alter leaves retained files' ranges under the old
-    spec. Both raise, naming the full-rewrite alternative."""
+    in retained files (tombstones stop applying at a rewrite), so they
+    raise, naming the full-rewrite alternative. A partition-spec alter
+    does not: :func:`_retain_entries` carries a retained file's range
+    only when it was recorded under the declared spec, and
+    :func:`plan_pruned_files` keeps every file without a range."""
     if _tombstones_since_last_rewrite(log):
         raise ValueError(
             f"{what} over unmaterialized delete/merge "
             "snapshots would resurrect tombstoned rows in retained "
             "files; run a full compact_snapshots() first to "
             "materialize them"
-        )
-    if any(
-        m.get("kind") == "alter" and "partition_spec" in m
-        for _v, m in log[_last_rewrite_index(log) + 1 :]
-    ):
-        raise ValueError(
-            f"{what} cannot cross a partition-spec alter (retained "
-            "files carry the old spec's ranges); run a full "
-            "compact_snapshots() first to re-partition them"
         )
 
 
@@ -4092,67 +3547,21 @@ def register_bucketed_table(
     return table_name
 
 
-# Spark's Python-DataSource registry scopes LOOKUP per-session but the
-# name-uniqueness check JVM-wide (a sibling session can neither read
-# nor re-register a name) — so, like the POS simulator source, each
-# session registers the sink under a session-scoped name, keyed by the
-# never-reused sessionUUID.
-_SINK_REGISTERED: dict[str, str] = {}
-
-
-def ensure_manifest_sink(spark: SparkSession) -> str:
-    """Register the manifest sink on ``spark`` (idempotent) and return
-    the format name to write through on that session.
-
-    Also pins ``spark`` as the JVM thread's ACTIVE session: the batch
-    ``DataFrameWriter`` resolves Python data sources against the
-    active session's manager, not the DataFrame's own session — on a
-    sibling ``newSession()`` the scoped name is otherwise invisible to
-    the write path even though reads resolve fine (probed empirically
-    on Spark 4.1; streaming foreachBatch writes are unaffected because
-    the micro-batch thread activates its own clone)."""
-    uid = spark._jsparkSession.sessionUUID()
-    fmt = _SINK_REGISTERED.get(uid)
-    if fmt is None:
-        fmt = "manifest_sink_" + uid.replace("-", "")
-        scoped = type(
-            "ManifestSinkScoped",
-            (ManifestSinkDataSource,),
-            {"name": classmethod(lambda cls, _n=fmt: _n)},
-        )
-        spark.dataSource.register(scoped)
-        _SINK_REGISTERED[uid] = fmt
-    try:
-        spark._jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(
-            spark._jsparkSession
-        )
-    except Exception:  # noqa: BLE001 — non-classic shells lack the hook
-        pass
-    return fmt
-
-
 def save_manifest(df: DataFrame, path: str, **options) -> dict:
-    """Fast-path manifest commit: byte-identical write semantics to
-    ``df.write.format(ensure_manifest_sink(spark)).options(...).save()``
-    — the same :class:`ManifestWriter` runs in each task (one staging
-    file per partition, same zone maps/transform ranges), and
-    the same driver-side :meth:`ManifestWriter.commit` claims the next
-    version — minus the Python-DataSource write protocol's
-    per-statement planner round-trips (datasource lookup + writer
-    instantiation worker + commit worker). The data job is one plain
-    ``mapInArrow`` whose single output row per task is the pickled
-    commit message; measured at gate scale this halves the fixed cost
-    of a small commit, and lifecycle proofs are built from dozens of
-    them.
+    """Commit ``df`` to the manifest table at ``path`` — the table's
+    write path. One ``mapInArrow`` job runs :meth:`ManifestWriter.write`
+    in each task (one staging file per non-empty partition, with its
+    zone map and transform ranges) and returns the pickled commit
+    message as the task's single output row; the driver then runs
+    :meth:`ManifestWriter.commit`, which claims the next version.
 
-    ``options`` take the exact option names/values of the DataSource
-    API (``kind``, ``merge_keys``, ``branch``, ...).
+    ``options`` are :class:`ManifestWriter`'s (``kind``,
+    ``merge_keys``, ``branch``, ...); values are passed as strings.
 
-    Failure semantics: a failed job leaves unreferenced staging files
-    (the DataSource path's best-effort ``abort`` cleanup does not run);
+    Failure semantics: a failed job leaves unreferenced staging files;
     they are invisible to every reader and collected by
     ``vacuum_snapshots`` orphan GC — the same residue a crashed driver
-    leaves on either path.
+    leaves.
 
     Returns ``{"n_rows", "n_files"}`` of the commit, straight from the
     task commit messages — the caller-visible row count of what was
@@ -4163,7 +3572,6 @@ def save_manifest(df: DataFrame, path: str, **options) -> dict:
 
     writer = ManifestWriter(
         {"path": path, **{k: str(v) for k, v in options.items()}},
-        overwrite=False,
         schema=df.schema,
     )
 
@@ -4200,9 +3608,9 @@ def vacuum_snapshots(
     actions:
 
     1. **Orphan GC** (``delete_orphans``): staging files referenced by
-       NO committed manifest — the residue of failed attempts whose
-       ``abort`` never ran — are deleted, and so are the manifest temp
-       files of commits that failed before their commit point. Run it
+       NO committed manifest — the residue of failed attempts — are
+       deleted, and so are the manifest temp files of commits that
+       failed before their commit point. Run it
        in a maintenance window (no in-flight writers), the same
        precondition Delta's retention check encodes.
     2. **Snapshot expiry**: every manifest with version < ``keep_from``
@@ -4237,12 +3645,11 @@ def vacuum_snapshots(
     Stale-claim GC (``stale_claim_ttl_s``): a writer that crashes
     BETWEEN the version claim and the atomic content replace leaves a
     permanently-empty claimed manifest — a version that will never
-    become readable, invisible to history, holding the streaming tail
-    and the in-flight guard forever. An unparseable claim OLDER than
-    the TTL (far beyond any plausible commit duration; Delta's
+    become readable, invisible to history, holding the in-flight
+    guard forever. An unparseable claim OLDER than the TTL (far beyond any plausible commit duration; Delta's
     equivalent knob is its log-retry timeout) is deleted
     (``stale_claims_deleted``), turning it into a permanent version
-    hole that readers, streams, and history all already skip — and its
+    hole that readers and history already skip — and its
     never-referenced staging files become collectible orphans on the
     next pass. Claims younger than the TTL still count as in-flight.
 

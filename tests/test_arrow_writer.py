@@ -1,9 +1,8 @@
-"""The manifest writer's Arrow data plane (round-13 optimization):
-``ManifestWriter`` is a ``DataSourceArrowWriter`` — write tasks consume
-Arrow record batches straight from the JVM instead of pickled Rows —
-and every manifest artifact the old row path produced (zone maps, null
-counts, hidden-partition ranges, tuple histograms) is preserved
-bit-for-bit in meaning."""
+"""The manifest writer's Arrow data plane: ``ManifestWriter.write``
+consumes Arrow record batches (straight from the JVM inside
+``save_manifest``'s ``mapInArrow`` task, or from the driver) instead of
+pickled Rows, and every manifest artifact (zone maps, null counts,
+hidden-partition ranges, tuple histograms) is exact."""
 
 from __future__ import annotations
 
@@ -11,32 +10,51 @@ import datetime as dt
 import json
 import os
 
-import pytest
-
 from olap_project_spark.export.manifest_sink import (
-    ManifestSinkDataSource,
     ManifestWriter,
     read_committed,
+    save_manifest,
 )
 
 
-@pytest.fixture(scope="module")
-def registered(spark):
-    try:
-        spark.dataSource.register(ManifestSinkDataSource)
-    except Exception:  # noqa: BLE001 — already registered this session
-        pass
-    return spark
+def test_writer_is_arrow_native(tmp_path):
+    """Record batches fed to ``write`` on the driver, with no Spark
+    job, land as one staged parquet file whose rows and zone map are
+    exact; a batch in another column order is aligned by name."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
 
-
-def test_writer_is_arrow_native():
-    from pyspark.sql.datasource import DataSourceArrowWriter
-
-    assert issubclass(ManifestWriter, DataSourceArrowWriter)
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("v", T.StringType()),
+        ]
+    )
+    path = str(tmp_path / "native")
+    batches = [
+        pa.record_batch(
+            [pa.array([3, 1], pa.int64()), pa.array(["c", "a"])],
+            names=["k", "v"],
+        ),
+        pa.record_batch(
+            [pa.array(["z"]), pa.array([7], pa.int64())], names=["v", "k"]
+        ),
+    ]
+    msg = ManifestWriter({"path": path}, schema=schema).write(iter(batches))
+    assert msg.n_rows == 3
+    assert msg.col_stats == {"k": [1, 7], "v": ["a", "z"]}
+    staged = pq.read_table(os.path.join(path, "_staging", msg.file_name))
+    assert staged.column_names == ["k", "v"]
+    assert staged.to_pylist() == [
+        {"k": 3, "v": "c"},
+        {"k": 1, "v": "a"},
+        {"k": 7, "v": "z"},
+    ]
 
 
 def test_mixed_type_write_round_trips_with_exact_metadata(
-    registered, tmp_path
+    spark, tmp_path
 ):
     """One write through the Arrow path carrying every tracker at once:
     ints (zone map), strings (zone map), a
@@ -56,17 +74,12 @@ def test_mixed_type_write_round_trips_with_exact_metadata(
         for i in range(200)
     ]
     path = str(tmp_path / "aw")
-    (
-        registered.createDataFrame(rows, schema)
-        .coalesce(1)
-        .write.format("manifest_sink")
-        .option("path", path)
-        .option(
-            "partition_transform",
-            json.dumps({"kind": "bucket", "arg": 4, "col": "k"}),
-        )
-        .mode("append")
-        .save()
+    save_manifest(
+        spark.createDataFrame(rows, schema).coalesce(1),
+        path,
+        partition_transform=json.dumps(
+            {"kind": "bucket", "arg": 4, "col": "k"}
+        ),
     )
     manifests = [e for e in os.listdir(path) if e.startswith("_manifest-")]
     assert len(manifests) == 1
@@ -89,7 +102,7 @@ def test_mixed_type_write_round_trips_with_exact_metadata(
     )
     assert sum(hist.values()) == 200 and len(hist) <= 4
     # data plane: timestamps epoch-exact, nulls preserved
-    back = read_committed(registered, path, schema)
+    back = read_committed(spark, path, schema)
     got = sorted(
         (r["k"], r["txt"], r["maybe"], r["ts"]) for r in back.collect()
     )
@@ -101,22 +114,16 @@ def test_mixed_type_write_round_trips_with_exact_metadata(
     footer = pq.ParquetFile(staged).metadata.metadata or {}
     assert b"ARROW:schema" not in footer
     assert (
-        registered.read.parquet(staged).schema
-        == registered.createDataFrame(rows, schema).schema
+        spark.read.parquet(staged).schema
+        == spark.createDataFrame(rows, schema).schema
     )
 
 
-def test_multi_partition_write_one_file_per_task(registered, tmp_path):
+def test_multi_partition_write_one_file_per_task(spark, tmp_path):
     path = str(tmp_path / "aw_parts")
-    (
-        registered.createDataFrame(
-            [(i, f"v{i}") for i in range(1000)], "k bigint, v string"
-        )
-        .repartition(4)
-        .write.format("manifest_sink")
-        .option("path", path)
-        .mode("append")
-        .save()
+    rows = [(i, f"v{i}") for i in range(1000)]
+    save_manifest(
+        spark.createDataFrame(rows, "k bigint, v string").repartition(4), path
     )
     m = json.load(
         open(

@@ -7,9 +7,6 @@ hidden-partitioning preservation and time travel.
 Reference analogue: the loader's only write modes are append and
 wholesale WRITE_TRUNCATE (bigquery_update_scheduler.py:247-260)."""
 
-import os
-import shutil
-
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -17,11 +14,12 @@ from pyspark.sql import types as T
 from olap_project_spark.export.manifest_sink import (
     committed_versions,
     delete_where,
-    ensure_manifest_sink,
     overwrite_table,
     plan_pruned_files,
     read_committed,
+    read_pruned,
     replace_where,
+    save_manifest,
     set_partition_spec,
     table_files,
     write_partitioned,
@@ -40,20 +38,20 @@ def tbl(spark, tmp_path):
     """Three single-file appends with DISJOINT k ranges (0-99,
     100-199 + one NULL row, 200-299) so zone-map pruning is decisive."""
     path = str(tmp_path / "tbl")
-    fmt = ensure_manifest_sink(spark)
     for lo, hi, with_null in ((0, 100, False), (100, 200, True), (200, 300, False)):
         rows = [(i, i * 10) for i in range(lo, hi)]
         if with_null:
             rows.append((None, 777))
-        (
-            spark.createDataFrame(rows, SCH)
-            .coalesce(1)
-            .write.format(fmt)
-            .option("path", path)
-            .mode("append")
-            .save()
-        )
+        save_manifest(spark.createDataFrame(rows, SCH).coalesce(1), path)
     return path
+
+
+def _key(row):
+    return (row[0] is None, row[0] or 0)
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=_key)
 
 
 class TestReplaceWhere:
@@ -129,11 +127,23 @@ class TestReplaceWhere:
         with pytest.raises(ValueError, match="compact_snapshots"):
             replace_where(spark, tbl, SCH, "k", 100, 199, repl)
 
-    def test_rejects_pending_spec_alter(self, spark, tbl):
+    def test_replaces_across_pending_spec_alter(self, spark, tbl):
+        # the retained files were written under no spec, so they carry
+        # no transform range and every pruned read keeps them
         set_partition_spec(tbl, ("k", "truncate", 100))
         repl = spark.createDataFrame([(100, 0)], SCH)
-        with pytest.raises(ValueError, match="partition-spec alter"):
-            replace_where(spark, tbl, SCH, "k", 100, 199, repl)
+        replace_where(spark, tbl, SCH, "k", 100, 199, repl)
+        want = (
+            [(i, i * 10) for i in range(100)]
+            + [(100, 0), (None, 777)]
+            + [(i, i * 10) for i in range(200, 300)]
+        )
+        assert _rows(read_committed(spark, tbl, SCH)) == sorted(want, key=_key)
+        for lo, hi in ((0, 99), (100, 199), (150, 250)):
+            got = read_pruned(spark, tbl, SCH, "k", lo, hi)
+            assert _rows(got.filter(F.col("k").between(lo, hi))) == [
+                r for r in want if r[0] is not None and lo <= r[0] <= hi
+            ]
 
     def test_preserves_hidden_partitioning(self, spark, tmp_path):
         path = str(tmp_path / "part")

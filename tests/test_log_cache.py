@@ -13,11 +13,8 @@ from __future__ import annotations
 import json
 import os
 
-import pytest
-
 from olap_project_spark.export.manifest_sink import (
     _SCAN_STATS,
-    ManifestSinkDataSource,
     _log,
     _parse_all,
     checkpoint_log,
@@ -25,6 +22,7 @@ from olap_project_spark.export.manifest_sink import (
     delete_where,
     publish_branch,
     read_committed,
+    save_manifest,
     table_schema,
     vacuum_snapshots,
 )
@@ -32,33 +30,17 @@ from olap_project_spark.export.manifest_sink import (
 SCHEMA = "k int, v string"
 
 
-@pytest.fixture(scope="module")
-def registered(spark):
-    try:
-        spark.dataSource.register(ManifestSinkDataSource)
-    except Exception:  # noqa: BLE001 — already registered this session
-        pass
-    return spark
-
-
 def _write(spark, path, rows, branch=None):
-    w = (
-        spark.createDataFrame(rows, SCHEMA)
-        .coalesce(1)
-        .write.format("manifest_sink")
-        .option("path", path)
-    )
-    if branch:
-        w = w.option("branch", branch)
-    w.mode("append").save()
+    df = spark.createDataFrame(rows, SCHEMA).coalesce(1)
+    save_manifest(df, path, **({"branch": branch} if branch else {}))
 
 
 def _stats():
     return dict(_SCAN_STATS)
 
 
-def test_repeat_reads_hit_cache(registered, tmp_path):
-    spark, path = registered, str(tmp_path / "t")
+def test_repeat_reads_hit_cache(spark, tmp_path):
+    spark, path = spark, str(tmp_path / "t")
     _write(spark, path, [(1, "a"), (2, "b")])
     clear_log_cache()
     first = _log(path)
@@ -77,12 +59,12 @@ def test_repeat_reads_hit_cache(registered, tmp_path):
     assert [v for v, _ in again] == [v for v, _ in first]
 
 
-def test_new_commit_extends_not_rebuilds(registered, tmp_path):
+def test_new_commit_extends_not_rebuilds(spark, tmp_path):
     """Append-only growth takes the INCREMENTAL path: the new manifest
     is parsed and appended to the cached list — one file open, not a
     full re-parse — turning a lifecycle session's write→plan loop
     from O(log²) total parse work into O(log)."""
-    spark, path = registered, str(tmp_path / "t")
+    spark, path = spark, str(tmp_path / "t")
     _write(spark, path, [(1, "a")])
     clear_log_cache()
     assert len(_log(path)) == 1
@@ -98,11 +80,11 @@ def test_new_commit_extends_not_rebuilds(registered, tmp_path):
     ) == [(1, "a"), (2, "b")]
 
 
-def test_in_place_publish_invalidates(registered, tmp_path):
+def test_in_place_publish_invalidates(spark, tmp_path):
     """publish_branch rewrites _manifest-N.json IN PLACE (same
     filename) — the mutation shape a filename-set fingerprint would
     miss; the stat fingerprint (mtime_ns, size) must catch it."""
-    spark, path = registered, str(tmp_path / "t")
+    spark, path = spark, str(tmp_path / "t")
     _write(spark, path, [(1, "a")])
     _write(spark, path, [(2, "b")], branch="audit")
     clear_log_cache()
@@ -116,8 +98,8 @@ def test_in_place_publish_invalidates(registered, tmp_path):
     ) == [(1, "a"), (2, "b")]
 
 
-def test_checkpoint_and_vacuum_invalidate(registered, tmp_path):
-    spark, path = registered, str(tmp_path / "t")
+def test_checkpoint_and_vacuum_invalidate(spark, tmp_path):
+    spark, path = spark, str(tmp_path / "t")
     for i in range(3):
         _write(spark, path, [(i, f"v{i}")])
     delete_where(spark, path, spark.createDataFrame([(0,)], "k int"))
@@ -136,11 +118,11 @@ def test_checkpoint_and_vacuum_invalidate(registered, tmp_path):
     )
 
 
-def test_external_file_mutation_invalidates(registered, tmp_path):
+def test_external_file_mutation_invalidates(spark, tmp_path):
     """A writer in ANOTHER process has no in-process hook — the
     fingerprint alone must see its commit. Simulate by writing a
     manifest file directly."""
-    spark, path = registered, str(tmp_path / "t")
+    spark, path = spark, str(tmp_path / "t")
     _write(spark, path, [(1, "a")])
     clear_log_cache()
     assert len(_log(path)) == 1
@@ -154,8 +136,8 @@ def test_external_file_mutation_invalidates(registered, tmp_path):
     assert len(_log(path)) == 2
 
 
-def test_vacuum_removal_invalidates(registered, tmp_path):
-    spark, path = registered, str(tmp_path / "t")
+def test_vacuum_removal_invalidates(spark, tmp_path):
+    spark, path = spark, str(tmp_path / "t")
     for i in range(3):
         _write(spark, path, [(i, f"v{i}")])
     # compaction then vacuum drops superseded manifests

@@ -15,7 +15,6 @@ import pytest
 
 from olap_project_spark.export.manifest_sink import (
     MaintenancePolicy,
-    ManifestSinkDataSource,
     checkpoint_log,
     compact_snapshots,
     delete_where,
@@ -24,6 +23,7 @@ from olap_project_spark.export.manifest_sink import (
     publish_branch,
     read_committed,
     restore_table,
+    save_manifest,
     table_schema,
     vacuum_snapshots,
 )
@@ -31,25 +31,9 @@ from olap_project_spark.export.manifest_sink import (
 SCHEMA = "k int, v string"
 
 
-@pytest.fixture(scope="module")
-def registered(spark):
-    try:
-        spark.dataSource.register(ManifestSinkDataSource)
-    except Exception:  # noqa: BLE001 — already registered this session
-        pass
-    return spark
-
-
 def _write(spark, path, rows, branch=None):
-    w = (
-        spark.createDataFrame(rows, SCHEMA)
-        .coalesce(1)
-        .write.format("manifest_sink")
-        .option("path", path)
-    )
-    if branch:
-        w = w.option("branch", branch)
-    w.mode("append").save()
+    df = spark.createDataFrame(rows, SCHEMA).coalesce(1)
+    save_manifest(df, path, **({"branch": branch} if branch else {}))
 
 
 def _state(spark, path):
@@ -66,23 +50,23 @@ def _checkpoints(path):
 
 
 class TestCheckpointSemantics:
-    def test_reads_identical_before_and_after(self, registered, tmp_path):
+    def test_reads_identical_before_and_after(self, spark, tmp_path):
         path = str(tmp_path / "t")
         for i in range(5):
-            _write(registered, path, [(i, f"r{i}")])
+            _write(spark, path, [(i, f"r{i}")])
         delete_where(
-            registered, path, registered.createDataFrame([(1,)], "k int")
+            spark, path, spark.createDataFrame([(1,)], "k int")
         )
-        before = _state(registered, path)
+        before = _state(spark, path)
         ck = checkpoint_log(path)
         assert ck["version"] == 6 and ck["bundled"] == 6
         assert os.path.exists(
             os.path.join(path, "_logcheckpoint-000006.json")
         )
-        assert _state(registered, path) == before
+        assert _state(spark, path) == before
         # time travel below the checkpoint still answers from the cache
         assert (
-            read_committed(registered, path, table_schema(path), as_of=2)
+            read_committed(spark, path, table_schema(path), as_of=2)
             .count()
             == 2
         )
@@ -90,12 +74,12 @@ class TestCheckpointSemantics:
         with pytest.raises(ValueError, match="tombstones"):
             metadata_aggregate(path)  # unmaterialized delete: still strict
 
-    def test_appends_after_checkpoint_visible(self, registered, tmp_path):
+    def test_appends_after_checkpoint_visible(self, spark, tmp_path):
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a")])
+        _write(spark, path, [(1, "a")])
         checkpoint_log(path)
-        _write(registered, path, [(2, "b")])
-        assert _state(registered, path) == [(1, "a"), (2, "b")]
+        _write(spark, path, [(2, "b")])
+        assert _state(spark, path) == [(1, "a"), (2, "b")]
         # idempotent: nothing new below the stable head -> no-op file
         ck2 = checkpoint_log(path)
         assert ck2["version"] == 2
@@ -103,88 +87,88 @@ class TestCheckpointSemantics:
         assert ck3["version"] is None
 
     def test_branch_commits_stay_out_and_publish_correctly(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a")])
+        _write(spark, path, [(1, "a")])
         checkpoint_log(path)
-        _write(registered, path, [(9, "staged")], branch="audit")
+        _write(spark, path, [(9, "staged")], branch="audit")
         # the staged commit postdates the checkpoint: main blind to it
-        assert _state(registered, path) == [(1, "a")]
+        assert _state(spark, path) == [(1, "a")]
         checkpoint_log(path)  # stable head excludes the branch commit
         publish_branch(path, "audit")
-        assert _state(registered, path) == [(1, "a"), (9, "staged")]
+        assert _state(spark, path) == [(1, "a"), (9, "staged")]
 
-    def test_restore_and_vacuum_compose(self, registered, tmp_path):
+    def test_restore_and_vacuum_compose(self, spark, tmp_path):
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a")])
-        _write(registered, path, [(2, "b")])
+        _write(spark, path, [(1, "a")])
+        _write(spark, path, [(2, "b")])
         checkpoint_log(path)
         restore_table(path, 1)
-        assert _state(registered, path) == [(1, "a")]
-        compact_snapshots(registered, path, None)
+        assert _state(spark, path) == [(1, "a")]
+        compact_snapshots(spark, path, None)
         vacuum_snapshots(path)
         # expired versions never resurrect from the cache (the listing
         # drives reads), and the post-vacuum state is intact
-        assert _state(registered, path) == [(1, "a")]
+        assert _state(spark, path) == [(1, "a")]
 
     def test_corrupt_checkpoint_degrades_to_files(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a")])
+        _write(spark, path, [(1, "a")])
         ck = checkpoint_log(path)
         f = os.path.join(path, f"_logcheckpoint-{ck['version']:06d}.json")
         with open(f, "w") as fh:
             fh.write("{not json")
-        assert _state(registered, path) == [(1, "a")]
+        assert _state(spark, path) == [(1, "a")]
 
-    def test_supersession_keeps_two_generations(self, registered, tmp_path):
+    def test_supersession_keeps_two_generations(self, spark, tmp_path):
         """checkpoint_log retains the newest TWO bundles (keep=2): the
         previous generation survives one churn so a reader that listed
         the directory just before the churn still opens a live file.
         A third churn retires the oldest."""
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a")])
+        _write(spark, path, [(1, "a")])
         checkpoint_log(path)
-        _write(registered, path, [(2, "b")])
+        _write(spark, path, [(2, "b")])
         checkpoint_log(path)
         assert _checkpoints(path) == [
             "_logcheckpoint-000001.json",
             "_logcheckpoint-000002.json",
         ]
-        _write(registered, path, [(3, "c")])
+        _write(spark, path, [(3, "c")])
         checkpoint_log(path)
         assert _checkpoints(path) == [
             "_logcheckpoint-000002.json",
             "_logcheckpoint-000003.json",
         ]
         # keep=1 restores the old retire-immediately behavior
-        _write(registered, path, [(4, "d")])
+        _write(spark, path, [(4, "d")])
         checkpoint_log(path, keep=1)
         assert _checkpoints(path) == ["_logcheckpoint-000004.json"]
 
     def test_maintain_writes_checkpoint_on_policy(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         path = str(tmp_path / "t")
         for i in range(3):
-            _write(registered, path, [(i, f"r{i}")])
+            _write(spark, path, [(i, f"r{i}")])
         delete_where(
-            registered, path, registered.createDataFrame([(0,)], "k int")
+            spark, path, spark.createDataFrame([(0,)], "k int")
         )
         report = maintain(
-            registered,
+            spark,
             path,
             None,
             MaintenancePolicy(col="k", vacuum=False, checkpoint=True),
         )
         assert any(a.startswith("checkpoint@") for a in report["actions"])
         assert report["checkpoint"]["version"] is not None
-        assert _state(registered, path) == [(1, "r1"), (2, "r2")]
+        assert _state(spark, path) == [(1, "r1"), (2, "r2")]
 
     def test_racing_retirement_falls_back_to_previous_bundle(
-        self, registered, tmp_path, monkeypatch
+        self, spark, tmp_path, monkeypatch
     ):
         """A reader that raced one checkpoint churn (the bundle it
         listed vanished before the open) plans from the RETAINED
@@ -197,16 +181,16 @@ class TestCheckpointSemantics:
 
         path = str(tmp_path / "t")
         for i in range(3):
-            _write(registered, path, [(i, f"r{i}")])
+            _write(spark, path, [(i, f"r{i}")])
         checkpoint_log(path)  # gen A: bundles v1-3
-        _write(registered, path, [(3, "r3")])
+        _write(spark, path, [(3, "r3")])
         checkpoint_log(path)  # gen B: bundles v1-4; A retained (keep=2)
-        _write(registered, path, [(4, "r4")])  # tail: v5
+        _write(spark, path, [(4, "r4")])  # tail: v5
         assert _checkpoints(path) == [
             "_logcheckpoint-000003.json",
             "_logcheckpoint-000004.json",
         ]
-        expected = _state(registered, path)
+        expected = _state(spark, path)
 
         opens: list[str] = []
         real_open = builtins.open
@@ -238,33 +222,33 @@ class TestCheckpointSemantics:
         ]
         assert versions_raced == versions
         monkeypatch.undo()
-        assert _state(registered, path) == expected
+        assert _state(spark, path) == expected
 
-    def test_vacuum_gcs_superseded_checkpoints(self, registered, tmp_path):
+    def test_vacuum_gcs_superseded_checkpoints(self, spark, tmp_path):
         """vacuum — the maintenance window checkpoint retention defers
         to — collects every generation but the newest and reports the
         count; reads are unchanged."""
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a")])
+        _write(spark, path, [(1, "a")])
         checkpoint_log(path)
-        _write(registered, path, [(2, "b")])
+        _write(spark, path, [(2, "b")])
         checkpoint_log(path)
         assert len(_checkpoints(path)) == 2
-        before = _state(registered, path)
+        before = _state(spark, path)
         stats = vacuum_snapshots(path)
         assert stats["expired_checkpoints"] == 1
         assert _checkpoints(path) == ["_logcheckpoint-000002.json"]
-        assert _state(registered, path) == before
+        assert _state(spark, path) == before
 
-    def test_era_reads_through_the_cache(self, registered, tmp_path):
+    def test_era_reads_through_the_cache(self, spark, tmp_path):
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a")])
-        _write(registered, path, [(2, "b")])
+        _write(spark, path, [(1, "a")])
+        _write(spark, path, [(2, "b")])
         checkpoint_log(path)
         rows = sorted(
             (r.k, r.v)
             for r in read_committed(
-                registered, path, table_schema(path)
+                spark, path, table_schema(path)
             ).collect()
         )
         assert rows == [(1, "a"), (2, "b")]
@@ -297,7 +281,7 @@ _op = st.sampled_from(
 )
 @given(st.lists(_op, min_size=2, max_size=6))
 def test_reads_invariant_under_checkpoint_lifecycle_interleavings(
-    registered, tmp_path, ops
+    spark, tmp_path, ops
 ):
     import uuid as _uuid
 
@@ -309,7 +293,7 @@ def test_reads_invariant_under_checkpoint_lifecycle_interleavings(
         if op == "append" or not started:
             rows = [(next_k + i, f"r{next_k + i}") for i in range(2)]
             next_k += 2
-            _write(registered, path, rows)
+            _write(spark, path, rows)
             model.update(rows)
             started = True
         elif op == "delete":
@@ -317,15 +301,15 @@ def test_reads_invariant_under_checkpoint_lifecycle_interleavings(
                 continue
             victim = min(model)
             delete_where(
-                registered,
+                spark,
                 path,
-                registered.createDataFrame([(victim,)], "k int"),
+                spark.createDataFrame([(victim,)], "k int"),
             )
             model.pop(victim)
         elif op == "checkpoint":
             checkpoint_log(path)
         elif op == "compact":
-            compact_snapshots(registered, path, None)
+            compact_snapshots(spark, path, None)
         elif op == "vacuum":
             vacuum_snapshots(path)
-        assert _state(registered, path) == sorted(model.items())
+        assert _state(spark, path) == sorted(model.items())

@@ -10,7 +10,6 @@ import os
 import pytest
 
 from olap_project_spark.export.manifest_sink import (
-    ManifestSinkDataSource,
     clone_table,
     committed_versions,
     compact_snapshots,
@@ -18,6 +17,7 @@ from olap_project_spark.export.manifest_sink import (
     list_tags,
     read_committed,
     restore_table,
+    save_manifest,
     table_schema,
     tag_snapshot,
     vacuum_snapshots,
@@ -26,25 +26,9 @@ from olap_project_spark.export.manifest_sink import (
 SCHEMA = "k bigint, v string"
 
 
-@pytest.fixture(scope="module")
-def registered(spark):
-    try:
-        spark.dataSource.register(ManifestSinkDataSource)
-    except Exception:  # noqa: BLE001 — already registered this session
-        pass
-    return spark
-
-
 def _write(spark, path, rows, **opts):
-    w = (
-        spark.createDataFrame(rows, SCHEMA)
-        .repartition(1)
-        .write.format("manifest_sink")
-        .option("path", path)
-    )
-    for key, val in opts.items():
-        w = w.option(key, val)
-    w.mode("append").save()
+    df = spark.createDataFrame(rows, SCHEMA).repartition(1)
+    save_manifest(df, path, **opts)
 
 
 def _state(spark, path, as_of=None):
@@ -56,12 +40,12 @@ def _state(spark, path, as_of=None):
 
 
 class TestCloneBasics:
-    def test_clone_replays_history_zero_copy(self, registered, tmp_path):
+    def test_clone_replays_history_zero_copy(self, spark, tmp_path):
         src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-        _write(registered, src, [(1, "a"), (2, "b")])  # v1
-        _write(registered, src, [(3, "c")])  # v2
+        _write(spark, src, [(1, "a"), (2, "b")])  # v1
+        _write(spark, src, [(3, "c")])  # v2
         delete_where(
-            registered, src, registered.createDataFrame([(2,)], "k bigint")
+            spark, src, spark.createDataFrame([(2,)], "k bigint")
         )  # v3
         tag_snapshot(src, "gold", 2)
         stats = clone_table(src, dst)
@@ -69,8 +53,8 @@ class TestCloneBasics:
         assert stats["copied_fallback"] == 0  # same fs: pure links
         assert stats["files_linked"] >= 3
         # head state, time travel, and tags all carried
-        assert _state(registered, dst) == [(1, "a"), (3, "c")]
-        assert _state(registered, dst, as_of=2) == [
+        assert _state(spark, dst) == [(1, "a"), (3, "c")]
+        assert _state(spark, dst, as_of=2) == [
             (1, "a"),
             (2, "b"),
             (3, "c"),
@@ -85,77 +69,77 @@ class TestCloneBasics:
                 os.path.join(s, name), os.path.join(d, name)
             )
 
-    def test_clone_as_of_takes_a_prefix(self, registered, tmp_path):
+    def test_clone_as_of_takes_a_prefix(self, spark, tmp_path):
         src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-        _write(registered, src, [(1, "a")])  # v1
-        _write(registered, src, [(2, "b")])  # v2
+        _write(spark, src, [(1, "a")])  # v1
+        _write(spark, src, [(2, "b")])  # v2
         stats = clone_table(src, dst, as_of=1)
         assert stats["versions_cloned"] == 1
-        assert _state(registered, dst) == [(1, "a")]
+        assert _state(spark, dst) == [(1, "a")]
 
-    def test_divergence_is_invisible_both_ways(self, registered, tmp_path):
+    def test_divergence_is_invisible_both_ways(self, spark, tmp_path):
         src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-        _write(registered, src, [(1, "a")])
+        _write(spark, src, [(1, "a")])
         clone_table(src, dst)
-        _write(registered, dst, [(9, "z")])
-        _write(registered, src, [(7, "s")])
-        assert _state(registered, src) == [(1, "a"), (7, "s")]
-        assert _state(registered, dst) == [(1, "a"), (9, "z")]
+        _write(spark, dst, [(9, "z")])
+        _write(spark, src, [(7, "s")])
+        assert _state(spark, src) == [(1, "a"), (7, "s")]
+        assert _state(spark, dst) == [(1, "a"), (9, "z")]
         # each side restores/rolls back independently too
         restore_table(dst, 1)
-        assert _state(registered, dst) == [(1, "a")]
-        assert _state(registered, src) == [(1, "a"), (7, "s")]
+        assert _state(spark, dst) == [(1, "a")]
+        assert _state(spark, src) == [(1, "a"), (7, "s")]
 
-    def test_clone_is_vacuum_proof(self, registered, tmp_path):
+    def test_clone_is_vacuum_proof(self, spark, tmp_path):
         """The Delta shallow-clone hazard: source VACUUM deletes files
         the clone references. Hard links keep the inode alive — the
         clone survives a full source expiry."""
         src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-        _write(registered, src, [(1, "a")])
-        _write(registered, src, [(2, "b")])
+        _write(spark, src, [(1, "a")])
+        _write(spark, src, [(2, "b")])
         clone_table(src, dst)
-        compact_snapshots(registered, src, SCHEMA)
+        compact_snapshots(spark, src, SCHEMA)
         stats = vacuum_snapshots(src)
         assert stats["expired_files"] > 0
-        assert _state(registered, dst) == [(1, "a"), (2, "b")]
+        assert _state(spark, dst) == [(1, "a"), (2, "b")]
         # and time travel on the clone still reads the linked files
-        assert _state(registered, dst, as_of=1) == [(1, "a")]
+        assert _state(spark, dst, as_of=1) == [(1, "a")]
 
 
 class TestCloneRejections:
-    def test_refuses_nonempty_destination(self, registered, tmp_path):
+    def test_refuses_nonempty_destination(self, spark, tmp_path):
         src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-        _write(registered, src, [(1, "a")])
-        _write(registered, dst, [(2, "b")])
+        _write(spark, src, [(1, "a")])
+        _write(spark, dst, [(2, "b")])
         with pytest.raises(ValueError, match="already holds"):
             clone_table(src, dst)
 
     def test_refuses_empty_source_and_bad_as_of(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
         with pytest.raises(ValueError, match="no committed"):
             clone_table(src, dst)
-        _write(registered, src, [(1, "a")])
+        _write(spark, src, [(1, "a")])
         with pytest.raises(ValueError, match="not a readable"):
             clone_table(src, dst, as_of=9)
 
-    def test_branch_staged_commits_not_cloned(self, registered, tmp_path):
+    def test_branch_staged_commits_not_cloned(self, spark, tmp_path):
         src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-        _write(registered, src, [(1, "a")])  # v1 main
-        _write(registered, src, [(2, "b")], branch="audit")  # v2 staged
+        _write(spark, src, [(1, "a")])  # v1 main
+        _write(spark, src, [(2, "b")], branch="audit")  # v2 staged
         stats = clone_table(src, dst)
         assert stats["versions_cloned"] == 1
-        assert _state(registered, dst) == [(1, "a")]
+        assert _state(spark, dst) == [(1, "a")]
         assert committed_versions(dst) == [1]
 
 
 class TestCloneOfRestoredTable:
-    def test_clone_carries_restore_semantics(self, registered, tmp_path):
+    def test_clone_carries_restore_semantics(self, spark, tmp_path):
         src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-        _write(registered, src, [(1, "a")])  # v1
-        _write(registered, src, [(2, "b")])  # v2
+        _write(spark, src, [(1, "a")])  # v1
+        _write(spark, src, [(2, "b")])  # v2
         restore_table(src, 1)  # v3
         clone_table(src, dst)
-        assert _state(registered, dst) == [(1, "a")]
-        assert _state(registered, dst, as_of=2) == [(1, "a"), (2, "b")]
+        assert _state(spark, dst) == [(1, "a")]
+        assert _state(spark, dst, as_of=2) == [(1, "a"), (2, "b")]

@@ -16,7 +16,6 @@ import os
 import pytest
 
 from olap_project_spark.export.manifest_sink import (
-    ManifestSinkDataSource,
     committed_versions,
     compact_snapshots,
     delete_where,
@@ -26,6 +25,7 @@ from olap_project_spark.export.manifest_sink import (
     read_committed,
     read_version_delta,
     restore_table,
+    save_manifest,
     table_files,
     table_history,
     table_schema,
@@ -35,25 +35,9 @@ from olap_project_spark.export.manifest_sink import (
 SCHEMA = "k bigint, v string"
 
 
-@pytest.fixture(scope="module")
-def registered(spark):
-    try:
-        spark.dataSource.register(ManifestSinkDataSource)
-    except Exception:  # noqa: BLE001 — already registered this session
-        pass
-    return spark
-
-
 def _write(spark, path, rows, n_parts=1, **opts):
-    w = (
-        spark.createDataFrame(rows, SCHEMA)
-        .repartition(n_parts)
-        .write.format("manifest_sink")
-        .option("path", path)
-    )
-    for key, val in opts.items():
-        w = w.option(key, val)
-    w.mode("append").save()
+    df = spark.createDataFrame(rows, SCHEMA).repartition(n_parts)
+    save_manifest(df, path, **opts)
 
 
 def _state(spark, path, as_of=None):
@@ -66,29 +50,29 @@ def _state(spark, path, as_of=None):
 
 class TestRestoreSemantics:
     def test_restore_reverts_state_and_keeps_history(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a"), (2, "b")])  # v1
-        _write(registered, path, [(3, "c")])  # v2
+        _write(spark, path, [(1, "a"), (2, "b")])  # v1
+        _write(spark, path, [(3, "c")])  # v2
         delete_where(
-            registered, path, registered.createDataFrame([(2,)], "k bigint")
+            spark, path, spark.createDataFrame([(2,)], "k bigint")
         )  # v3
-        _write(registered, path, [(4, "d")])  # v4
-        assert _state(registered, path) == [(1, "a"), (3, "c"), (4, "d")]
+        _write(spark, path, [(4, "d")])  # v4
+        assert _state(spark, path) == [(1, "a"), (3, "c"), (4, "d")]
 
         rv = restore_table(path, 2)
         assert rv == 5
         # head state == the target's state, INCLUDING the row the v3
         # tombstone had removed (restore replays the original prefix)
-        assert _state(registered, path) == [(1, "a"), (2, "b"), (3, "c")]
+        assert _state(spark, path) == [(1, "a"), (2, "b"), (3, "c")]
         # time travel below the restore is untouched
-        assert _state(registered, path, as_of=4) == [
+        assert _state(spark, path, as_of=4) == [
             (1, "a"),
             (3, "c"),
             (4, "d"),
         ]
-        assert _state(registered, path, as_of=2) == [
+        assert _state(spark, path, as_of=2) == [
             (1, "a"),
             (2, "b"),
             (3, "c"),
@@ -99,51 +83,51 @@ class TestRestoreSemantics:
         assert committed_versions(path) == [1, 2, 3, 4, 5]
 
     def test_append_after_restore_builds_on_restored_state(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a")])  # v1
-        _write(registered, path, [(2, "b")])  # v2
+        _write(spark, path, [(1, "a")])  # v1
+        _write(spark, path, [(2, "b")])  # v2
         restore_table(path, 1)  # v3
-        _write(registered, path, [(9, "z")])  # v4
-        assert _state(registered, path) == [(1, "a"), (9, "z")]
+        _write(spark, path, [(9, "z")])  # v4
+        assert _state(spark, path) == [(1, "a"), (9, "z")]
         # table$files reflects the restored live set + the new file
         live = {f["version"] for f in table_files(path)}
         assert live == {1, 4}
 
     def test_chained_restore_and_restore_of_a_restore(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a")])  # v1
-        _write(registered, path, [(2, "b")])  # v2
+        _write(spark, path, [(1, "a")])  # v1
+        _write(spark, path, [(2, "b")])  # v2
         r1 = restore_table(path, 1)  # v3 -> {1}
-        _write(registered, path, [(3, "c")])  # v4 -> {1,3}
+        _write(spark, path, [(3, "c")])  # v4 -> {1,3}
         restore_table(path, 2)  # v5 -> {1,2}
-        assert _state(registered, path) == [(1, "a"), (2, "b")]
+        assert _state(spark, path) == [(1, "a"), (2, "b")]
         # restoring TO a restore version lands on its effective state
         restore_table(path, r1)  # v6 -> {1}
-        assert _state(registered, path) == [(1, "a")]
+        assert _state(spark, path) == [(1, "a")]
         restore_table(path, 4)  # v7 -> {1,3}
-        assert _state(registered, path) == [(1, "a"), (3, "c")]
+        assert _state(spark, path) == [(1, "a"), (3, "c")]
 
-    def test_restore_across_merge_upsert(self, registered, tmp_path):
+    def test_restore_across_merge_upsert(self, spark, tmp_path):
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a"), (2, "b")])  # v1
+        _write(spark, path, [(1, "a"), (2, "b")])  # v1
         merge_upsert(
-            registered,
+            spark,
             path,
-            registered.createDataFrame([(2, "B"), (5, "e")], SCHEMA),
+            spark.createDataFrame([(2, "B"), (5, "e")], SCHEMA),
             keys=["k"],
         )  # v2
-        assert _state(registered, path) == [(1, "a"), (2, "B"), (5, "e")]
+        assert _state(spark, path) == [(1, "a"), (2, "B"), (5, "e")]
         restore_table(path, 1)
-        assert _state(registered, path) == [(1, "a"), (2, "b")]
+        assert _state(spark, path) == [(1, "a"), (2, "b")]
 
-    def test_pruning_follows_the_restored_state(self, registered, tmp_path):
+    def test_pruning_follows_the_restored_state(self, spark, tmp_path):
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a")])  # v1: k in [1,1]
-        _write(registered, path, [(100, "big")])  # v2: k in [100,100]
+        _write(spark, path, [(1, "a")])  # v1: k in [1,1]
+        _write(spark, path, [(100, "big")])  # v2: k in [100,100]
         restore_table(path, 1)
         keep, total = plan_pruned_files(path, "k", 100, 100)
         # the v2 file is no longer live, so the probe prunes EVERYTHING
@@ -151,44 +135,41 @@ class TestRestoreSemantics:
 
 
 class TestRestoreCdfAndStreams:
-    def test_read_changes_emits_symmetric_diff(self, registered, tmp_path):
+    def test_read_changes_emits_symmetric_diff(self, spark, tmp_path):
         path = str(tmp_path / "t")
         # duplicate rows on purpose: exceptAll must diff multiplicities
-        _write(registered, path, [(1, "a"), (1, "a")])  # v1
-        _write(registered, path, [(2, "b")])  # v2
+        _write(spark, path, [(1, "a"), (1, "a")])  # v1
+        _write(spark, path, [(2, "b")])  # v2
         restore_table(path, 1)  # v3
         sch = table_schema(path)
-        ch = read_changes(registered, path, sch, 2, 3).collect()
+        ch = read_changes(spark, path, sch, 2, 3).collect()
         tagged = sorted((r.k, r._change_type, r._commit_version) for r in ch)
         assert tagged == [(2, "delete", 3)]
         # and a restore that RE-ADDS rows emits inserts
-        _write(registered, path, [(3, "c")])  # v4
+        _write(spark, path, [(3, "c")])  # v4
         restore_table(path, 2)  # v5: brings back (2,'b')
-        ch2 = read_changes(registered, path, sch, 4, 5).collect()
+        ch2 = read_changes(spark, path, sch, 4, 5).collect()
         tagged2 = sorted(
             (r.k, r._change_type, r._commit_version) for r in ch2
         )
         assert tagged2 == [(2, "insert", 5), (3, "delete", 5)]
 
     def test_file_level_feeds_reject_a_restore_in_range(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a")])  # v1
-        _write(registered, path, [(2, "b")])  # v2
+        _write(spark, path, [(1, "a")])  # v1
+        _write(spark, path, [(2, "b")])  # v2
         restore_table(path, 1)  # v3
         sch = table_schema(path)
         with pytest.raises(ValueError, match="restore"):
-            read_version_delta(registered, path, sch, 0, 3)
-        # the streaming tail enforces the same restart-from-snapshot
-        # rule via its kind check (covered by partitions(); here we
-        # assert the version delta, the same file-level contract)
+            read_version_delta(spark, path, sch, 0, 3)
 
 
 class TestRestoreRejections:
-    def test_rejects_unknown_or_inflight_target(self, registered, tmp_path):
+    def test_rejects_unknown_or_inflight_target(self, spark, tmp_path):
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a")])  # v1
+        _write(spark, path, [(1, "a")])  # v1
         with pytest.raises(ValueError, match="not a readable"):
             restore_table(path, 7)
         # an in-flight claim (empty manifest file) is not restorable
@@ -196,102 +177,71 @@ class TestRestoreRejections:
         with pytest.raises(ValueError, match="not a readable"):
             restore_table(path, 2)
 
-    def test_rejects_while_branch_staged(self, registered, tmp_path):
+    def test_rejects_while_branch_staged(self, spark, tmp_path):
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a")])  # v1
-        _write(registered, path, [(2, "b")], branch="audit")  # staged
+        _write(spark, path, [(1, "a")])  # v1
+        _write(spark, path, [(2, "b")], branch="audit")  # staged
         with pytest.raises(ValueError, match="audit"):
             restore_table(path, 1)
 
 
 class TestRestoreVacuumInterplay:
     def test_expiry_refuses_to_cut_a_restore_target(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a")])  # v1
-        _write(registered, path, [(2, "b")])  # v2
-        compact_snapshots(registered, path, SCHEMA)  # v3 rewrite
-        _write(registered, path, [(3, "c")])  # v4
+        _write(spark, path, [(1, "a")])  # v1
+        _write(spark, path, [(2, "b")])  # v2
+        compact_snapshots(spark, path, SCHEMA)  # v3 rewrite
+        _write(spark, path, [(3, "c")])  # v4
         restore_table(path, 2)  # v5 targets BELOW the rewrite
         with pytest.raises(ValueError, match="restore"):
             vacuum_snapshots(path, keep_from=3)
         # the documented remedy: compact AFTER the restore and anchor
         # on that rewrite — the restore (and its pre-anchor targets)
         # then expire together, with the state preserved
-        rw = compact_snapshots(registered, path, SCHEMA)  # v6
+        rw = compact_snapshots(spark, path, SCHEMA)  # v6
         stats = vacuum_snapshots(path, keep_from=rw)
         assert stats["expired_manifests"] == 5
-        assert _state(registered, path) == [(1, "a"), (2, "b")]
+        assert _state(spark, path) == [(1, "a"), (2, "b")]
 
-    def test_expiry_allows_restore_above_anchor(self, registered, tmp_path):
+    def test_expiry_allows_restore_above_anchor(self, spark, tmp_path):
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a")])  # v1
-        compact_snapshots(registered, path, SCHEMA)  # v2 rewrite
-        _write(registered, path, [(2, "b")])  # v3
+        _write(spark, path, [(1, "a")])  # v1
+        compact_snapshots(spark, path, SCHEMA)  # v2 rewrite
+        _write(spark, path, [(2, "b")])  # v3
         restore_table(path, 2)  # v4 targets the anchor itself
         stats = vacuum_snapshots(path, keep_from=2)
         assert stats["expired_manifests"] == 1  # v1 expired
-        assert _state(registered, path) == [(1, "a")]
+        assert _state(spark, path) == [(1, "a")]
         # time travel to the restored target still works post-expiry
-        assert _state(registered, path, as_of=2) == [(1, "a")]
+        assert _state(spark, path, as_of=2) == [(1, "a")]
 
     def test_compaction_after_restore_materializes_it(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a")])  # v1
-        _write(registered, path, [(2, "b")])  # v2
+        _write(spark, path, [(1, "a")])  # v1
+        _write(spark, path, [(2, "b")])  # v2
         restore_table(path, 1)  # v3
-        compact_snapshots(registered, path, SCHEMA)  # v4 rewrite
-        assert _state(registered, path) == [(1, "a")]
+        compact_snapshots(spark, path, SCHEMA)  # v4 rewrite
+        assert _state(spark, path) == [(1, "a")]
         stats = vacuum_snapshots(path)  # anchors on the rewrite
         assert stats["expired_manifests"] == 3
-        assert _state(registered, path) == [(1, "a")]
+        assert _state(spark, path) == [(1, "a")]
 
 
 class TestRestoreSchemaInterplay:
-    def test_schema_reverts_with_the_restore(self, registered, tmp_path):
+    def test_schema_reverts_with_the_restore(self, spark, tmp_path):
         path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a")])  # v1, (k, v)
-        wide = registered.createDataFrame([(2, "b", 7)], "k bigint, v string, w bigint")
-        (
-            wide.repartition(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
-        )  # v2, a second schema (k, v, w): the table is unreadable
+        _write(spark, path, [(1, "a")])  # v1, (k, v)
+        wide = spark.createDataFrame(
+            [(2, "b", 7)], "k bigint, v string, w bigint"
+        )
+        # v2, a second schema (k, v, w): the table is unreadable
+        save_manifest(wide.repartition(1), path)
         with pytest.raises(ValueError, match="version 2"):
             table_schema(path)
         restore_table(path, 1)  # the restored log holds v1 only
         assert [f.name for f in table_schema(path).fields] == ["k", "v"]
 
-
-class TestPublicReaderSeesRestore:
-    def test_spark_read_format_honors_restore(self, registered, tmp_path):
-        """The public DataSource batch reader folds the effective log,
-        so a restore changes spark.read.format(...) results with no
-        reader-side code: head reads the restored state, versionAsOf
-        still time-travels above it."""
-        path = str(tmp_path / "t")
-        _write(registered, path, [(1, "a")])  # v1
-        _write(registered, path, [(2, "b")])  # v2
-        restore_table(path, 1)  # v3
-        head = sorted(
-            r.k
-            for r in registered.read.format("manifest_sink")
-            .option("path", path)
-            .load()
-            .collect()
-        )
-        assert head == [1]
-        asof2 = sorted(
-            r.k
-            for r in registered.read.format("manifest_sink")
-            .option("path", path)
-            .option("versionAsOf", "2")
-            .load()
-            .collect()
-        )
-        assert asof2 == [1, 2]

@@ -1,63 +1,43 @@
 """Round-10 lakehouse hardening: the pluggable version-claim seam,
-real concurrent-writer races, stream-tail gap semantics (in-flight and
-branch-staged commits hold the head), maxVersionsPerTrigger
-backpressure, stale-claim vacuum, and the bucketed snapshot layout."""
+real concurrent-writer races, in-flight claims that hold a branch
+publish, stale-claim vacuum, and the bucketed snapshot layout."""
 
 from __future__ import annotations
 
 import json
 import os
 import threading
-import time
 
 import pytest
 
 from olap_project_spark.export.manifest_sink import (
     ConditionalPutClaimer,
-    ManifestSinkDataSource,
     ManifestWriter,
     PosixVersionClaimer,
     _PartCommit,
-    _stream_visible_head,
     compact_snapshots,
-    ensure_manifest_sink,
     publish_branch,
     read_committed,
     register_bucketed_table,
+    save_manifest,
     set_version_claimer,
     table_versions,
     vacuum_snapshots,
 )
 
 
-@pytest.fixture(scope="module")
-def registered(spark):
-    try:
-        spark.dataSource.register(ManifestSinkDataSource)
-    except Exception:  # noqa: BLE001 — already registered this session
-        pass
-    return spark
-
-
 SCHEMA = "k bigint, v string"
 
 
 def _write(spark, path, rows, n_parts=1, **opts):
-    w = (
-        spark.createDataFrame(rows, SCHEMA)
-        .repartition(n_parts)
-        .write.format("manifest_sink")
-        .option("path", path)
-    )
-    for key, val in opts.items():
-        w = w.option(key, val)
-    w.mode("append").save()
+    df = spark.createDataFrame(rows, SCHEMA).repartition(n_parts)
+    save_manifest(df, path, **opts)
 
 
 def _commit_meta(path, tag, kind="append"):
     """Drive ONE commit through the real driver-side protocol (the
     commit step needs no Spark: it is pure metadata)."""
-    w = ManifestWriter({"path": path, "kind": kind}, overwrite=False)
+    w = ManifestWriter({"path": path, "kind": kind})
     w.commit([_PartCommit(file_name=f"part-{tag}.parquet", n_rows=1)])
 
 
@@ -188,51 +168,18 @@ def _process_commit(args: tuple[str, str]) -> None:
 
 
 class TestStreamGapSemantics:
-    def test_in_flight_commit_holds_the_head(self, registered, tmp_path):
-        path = str(tmp_path / "gap1")
-        _write(registered, path, [(1, "a")])
-        _write(registered, path, [(2, "b")])
-        assert _stream_visible_head(path) == 2
-        # a rival's claim lands for version 3 but its content never does
-        open(os.path.join(path, "_manifest-000003.json"), "w").close()
-        assert _stream_visible_head(path) == 2
-        # a LATER completed commit does not unblock delivery past the gap
-        _commit_meta(path, "later")  # claims version 4
-        assert table_versions(path) == [1, 2, 3, 4]
-        assert _stream_visible_head(path) == 2
-
-    def test_branch_staged_commit_holds_the_head(self, registered, tmp_path):
-        path = str(tmp_path / "gap2")
-        _write(registered, path, [(1, "a")])
-        _write(registered, path, [(2, "b")], branch="wip")
-        _write(registered, path, [(3, "c")])
-        # v2 is staged: it may become visible at exactly version 2 when
-        # published, so the tail must not advance past it
-        assert _stream_visible_head(path) == 1
-        # publish is fast-forward-only and v3 (main) is above v2 → the
-        # branch can never publish; abandoning it opens the hole
-        from olap_project_spark.export.manifest_sink import abandon_branch
-
-        abandon_branch(path, "wip")
-        assert _stream_visible_head(path) == 3
-
-    def test_version_hole_is_skipped(self, registered, tmp_path):
-        path = str(tmp_path / "gap3")
-        _write(registered, path, [(1, "a")])
-        _write(registered, path, [(2, "b")])
-        _write(registered, path, [(3, "c")])
-        os.remove(os.path.join(path, "_manifest-000002.json"))
-        assert _stream_visible_head(path) == 3
+    """The not-yet-readable-gap rule on the publish side: an in-flight
+    main claim below a branch version holds the publish."""
 
     def test_publish_blocked_by_in_flight_main_claim(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         """An in-flight MAIN commit below a branch version blocks the
         publish: if it later completed at a lower version than an
         already-published one, history would change retroactively."""
         path = str(tmp_path / "gap4")
-        _write(registered, path, [(1, "a")])
-        _write(registered, path, [(2, "b")], branch="wip")
+        _write(spark, path, [(1, "a")])
+        _write(spark, path, [(2, "b")], branch="wip")
         # rival main commit claims version 3, still in flight
         open(os.path.join(path, "_manifest-000003.json"), "w").close()
         with pytest.raises(ValueError, match="fast-forward-only"):
@@ -241,119 +188,8 @@ class TestStreamGapSemantics:
         # (2 <= main head 3); a fresh branch write above it publishes
         os.remove(os.path.join(path, "_manifest-000003.json"))
         assert publish_branch(path, "wip") == [2]
-        got = read_committed(registered, path, SCHEMA)
+        got = read_committed(spark, path, SCHEMA)
         assert sorted(r["k"] for r in got.collect()) == [1, 2]
-
-    def test_tail_rejects_pre_columnar_files(self, registered, tmp_path):
-        from pyspark.errors.exceptions.captured import (
-            StreamingQueryException,
-        )
-
-        path = str(tmp_path / "gap5")
-        _write(registered, path, [(1, "a")])
-        # hand-craft a legacy jsonl commit (pre-columnar data plane)
-        staging = os.path.join(path, "_staging")
-        with open(os.path.join(staging, "part-legacy.jsonl"), "w") as f:
-            f.write('{"k": 2, "v": "b"}\n')
-        legacy = {
-            "kind": "append",
-            "files": ["part-legacy.jsonl"],
-            "n_rows": 1,
-            "version": 2,
-        }
-        with open(os.path.join(path, "_manifest-000002.json"), "w") as f:
-            json.dump(legacy, f)
-        fmt = ensure_manifest_sink(registered)
-        q = (
-            registered.readStream.format(fmt)
-            .option("path", path)
-            .load()
-            .writeStream.format("noop")
-            .option(
-                "checkpointLocation", str(tmp_path / "gap5_ckpt")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        with pytest.raises(StreamingQueryException, match="pre-columnar"):
-            q.awaitTermination(120)
-
-
-class TestMaxVersionsPerTrigger:
-    def test_backlog_drains_in_bounded_batches(self, registered, tmp_path):
-        """Five committed versions, cap 2 → at least 3 micro-batches,
-        each at most 2 versions' rows, exactly-once overall."""
-        fmt = ensure_manifest_sink(registered)
-        path = str(tmp_path / "bp")
-        for i in range(5):
-            _write(registered, path, [(i, f"v{i}")])
-        batches: list[tuple[int, int]] = []
-
-        def sink(df, epoch):
-            batches.append((epoch, df.count()))
-
-        q = (
-            registered.readStream.format(fmt)
-            .option("path", path)
-            .option("maxVersionsPerTrigger", "2")
-            .load()
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", str(tmp_path / "bp_ckpt"))
-            .trigger(processingTime="250 milliseconds")
-            .start()
-        )
-        deadline = time.time() + 120
-        while time.time() < deadline and sum(n for _, n in batches) < 5:
-            time.sleep(0.5)
-        q.stop()
-        assert sum(n for _, n in batches) == 5
-        assert len([b for b in batches if b[1]]) >= 3
-        assert max(n for _, n in batches) <= 2
-
-    def test_restart_resumes_and_recaps(self, registered, tmp_path):
-        """A capped availableNow run processes ONE bounded batch and
-        checkpoints; a processing-time run on the same checkpoint
-        resumes past it — the restart's first poll undershoots (start
-        unknowable), the second poll lifts the cap (no stall), and
-        nothing is lost or re-delivered."""
-        fmt = ensure_manifest_sink(registered)
-        path = str(tmp_path / "bp2")
-        ckpt = str(tmp_path / "bp2_ckpt")
-        for i in range(5):
-            _write(registered, path, [(i, f"v{i}")])
-        got: list[int] = []
-
-        def sink(df, epoch):
-            got.extend(r["k"] for r in df.collect())
-
-        q = (
-            registered.readStream.format(fmt)
-            .option("path", path)
-            .option("maxVersionsPerTrigger", "2")
-            .load()
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        assert sorted(got) == [0, 1]  # fresh capped run: one bounded batch
-        q2 = (
-            registered.readStream.format(fmt)
-            .option("path", path)
-            .option("maxVersionsPerTrigger", "2")
-            .load()
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="250 milliseconds")
-            .start()
-        )
-        deadline = time.time() + 120
-        while time.time() < deadline and len(got) < 5:
-            time.sleep(0.5)
-        q2.stop()
-        assert sorted(got) == [0, 1, 2, 3, 4]
-
 
 class TestStaleClaimVacuum:
     def test_fresh_claim_guards_young_stale_claim_collected(self, tmp_path):
@@ -370,24 +206,23 @@ class TestStaleClaimVacuum:
         stats = vacuum_snapshots(path, stale_claim_ttl_s=3600)
         assert stats["in_flight_commits"] == 1
         assert os.path.exists(os.path.join(path, "_manifest-000002.json"))
-        # aged out (ttl 0): collected, version hole opens for the tail
+        # aged out (ttl 0): collected, the version hole opens
         stats = vacuum_snapshots(path, stale_claim_ttl_s=0.0)
         assert stats["stale_claims_deleted"] == 1
         assert stats["in_flight_commits"] == 0
         assert not os.path.exists(os.path.join(path, "_manifest-000002.json"))
-        assert _stream_visible_head(path) == 1
-        # the freed TOP version may be reclaimed (safe: the stream head
-        # held below the claim, so nothing was ever delivered past it —
-        # same rule as abandoned branches); holes BELOW a higher
-        # committed version stay permanent because commit claims 1+max
+        assert table_versions(path) == [1]
+        # the freed TOP version may be reclaimed (same rule as abandoned
+        # branches); holes BELOW a higher committed version stay
+        # permanent because commit claims 1+max
         _commit_meta(path, "b")
         assert table_versions(path) == [1, 2]
 
     def test_stale_claims_staging_residue_becomes_orphan(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         path = str(tmp_path / "stale2")
-        _write(registered, path, [(1, "a")])
+        _write(spark, path, [(1, "a")])
         staging = os.path.join(path, "_staging")
         # the crashed writer's task output: staged but never referenced
         with open(os.path.join(staging, "part-crashed.parquet"), "w") as f:
@@ -400,24 +235,24 @@ class TestStaleClaimVacuum:
         stats = vacuum_snapshots(path, stale_claim_ttl_s=0.0)
         assert stats["stale_claims_deleted"] == 1
         assert stats["orphans_deleted"] == 1
-        assert read_committed(registered, path, SCHEMA).count() == 1
+        assert read_committed(spark, path, SCHEMA).count() == 1
 
 
 class TestBucketedSnapshot:
     def test_layout_recorded_and_join_is_exchange_free(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         import uuid as _uuid
 
         path_a = str(tmp_path / "bkt_a")
         path_b = str(tmp_path / "bkt_b")
-        _write(registered, path_a, [(i, f"a{i}") for i in range(64)], 4)
-        _write(registered, path_b, [(i, f"b{i}") for i in range(0, 64, 2)], 4)
+        _write(spark, path_a, [(i, f"a{i}") for i in range(64)], 4)
+        _write(spark, path_b, [(i, f"b{i}") for i in range(0, 64, 2)], 4)
         compact_snapshots(
-            registered, path_a, SCHEMA, bucket_by="k", n_buckets=4
+            spark, path_a, SCHEMA, bucket_by="k", n_buckets=4
         )
         compact_snapshots(
-            registered, path_b, SCHEMA, bucket_by="k", n_buckets=4
+            spark, path_b, SCHEMA, bucket_by="k", n_buckets=4
         )
         from olap_project_spark.export.manifest_sink import _log
 
@@ -425,16 +260,16 @@ class TestBucketedSnapshot:
         assert m["bucket_by"] == "k" and m["n_buckets"] == 4
         assert all(f.startswith(m["layout_dir"] + "/") for f in m["files"])
         tag = _uuid.uuid4().hex[:8]
-        ta = register_bucketed_table(registered, path_a, f"bkt_a_{tag}")
-        tb = register_bucketed_table(registered, path_b, f"bkt_b_{tag}")
-        old = registered.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        registered.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        ta = register_bucketed_table(spark, path_a, f"bkt_a_{tag}")
+        tb = register_bucketed_table(spark, path_b, f"bkt_b_{tag}")
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            j = registered.table(ta).join(registered.table(tb), "k")
+            j = spark.table(ta).join(spark.table(tb), "k")
             plan = j._jdf.queryExecution().executedPlan().toString()
             rows = j.count()
         finally:
-            registered.conf.set(
+            spark.conf.set(
                 "spark.sql.autoBroadcastJoinThreshold", old
             )
         assert "SortMergeJoin" in plan
@@ -442,19 +277,19 @@ class TestBucketedSnapshot:
         assert rows == 32
         # the bucketed read returns exactly the manifest-committed rows
         a = sorted(
-            r["k"] for r in read_committed(registered, path_a, SCHEMA).collect()
+            r["k"] for r in read_committed(spark, path_a, SCHEMA).collect()
         )
-        b = sorted(r["k"] for r in registered.table(ta).collect())
+        b = sorted(r["k"] for r in spark.table(ta).collect())
         assert a == b
 
     def test_registration_reconciles_unlisted_residue(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         import uuid as _uuid
 
         path = str(tmp_path / "bkt_rec")
-        _write(registered, path, [(i, f"v{i}") for i in range(16)], 2)
-        compact_snapshots(registered, path, SCHEMA, bucket_by="k", n_buckets=2)
+        _write(spark, path, [(i, f"v{i}") for i in range(16)], 2)
+        compact_snapshots(spark, path, SCHEMA, bucket_by="k", n_buckets=2)
         from olap_project_spark.export.manifest_sink import _log
 
         layout_dir = _log(path)[-1][1]["layout_dir"]
@@ -465,21 +300,21 @@ class TestBucketedSnapshot:
         with open(residue, "w") as f:
             f.write("x")
         t = register_bucketed_table(
-            registered, path, f"bkt_rec_{_uuid.uuid4().hex[:8]}"
+            spark, path, f"bkt_rec_{_uuid.uuid4().hex[:8]}"
         )
         assert not os.path.exists(residue)
-        assert registered.table(t).count() == 16
+        assert spark.table(t).count() == 16
 
-    def test_register_requires_bucketed_rewrite(self, registered, tmp_path):
+    def test_register_requires_bucketed_rewrite(self, spark, tmp_path):
         path = str(tmp_path / "bkt_req")
-        _write(registered, path, [(1, "a")])
+        _write(spark, path, [(1, "a")])
         with pytest.raises(ValueError, match="not a bucketed rewrite"):
-            register_bucketed_table(registered, path, "nope_t")
+            register_bucketed_table(spark, path, "nope_t")
 
-    def test_vacuum_walks_bucket_subdirs(self, registered, tmp_path):
+    def test_vacuum_walks_bucket_subdirs(self, spark, tmp_path):
         path = str(tmp_path / "bkt_vac")
-        _write(registered, path, [(i, f"v{i}") for i in range(8)], 2)
-        compact_snapshots(registered, path, SCHEMA, bucket_by="k", n_buckets=2)
+        _write(spark, path, [(i, f"v{i}") for i in range(8)], 2)
+        compact_snapshots(spark, path, SCHEMA, bucket_by="k", n_buckets=2)
         from olap_project_spark.export.manifest_sink import _log
 
         layout_dir = _log(path)[-1][1]["layout_dir"]
@@ -494,38 +329,31 @@ class TestBucketedSnapshot:
         # keeps the bucketed subdir intact
         assert stats["expired_manifests"] == 1
         assert os.path.isdir(loc) and len(os.listdir(loc)) == 2
-        got = read_committed(registered, path, SCHEMA)
+        got = read_committed(spark, path, SCHEMA)
         assert got.count() == 8
 
-    def test_writer_option_validation(self, registered, tmp_path):
+    def test_writer_option_validation(self, spark, tmp_path):
         path = str(tmp_path / "bkt_bad")
-        df = registered.createDataFrame([(1, "a")], SCHEMA)
+        df = spark.createDataFrame([(1, "a")], SCHEMA)
         with pytest.raises(Exception, match="bucket_by and n_buckets"):
-            df.write.format("manifest_sink").option("path", path).option(
-                "bucket_by", "k"
-            ).mode("append").save()
+            save_manifest(df, path, bucket_by="k")
         with pytest.raises(Exception, match="subdir"):
-            df.write.format("manifest_sink").option("path", path).option(
-                "bucket_by", "k"
-            ).option("n_buckets", "2").mode("append").save()
+            save_manifest(df, path, bucket_by="k", n_buckets="2")
 
 
 class TestPartialCompaction:
     NUM_SCHEMA = "k bigint, v double"
 
-    def _build(self, registered, path):
+    def _build(self, spark, path):
         for q in range(4):
-            (
-                registered.range(q * 1000, (q + 1) * 1000)
+            save_manifest(
+                spark.range(q * 1000, (q + 1) * 1000)
                 .selectExpr("id as k", "cast(id % 7 as double) as v")
-                .repartition(2)
-                .write.format("manifest_sink")
-                .option("path", path)
-                .mode("append")
-                .save()
+                .repartition(2),
+                path,
             )
 
-    def test_range_scoped_rewrite(self, registered, tmp_path):
+    def test_range_scoped_rewrite(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import (
             _committed_files,
             compact_range,
@@ -533,10 +361,10 @@ class TestPartialCompaction:
         )
 
         path = str(tmp_path / "pc")
-        self._build(registered, path)
+        self._build(spark, path)
         assert len(_committed_files(path)) == 8
         res = compact_range(
-            registered, path, self.NUM_SCHEMA, "k", 1000, 2999, n_files=2
+            spark, path, self.NUM_SCHEMA, "k", 1000, 2999, n_files=2
         )
         assert res == {
             "version": 5,
@@ -545,11 +373,11 @@ class TestPartialCompaction:
             "n_new": 2,
         }
         # full state intact, time travel intact
-        now = read_committed(registered, path, self.NUM_SCHEMA)
+        now = read_committed(spark, path, self.NUM_SCHEMA)
         assert now.count() == 4000
         assert (
             read_committed(
-                registered, path, self.NUM_SCHEMA, as_of=4
+                spark, path, self.NUM_SCHEMA, as_of=4
             ).count()
             == 4000
         )
@@ -569,34 +397,34 @@ class TestPartialCompaction:
         stats = vacuum_snapshots(path)
         assert stats["expired_manifests"] == 4
         assert (
-            read_committed(registered, path, self.NUM_SCHEMA).count() == 4000
+            read_committed(spark, path, self.NUM_SCHEMA).count() == 4000
         )
 
-    def test_rejects_delete_log_and_noop_range(self, registered, tmp_path):
+    def test_rejects_delete_log_and_noop_range(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import (
             compact_range,
             delete_where,
         )
 
         path = str(tmp_path / "pc2")
-        self._build(registered, path)
+        self._build(spark, path)
         # no-op: nothing overlaps a range beyond the data
         res = compact_range(
-            registered, path, self.NUM_SCHEMA, "k", 50_000, 60_000
+            spark, path, self.NUM_SCHEMA, "k", 50_000, 60_000
         )
         assert res["n_rewritten"] == 0 and res["n_new"] == 0
         assert res["version"] == 4  # no commit happened
         delete_where(
-            registered, path, registered.range(0, 10).selectExpr("id as k")
+            spark, path, spark.range(0, 10).selectExpr("id as k")
         )
         with pytest.raises(ValueError, match="resurrect"):
-            compact_range(registered, path, self.NUM_SCHEMA, "k", 0, 100)
+            compact_range(spark, path, self.NUM_SCHEMA, "k", 0, 100)
 
 
 class TestRowLevelCDF:
     NUM_SCHEMA = "k bigint, v double"
 
-    def test_insert_delete_reinsert_ledger(self, registered, tmp_path):
+    def test_insert_delete_reinsert_ledger(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import (
             delete_where,
             read_changes,
@@ -604,28 +432,22 @@ class TestRowLevelCDF:
 
         path = str(tmp_path / "cdf")
         for q in range(2):
-            (
-                registered.range(q * 100, (q + 1) * 100)
+            save_manifest(
+                spark.range(q * 100, (q + 1) * 100)
                 .selectExpr("id as k", "cast(1.0 as double) as v")
-                .repartition(1)
-                .write.format("manifest_sink")
-                .option("path", path)
-                .mode("append")
-                .save()
+                .repartition(1),
+                path,
             )
         delete_where(
-            registered, path, registered.range(0, 50).selectExpr("id as k")
+            spark, path, spark.range(0, 50).selectExpr("id as k")
         )
-        (
-            registered.range(0, 10)
+        save_manifest(
+            spark.range(0, 10)
             .selectExpr("id as k", "cast(2.0 as double) as v")
-            .repartition(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
+            .repartition(1),
+            path,
         )
-        ch = read_changes(registered, path, self.NUM_SCHEMA, 0, 4)
+        ch = read_changes(spark, path, self.NUM_SCHEMA, 0, 4)
         got = {
             (r["_change_type"], r["_commit_version"]): r["count"]
             for r in ch.groupBy("_change_type", "_commit_version")
@@ -642,23 +464,23 @@ class TestRowLevelCDF:
         dels = ch.filter("_change_type = 'delete'")
         assert dels.agg({"v": "sum"}).collect()[0][0] == 50.0
         # consuming only the tail of the feed works too
-        tail = read_changes(registered, path, self.NUM_SCHEMA, 2, 4)
+        tail = read_changes(spark, path, self.NUM_SCHEMA, 2, 4)
         assert tail.count() == 60
         # final state agrees with the ledger
         assert (
-            read_committed(registered, path, self.NUM_SCHEMA).count() == 160
+            read_committed(spark, path, self.NUM_SCHEMA).count() == 160
         )
 
-    def test_rewrite_in_range_raises(self, registered, tmp_path):
+    def test_rewrite_in_range_raises(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import read_changes
 
         path = str(tmp_path / "cdf2")
-        _write(registered, path, [(1, "a")])
-        compact_snapshots(registered, path, SCHEMA)
+        _write(spark, path, [(1, "a")])
+        compact_snapshots(spark, path, SCHEMA)
         with pytest.raises(ValueError, match="compaction reorganizes"):
-            read_changes(registered, path, SCHEMA, 0, 2).count()
+            read_changes(spark, path, SCHEMA, 0, 2).count()
         # an empty range yields an empty, well-typed feed
-        empty = read_changes(registered, path, SCHEMA, 2, 2)
+        empty = read_changes(spark, path, SCHEMA, 2, 2)
         assert empty.count() == 0
         assert "_change_type" in empty.columns
 
@@ -667,7 +489,7 @@ class TestMergeUpsert:
     NUM_SCHEMA = "k bigint, v double"
 
     def test_upsert_replaces_and_inserts_without_rewrite(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         from olap_project_spark.export.manifest_sink import (
             merge_upsert,
@@ -675,24 +497,21 @@ class TestMergeUpsert:
         )
 
         path = str(tmp_path / "mu")
-        (
-            registered.range(0, 100)
+        save_manifest(
+            spark.range(0, 100)
             .selectExpr("id as k", "cast(1.0 as double) as v")
-            .repartition(2)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
+            .repartition(2),
+            path,
         )
         before = {f["file_name"] for f in table_files(path)}
-        upd = registered.range(50, 120).selectExpr(
+        upd = spark.range(50, 120).selectExpr(
             "id as k", "cast(9.0 as double) as v"
         )
-        res = merge_upsert(registered, path, upd, ["k"])
+        res = merge_upsert(spark, path, upd, ["k"])
         assert res["n_updates"] == 70
         # ONE atomic commit: base was version 1, the merge IS version 2
         assert res["version"] == 2
-        back = read_committed(registered, path, self.NUM_SCHEMA)
+        back = read_committed(spark, path, self.NUM_SCHEMA)
         assert back.count() == 120  # 50 kept + 70 upserted
         assert back.filter("v = 9.0").count() == 70
         assert back.filter("v = 1.0").count() == 50
@@ -702,29 +521,26 @@ class TestMergeUpsert:
         after = {f["file_name"] for f in table_files(path)}
         assert before <= after
 
-    def test_upsert_then_compaction_materializes(self, registered, tmp_path):
+    def test_upsert_then_compaction_materializes(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import merge_upsert
 
         path = str(tmp_path / "mu2")
-        (
-            registered.range(0, 20)
+        save_manifest(
+            spark.range(0, 20)
             .selectExpr("id as k", "cast(1.0 as double) as v")
-            .repartition(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
+            .repartition(1),
+            path,
         )
         merge_upsert(
-            registered,
+            spark,
             path,
-            registered.range(0, 5).selectExpr(
+            spark.range(0, 5).selectExpr(
                 "id as k", "cast(2.0 as double) as v"
             ),
             ["k"],
         )
-        compact_snapshots(registered, path, self.NUM_SCHEMA)
-        back = read_committed(registered, path, self.NUM_SCHEMA)
+        compact_snapshots(spark, path, self.NUM_SCHEMA)
+        back = read_committed(spark, path, self.NUM_SCHEMA)
         assert back.count() == 20
         assert back.filter("v = 2.0").count() == 5
 
@@ -733,7 +549,7 @@ class TestCompactionPolicyAdvisor:
     NUM_SCHEMA = "k bigint, v double"
 
     def test_flags_small_file_range_and_feeds_compact_range(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         from olap_project_spark.export.manifest_sink import (
             compact_range,
@@ -742,23 +558,17 @@ class TestCompactionPolicyAdvisor:
 
         path = str(tmp_path / "policy")
         for i in range(6):  # small-file storm in the low range
-            (
-                registered.range(i * 50, (i + 1) * 50)
+            save_manifest(
+                spark.range(i * 50, (i + 1) * 50)
                 .selectExpr("id as k", "cast(0.0 as double) as v")
-                .repartition(1)
-                .write.format("manifest_sink")
-                .option("path", path)
-                .mode("append")
-                .save()
+                .repartition(1),
+                path,
             )
-        (
-            registered.range(10_000, 20_000)
+        save_manifest(
+            spark.range(10_000, 20_000)
             .selectExpr("id as k", "cast(0.0 as double) as v")
-            .repartition(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
+            .repartition(1),
+            path,
         )
         plan = plan_compaction_ranges(
             path, "k", n_ranges=4, min_files=3, max_avg_rows=1000
@@ -768,7 +578,7 @@ class TestCompactionPolicyAdvisor:
         assert flagged[0]["file_count"] == 6
         assert flagged[0]["total_rows"] == 300
         res = compact_range(
-            registered,
+            spark,
             path,
             self.NUM_SCHEMA,
             "k",
@@ -782,14 +592,14 @@ class TestCompactionPolicyAdvisor:
         )
         assert not any(r["needs_compaction"] for r in plan2)
         assert (
-            read_committed(registered, path, self.NUM_SCHEMA).count()
+            read_committed(spark, path, self.NUM_SCHEMA).count()
             == 10_300
         )
 
 
 class TestSnapshotTags:
     def test_tag_resolves_forever_and_is_immutable(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         from olap_project_spark.export.manifest_sink import (
             drop_tag,
@@ -799,13 +609,13 @@ class TestSnapshotTags:
         )
 
         path = str(tmp_path / "tags")
-        _write(registered, path, [(1, "a")])
+        _write(spark, path, [(1, "a")])
         assert tag_snapshot(path, "baseline") == 1
-        _write(registered, path, [(2, "b")])
+        _write(spark, path, [(2, "b")])
         tag_snapshot(path, "after-load", version=2)
         assert list_tags(path) == {"baseline": 1, "after-load": 2}
         got = read_committed(
-            registered, path, SCHEMA, as_of=read_tag(path, "baseline")
+            spark, path, SCHEMA, as_of=read_tag(path, "baseline")
         )
         assert [r["k"] for r in got.collect()] == [1]
         with pytest.raises(ValueError, match="already exists"):
@@ -818,21 +628,19 @@ class TestSnapshotTags:
 
 
 class TestNestedTypes:
-    def test_array_and_struct_columns_round_trip(self, registered, tmp_path):
+    def test_array_and_struct_columns_round_trip(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import table_schema
 
         path = str(tmp_path / "nested")
-        df = registered.range(5).selectExpr(
+        df = spark.range(5).selectExpr(
             "id as k",
             "named_struct('a', id, 'b', cast(id as string)) as s",
             "array(cast(id as float), cast(id + 1 as float)) as arr",
         )
-        df.repartition(1).write.format("manifest_sink").option(
-            "path", path
-        ).mode("append").save()
+        save_manifest(df.repartition(1), path)
         # schema DISCOVERY round-trips the nested types (nullability
         # normalizes to nullable on read, as in every table format)
-        back = read_committed(registered, path, table_schema(path))
+        back = read_committed(spark, path, table_schema(path))
         assert back.schema.simpleString() == df.schema.simpleString()
         rows = back.orderBy("k").collect()
         assert rows[2]["s"]["b"] == "2" and list(rows[2]["arr"]) == [2.0, 3.0]
@@ -867,7 +675,7 @@ r10_op = st.sampled_from(
 )
 @given(st.lists(r10_op, min_size=2, max_size=7))
 def test_round10_lifecycle_preserves_state_and_tags(
-    registered, spark, tmp_path, ops
+    spark, tmp_path, ops
 ):
     from olap_project_spark.export.manifest_sink import (
         _log,
@@ -902,7 +710,7 @@ def test_round10_lifecycle_preserves_state_and_tags(
         if op == "append":
             rows = [(next_k + i, f"r{next_k + i}") for i in range(2)]
             next_k += 2
-            _write(registered, path, rows)
+            _write(spark, path, rows)
             model.update(rows)
         elif op == "upsert":
             if not model:
@@ -911,9 +719,9 @@ def test_round10_lifecycle_preserves_state_and_tags(
             upd = [(k0, f"u{k0}"), (next_k, f"n{next_k}")]
             next_k += 1
             merge_upsert(
-                registered,
+                spark,
                 path,
-                registered.createDataFrame(upd, SCHEMA).repartition(1),
+                spark.createDataFrame(upd, SCHEMA).repartition(1),
                 ["k"],
             )
             model.update(upd)
@@ -923,13 +731,13 @@ def test_round10_lifecycle_preserves_state_and_tags(
             mid = sorted(model)[len(model) // 2]
             if unmaterialized_delete():
                 with pytest.raises(ValueError, match="resurrect"):
-                    compact_range(registered, path, SCHEMA, "k", 0, mid)
+                    compact_range(spark, path, SCHEMA, "k", 0, mid)
             else:
-                compact_range(registered, path, SCHEMA, "k", 0, mid)
+                compact_range(spark, path, SCHEMA, "k", 0, mid)
         elif op == "compact_full":
             if not table_versions(path):
                 continue
-            compact_snapshots(registered, path, SCHEMA)
+            compact_snapshots(spark, path, SCHEMA)
         elif op == "stale_claim":
             if not os.path.isdir(path):
                 continue
@@ -961,7 +769,7 @@ def test_round10_lifecycle_preserves_state_and_tags(
             )
 
             maintain(
-                registered,
+                spark,
                 path,
                 SCHEMA,
                 MaintenancePolicy(
@@ -987,148 +795,51 @@ def test_round10_lifecycle_preserves_state_and_tags(
         if os.path.isdir(path):
             got = {
                 r["k"]: r["v"]
-                for r in read_committed(registered, path, SCHEMA).collect()
+                for r in read_committed(spark, path, SCHEMA).collect()
             }
             assert got == model, op
             for name, pinned in tags.items():
                 at_tag = {
                     r["k"]: r["v"]
                     for r in read_committed(
-                        registered, path, SCHEMA,
+                        spark, path, SCHEMA,
                         as_of=read_tag(path, name),
                     ).collect()
                 }
                 assert at_tag == pinned, (op, name)
 
 
-class TestLiveTailUnderConcurrency:
-    def test_stream_holds_at_live_claim_then_resumes_exactly_once(
-        self, registered, tmp_path
-    ):
-        """END-TO-END gap semantics under real concurrency: a stream
-        tails the table while commits land; mid-stream a rival's claim
-        appears (in-flight) — the tail must HOLD below it even as later
-        commits complete above it, and when the claim resolves (here:
-        abandoned → permanent hole) the tail resumes and delivers every
-        committed row exactly once."""
-        fmt = ensure_manifest_sink(registered)
-        path = str(tmp_path / "live")
-        ckpt = str(tmp_path / "live_ckpt")
-        got: list[int] = []
-
-        def sink(df, epoch):
-            got.extend(r["k"] for r in df.collect())
-
-        _write(registered, path, [(0, "v0")])  # v1
-        _write(registered, path, [(1, "v1")])  # v2
-        q = (
-            registered.readStream.format(fmt)
-            .option("path", path)
-            .load()
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="250 milliseconds")
-            .start()
-        )
-        try:
-            deadline = time.time() + 60
-            while time.time() < deadline and sorted(got) != [0, 1]:
-                time.sleep(0.25)
-            assert sorted(got) == [0, 1]
-            # rival claims v3 and stalls; commits keep landing above it
-            claim = os.path.join(path, "_manifest-000003.json")
-            open(claim, "w").close()
-            _write(registered, path, [(2, "v2")])  # v4
-            _write(registered, path, [(3, "v3")])  # v5
-            time.sleep(2.0)  # several trigger periods
-            assert sorted(got) == [0, 1], "tail advanced past a live claim"
-            # the claim resolves as a permanent hole (crashed writer
-            # vacuumed away); the tail must deliver v4/v5 exactly once
-            os.remove(claim)
-            deadline = time.time() + 60
-            while time.time() < deadline and sorted(got) != [0, 1, 2, 3]:
-                time.sleep(0.25)
-            assert sorted(got) == [0, 1, 2, 3]
-        finally:
-            q.stop()
-
-    def test_stream_tails_while_writers_commit(self, registered, tmp_path):
-        """Interleaved writer/tailer: five commits land WHILE the tail
-        runs (not before it starts); every row arrives exactly once —
-        the steady-state CDC shape."""
-        import threading as th
-
-        fmt = ensure_manifest_sink(registered)
-        path = str(tmp_path / "live2")
-        ckpt = str(tmp_path / "live2_ckpt")
-        _write(registered, path, [(0, "seed")])
-        got: list[int] = []
-
-        def sink(df, epoch):
-            got.extend(r["k"] for r in df.collect())
-
-        q = (
-            registered.readStream.format(fmt)
-            .option("path", path)
-            .load()
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="250 milliseconds")
-            .start()
-        )
-
-        def writer():
-            for i in range(1, 6):
-                _write(registered, path, [(i, f"v{i}")])
-                time.sleep(0.3)
-
-        t = th.Thread(target=writer)
-        try:
-            t.start()
-            deadline = time.time() + 120
-            while time.time() < deadline and sorted(got) != list(range(6)):
-                time.sleep(0.25)
-            t.join()
-            assert sorted(got) == list(range(6))
-        finally:
-            q.stop()
-
-
 class TestReviewFixes:
     """Regression pins for the round-10 self-review findings."""
 
-    def test_branch_rewrite_never_anchors_vacuum(self, registered, tmp_path):
+    def test_branch_rewrite_never_anchors_vacuum(self, spark, tmp_path):
         """An unpublished WAP branch's rewrite is invisible to main —
         vacuum must not expire main history against it (it would empty
         the table for every main reader)."""
         path = str(tmp_path / "fix_vac")
-        _write(registered, path, [(1, "a")])
-        _write(registered, path, [(2, "b")])
+        _write(spark, path, [(1, "a")])
+        _write(spark, path, [(2, "b")])
         # a branch stages a rewrite-tagged commit
-        (
-            registered.createDataFrame([(9, "staged")], SCHEMA)
-            .repartition(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .option("branch", "audit")
-            .option("kind", "rewrite")
-            .mode("append")
-            .save()
+        save_manifest(
+            spark.createDataFrame([(9, "staged")], SCHEMA).repartition(1),
+            path,
+            branch="audit",
+            kind="rewrite",
         )
         stats = vacuum_snapshots(registered_path := path)
         assert stats["expired_manifests"] == 0  # nothing anchored on it
         with pytest.raises(ValueError, match="main rewrite"):
             vacuum_snapshots(registered_path, keep_from=3)
-        got = read_committed(registered, path, SCHEMA)
+        got = read_committed(spark, path, SCHEMA)
         assert sorted(r["k"] for r in got.collect()) == [1, 2]
 
     def test_stream_head_holds_below_fileless_claim(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         """With a conditional-PUT claimer, an in-flight claim has NO
-        file on disk — the stream head must still hold below it."""
+        file on disk — vacuum must still count it in flight."""
         path = str(tmp_path / "fix_cput")
-        _write(registered, path, [(1, "a")])
+        _write(spark, path, [(1, "a")])
         store = {f"{path}/_manifest-000001.json"}  # v1 already committed
         lock = threading.Lock()
 
@@ -1153,7 +864,6 @@ class TestReviewFixes:
         try:
             # rival claims v2 in the STORE only; no file exists
             store.add(f"{path}/_manifest-000002.json")
-            assert _stream_visible_head(path) == 1
             # vacuum treats the file-less claim as in-flight: no GC
             staging = os.path.join(path, "_staging")
             with open(os.path.join(staging, "part-live.parquet"), "wb") as f:
@@ -1165,19 +875,19 @@ class TestReviewFixes:
             set_version_claimer(prev)
 
     def test_policy_advisor_rejects_string_zone_maps(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         from olap_project_spark.export.manifest_sink import (
             plan_compaction_ranges,
         )
 
         path = str(tmp_path / "fix_str")
-        _write(registered, path, [(1, "a"), (2, "b")])
+        _write(spark, path, [(1, "a"), (2, "b")])
         with pytest.raises(ValueError, match="NUMERIC zone maps"):
             plan_compaction_ranges(path, "v")
 
     def test_merge_upsert_reports_committed_versions(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         """API return values use the committed-main axis: a rival's
         in-flight claim above our commit must not leak into the
@@ -1185,19 +895,16 @@ class TestReviewFixes:
         from olap_project_spark.export.manifest_sink import merge_upsert
 
         path = str(tmp_path / "fix_ver")
-        (
-            registered.range(0, 10)
+        save_manifest(
+            spark.range(0, 10)
             .selectExpr("id as k", "cast(1.0 as double) as v")
-            .repartition(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
+            .repartition(1),
+            path,
         )
         res = merge_upsert(
-            registered,
+            spark,
             path,
-            registered.range(0, 3).selectExpr(
+            spark.range(0, 3).selectExpr(
                 "id as k", "cast(2.0 as double) as v"
             ),
             ["k"],
@@ -1223,32 +930,29 @@ class TestReviewFixesB:
     NUM_SCHEMA = "k bigint, v double"
 
     def test_under_partitioned_bucketed_commit_rejected(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         """An input repartitioned fewer ways than n_buckets must fail
         AT COMMIT, before a false bucket layout becomes a manifest an
         exchange-free join would silently trust."""
         path = str(tmp_path / "fixb_bkt")
-        df = registered.range(0, 100).selectExpr(
+        df = spark.range(0, 100).selectExpr(
             "id as k", "cast(1.0 as double) as v"
         )
         with pytest.raises(Exception, match="not repartitioned"):
-            (
-                df.repartition(4, "k")  # 4 ways, claims 8 buckets
-                .write.format("manifest_sink")
-                .option("path", path)
-                .option("kind", "rewrite")
-                .option("bucket_by", "k")
-                .option("n_buckets", "8")
-                .option("subdir", "bkt-test")
-                .mode("append")
-                .save()
+            save_manifest(
+                df.repartition(4, "k"),
+                path,
+                kind="rewrite",
+                bucket_by="k",
+                n_buckets="8",
+                subdir="bkt-test",
             )
         # nothing committed: the table stays empty
         assert table_versions(path) == []
 
     def test_advisor_ranges_are_gap_free_on_float_axes(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         """Float zone maps: a file sitting strictly between two integer
         '-1' style range ends must still land in exactly one range."""
@@ -1259,41 +963,32 @@ class TestReviewFixesB:
         path = str(tmp_path / "fixb_float")
         # three files: [0,1], [1.2,1.9] (the would-be gap), [8,10]
         for lo_, hi_ in ((0.0, 1.0), (1.2, 1.9), (8.0, 10.0)):
-            (
-                registered.createDataFrame(
-                    [(1, lo_), (2, hi_)], "k bigint, x double"
-                )
-                .repartition(1)
-                .write.format("manifest_sink")
-                .option("path", path)
-                .mode("append")
-                .save()
+            df = spark.createDataFrame(
+                [(1, lo_), (2, hi_)], "k bigint, x double"
             )
+            save_manifest(df.repartition(1), path)
         plan = plan_compaction_ranges(
             path, "x", n_ranges=8, min_files=1, max_avg_rows=10
         )
         counted = sum(r["file_count"] for r in plan)
         assert counted >= 3  # every file in at least one range
 
-    def test_merge_upsert_stages_on_wap_branch(self, registered, tmp_path):
+    def test_merge_upsert_stages_on_wap_branch(self, spark, tmp_path):
         """branch= stages the ONE atomic merge snapshot invisibly, and
         publishing flips it into main with a single manifest swap."""
         from olap_project_spark.export.manifest_sink import merge_upsert
 
         path = str(tmp_path / "fixb_wap")
-        (
-            registered.range(0, 10)
+        save_manifest(
+            spark.range(0, 10)
             .selectExpr("id as k", "cast(1.0 as double) as v")
-            .repartition(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
+            .repartition(1),
+            path,
         )
         res = merge_upsert(
-            registered,
+            spark,
             path,
-            registered.range(0, 4).selectExpr(
+            spark.range(0, 4).selectExpr(
                 "id as k", "cast(9.0 as double) as v"
             ),
             ["k"],
@@ -1301,55 +996,16 @@ class TestReviewFixesB:
         )
         assert res["version"] == 2 and res["n_updates"] == 4
         # main sees NOTHING until the publish
-        main = read_committed(registered, path, self.NUM_SCHEMA)
+        main = read_committed(spark, path, self.NUM_SCHEMA)
         assert main.filter("v = 9.0").count() == 0
         assert main.count() == 10
         # the branch audit sees the merged state
         staged = read_committed(
-            registered, path, self.NUM_SCHEMA, branch="merge-wip"
+            spark, path, self.NUM_SCHEMA, branch="merge-wip"
         )
         assert staged.filter("v = 9.0").count() == 4
         assert publish_branch(path, "merge-wip") == [2]
-        after = read_committed(registered, path, self.NUM_SCHEMA)
+        after = read_committed(spark, path, self.NUM_SCHEMA)
         assert after.count() == 10
         assert after.filter("v = 9.0").count() == 4
 
-
-class TestMaxVersionsOfferLadder:
-    def test_offer_ladder_with_cap(self, spark):
-        """maxVersionsPerTrigger caps each offer: over a 5-version log
-        with cap 2 the reader offers versions 2, 4, then 5."""
-        import tempfile
-
-        from olap_project_spark.export.manifest_sink import (
-            ManifestStreamReader,
-            ensure_manifest_sink,
-        )
-
-        fmt = ensure_manifest_sink(spark)
-        path = tempfile.mkdtemp(prefix="bp_ladder_") + "/t"
-        for i in range(5):
-            (
-                spark.createDataFrame([(i, "x")], "k bigint, v string")
-                .repartition(1)
-                .write.format(fmt)
-                .option("path", path)
-                .mode("append")
-                .save()
-            )
-        from pyspark.sql.types import StructType
-
-        r = ManifestStreamReader(
-            {"path": path, "maxVersionsPerTrigger": "2"},
-            schema=StructType.fromDDL("k bigint, v string"),
-        )
-        offers = []
-        first = r.latestOffset()["version"]  # Spark polls before initial
-        offers.append(first)
-        r.initialOffset()
-        r.partitions({"version": 0}, {"version": first})
-        for _ in range(2):
-            end = r.latestOffset()["version"]
-            offers.append(end)
-            r.partitions({"version": offers[-2]}, {"version": end})
-        assert offers == [2, 4, 5]

@@ -13,45 +13,29 @@ import threading
 import pytest
 
 from olap_project_spark.export.manifest_sink import (
-    ManifestSinkDataSource,
     compact_range,
     compact_snapshots,
     merge_upsert,
+    plan_pruned_files,
     read_changes,
     read_committed,
+    read_pruned,
+    save_manifest,
+    table_files,
     table_schema,
     table_versions,
 )
-
-
-@pytest.fixture(scope="module")
-def registered(spark):
-    try:
-        spark.dataSource.register(ManifestSinkDataSource)
-    except Exception:  # noqa: BLE001 — already registered this session
-        pass
-    return spark
 
 
 NUM_SCHEMA = "k bigint, v double"
 
 
 def _seed(spark, path, n=20, parts=1):
-    # re-pin `spark` as the JVM thread's active session: a preceding
-    # test may have activated a newSession() child, and the batch
-    # DataFrameWriter resolves Python sources against the ACTIVE
-    # session's registry
-    from olap_project_spark.export.manifest_sink import ensure_manifest_sink
-
-    ensure_manifest_sink(spark)
-    (
+    save_manifest(
         spark.range(0, n)
         .selectExpr("id as k", "cast(1.0 as double) as v")
-        .repartition(parts)
-        .write.format("manifest_sink")
-        .option("path", path)
-        .mode("append")
-        .save()
+        .repartition(parts),
+        path,
     )
 
 
@@ -62,32 +46,32 @@ def _updates(spark, lo, hi, v=9.0):
 
 
 class TestAtomicMerge:
-    def test_merge_is_exactly_one_version(self, registered, tmp_path):
+    def test_merge_is_exactly_one_version(self, spark, tmp_path):
         """A reader pinned at ANY committed version sees exactly the
         pre-merge state or exactly the post-merge state — there is no
         intermediate version where the delete applied but the insert
         had not (the round-10 two-commit window)."""
         path = str(tmp_path / "atomic")
-        _seed(registered, path, n=20)
+        _seed(spark, path, n=20)
         res = merge_upsert(
-            registered, path, _updates(registered, 10, 30), ["k"]
+            spark, path, _updates(spark, 10, 30), ["k"]
         )
         assert table_versions(path) == [1, 2]
         assert res["version"] == 2 and res["n_updates"] == 20
-        old = read_committed(registered, path, NUM_SCHEMA, as_of=1)
+        old = read_committed(spark, path, NUM_SCHEMA, as_of=1)
         assert old.count() == 20
         assert old.filter("v = 9.0").count() == 0
-        new = read_committed(registered, path, NUM_SCHEMA, as_of=2)
+        new = read_committed(spark, path, NUM_SCHEMA, as_of=2)
         assert new.count() == 30  # 10 kept + 20 upserted
         assert new.filter("v = 9.0").count() == 20
         assert new.filter("v = 1.0").count() == 10
 
     def test_merge_manifest_records_keys_and_rows(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         path = str(tmp_path / "meta")
-        _seed(registered, path, n=4)
-        merge_upsert(registered, path, _updates(registered, 0, 2), ["k"])
+        _seed(spark, path, n=4)
+        merge_upsert(spark, path, _updates(spark, 0, 2), ["k"])
         with open(os.path.join(path, "_manifest-000002.json")) as f:
             m = json.load(f)
         assert m["kind"] == "merge"
@@ -99,7 +83,7 @@ class TestAtomicMerge:
         assert {f.name for f in table_schema(path).fields} == {"k", "v"}
 
     def test_concurrent_reader_sees_old_or_new_never_half(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         """Live-concurrency leg: readers polling the table WHILE the
         merge commits must observe only the two legal states. With the
@@ -107,7 +91,7 @@ class TestAtomicMerge:
         (delete applied, re-insert missing); any such observation
         fails this test."""
         path = str(tmp_path / "live")
-        _seed(registered, path, n=20)
+        _seed(spark, path, n=20)
         legal = {
             (20, 20 * 1.0),  # pre-merge: 20 rows at v=1.0
             (25, 5 * 1.0 + 20 * 9.0),  # post-merge: 5 kept + 20 at 9.0
@@ -122,7 +106,7 @@ class TestAtomicMerge:
                 # ONE read per observation: count and sum must come
                 # from the same snapshot or the pair itself races
                 row = (
-                    read_committed(registered, path, NUM_SCHEMA)
+                    read_committed(spark, path, NUM_SCHEMA)
                     .agg(F.count("*").alias("n"), F.sum("v").alias("s"))
                     .collect()[0]
                 )
@@ -132,7 +116,7 @@ class TestAtomicMerge:
         t.start()
         try:
             merge_upsert(
-                registered, path, _updates(registered, 5, 25), ["k"]
+                spark, path, _updates(spark, 5, 25), ["k"]
             )
         finally:
             stop.set()
@@ -141,14 +125,14 @@ class TestAtomicMerge:
         illegal = [o for o in observed if o not in legal]
         assert illegal == [], f"reader observed intermediate state: {illegal}"
 
-    def test_merge_cdf_is_one_commit_version(self, registered, tmp_path):
+    def test_merge_cdf_is_one_commit_version(self, spark, tmp_path):
         """read_changes across a merge emits the removed pre-image rows
         as deletes and the update rows as inserts, all stamped with the
         ONE merge version."""
         path = str(tmp_path / "cdf")
-        _seed(registered, path, n=10)
-        merge_upsert(registered, path, _updates(registered, 8, 12), ["k"])
-        feed = read_changes(registered, path, NUM_SCHEMA, 1, 2).collect()
+        _seed(spark, path, n=10)
+        merge_upsert(spark, path, _updates(spark, 8, 12), ["k"])
+        feed = read_changes(spark, path, NUM_SCHEMA, 1, 2).collect()
         assert {r["_commit_version"] for r in feed} == {2}
         deletes = [r for r in feed if r["_change_type"] == "delete"]
         inserts = [r for r in feed if r["_change_type"] == "insert"]
@@ -158,83 +142,62 @@ class TestAtomicMerge:
         assert all(r["v"] == 1.0 for r in deletes)  # pre-image rows
         assert all(r["v"] == 9.0 for r in inserts)
 
-    def test_streaming_tail_rejects_merge_snapshot(
-        self, registered, tmp_path
-    ):
-        """A file-level streaming tail cannot represent the merge's row
-        removals — same contract as delete/rewrite snapshots."""
-        from olap_project_spark.export.manifest_sink import (
-            ManifestStreamReader,
-        )
-
-        path = str(tmp_path / "tail")
-        _seed(registered, path, n=4)
-        merge_upsert(registered, path, _updates(registered, 0, 2), ["k"])
-        schema = registered.createDataFrame([], NUM_SCHEMA).schema
-        reader = ManifestStreamReader({"path": path}, schema)
-        with pytest.raises(ValueError, match="merge snapshot"):
-            reader.partitions({"version": 0}, {"version": 2})
-
     def test_partial_compaction_rejects_unmaterialized_merge(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         """compact_range over a merge not yet materialized by a full
         rewrite would resurrect the tombstoned pre-merge rows in files
         it retains; a full compaction clears the hazard."""
         path = str(tmp_path / "pc")
-        _seed(registered, path, n=20)
-        merge_upsert(registered, path, _updates(registered, 0, 5), ["k"])
+        _seed(spark, path, n=20)
+        merge_upsert(spark, path, _updates(spark, 0, 5), ["k"])
         with pytest.raises(ValueError, match="resurrect"):
-            compact_range(registered, path, NUM_SCHEMA, "k", 0, 10)
-        compact_snapshots(registered, path, NUM_SCHEMA)
-        res = compact_range(registered, path, NUM_SCHEMA, "k", 0, 10)
+            compact_range(spark, path, NUM_SCHEMA, "k", 0, 10)
+        compact_snapshots(spark, path, NUM_SCHEMA)
+        res = compact_range(spark, path, NUM_SCHEMA, "k", 0, 10)
         assert res["version"] > 0
-        back = read_committed(registered, path, NUM_SCHEMA)
+        back = read_committed(spark, path, NUM_SCHEMA)
         assert back.count() == 20
         assert back.filter("v = 9.0").count() == 5
 
     def test_merge_missing_column_rejected_before_commit(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         """An update frame lacking a table column would poison schema
         discovery if committed; merge_upsert rejects it driver-side and
         the table is untouched."""
         path = str(tmp_path / "guard")
-        _seed(registered, path, n=4)
-        partial = registered.range(0, 2).selectExpr("id as k")
+        _seed(spark, path, n=4)
+        partial = spark.range(0, 2).selectExpr("id as k")
         with pytest.raises(ValueError, match="whole-row"):
-            merge_upsert(registered, path, partial, ["k"])
+            merge_upsert(spark, path, partial, ["k"])
         assert table_versions(path) == [1]
-        assert read_committed(registered, path, NUM_SCHEMA).count() == 4
+        assert read_committed(spark, path, NUM_SCHEMA).count() == 4
 
     def test_merge_requires_keys_in_update_schema(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         path = str(tmp_path / "keys")
-        _seed(registered, path, n=4)
+        _seed(spark, path, n=4)
         with pytest.raises(Exception, match="merge_keys"):
             merge_upsert(
-                registered, path, _updates(registered, 0, 2), ["nope"]
+                spark, path, _updates(spark, 0, 2), ["nope"]
             )
         with pytest.raises(ValueError, match="at least one"):
-            merge_upsert(registered, path, _updates(registered, 0, 2), [])
+            merge_upsert(spark, path, _updates(spark, 0, 2), [])
 
-    def test_reinsert_after_merge_survives(self, registered, tmp_path):
+    def test_reinsert_after_merge_survives(self, spark, tmp_path):
         """Sequence-number rule across kinds: a merge tombstones only
         the state BEFORE it; a later plain append of the same key
         stacks on top (duplicate keys are the append contract)."""
         path = str(tmp_path / "seq")
-        _seed(registered, path, n=4)
-        merge_upsert(registered, path, _updates(registered, 0, 2), ["k"])
-        (
-            registered.createDataFrame([(0, 5.0)], NUM_SCHEMA)
-            .repartition(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
+        _seed(spark, path, n=4)
+        merge_upsert(spark, path, _updates(spark, 0, 2), ["k"])
+        save_manifest(
+            spark.createDataFrame([(0, 5.0)], NUM_SCHEMA).repartition(1),
+            path,
         )
-        back = read_committed(registered, path, NUM_SCHEMA)
+        back = read_committed(spark, path, NUM_SCHEMA)
         assert back.count() == 5
         assert back.filter("k = 0").count() == 2  # merged row + append
 
@@ -255,7 +218,7 @@ class TestHiddenPartitioning:
         )
 
     def test_days_transform_prunes_and_loses_nothing(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         import datetime as dt
 
@@ -267,14 +230,8 @@ class TestHiddenPartitioning:
         )
 
         path = str(tmp_path / "days")
-        # re-pin the parent session (see _seed)
-        from olap_project_spark.export.manifest_sink import (
-            ensure_manifest_sink,
-        )
-
-        ensure_manifest_sink(registered)
         write_partitioned(
-            registered, self._ts_frame(registered), path, "ts", "days",
+            spark, self._ts_frame(spark), path, "ts", "days",
             n_files=4,
         )
         lo = dt.datetime(2024, 1, 2)
@@ -283,37 +240,35 @@ class TestHiddenPartitioning:
         assert total == 4
         assert 1 <= len(kept) <= 2  # range boundaries come from sampling
         got = (
-            read_pruned(registered, path, self.TS_SCHEMA, "ts", lo, hi)
+            read_pruned(spark, path, self.TS_SCHEMA, "ts", lo, hi)
             .filter("ts >= '2024-01-02' and ts < '2024-01-03'")
             .count()
         )
         want = (
-            read_committed(registered, path, self.TS_SCHEMA)
+            read_committed(spark, path, self.TS_SCHEMA)
             .filter("ts >= '2024-01-02' and ts < '2024-01-03'")
             .count()
         )
         assert got == want == 24
 
-    def test_truncate_and_bucket_transforms(self, registered, tmp_path):
+    def test_truncate_and_bucket_transforms(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import (
-            ensure_manifest_sink,
             plan_pruned_files,
             write_partitioned,
         )
 
-        ensure_manifest_sink(registered)
-        ints = registered.range(0, 1000).selectExpr(
+        ints = spark.range(0, 1000).selectExpr(
             "id as k", "cast(1.0 as double) as v"
         )
         t_path = str(tmp_path / "trunc")
         write_partitioned(
-            registered, ints, t_path, "k", "truncate", arg=100, n_files=10
+            spark, ints, t_path, "k", "truncate", arg=100, n_files=10
         )
         kept, total = plan_pruned_files(t_path, "k", 250, 260)
         assert total == 10 and len(kept) == 1
         b_path = str(tmp_path / "bkt")
         write_partitioned(
-            registered, ints, b_path, "k", "bucket", arg=8, n_files=8
+            spark, ints, b_path, "k", "bucket", arg=8, n_files=8
         )
         # bucket prunes equality probes only; the zone maps still
         # prune ranges on the raw column independently
@@ -321,31 +276,21 @@ class TestHiddenPartitioning:
         assert total_b == 8 and len(kept_eq) == 1
 
     def test_null_source_value_disables_pruning_for_that_file(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         import json as _json
         import os as _os
 
         from olap_project_spark.export.manifest_sink import (
-            ensure_manifest_sink,
             plan_pruned_files,
         )
 
-        ensure_manifest_sink(registered)
         path = str(tmp_path / "nulls")
-        (
-            registered.createDataFrame(
-                [(1, None, 1.0)], self.TS_SCHEMA
-            )
-            .repartition(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .option(
-                "partition_transform",
-                _json.dumps({"col": "ts", "kind": "days"}),
-            )
-            .mode("append")
-            .save()
+        save_manifest(
+            spark.createDataFrame([(1, None, 1.0)], self.TS_SCHEMA)
+            .repartition(1),
+            path,
+            partition_transform=_json.dumps({"col": "ts", "kind": "days"}),
         )
         manifest = _os.path.join(path, "_manifest-000001.json")
         with open(manifest) as f:
@@ -388,7 +333,7 @@ class TestHiddenPartitioning:
             assert vec == [_transform_scalar(spec, v) for v in ints], kind
 
     def test_compaction_preserves_hidden_partitioning(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         """compact_snapshots(partition_by=...) re-records the transform
         spec + per-file ranges through the rewrite — without it the
@@ -397,32 +342,30 @@ class TestHiddenPartitioning:
         import datetime as dt
 
         from olap_project_spark.export.manifest_sink import (
-            ensure_manifest_sink,
             plan_pruned_files,
             read_committed,
             write_partitioned,
         )
 
-        ensure_manifest_sink(registered)
         path = str(tmp_path / "compat")
         write_partitioned(
-            registered,
-            self._ts_frame(registered, hours=48),
+            spark,
+            self._ts_frame(spark, hours=48),
             path,
             "ts",
             "days",
             n_files=2,
         )
         write_partitioned(
-            registered,
-            self._ts_frame(registered, hours=96).filter("k >= 48"),
+            spark,
+            self._ts_frame(spark, hours=96).filter("k >= 48"),
             path,
             "ts",
             "days",
             n_files=2,
         )
         compact_snapshots(
-            registered,
+            spark,
             path,
             self.TS_SCHEMA,
             partition_by=("ts", "days"),
@@ -434,39 +377,39 @@ class TestHiddenPartitioning:
         assert total == 4  # the rewrite's files, not the history's
         assert 1 <= len(kept) <= 2
         got = (
-            read_committed(registered, path, self.TS_SCHEMA)
+            read_committed(spark, path, self.TS_SCHEMA)
             .filter("ts >= '2024-01-02' and ts < '2024-01-03'")
             .count()
         )
         assert got == 24
 
-    def test_layout_options_mutually_exclusive(self, registered, tmp_path):
+    def test_layout_options_mutually_exclusive(self, spark, tmp_path):
         with pytest.raises(ValueError, match="mutually"):
             compact_snapshots(
-                registered,
+                spark,
                 str(tmp_path / "never"),
                 self.TS_SCHEMA,
                 cluster_by=["k"],
                 partition_by=("ts", "days"),
             )
 
-    def test_invalid_transform_rejected(self, registered, tmp_path):
+    def test_invalid_transform_rejected(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import (
             write_partitioned,
         )
 
         with pytest.raises(ValueError, match="unknown partition transform"):
             write_partitioned(
-                registered,
-                registered.range(1).selectExpr("id as k"),
+                spark,
+                spark.range(1).selectExpr("id as k"),
                 str(tmp_path / "bad"),
                 "k",
                 "weeks",
             )
         with pytest.raises(ValueError, match="positive int"):
             write_partitioned(
-                registered,
-                registered.range(1).selectExpr("id as k"),
+                spark,
+                spark.range(1).selectExpr("id as k"),
                 str(tmp_path / "bad2"),
                 "k",
                 "truncate",
@@ -476,8 +419,8 @@ class TestHiddenPartitioning:
 class TestConditionalPutRelease:
     """Round-10 ADVICE: ConditionalPutClaimer needs a real release() —
     without one an abandoned branch's or GC'd claim's version stays a
-    phantom claim in the store forever, blocking the streaming head
-    and vacuum's orphan GC permanently."""
+    phantom claim in the store forever, blocking vacuum's orphan GC
+    permanently."""
 
     def _claimer(self):
         from olap_project_spark.export.manifest_sink import (
@@ -503,9 +446,8 @@ class TestConditionalPutRelease:
     @staticmethod
     def _commit(path, kind="append", branch=None, tag="x"):
         """Drive ONE commit through the real driver-side protocol
-        in-process (a Spark write's commit step runs in a separate
-        Python worker where the injected claimer is invisible — same
-        technique as the round-10 seam tests)."""
+        in-process, with no Spark job — same technique as the round-10
+        seam tests."""
         import os as _os
 
         from olap_project_spark.export.manifest_sink import (
@@ -517,12 +459,11 @@ class TestConditionalPutRelease:
         opts = {"path": path, "kind": kind}
         if branch is not None:
             opts["branch"] = branch
-        w = ManifestWriter(opts, overwrite=False)
+        w = ManifestWriter(opts)
         w.commit([_PartCommit(file_name=f"part-{tag}.parquet", n_rows=1)])
 
     def test_abandon_branch_releases_store_claims(self, tmp_path):
         from olap_project_spark.export.manifest_sink import (
-            _stream_visible_head,
             abandon_branch,
             set_version_claimer,
         )
@@ -536,11 +477,12 @@ class TestConditionalPutRelease:
             assert len(store) == 2  # base + branch claim
             assert abandon_branch(path, "audit-wip") == 1
             # the claim left the store: version 2 is a reusable hole,
-            # not a permanent phantom holding the stream head at 1
+            # not a permanent phantom in flight
             assert len(store) == 1
-            assert _stream_visible_head(path) == 1
+            assert claimer.in_flight_versions(path) == set()
             self._commit(path, tag="next")  # reclaims version 2
-            assert _stream_visible_head(path) == 2
+            assert table_versions(path) == [1, 2]
+            assert claimer.in_flight_versions(path) == set()
         finally:
             set_version_claimer(prev)
 
@@ -585,7 +527,7 @@ class TestConditionalPutRelease:
             c.release(str(tmp_path), 1)
 
     def test_stale_gc_last_moment_reverify_spares_landed_commit(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         """A claim file that became a real manifest between the TTL
         check setup and the remove is spared (non-zero size), and its
@@ -597,7 +539,7 @@ class TestConditionalPutRelease:
         )
 
         path = str(tmp_path / "reverify")
-        _seed(registered, path, n=4)
+        _seed(spark, path, n=4)
         # a NON-empty but unparseable file models the half-landed racing
         # replace: too big to be a crashed claim, not yet valid JSON
         racing = _os.path.join(path, "_manifest-000002.json")
@@ -610,190 +552,33 @@ class TestConditionalPutRelease:
         assert _os.path.exists(racing)
 
 
-class TestBatchDataSourceReader:
-    """The public batch read leg: spark.read.format(fmt).load() plans
-    the committed file list, applies tombstones per task by the
-    sequence-number rule, time-travels via versionAsOf/tag, and (with
-    pushdown enabled) skips files the zone maps provably exclude."""
-
-    def test_public_read_matches_library_fold(self, registered, tmp_path):
-        path = str(tmp_path / "pub")
-        _seed(registered, path, n=50, parts=2)
-        merge_upsert(registered, path, _updates(registered, 40, 60), ["k"])
-        from olap_project_spark.export.manifest_sink import delete_where
-
-        delete_where(
-            registered, path, registered.range(0, 5).selectExpr("id as k")
-        )
-        pub = (
-            registered.read.format("manifest_sink")
-            .option("path", path)
-            .load()
-        )
-        lib = read_committed(registered, path, NUM_SCHEMA)
-        assert pub.count() == 55  # 50 - 10 replaced + 20 upserted - 5 del
-        diff = pub.exceptAll(lib).unionAll(lib.exceptAll(pub))
-        assert diff.isEmpty()
-
-    def test_time_travel_options(self, registered, tmp_path):
-        from olap_project_spark.export.manifest_sink import tag_snapshot
-
-        path = str(tmp_path / "tt")
-        _seed(registered, path, n=10)
-        merge_upsert(registered, path, _updates(registered, 0, 5), ["k"])
-        tag_snapshot(path, "pre-merge", version=1)
-        v1 = (
-            registered.read.format("manifest_sink")
-            .option("path", path)
-            .option("versionAsOf", "1")
-            .load()
-        )
-        assert v1.count() == 10 and v1.filter("v = 9.0").count() == 0
-        tagged = (
-            registered.read.format("manifest_sink")
-            .option("path", path)
-            .option("tag", "pre-merge")
-            .load()
-        )
-        assert tagged.count() == 10
-        with pytest.raises(Exception, match="not both"):
-            (
-                registered.read.format("manifest_sink")
-                .option("path", path)
-                .option("versionAsOf", "1")
-                .option("tag", "pre-merge")
-                .load()
-                .count()
-            )
-
-    def test_pushdown_prunes_files_not_rows(self, registered, tmp_path):
-        """Disjoint-range files + a pushed range filter: the scan plans
-        fewer input partitions (files), while results stay exact
-        because Spark re-applies the filter on the survivors."""
-        path = str(tmp_path / "prune")
-        for lo in (0, 100, 200, 300):
-            (
-                registered.range(lo, lo + 100)
-                .selectExpr("id as k", "cast(1.0 as double) as v")
-                .repartition(1)
-                .write.format("manifest_sink")
-                .option("path", path)
-                .mode("append")
-                .save()
-            )
-        child = registered.newSession()
-        child.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-        from olap_project_spark.export.manifest_sink import (
-            ensure_manifest_sink,
-        )
-
-        fmt = ensure_manifest_sink(child)
-        full = (
-            child.read.format(fmt)
-            .option("path", path)
-            .option("pushdown", "true")
-            .load()
-        )
-        assert full.rdd.getNumPartitions() == 4
-        hit = full.filter("k >= 250")
-        assert hit.count() == 150
-        assert hit.rdd.getNumPartitions() == 2  # files [200,300) + [300,400)
-        none = full.filter("k < 0")
-        assert none.count() == 0
-        assert none.rdd.getNumPartitions() == 1  # the empty-scan stub
-
-    def test_pushdown_prunes_by_transform_range(self, registered, tmp_path):
-        """A TIMESTAMP filter prunes files through the recorded
-        hidden-partition transform ranges — the pushdown path zone
-        maps cannot serve (they track int/float/string only)."""
-        from olap_project_spark.export.manifest_sink import (
-            ensure_manifest_sink,
-            write_partitioned,
-        )
-
-        ensure_manifest_sink(registered)
-        path = str(tmp_path / "ts_push")
-        frame = registered.range(0, 96).selectExpr(
-            "id as k",
-            "timestamp'2024-01-01 00:00:00' + make_interval(0,0,0,0,"
-            "cast(id as int),0,0) as ts",
-            "cast(1.0 as double) as v",
-        )
-        write_partitioned(registered, frame, path, "ts", "days", n_files=4)
-        child = registered.newSession()
-        child.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-        fmt = ensure_manifest_sink(child)
-        full = (
-            child.read.format(fmt)
-            .option("path", path)
-            .option("pushdown", "true")
-            .load()
-        )
-        assert full.rdd.getNumPartitions() == 4
-        day = full.filter(
-            "ts >= timestamp'2024-01-02 00:00:00' "
-            "and ts < timestamp'2024-01-03 00:00:00'"
-        )
-        assert day.count() == 24
-        assert day.rdd.getNumPartitions() <= 2  # transform-pruned
-
-    def test_pruned_merge_file_still_tombstones(self, registered, tmp_path):
-        """A pushed filter that excludes the MERGE's own data file must
+class TestPrunedReadTombstones:
+    def test_pruned_merge_file_still_tombstones(self, spark, tmp_path):
+        """A pruned read that excludes the MERGE's own data file must
         not resurrect the pre-merge rows it tombstoned: file pruning
         and tombstone application are independent."""
         path = str(tmp_path / "tomb")
-        _seed(registered, path, n=10)  # v = 1.0, k in [0, 10)
-        # merge rows land at k in [100, 105) with v = 9.0, but they
-        # REPLACE nothing; also upsert k=3 to v=9.0 at key 3
-        upd = registered.createDataFrame(
+        _seed(spark, path, n=10)  # v = 1.0, k in [0, 10)
+        # the merge upserts k=3 to v=9.0 and inserts k in [100, 105):
+        # no merge data file holds a key in [0, 2]
+        upd = spark.createDataFrame(
             [(3, 9.0)] + [(100 + i, 9.0) for i in range(5)], NUM_SCHEMA
         )
-        merge_upsert(registered, path, upd, ["k"])
-        child = registered.newSession()
-        child.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-        from olap_project_spark.export.manifest_sink import (
-            ensure_manifest_sink,
-        )
-
-        fmt = ensure_manifest_sink(child)
-        # filter k < 50 prunes the merge file (zone map [3, 104] — NOT
-        # prunable actually, k=3 keeps it; use v = 1.0? filters on k
-        # only: read k <= 2 — merge file zone map [3,104] IS excluded)
-        low = (
-            child.read.format(fmt)
-            .option("path", path)
-            .option("pushdown", "true")
-            .load()
-            .filter("k <= 2")
-        )
-        assert low.count() == 3
-        # k=3 was tombstoned by the merge; the old row must NOT appear
-        # in a scan whose pushed filter pruned the merge data file
-        k3 = (
-            child.read.format(fmt)
-            .option("path", path)
-            .option("pushdown", "true")
-            .load()
-            .filter("k = 3")
-            .collect()
-        )
-        assert [(r["k"], r["v"]) for r in k3] == [(3, 9.0)]
-
-    def test_vanilla_session_reads_without_library(self, registered, tmp_path):
-        """A session that never imported the library (simulated by the
-        base format registration only) reads the table via the public
-        API — the symmetric read leg the round-10 verdict asked for."""
-        path = str(tmp_path / "vanilla")
-        _seed(registered, path, n=8)
-        # the module-scope `registered` fixture registered the PLAIN
-        # class name; a load through it needs no helper imports
-        df = (
-            registered.read.format("manifest_sink")
-            .option("path", path)
-            .load()
-        )
-        assert df.count() == 8
-        assert set(df.columns) == {"k", "v"}
+        merge_upsert(spark, path, upd, ["k"])
+        merge_files = {
+            f["file_name"] for f in table_files(path) if f["version"] == 2
+        }
+        kept, total = plan_pruned_files(path, "k", 0, 2)
+        assert total == 1 + len(merge_files)
+        assert kept and not merge_files & set(kept)
+        # the read of k in [0, 2] scans only the seed file, which holds
+        # the pre-merge k=3 row: the merge's tombstone still drops it
+        low = read_pruned(spark, path, NUM_SCHEMA, "k", 0, 2)
+        assert sorted((r["k"], r["v"]) for r in low.collect()) == [
+            (k, 1.0) for k in range(10) if k != 3
+        ]
+        k3 = read_pruned(spark, path, NUM_SCHEMA, "k", 3, 3).filter("k = 3")
+        assert [(r["k"], r["v"]) for r in k3.collect()] == [(3, 9.0)]
 
 
 class TestReviewFixesR11:
@@ -803,7 +588,7 @@ class TestReviewFixesR11:
     release-incapable-claimer degradation."""
 
     def test_vacuum_guard_survives_commit_landing_mid_pass(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         """A commit that lands BETWEEN vacuum's scan loop and the
         claimer derivation is readable there (not in-flight) yet
@@ -820,7 +605,7 @@ class TestReviewFixesR11:
         )
 
         path = str(tmp_path / "midpass")
-        _seed(registered, path, n=4)
+        _seed(spark, path, n=4)
         # version 2 is mid-commit: staging file written, manifest
         # still the empty O_EXCL claim
         staging = _os.path.join(path, "_staging")
@@ -871,7 +656,7 @@ class TestReviewFixesR11:
         assert list(_transform_array(spec, arr)) == [-1]
 
     def test_compact_range_preserves_hidden_partitioning(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         """A SCOPED rewrite must not strip the transform metadata:
         retained files keep their recorded ranges, new files get
@@ -879,24 +664,22 @@ class TestReviewFixesR11:
         import datetime as dt
 
         from olap_project_spark.export.manifest_sink import (
-            ensure_manifest_sink,
             plan_pruned_files,
             read_committed,
             write_partitioned,
         )
 
-        ensure_manifest_sink(registered)
         path = str(tmp_path / "scoped_keep")
-        frame = registered.range(0, 96).selectExpr(
+        frame = spark.range(0, 96).selectExpr(
             "id as k",
             "timestamp'2024-01-01 00:00:00' + make_interval(0,0,0,0,"
             "cast(id as int),0,0) as ts",
             "cast(1.0 as double) as v",
         )
-        write_partitioned(registered, frame, path, "ts", "days", n_files=4)
+        write_partitioned(spark, frame, path, "ts", "days", n_files=4)
         # scoped rewrite over the LOW k range only
         res = compact_range(
-            registered, path, "k bigint, ts timestamp, v double",
+            spark, path, "k bigint, ts timestamp, v double",
             "k", 0, 10, n_files=1,
         )
         assert res["n_rewritten"] >= 1 and res["n_retained"] >= 1
@@ -906,35 +689,26 @@ class TestReviewFixesR11:
         assert len(kept) < total, "transform metadata lost in rewrite"
         got = (
             read_committed(
-                registered, path, "k bigint, ts timestamp, v double"
+                spark, path, "k bigint, ts timestamp, v double"
             )
             .filter("ts >= '2024-01-03' and ts < '2024-01-04'")
             .count()
         )
         assert got == 24
 
-    def test_zero_row_files_provably_excluded(self, registered, tmp_path):
+    def test_zero_row_files_provably_excluded(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import (
-            ensure_manifest_sink,
             plan_pruned_files,
         )
 
-        from olap_project_spark.export.manifest_sink import save_manifest
-
-        ensure_manifest_sink(registered)
         path = str(tmp_path / "zeros")
-        df = registered.createDataFrame(
+        df = spark.createDataFrame(
             [(1, 1.0), (2, 1.0)], NUM_SCHEMA
         ).repartition(4)
         # lazy-create default: 2 rows over 4 partitions stage only the
         # non-empty files (1 or 2 depending on round-robin placement)
         # — zero-row files never land at all
-        (
-            df.write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
-        )
+        save_manifest(df, path)
         kept, total = plan_pruned_files(path, "k", -10**9, 10**9)
         assert 1 <= total <= 2
         # no empty files exist, so the full-range plan keeps them all
@@ -949,7 +723,7 @@ class TestReviewFixesR11:
         assert len(kept2) <= 2  # empty files never planned
 
     def test_commit_token_attributes_the_right_version(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         import json as _json
         import os as _os
@@ -959,12 +733,12 @@ class TestReviewFixesR11:
         )
 
         path = str(tmp_path / "token")
-        _seed(registered, path, n=4)
+        _seed(spark, path, n=4)
         res1 = merge_upsert(
-            registered, path, _updates(registered, 0, 2, v=5.0), ["k"]
+            spark, path, _updates(spark, 0, 2, v=5.0), ["k"]
         )
         res2 = merge_upsert(
-            registered, path, _updates(registered, 0, 2, v=7.0), ["k"]
+            spark, path, _updates(spark, 0, 2, v=7.0), ["k"]
         )
         # same keys, two merges: each call reported ITS OWN version
         assert (res1["version"], res2["version"]) == (2, 3)
@@ -1037,21 +811,19 @@ class TestMultiFieldSpec:
             "cast(1.0 as double) as v",
         )
 
-    def test_both_fields_prune_independently(self, registered, tmp_path):
+    def test_both_fields_prune_independently(self, spark, tmp_path):
         import datetime as dt
 
         from olap_project_spark.export.manifest_sink import (
-            ensure_manifest_sink,
             plan_pruned_files,
             read_committed,
             write_partitioned,
         )
 
-        ensure_manifest_sink(registered)
         path = str(tmp_path / "multi")
         write_partitioned(
-            registered,
-            self._frame(registered),
+            spark,
+            self._frame(spark),
             path,
             transforms=[("ts", "days"), ("u", "bucket", 8)],
             n_files=16,
@@ -1069,7 +841,7 @@ class TestMultiFieldSpec:
         assert len(both) < len(kept_day)
         got = (
             read_committed(
-                registered, path, self.TS_SCHEMA, _keep=both
+                spark, path, self.TS_SCHEMA, _keep=both
             )
             .filter(
                 "u = 3 and ts >= '2024-01-02' and ts < '2024-01-03'"
@@ -1077,7 +849,7 @@ class TestMultiFieldSpec:
             .count()
         )
         want = (
-            self._frame(registered)
+            self._frame(spark)
             .filter(
                 "u = 3 and ts >= '2024-01-02' and ts < '2024-01-03'"
             )
@@ -1086,21 +858,19 @@ class TestMultiFieldSpec:
         assert got == want > 0
 
     def test_manifest_records_spec_list_and_per_field_ranges(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         import json as _json
         import os as _os
 
         from olap_project_spark.export.manifest_sink import (
-            ensure_manifest_sink,
             write_partitioned,
         )
 
-        ensure_manifest_sink(registered)
         path = str(tmp_path / "multirec")
         write_partitioned(
-            registered,
-            self._frame(registered, hours=24),
+            spark,
+            self._frame(spark, hours=24),
             path,
             transforms=[("ts", "days"), ("u", "bucket", 8)],
             n_files=4,
@@ -1115,44 +885,39 @@ class TestMultiFieldSpec:
         for ranges in m["file_partitions"].values():
             assert len(ranges) == 2  # one range per field
 
-    def test_pushdown_composes_both_fields(self, registered, tmp_path):
+    def test_pushdown_composes_both_fields(self, spark, tmp_path):
+        """Each field prunes through its own range; a pruned read over
+        the day's files answers the combined probe exactly."""
+        import datetime as dt
+
         from olap_project_spark.export.manifest_sink import (
-            ensure_manifest_sink,
             write_partitioned,
         )
 
-        ensure_manifest_sink(registered)
         path = str(tmp_path / "multipush")
         write_partitioned(
-            registered,
-            self._frame(registered),
+            spark,
+            self._frame(spark),
             path,
             transforms=[("ts", "days"), ("u", "bucket", 8)],
             n_files=16,
         )
-        child = registered.newSession()
-        child.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-        fmt = ensure_manifest_sink(child)
-        base = (
-            child.read.format(fmt)
-            .option("path", path)
-            .option("pushdown", "true")
-            .load()
-        )
-        assert base.rdd.getNumPartitions() == 16
-        probe = base.filter(
+        lo = dt.datetime(2024, 1, 2)
+        hi = dt.datetime(2024, 1, 2, 23, 59, 59)
+        kept_day, total = plan_pruned_files(path, "ts", lo, hi)
+        kept_u, _ = plan_pruned_files(path, "u", 3, 3)
+        assert total == 16
+        assert len(set(kept_day) & set(kept_u)) < 6  # both fields pruned
+        probe = (
             "u = 3 and ts >= timestamp'2024-01-02 00:00:00' "
             "and ts < timestamp'2024-01-03 00:00:00'"
         )
-        assert probe.rdd.getNumPartitions() < 6  # both fields pruned
-        assert probe.count() == base.filter(
-            "u = 3 and ts >= timestamp'2024-01-02 00:00:00' "
-            "and ts < timestamp'2024-01-03 00:00:00'"
-        ).count()
-        ensure_manifest_sink(registered)
+        day = read_pruned(spark, path, self.TS_SCHEMA, "ts", lo, hi)
+        full = read_committed(spark, path, self.TS_SCHEMA)
+        assert day.filter(probe).count() == full.filter(probe).count() > 0
 
     def test_single_field_form_unchanged_on_disk(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         """Round-11 back-compat: a one-field spec still writes the bare
         dict + flat range shape."""
@@ -1160,15 +925,13 @@ class TestMultiFieldSpec:
         import os as _os
 
         from olap_project_spark.export.manifest_sink import (
-            ensure_manifest_sink,
             write_partitioned,
         )
 
-        ensure_manifest_sink(registered)
         path = str(tmp_path / "singleform")
         write_partitioned(
-            registered,
-            self._frame(registered, hours=24),
+            spark,
+            self._frame(spark, hours=24),
             path,
             "ts",
             "days",
@@ -1181,25 +944,23 @@ class TestMultiFieldSpec:
             assert len(rng) == 2 and not isinstance(rng[0], list)
 
     def test_compaction_preserves_multi_field_spec(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         from olap_project_spark.export.manifest_sink import (
-            ensure_manifest_sink,
             plan_pruned_files,
             write_partitioned,
         )
 
-        ensure_manifest_sink(registered)
         path = str(tmp_path / "multicompact")
         write_partitioned(
-            registered,
-            self._frame(registered),
+            spark,
+            self._frame(spark),
             path,
             transforms=[("ts", "days"), ("u", "bucket", 8)],
             n_files=8,
         )
         compact_snapshots(
-            registered,
+            spark,
             path,
             self.TS_SCHEMA,
             partition_by=[("ts", "days"), ("u", "bucket", 8)],
@@ -1208,44 +969,3 @@ class TestMultiFieldSpec:
         kept_u, total = plan_pruned_files(path, "u", 3, 3)
         assert total == 8 and len(kept_u) < total
 
-
-class TestBatchReaderPlan:
-    def test_public_batch_reader_plan_and_pruning(self, spark, tmp_path):
-        """The public DataSource read compiles to a BatchScan of the
-        scoped source with the pushed filter RE-APPLIED above it in
-        the same codegen stage (the conservative-pruning contract),
-        and the pushdown shrinks the scan's input partitions to the
-        files the zone maps cannot exclude."""
-        from olap_project_spark.export.manifest_sink import (
-            ensure_manifest_sink,
-        )
-
-        child = spark.newSession()
-        child.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-        fmt = ensure_manifest_sink(child)
-        path = str(tmp_path / "reader_plan")
-        for lo in (0, 100, 200, 300):
-            (
-                child.range(lo, lo + 100)
-                .selectExpr("id as k", "cast(1.0 as double) as v")
-                .repartition(1)
-                .write.format(fmt)
-                .option("path", path)
-                .mode("append")
-                .save()
-            )
-        df = (
-            child.read.format(fmt)
-            .option("path", path)
-            .option("pushdown", "true")
-            .load()
-            .filter("k >= 250")
-        )
-        p = df._jdf.queryExecution().executedPlan().toString()
-        assert "BatchScan" in p
-        assert "(k#" in p and ">= 250" in p  # Spark re-applies the filter
-        assert df.rdd.getNumPartitions() == 2  # 2 of 4 files pruned
-        assert df.count() == 150
-        # restore the parent as the JVM-thread-active session for
-        # later writers in the suite
-        ensure_manifest_sink(spark)

@@ -9,69 +9,52 @@ import os
 import pytest
 
 from olap_project_spark.export.manifest_sink import (
-    ManifestSinkDataSource,
     read_committed,
     save_manifest,
 )
-
-
-@pytest.fixture(scope="module")
-def registered(spark):
-    try:
-        spark.dataSource.register(ManifestSinkDataSource)
-    except Exception:  # noqa: BLE001 — already registered this session
-        pass
-    return spark
 
 
 SCHEMA = "k bigint, v string"
 
 
 def _write(spark, path, rows):
-    (
-        spark.createDataFrame(rows, SCHEMA)
-        .repartition(4)
-        .write.format("manifest_sink")
-        .option("path", path)
-        .mode("append")
-        .save()
-    )
+    save_manifest(spark.createDataFrame(rows, SCHEMA).repartition(4), path)
 
 
 class TestManifestSink:
-    def test_round_trip_and_manifest_shape(self, registered, tmp_path):
+    def test_round_trip_and_manifest_shape(self, spark, tmp_path):
         path = str(tmp_path / "wh")
         rows = [(i, f"v{i}") for i in range(100)]
-        _write(registered, path, rows)
+        _write(spark, path, rows)
         manifests = [e for e in os.listdir(path) if e.startswith("_manifest-")]
         assert len(manifests) == 1
         m = json.load(open(os.path.join(path, manifests[0])))
         assert m["n_rows"] == 100 and len(m["files"]) == 4
-        back = read_committed(registered, path, SCHEMA)
+        back = read_committed(spark, path, SCHEMA)
         assert sorted((r["k"], r["v"]) for r in back.collect()) == rows
 
-    def test_appends_accumulate_one_manifest_each(self, registered, tmp_path):
+    def test_appends_accumulate_one_manifest_each(self, spark, tmp_path):
         path = str(tmp_path / "wh2")
-        _write(registered, path, [(1, "a")])
-        _write(registered, path, [(2, "b")])
-        assert read_committed(registered, path, SCHEMA).count() == 2
+        _write(spark, path, [(1, "a")])
+        _write(spark, path, [(2, "b")])
+        assert read_committed(spark, path, SCHEMA).count() == 2
         assert (
             len([e for e in os.listdir(path) if e.startswith("_manifest-")]) == 2
         )
 
-    def test_uncommitted_staging_is_invisible(self, registered, tmp_path):
+    def test_uncommitted_staging_is_invisible(self, spark, tmp_path):
         path = str(tmp_path / "wh3")
-        _write(registered, path, [(1, "a")])
+        _write(spark, path, [(1, "a")])
         # simulate a crashed attempt: orphan staging file, no manifest
         orphan = os.path.join(path, "_staging", "part-deadbeef.jsonl")
         with open(orphan, "w") as f:
             f.write(json.dumps({"k": 99, "v": "ghost"}) + "\n")
-        got = read_committed(registered, path, SCHEMA)
+        got = read_committed(spark, path, SCHEMA)
         assert [r["k"] for r in got.collect()] == [1]
 
 
 class TestTimeTravel:
-    def test_as_of_reads_each_snapshot(self, registered, spark, tmp_path):
+    def test_as_of_reads_each_snapshot(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import (
             read_committed,
             table_versions,
@@ -79,12 +62,8 @@ class TestTimeTravel:
 
         path = str(tmp_path / "tt")
         schema = "k bigint, v string"
-        spark.createDataFrame([(1, "a")], schema).write.format(
-            "manifest_sink"
-        ).option("path", path).mode("append").save()
-        spark.createDataFrame([(2, "b")], schema).write.format(
-            "manifest_sink"
-        ).option("path", path).mode("append").save()
+        save_manifest(spark.createDataFrame([(1, "a")], schema), path)
+        save_manifest(spark.createDataFrame([(2, "b")], schema), path)
         versions = table_versions(path)
         assert versions == [1, 2]
         from pyspark.sql.types import StructType
@@ -97,14 +76,14 @@ class TestTimeTravel:
         latest = read_committed(spark, path, sch)
         assert sorted(r["k"] for r in latest.collect()) == [1, 2]
 
-    def test_manifest_carries_its_version(self, registered, spark, tmp_path):
+    def test_manifest_carries_its_version(self, spark, tmp_path):
         import json
         import os
 
         path = str(tmp_path / "ver")
-        spark.createDataFrame([(1, "a")], "k bigint, v string").write.format(
-            "manifest_sink"
-        ).option("path", path).mode("append").save()
+        save_manifest(
+            spark.createDataFrame([(1, "a")], "k bigint, v string"), path
+        )
         entries = [e for e in os.listdir(path) if e.startswith("_manifest-")]
         assert entries == ["_manifest-000001.json"]
         m = json.load(open(os.path.join(path, entries[0])))
@@ -113,7 +92,7 @@ class TestTimeTravel:
 
 class TestCompaction:
     def test_rewrite_preserves_state_and_time_travel(
-        self, registered, spark, tmp_path
+        self, spark, tmp_path
     ):
         from olap_project_spark.export.manifest_sink import (
             compact_snapshots,
@@ -125,9 +104,7 @@ class TestCompaction:
         schema = "k bigint, v string"
         sch = spark.createDataFrame([(0, "x")], schema).schema
         for k, v in [(1, "a"), (2, "b"), (3, "c")]:
-            spark.createDataFrame([(k, v)], schema).write.format(
-                "manifest_sink"
-            ).option("path", path).mode("append").save()
+            save_manifest(spark.createDataFrame([(k, v)], schema), path)
         ver = compact_snapshots(spark, path, sch)
         assert ver == 4
         # state after compaction == state before
@@ -137,9 +114,7 @@ class TestCompaction:
         v2 = read_committed(spark, path, sch, as_of=2)
         assert sorted(r["k"] for r in v2.collect()) == [1, 2]
         # appends after compaction stack on the rewrite base
-        spark.createDataFrame([(4, "d")], schema).write.format(
-            "manifest_sink"
-        ).option("path", path).mode("append").save()
+        save_manifest(spark.createDataFrame([(4, "d")], schema), path)
         after = read_committed(spark, path, sch)
         assert sorted(r["k"] for r in after.collect()) == [1, 2, 3, 4]
         assert table_versions(path) == [1, 2, 3, 4, 5]
@@ -150,7 +125,7 @@ class TestVacuum:
     Delta VACUUM contract on the manifest table)."""
 
     def test_vacuum_collects_orphans_and_expires_to_rewrite_base(
-        self, registered, spark, tmp_path
+        self, spark, tmp_path
     ):
         from olap_project_spark.export.manifest_sink import (
             compact_snapshots,
@@ -161,8 +136,8 @@ class TestVacuum:
         from olap_project_spark.export.manifest_sink import table_history
 
         path = str(tmp_path / "whv")
-        _write(registered, path, [(i, f"a{i}") for i in range(3)])
-        _write(registered, path, [(i, f"b{i}") for i in (10, 11)])
+        _write(spark, path, [(i, f"a{i}") for i in range(3)])
+        _write(spark, path, [(i, f"b{i}") for i in (10, 11)])
         n_append_files = sum(h["n_files"] for h in table_history(path))
         # a failed attempt whose abort never ran
         orphan = os.path.join(path, "_staging", "part-zombie.jsonl")
@@ -194,7 +169,7 @@ class TestVacuum:
         assert read_committed(spark, path, SCHEMA, as_of=3).count() == 5
 
     def test_vacuum_without_rewrite_removes_only_orphans(
-        self, registered, spark, tmp_path
+        self, spark, tmp_path
     ):
         from olap_project_spark.export.manifest_sink import (
             table_versions,
@@ -202,7 +177,7 @@ class TestVacuum:
         )
 
         path = str(tmp_path / "whn")
-        _write(registered, path, [(1, "x")])
+        _write(spark, path, [(1, "x")])
         with open(os.path.join(path, "_staging", "part-orphan.jsonl"), "w") as f:
             f.write('{"k": 2, "v": "y"}\n')
         stats = vacuum_snapshots(path)
@@ -211,27 +186,27 @@ class TestVacuum:
         assert table_versions(path) == [1]
         assert read_committed(spark, path, SCHEMA).count() == 1
 
-    def test_vacuum_rejects_non_rewrite_base(self, registered, spark, tmp_path):
+    def test_vacuum_rejects_non_rewrite_base(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import (
             compact_snapshots,
             vacuum_snapshots,
         )
 
         path = str(tmp_path / "whr")
-        _write(registered, path, [(1, "x")])
-        _write(registered, path, [(2, "y")])
+        _write(spark, path, [(1, "x")])
+        _write(spark, path, [(2, "y")])
         compact_snapshots(spark, path, SCHEMA)
         with pytest.raises(ValueError, match="not a main rewrite"):
             vacuum_snapshots(path, keep_from=2)
 
-    def test_vacuum_is_idempotent(self, registered, spark, tmp_path):
+    def test_vacuum_is_idempotent(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import (
             compact_snapshots,
             vacuum_snapshots,
         )
 
         path = str(tmp_path / "whi")
-        _write(registered, path, [(1, "x")])
+        _write(spark, path, [(1, "x")])
         compact_snapshots(spark, path, SCHEMA)
         first = vacuum_snapshots(path)
         assert first["expired_manifests"] == 1
@@ -260,7 +235,7 @@ op_strategy = st.sampled_from(["append", "orphan", "compact", "vacuum"])
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(st.lists(op_strategy, min_size=1, max_size=6))
-def test_vacuum_preserves_committed_state(registered, spark, tmp_path, ops):
+def test_vacuum_preserves_committed_state(spark, tmp_path, ops):
     from olap_project_spark.export.manifest_sink import (
         compact_snapshots,
         table_versions,
@@ -275,7 +250,7 @@ def test_vacuum_preserves_committed_state(registered, spark, tmp_path, ops):
         if op == "append":
             rows = [(next_k + i, f"r{next_k + i}") for i in range(2)]
             next_k += 2
-            _write(registered, path, rows)
+            _write(spark, path, rows)
             model.extend(rows)
         elif op == "orphan":
             staging = os.path.join(path, "_staging")
@@ -309,19 +284,14 @@ def test_vacuum_preserves_committed_state(registered, spark, tmp_path, ops):
 
 
 class TestSchemaEvolution:
-    def test_non_additive_evolution_rejected(self, registered, tmp_path):
+    def test_non_additive_evolution_rejected(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import table_schema
 
         path = str(tmp_path / "evo_bad")
-        _write(registered, path, [(1, "a")])
+        _write(spark, path, [(1, "a")])
         # a write that DROPS column v must be caught, naming its version
-        (
-            registered.createDataFrame([(2,)], "k bigint")
-            .coalesce(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
+        save_manifest(
+            spark.createDataFrame([(2,)], "k bigint").coalesce(1), path
         )
         with pytest.raises(ValueError, match="version 2 .* differs"):
             table_schema(path)
@@ -339,7 +309,7 @@ class TestSchemaEvolution:
         ids=["rename", "analyze"],
     )
     def test_retired_log_entries_rejected(
-        self, registered, tmp_path, entry, key
+        self, spark, tmp_path, entry, key
     ):
         """A log entry written by a retired table verb (here a column
         rename and a distinct-value sketch) is refused by every fold,
@@ -348,23 +318,23 @@ class TestSchemaEvolution:
         from olap_project_spark.export.manifest_sink import table_schema
 
         path = str(tmp_path / "retired")
-        _write(registered, path, [(1, "a")])
+        _write(spark, path, [(1, "a")])
         m = {**entry, "files": [], "version": 2}
         with open(os.path.join(path, "_manifest-000002.json"), "w") as f:
             json.dump(m, f)
         want = f"version 2 .*'{key}'"
         with pytest.raises(ValueError, match=want):
-            read_committed(registered, path, SCHEMA)
+            read_committed(spark, path, SCHEMA)
         with pytest.raises(ValueError, match=want):
             table_schema(path)
 
     def test_schemaless_legacy_manifests_tolerated(
-        self, registered, spark, tmp_path
+        self, spark, tmp_path
     ):
         from olap_project_spark.export.manifest_sink import table_schema
 
         path = str(tmp_path / "legacy")
-        _write(registered, path, [(1, "a")])
+        _write(spark, path, [(1, "a")])
         # simulate a pre-evolution manifest: strip the schema field
         m_file = next(
             os.path.join(path, e)
@@ -376,12 +346,12 @@ class TestSchemaEvolution:
         json.dump(m, open(m_file, "w"))
         assert table_schema(path) is None
         # read_committed with an explicit schema still works unchanged
-        back = read_committed(registered, path, SCHEMA)
+        back = read_committed(spark, path, SCHEMA)
         assert back.count() == 1
 
 
 class TestFileSkipping:
-    def test_zone_maps_prune_files_not_rows(self, registered, tmp_path):
+    def test_zone_maps_prune_files_not_rows(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import (
             plan_pruned_files,
             read_pruned,
@@ -390,41 +360,35 @@ class TestFileSkipping:
         path = str(tmp_path / "zm")
         # three disjoint key ranges → three single-file appends
         for lo in (0, 100, 200):
-            (
-                registered.createDataFrame(
-                    [(lo + i, f"v{lo + i}") for i in range(50)], SCHEMA
-                )
-                .coalesce(1)
-                .write.format("manifest_sink")
-                .option("path", path)
-                .mode("append")
-                .save()
+            rows = [(lo + i, f"v{lo + i}") for i in range(50)]
+            save_manifest(
+                spark.createDataFrame(rows, SCHEMA).coalesce(1), path
             )
         files, total = plan_pruned_files(path, "k", 120, 130)
         assert total == 3 and len(files) == 1
         got = (
-            read_pruned(registered, path, SCHEMA, "k", 120, 130)
+            read_pruned(spark, path, SCHEMA, "k", 120, 130)
             .filter("k BETWEEN 120 AND 130")
             .count()
         )
         assert got == 11
         # skipping may drop FILES, never ROWS: equal to the full scan
         full = (
-            read_committed(registered, path, SCHEMA)
+            read_committed(spark, path, SCHEMA)
             .filter("k BETWEEN 120 AND 130")
             .count()
         )
         assert got == full
 
     def test_files_without_stats_conservatively_kept(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         import json as _json
 
         from olap_project_spark.export.manifest_sink import plan_pruned_files
 
         path = str(tmp_path / "zm_legacy")
-        _write(registered, path, [(1, "a"), (2, "b")])
+        _write(spark, path, [(1, "a"), (2, "b")])
         m_file = next(
             os.path.join(path, e)
             for e in os.listdir(path)
@@ -440,50 +404,45 @@ class TestFileSkipping:
         files, total = plan_pruned_files(path, "k", 10**9, 10**9 + 1)
         assert len(files) == total  # nothing provably excludable
 
-    def test_null_bearing_column_never_prunes(self, registered, tmp_path):
+    def test_null_bearing_column_never_prunes(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import plan_pruned_files
 
         path = str(tmp_path / "zm_nulls")
-        (
-            registered.createDataFrame(
-                [(1, "a"), (None, "b")], SCHEMA
-            )
-            .coalesce(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
+        save_manifest(
+            spark.createDataFrame([(1, "a"), (None, "b")], SCHEMA)
+            .coalesce(1),
+            path,
         )
         files, total = plan_pruned_files(path, "k", 10**9, 10**9 + 1)
         assert len(files) == total == 1  # null seen → zone map disabled
 
 
 class TestVersionDelta:
-    def test_delta_reads_only_new_rows(self, registered, tmp_path):
+    def test_delta_reads_only_new_rows(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import read_version_delta
 
         path = str(tmp_path / "cdf")
-        _write(registered, path, [(i, f"v{i}") for i in range(10)])
-        _write(registered, path, [(i, f"v{i}") for i in range(10, 25)])
-        d01 = read_version_delta(registered, path, SCHEMA, 0, 1)
-        d12 = read_version_delta(registered, path, SCHEMA, 1, 2)
+        _write(spark, path, [(i, f"v{i}") for i in range(10)])
+        _write(spark, path, [(i, f"v{i}") for i in range(10, 25)])
+        d01 = read_version_delta(spark, path, SCHEMA, 0, 1)
+        d12 = read_version_delta(spark, path, SCHEMA, 1, 2)
         assert d01.count() == 10 and d12.count() == 15
-        assert read_version_delta(registered, path, SCHEMA, 2, 2).count() == 0
+        assert read_version_delta(spark, path, SCHEMA, 2, 2).count() == 0
 
-    def test_delta_across_rewrite_rejected(self, registered, spark, tmp_path):
+    def test_delta_across_rewrite_rejected(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import (
             compact_snapshots,
             read_version_delta,
         )
 
         path = str(tmp_path / "cdf_rw")
-        _write(registered, path, [(1, "a")])
-        _write(registered, path, [(2, "b")])
-        compact_snapshots(registered, path, SCHEMA)  # version 3 = rewrite
+        _write(spark, path, [(1, "a")])
+        _write(spark, path, [(2, "b")])
+        compact_snapshots(spark, path, SCHEMA)  # version 3 = rewrite
         with pytest.raises(ValueError, match="rewrite"):
-            read_version_delta(registered, path, SCHEMA, 1, 3)
+            read_version_delta(spark, path, SCHEMA, 1, 3)
         # a delta range before the rewrite still works
-        assert read_version_delta(registered, path, SCHEMA, 0, 2).count() == 2
+        assert read_version_delta(spark, path, SCHEMA, 0, 2).count() == 2
 
 
 class TestColumnarDataPlane:
@@ -494,18 +453,18 @@ class TestColumnarDataPlane:
     plan, predicate pushdown into the scan, and the JSONL migration
     path."""
 
-    def test_staging_files_are_parquet(self, registered, tmp_path):
+    def test_staging_files_are_parquet(self, spark, tmp_path):
         path = str(tmp_path / "colwh")
-        _write(registered, path, [(i, f"v{i}") for i in range(20)])
+        _write(spark, path, [(i, f"v{i}") for i in range(20)])
         staging = os.listdir(os.path.join(path, "_staging"))
         assert staging and all(n.endswith(".parquet") for n in staging)
 
     def test_committed_scan_prunes_columns_and_pushes_filters(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         path = str(tmp_path / "colwh2")
-        _write(registered, path, [(i, f"v{i}") for i in range(50)])
-        scan = read_committed(registered, path, SCHEMA).select("k").filter(
+        _write(spark, path, [(i, f"v{i}") for i in range(50)])
+        scan = read_committed(spark, path, SCHEMA).select("k").filter(
             "k = 7"
         )
         plan = scan._jdf.queryExecution().executedPlan().toString()
@@ -515,7 +474,7 @@ class TestColumnarDataPlane:
         assert "EqualTo(k,7)" in plan, plan
         assert scan.count() == 1
 
-    def test_legacy_jsonl_files_remain_readable(self, registered, tmp_path):
+    def test_legacy_jsonl_files_remain_readable(self, spark, tmp_path):
         """Pre-columnar tables (JSONL staging files) still read, and a
         compaction migrates them to parquet — the format-migration
         story."""
@@ -525,7 +484,7 @@ class TestColumnarDataPlane:
 
         path = str(tmp_path / "legacy")
         # new-format commit first
-        _write(registered, path, [(1, "new")])
+        _write(spark, path, [(1, "new")])
         # hand-write a legacy JSONL commit (what the pre-round-9 writer
         # produced): a staging .jsonl file + a manifest referencing it
         staging = os.path.join(path, "_staging")
@@ -541,21 +500,21 @@ class TestColumnarDataPlane:
                 },
                 f,
             )
-        back = read_committed(registered, path, SCHEMA)
+        back = read_committed(spark, path, SCHEMA)
         assert sorted((r.k, r.v) for r in back.collect()) == [
             (1, "new"),
             (2, "old"),
         ]
         # compaction rewrites the mixed table into pure parquet
-        compact_snapshots(registered, path, SCHEMA)
+        compact_snapshots(spark, path, SCHEMA)
         from olap_project_spark.export.manifest_sink import _committed_files
 
         assert all(
             n.endswith(".parquet") for n, _ in _committed_files(path)
         )
-        assert read_committed(registered, path, SCHEMA).count() == 2
+        assert read_committed(spark, path, SCHEMA).count() == 2
 
-    def test_scoped_delete_reads_legacy_jsonl_files(self, registered, tmp_path):
+    def test_scoped_delete_reads_legacy_jsonl_files(self, spark, tmp_path):
         """A delete followed by a re-insert scopes its filter to the files
         it precedes by ``_metadata.file_name``; the legacy JSONL scan
         takes that filter too, and a legacy JSONL tombstone still
@@ -567,7 +526,7 @@ class TestColumnarDataPlane:
         )
 
         path = str(tmp_path / "legacy_scoped")
-        _write(registered, path, [(1, "new")])
+        _write(spark, path, [(1, "new")])
         staging = os.path.join(path, "_staging")
         legacy = {
             "part-legacy0.jsonl": [{"k": k, "v": "old"} for k in (2, 3, 4)],
@@ -592,22 +551,22 @@ class TestColumnarDataPlane:
             ) as f:
                 json.dump({**m, "n_rows": 1, "version": version}, f)
         delete_where(
-            registered, path, registered.createDataFrame([(1,), (2,)], "k bigint")
+            spark, path, spark.createDataFrame([(1,), (2,)], "k bigint")
         )
-        _write(registered, path, [(2, "again")])
+        _write(spark, path, [(2, "again")])
         for _ in range(2):  # the fold, then the materialized table
-            back = read_committed(registered, path, SCHEMA)
+            back = read_committed(spark, path, SCHEMA)
             assert sorted((r.k, r.v) for r in back.collect()) == [
                 (2, "again"),
                 (4, "old"),
             ]
-            maintain(registered, path, SCHEMA, MaintenancePolicy(col="k"))
+            maintain(spark, path, SCHEMA, MaintenancePolicy(col="k"))
         assert not [n for n in os.listdir(staging) if n.endswith(".jsonl")]
 
 
 class TestVacuumInFlightGuard:
     def test_orphan_gc_skipped_under_in_flight_commit(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         """A version file claimed via O_EXCL but not yet replaced with
         content is a commit in flight: its freshly-written staging
@@ -620,7 +579,7 @@ class TestVacuumInFlightGuard:
         )
 
         path = str(tmp_path / "vwh")
-        _write(registered, path, [(1, "a")])
+        _write(spark, path, [(1, "a")])
         staging = os.path.join(path, "_staging")
         # the in-flight commit: claimed (empty) version file + its
         # freshly-written staging data
@@ -658,50 +617,50 @@ class TestDeletionVectors:
     states, pruned reads that never resurrect rows, the append-only
     CDF guard, and compaction as the materialization point."""
 
-    def _table(self, registered, tmp_path):
+    def _table(self, spark, tmp_path):
         path = str(tmp_path / "dv")
-        _write(registered, path, [(i, f"v{i}") for i in range(5)])  # v1
+        _write(spark, path, [(i, f"v{i}") for i in range(5)])  # v1
         from olap_project_spark.export.manifest_sink import delete_where
 
         delete_where(
-            registered, path, registered.createDataFrame([(1,), (3,)], "k bigint")
+            spark, path, spark.createDataFrame([(1,), (3,)], "k bigint")
         )  # v2
-        _write(registered, path, [(1, "reborn")])  # v3
+        _write(spark, path, [(1, "reborn")])  # v3
         return path
 
-    def test_merge_on_read_with_reinsert(self, registered, tmp_path):
-        path = self._table(registered, tmp_path)
+    def test_merge_on_read_with_reinsert(self, spark, tmp_path):
+        path = self._table(spark, tmp_path)
         got = sorted(
-            (r.k, r.v) for r in read_committed(registered, path, SCHEMA).collect()
+            (r.k, r.v) for r in read_committed(spark, path, SCHEMA).collect()
         )
         # keys 1 and 3 deleted at v2; key 1 re-inserted at v3 SURVIVES
         # (the sequence-number rule) while 3 stays gone
         assert got == [(0, "v0"), (1, "reborn"), (2, "v2"), (4, "v4")]
 
-    def test_time_travel_spans_the_delete(self, registered, tmp_path):
-        path = self._table(registered, tmp_path)
-        assert read_committed(registered, path, SCHEMA, as_of=1).count() == 5
-        assert read_committed(registered, path, SCHEMA, as_of=2).count() == 3
+    def test_time_travel_spans_the_delete(self, spark, tmp_path):
+        path = self._table(spark, tmp_path)
+        assert read_committed(spark, path, SCHEMA, as_of=1).count() == 5
+        assert read_committed(spark, path, SCHEMA, as_of=2).count() == 3
 
-    def test_pruned_read_applies_tombstones(self, registered, tmp_path):
+    def test_pruned_read_applies_tombstones(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import read_pruned
 
-        path = self._table(registered, tmp_path)
+        path = self._table(spark, tmp_path)
         got = sorted(
-            r.k for r in read_pruned(registered, path, SCHEMA, "k", 0, 9).collect()
+            r.k for r in read_pruned(spark, path, SCHEMA, "k", 0, 9).collect()
         )
         assert got == [0, 1, 2, 4]
 
-    def test_cdf_rejects_delete_crossing_range(self, registered, tmp_path):
+    def test_cdf_rejects_delete_crossing_range(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import read_version_delta
 
-        path = self._table(registered, tmp_path)
+        path = self._table(spark, tmp_path)
         with pytest.raises(ValueError, match="delete"):
-            read_version_delta(registered, path, SCHEMA, 1, 3)
+            read_version_delta(spark, path, SCHEMA, 1, 3)
         # ranges not crossing the delete still work
-        assert read_version_delta(registered, path, SCHEMA, 2, 3).count() == 1
+        assert read_version_delta(spark, path, SCHEMA, 2, 3).count() == 1
 
-    def test_compaction_materializes_deletes(self, registered, tmp_path):
+    def test_compaction_materializes_deletes(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import (
             _committed_files,
             compact_snapshots,
@@ -709,11 +668,11 @@ class TestDeletionVectors:
             vacuum_snapshots,
         )
 
-        path = self._table(registered, tmp_path)
+        path = self._table(spark, tmp_path)
         before = sorted(
-            (r.k, r.v) for r in read_committed(registered, path, SCHEMA).collect()
+            (r.k, r.v) for r in read_committed(spark, path, SCHEMA).collect()
         )
-        compact_snapshots(registered, path, SCHEMA)
+        compact_snapshots(spark, path, SCHEMA)
         hist = table_history(path)
         assert [h["kind"] for h in hist] == [
             "append",
@@ -723,24 +682,24 @@ class TestDeletionVectors:
         ]
         # post-compaction state identical, now tombstone-free
         after = sorted(
-            (r.k, r.v) for r in read_committed(registered, path, SCHEMA).collect()
+            (r.k, r.v) for r in read_committed(spark, path, SCHEMA).collect()
         )
         assert after == before
         vacuum_snapshots(path)
         assert sorted(
-            (r.k, r.v) for r in read_committed(registered, path, SCHEMA).collect()
+            (r.k, r.v) for r in read_committed(spark, path, SCHEMA).collect()
         ) == before
         # no tombstone manifests survive the expiry
         from olap_project_spark.export.manifest_sink import _log
 
         assert [m.get("kind") for _, m in _log(path)] == ["rewrite"]
 
-    def test_delete_schema_excluded_from_evolution(self, registered, tmp_path):
+    def test_delete_schema_excluded_from_evolution(self, spark, tmp_path):
         """The tombstone key schema is a SUBSET of the table schema by
         design; it must not trip the add-only evolution check."""
         from olap_project_spark.export.manifest_sink import table_schema
 
-        path = self._table(registered, tmp_path)
+        path = self._table(spark, tmp_path)
         sch = table_schema(path)
         assert sch is not None and {f.name for f in sch.fields} == {"k", "v"}
 
@@ -751,61 +710,53 @@ class TestWriteAuditPublish:
     published (atomic tag drop); publish is fast-forward-only; a red
     audit abandons the branch with pure GC."""
 
-    def _w(self, registered, path, rows, branch=None):
-        wr = (
-            registered.createDataFrame(rows, SCHEMA)
-            .coalesce(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-        )
-        if branch:
-            wr = wr.option("branch", branch)
-        wr.save()
+    def _w(self, spark, path, rows, branch=None):
+        df = spark.createDataFrame(rows, SCHEMA).coalesce(1)
+        save_manifest(df, path, **({"branch": branch} if branch else {}))
 
-    def test_branch_isolation_and_publish(self, registered, tmp_path):
+    def test_branch_isolation_and_publish(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import publish_branch
 
         path = str(tmp_path / "wap")
-        self._w(registered, path, [(0, "a"), (1, "b")])
-        self._w(registered, path, [(2, "staged")], branch="audit")
+        self._w(spark, path, [(0, "a"), (1, "b")])
+        self._w(spark, path, [(2, "staged")], branch="audit")
         # main readers blind to the staged commit; the branch reader
         # sees main + staged (branch-from-main-head)
-        assert read_committed(registered, path, SCHEMA).count() == 2
+        assert read_committed(spark, path, SCHEMA).count() == 2
         assert (
-            read_committed(registered, path, SCHEMA, branch="audit").count()
+            read_committed(spark, path, SCHEMA, branch="audit").count()
             == 3
         )
         assert publish_branch(path, "audit") == [2]
-        assert read_committed(registered, path, SCHEMA).count() == 3
+        assert read_committed(spark, path, SCHEMA).count() == 3
 
-    def test_abandon_is_pure_gc(self, registered, tmp_path):
+    def test_abandon_is_pure_gc(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import (
             _committed_files,
             abandon_branch,
         )
 
         path = str(tmp_path / "wap2")
-        self._w(registered, path, [(0, "a")])
-        self._w(registered, path, [(1, "BAD")], branch="audit")
+        self._w(spark, path, [(0, "a")])
+        self._w(spark, path, [(1, "BAD")], branch="audit")
         assert abandon_branch(path, "audit") == 1
-        assert read_committed(registered, path, SCHEMA).count() == 1
+        assert read_committed(spark, path, SCHEMA).count() == 1
         # no dangling staging files: every staging file is referenced
         staging = os.listdir(os.path.join(path, "_staging"))
         referenced = {f for f, _ in _committed_files(path)}
         assert set(staging) == referenced
 
-    def test_publish_is_fast_forward_only(self, registered, tmp_path):
+    def test_publish_is_fast_forward_only(self, spark, tmp_path):
         from olap_project_spark.export.manifest_sink import publish_branch
 
         path = str(tmp_path / "wap3")
-        self._w(registered, path, [(0, "a")])
-        self._w(registered, path, [(1, "staged")], branch="b")
-        self._w(registered, path, [(2, "mainmoved")])  # main advances
+        self._w(spark, path, [(0, "a")])
+        self._w(spark, path, [(1, "staged")], branch="b")
+        self._w(spark, path, [(2, "mainmoved")])  # main advances
         with pytest.raises(ValueError, match="fast-forward"):
             publish_branch(path, "b")
         # main unaffected by the failed publish
-        assert read_committed(registered, path, SCHEMA).count() == 2
+        assert read_committed(spark, path, SCHEMA).count() == 2
 
 
 # ---------------------------------------------------------------------------
@@ -827,7 +778,7 @@ lifecycle_op = st.sampled_from(
 )
 @given(st.lists(lifecycle_op, min_size=2, max_size=7))
 def test_full_lifecycle_preserves_committed_state(
-    registered, spark, tmp_path, ops
+    spark, tmp_path, ops
 ):
     from olap_project_spark.export.manifest_sink import (
         abandon_branch,
@@ -846,47 +797,40 @@ def test_full_lifecycle_preserves_committed_state(
         if op == "append":
             rows = [(next_k + i, f"r{next_k + i}") for i in range(2)]
             next_k += 2
-            _write(registered, path, rows)
+            _write(spark, path, rows)
             model.extend(rows)
         elif op == "delete":
             if not model:
                 continue
             k = model[0][0]
             delete_where(
-                registered,
+                spark,
                 path,
-                registered.createDataFrame([(k,)], "k bigint").repartition(1),
+                spark.createDataFrame([(k,)], "k bigint").repartition(1),
             )
             model = [r for r in model if r[0] != k]
         elif op == "stage_publish":
             rows = [(next_k, f"b{next_k}")]
             next_k += 1
-            (
-                registered.createDataFrame(rows, SCHEMA)
-                .repartition(1)
-                .write.format("manifest_sink")
-                .option("path", path)
-                .option("branch", "wip")
-                .mode("append")
-                .save()
+            save_manifest(
+                spark.createDataFrame(rows, SCHEMA).repartition(1),
+                path,
+                branch="wip",
             )
             # main must not see it until the publish
             got = sorted(
                 (r["k"], r["v"])
-                for r in read_committed(registered, path, SCHEMA).collect()
+                for r in read_committed(spark, path, SCHEMA).collect()
             )
             assert got == sorted(model)
             publish_branch(path, "wip")
             model.extend(rows)
         elif op == "stage_abandon":
-            (
-                registered.createDataFrame([(-9, "bad")], SCHEMA)
-                .repartition(1)
-                .write.format("manifest_sink")
-                .option("path", path)
-                .option("branch", "trash")
-                .mode("append")
-                .save()
+            save_manifest(
+                spark.createDataFrame([(-9, "bad")], SCHEMA)
+                .repartition(1),
+                path,
+                branch="trash",
             )
             abandon_branch(path, "trash")
         elif op == "orphan":
@@ -899,7 +843,7 @@ def test_full_lifecycle_preserves_committed_state(
         elif op == "compact":
             if not table_versions(path):
                 continue
-            latest_rewrite = compact_snapshots(registered, path, SCHEMA)
+            latest_rewrite = compact_snapshots(spark, path, SCHEMA)
         elif op == "vacuum":
             if not os.path.isdir(path):
                 continue
@@ -909,54 +853,9 @@ def test_full_lifecycle_preserves_committed_state(
         if os.path.isdir(path):
             got = sorted(
                 (r["k"], r["v"])
-                for r in read_committed(registered, path, SCHEMA).collect()
+                for r in read_committed(spark, path, SCHEMA).collect()
             )
             assert got == sorted(model), op
-
-
-class TestStreamTail:
-    def test_tail_rejects_rewrite_in_range(self, registered, tmp_path):
-        """A compaction inside the un-consumed range must fail the
-        tail loudly (append-only CDF rule), not silently re-deliver."""
-        import uuid as _uuid
-
-        from olap_project_spark.export.manifest_sink import (
-            compact_snapshots,
-            ensure_manifest_sink,
-        )
-
-        fmt = ensure_manifest_sink(registered)
-        path = str(tmp_path / "tailrw")
-        _write(registered, path, [(1, "a")])
-        compact_snapshots(registered, path, SCHEMA)
-        name = "tailrw_" + _uuid.uuid4().hex[:6]
-        from pyspark.errors.exceptions.captured import (
-            StreamingQueryException,
-        )
-
-        q = (
-            registered.readStream.format(fmt)
-            .option("path", path)
-            .load()
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        with pytest.raises(StreamingQueryException, match="append-only"):
-            q.awaitTermination(120)
-
-    def test_schema_discovered_from_log(self, registered, tmp_path):
-        from olap_project_spark.export.manifest_sink import (
-            ensure_manifest_sink,
-        )
-
-        fmt = ensure_manifest_sink(registered)
-        path = str(tmp_path / "tailschema")
-        _write(registered, path, [(7, "x")])
-        stream = registered.readStream.format(fmt).option("path", path).load()
-        assert [f.name for f in stream.schema.fields] == ["k", "v"]
 
 
 class TestWriterFailureAndReporting:
@@ -981,9 +880,7 @@ class TestWriterFailureAndReporting:
 
         monkeypatch.setattr(pq, "ParquetWriter", Tracking)
         schema = StructType([StructField("k", LongType())])
-        writer = ManifestWriter(
-            {"path": str(tmp_path / "t")}, overwrite=False, schema=schema
-        )
+        writer = ManifestWriter({"path": str(tmp_path / "t")}, schema=schema)
         writer.BATCH_ROWS = 2  # flush (and open the file) on the first batch
 
         def batches():
@@ -1014,7 +911,7 @@ class TestWriterFailureAndReporting:
 
 @pytest.mark.parametrize("phase", ["task", "before_claim", "after_claim"])
 def test_failed_save_is_invisible_and_retry_commits_once(
-    registered, spark, tmp_path, phase
+    spark, tmp_path, phase
 ):
     """save_manifest fails at one commit phase: a task raises mid-write;
     every task wrote and the driver fails before the version claim; or

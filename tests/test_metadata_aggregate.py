@@ -9,26 +9,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from olap_project_spark.export.manifest_sink import (
-    ManifestSinkDataSource,
     compact_range,
     compact_snapshots,
     delete_where,
     metadata_aggregate,
+    save_manifest,
 )
 
 
 @pytest.fixture(scope="module")
-def registered(spark):
-    try:
-        spark.dataSource.register(ManifestSinkDataSource)
-    except Exception:  # noqa: BLE001 — already registered this session
-        pass
-    return spark
-
-
-@pytest.fixture(scope="module")
-def frame(registered):
-    return registered.range(0, 1000).select(
+def frame(spark):
+    return spark.range(0, 1000).select(
         F.col("id").cast("int").alias("k"),
         F.when(F.col("id") % 3 == 0, F.col("id").cast("double")).alias("nv"),
         F.concat(F.lit("s"), F.col("id")).alias("name"),
@@ -36,17 +27,11 @@ def frame(registered):
 
 
 def _write(df, path, n_parts=3):
-    (
-        df.repartition(n_parts)
-        .write.format("manifest_sink")
-        .option("path", path)
-        .mode("append")
-        .save()
-    )
+    save_manifest(df.repartition(n_parts), path)
 
 
 class TestExactness:
-    def test_counts_minmax_and_nulls(self, registered, frame, tmp_path):
+    def test_counts_minmax_and_nulls(self, spark, frame, tmp_path):
         path = str(tmp_path / "t")
         _write(frame.filter("k < 600"), path)
         _write(frame.filter("k >= 600"), path, n_parts=2)
@@ -73,17 +58,17 @@ class TestExactness:
             agg["cols"]["name"]["max"],
         ) == (t["smin"], t["smax"])
 
-    def test_survives_partial_compaction(self, registered, frame, tmp_path):
+    def test_survives_partial_compaction(self, spark, frame, tmp_path):
         path = str(tmp_path / "t")
         _write(frame, path)
         before = metadata_aggregate(path, cols=["nv"], minmax_cols=["k"])
-        compact_range(registered, path, frame.schema, "k", 0, 100, n_files=1)
+        compact_range(spark, path, frame.schema, "k", 0, 100, n_files=1)
         after = metadata_aggregate(path, cols=["nv"], minmax_cols=["k"])
         assert after == before
 
 class TestStrictness:
     def test_rejects_minmax_on_null_bearing_column(
-        self, registered, frame, tmp_path
+        self, spark, frame, tmp_path
     ):
         path = str(tmp_path / "t")
         _write(frame, path)
@@ -93,31 +78,31 @@ class TestStrictness:
         agg = metadata_aggregate(path, cols=["nv"])
         assert "min" not in agg["cols"]["nv"]
 
-    def test_rejects_tombstones(self, registered, frame, tmp_path):
+    def test_rejects_tombstones(self, spark, frame, tmp_path):
         path = str(tmp_path / "t")
         _write(frame, path)
         delete_where(
-            registered, path, registered.createDataFrame([(1,)], "k int")
+            spark, path, spark.createDataFrame([(1,)], "k int")
         )
         with pytest.raises(ValueError, match="tombstones"):
             metadata_aggregate(path)
 
     def test_materialized_tombstones_dont_block(
-        self, registered, frame, tmp_path
+        self, spark, frame, tmp_path
     ):
         """delete → compact: the old delete manifest persists below the
         rewrite but is already materialized, so it must not block."""
         path = str(tmp_path / "t")
         _write(frame.filter("k < 2"), path, n_parts=1)
         delete_where(
-            registered, path, registered.createDataFrame([(1,)], "k int")
+            spark, path, spark.createDataFrame([(1,)], "k int")
         )
-        compact_snapshots(registered, path, None)
+        compact_snapshots(spark, path, None)
         assert metadata_aggregate(path, cols=["k"])["n_rows"] == 1
-        compact_snapshots(registered, path, None)
+        compact_snapshots(spark, path, None)
         assert metadata_aggregate(path, cols=["k"])["n_rows"] == 1
 
-    def test_rejects_unknown_column(self, registered, frame, tmp_path):
+    def test_rejects_unknown_column(self, spark, frame, tmp_path):
         """A typo must never read as an all-null column."""
         path = str(tmp_path / "t")
         _write(frame.filter("k < 2"), path, n_parts=1)

@@ -11,28 +11,20 @@ import datetime
 import pytest
 
 from olap_project_spark.export.manifest_sink import (
-    ManifestSinkDataSource,
     MaintenancePolicy,
     current_partition_spec,
     maintain,
     metadata_aggregate,
     plan_pruned_files,
     read_committed,
+    read_pruned,
+    save_manifest,
     set_partition_spec,
     table_history,
     table_partitions,
     table_schema,
     write_partitioned,
 )
-
-
-@pytest.fixture(scope="module")
-def registered(spark):
-    try:
-        spark.dataSource.register(ManifestSinkDataSource)
-    except Exception:  # noqa: BLE001 — already registered this session
-        pass
-    return spark
 
 
 def _events(spark, lo_day, hi_day):
@@ -46,11 +38,11 @@ def _events(spark, lo_day, hi_day):
 
 class TestDeclaredSpec:
     def test_alter_commit_and_writer_inheritance(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         path = str(tmp_path / "t")
         write_partitioned(
-            registered, _events(registered, 1, 5), path, "ts", "days",
+            spark, _events(spark, 1, 5), path, "ts", "days",
             n_files=2,
         )
         assert current_partition_spec(path) == [
@@ -63,34 +55,34 @@ class TestDeclaredSpec:
         ]
         # a writer with NO explicit transform inherits the declared spec
         write_partitioned(
-            registered, _events(registered, 5, 9), path, n_files=2
+            spark, _events(spark, 5, 9), path, n_files=2
         )
         assert v == 2
 
     def test_spec_only_alter_creates_no_naming_eras(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         """A spec evolution must not trip any rename-era machinery:
         plain reads, metadata aggregates, and schema discovery all
         behave as if never altered."""
         path = str(tmp_path / "t")
         write_partitioned(
-            registered, _events(registered, 1, 3), path, "ts", "days",
+            spark, _events(spark, 1, 3), path, "ts", "days",
             n_files=1,
         )
         set_partition_spec(path, ("ts", "month"))
         sch = table_schema(path)
         assert [f.name for f in sch.fields] == ["ts", "v"]
-        assert read_committed(registered, path, sch).count() == 4
+        assert read_committed(spark, path, sch).count() == 4
         agg = metadata_aggregate(path, minmax_cols=["v"])
         assert agg["n_rows"] == 4
 
-    def test_rejections(self, registered, tmp_path):
+    def test_rejections(self, spark, tmp_path):
         path = str(tmp_path / "t")
         with pytest.raises(ValueError, match="no recorded schema"):
             set_partition_spec(path, ("ts", "days"))
         write_partitioned(
-            registered, _events(registered, 1, 3), path, "ts", "days",
+            spark, _events(spark, 1, 3), path, "ts", "days",
             n_files=1,
         )
         with pytest.raises(ValueError, match="unknown column"):
@@ -101,18 +93,18 @@ class TestDeclaredSpec:
 
 class TestMixedSpecPruning:
     def test_both_eras_prune_under_their_own_spec(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         path = str(tmp_path / "t")
         # era A: days(ts), 4 files over Jan 1-8
         write_partitioned(
-            registered, _events(registered, 1, 9), path, "ts", "days",
+            spark, _events(spark, 1, 9), path, "ts", "days",
             n_files=4,
         )
         set_partition_spec(path, [("ts", "hours")])
         # era B: hours(ts) via writer inheritance, 4 files Jan 9-16
         write_partitioned(
-            registered, _events(registered, 9, 17), path, n_files=4
+            spark, _events(spark, 9, 17), path, n_files=4
         )
         # a ts range inside era A prunes era-A files by the days
         # transform AND all era-B files by the hours transform
@@ -129,16 +121,16 @@ class TestMixedSpecPruning:
         assert not set(keep) & set(keep2)
 
     def test_table_partitions_references_declared_spec(
-        self, registered, tmp_path
+        self, spark, tmp_path
     ):
         path = str(tmp_path / "t")
         write_partitioned(
-            registered, _events(registered, 1, 5), path, "ts", "days",
+            spark, _events(spark, 1, 5), path, "ts", "days",
             n_files=2,
         )
         set_partition_spec(path, ("ts", "month"))
         write_partitioned(
-            registered, _events(registered, 5, 9), path, n_files=1
+            spark, _events(spark, 5, 9), path, n_files=1
         )
         # era-A files are unaccounted under the new declared spec
         with pytest.raises(ValueError, match="no value-level"):
@@ -154,7 +146,7 @@ class TestMixedSpecPruning:
 
 
 class TestMaintenancePreservesSpec:
-    def test_materialize_keeps_the_spec(self, registered, tmp_path):
+    def test_materialize_keeps_the_spec(self, spark, tmp_path):
         """maintain materializes a delete by rewriting only the file it
         hits: the reads equal the model, the rewritten file records the
         CURRENT (month) spec, and the declared spec survives."""
@@ -162,26 +154,26 @@ class TestMaintenancePreservesSpec:
 
         path = str(tmp_path / "t")
         write_partitioned(
-            registered, _events(registered, 1, 9), path, "ts", "days",
+            spark, _events(spark, 1, 9), path, "ts", "days",
             n_files=4,
         )
         set_partition_spec(path, ("ts", "month"))
         delete_where(
-            registered,
+            spark,
             path,
-            registered.createDataFrame([(100,)], "v int"),
+            spark.createDataFrame([(100,)], "v int"),
         )
         report = maintain(
-            registered,
+            spark,
             path,
             None,
             MaintenancePolicy(col="v", vacuum=False),
         )
         assert report["actions"] == ["materialize"]
         want = sorted(
-            tuple(r) for r in _events(registered, 1, 9).collect() if r.v != 100
+            tuple(r) for r in _events(spark, 1, 9).collect() if r.v != 100
         )
-        got = read_committed(registered, path, table_schema(path)).collect()
+        got = read_committed(spark, path, table_schema(path)).collect()
         assert sorted(tuple(r) for r in got) == want
         assert current_partition_spec(path)[0]["kind"] == "month"
         # the one rewritten file (days 1-2 less the deleted row) is
@@ -197,39 +189,33 @@ class TestMaintenancePreservesSpec:
         ]
 
 
-class TestStreamAcrossMetadataAlters:
-    def test_tail_passes_spec_alters(self, registered, tmp_path):
-        """A spec-only alter is pure metadata: the fixed-schema tail
-        reads on by DEFAULT."""
-        from olap_project_spark.export.manifest_sink import (
-            ensure_manifest_sink,
-        )
-
-        fmt = ensure_manifest_sink(registered)
+class TestMaintainAcrossSpecAlter:
+    def test_scoped_compaction_crosses_a_pending_alter(
+        self, spark, tmp_path
+    ):
+        """Small-file pressure over a table whose spec changed after
+        its files were written: the pass compacts the flagged ranges,
+        and every read still equals the model. The retained files
+        carry no range under the new spec, so pruning keeps them."""
         path = str(tmp_path / "t")
-        for row in ((1, 10), (2, 20)):
-            (
-                registered.createDataFrame([row], "k int, v int")
-                .coalesce(1)
-                .write.format(fmt)
-                .option("path", path)
-                .mode("append")
-                .save()
-            )
-            if row[0] == 1:
-                set_partition_spec(path, ("k", "bucket", 4))
-        rows = []
-        q = (
-            registered.readStream.format(fmt)
-            .option("path", path)
-            .load()
-            .writeStream.foreachBatch(
-                lambda df, _i: rows.extend((r.k, r.v) for r in df.collect())
-            )
-            .option("checkpointLocation", str(tmp_path / "c1"))
-            .trigger(availableNow=True)
-            .start()
+        model = []
+        for i in range(6):
+            rows = [(k, k * 10) for k in range(i * 10, i * 10 + 10)]
+            df = spark.createDataFrame(rows, "k bigint, v bigint")
+            save_manifest(df.coalesce(1), path)
+            model += rows
+        set_partition_spec(path, ("k", "truncate", 20))
+        policy = MaintenancePolicy(
+            col="k", n_ranges=2, min_files=2, vacuum=False
         )
-        q.awaitTermination(120)
-        # the metadata alter passes silently; both appends delivered
-        assert sorted(rows) == [(1, 10), (2, 20)]
+        report = maintain(spark, path, None, policy)
+        assert any(a.startswith("compact_range") for a in report["actions"])
+        sch = table_schema(path)
+        rows = read_committed(spark, path, sch).collect()
+        assert sorted(tuple(r) for r in rows) == model
+        for lo, hi in ((0, 9), (15, 42), (55, 70)):
+            pruned = read_pruned(spark, path, sch, "k", lo, hi)
+            rows = pruned.filter(f"k between {lo} and {hi}").collect()
+            assert sorted(tuple(r) for r in rows) == [
+                r for r in model if lo <= r[0] <= hi
+            ]

@@ -12,31 +12,22 @@ import pytest
 
 from olap_project_spark.export.manifest_sink import (
     PART_VALUES_CAP,
-    ManifestSinkDataSource,
     compact_range,
     delete_where,
+    save_manifest,
     table_partitions,
     write_partitioned,
 )
 
 
 @pytest.fixture(scope="module")
-def registered(spark):
-    try:
-        spark.dataSource.register(ManifestSinkDataSource)
-    except Exception:  # noqa: BLE001 — already registered this session
-        pass
-    return spark
-
-
-@pytest.fixture(scope="module")
-def events(registered):
+def events(spark):
     rows = [
         (datetime.datetime(2024, 1, d % 5 + 1, h % 24, 0, 0), d)
         for d in range(1, 30)
         for h in range(3)
     ]
-    return registered.createDataFrame(rows, "ts timestamp, v int")
+    return spark.createDataFrame(rows, "ts timestamp, v int")
 
 
 def _truth(events, *exprs):
@@ -51,9 +42,9 @@ def _truth(events, *exprs):
 
 
 class TestExactCounts:
-    def test_single_field_days(self, registered, events, tmp_path):
+    def test_single_field_days(self, spark, events, tmp_path):
         path = str(tmp_path / "t")
-        write_partitioned(registered, events, path, "ts", "days", n_files=5)
+        write_partitioned(spark, events, path, "ts", "days", n_files=5)
         tp = table_partitions(path)
         meta = sorted(
             (tuple(e["partition"]), e["n_rows"]) for e in tp["partitions"]
@@ -64,10 +55,10 @@ class TestExactCounts:
             tp["partitions"]
         )
 
-    def test_multi_field_tuples(self, registered, events, tmp_path):
+    def test_multi_field_tuples(self, spark, events, tmp_path):
         path = str(tmp_path / "t")
         write_partitioned(
-            registered,
+            spark,
             events,
             path,
             transforms=[("ts", "days"), ("v", "bucket", 4)],
@@ -81,16 +72,16 @@ class TestExactCounts:
             events, "unix_date(cast(ts as date))", "pmod(v, 4)"
         )
 
-    def test_survives_partial_compaction(self, registered, events, tmp_path):
+    def test_survives_partial_compaction(self, spark, events, tmp_path):
         path = str(tmp_path / "t")
-        write_partitioned(registered, events, path, "ts", "days", n_files=5)
+        write_partitioned(spark, events, path, "ts", "days", n_files=5)
         def rows_only(parts):
             return sorted(
                 (tuple(e["partition"]), e["n_rows"]) for e in parts
             )
 
         before = table_partitions(path)["partitions"]
-        compact_range(registered, path, events.schema, "v", 1, 5, n_files=2)
+        compact_range(spark, path, events.schema, "v", 1, 5, n_files=2)
         after = table_partitions(path)
         assert after["unaccounted_files"] == 0
         # file counts change with the new layout; row counts never do
@@ -98,18 +89,11 @@ class TestExactCounts:
 
 
 class TestHonestDegradation:
-    def test_plain_append_is_unaccounted(self, registered, events, tmp_path):
+    def test_plain_append_is_unaccounted(self, spark, events, tmp_path):
         path = str(tmp_path / "t")
-        write_partitioned(registered, events, path, "ts", "days", n_files=5)
+        write_partitioned(spark, events, path, "ts", "days", n_files=5)
         # an append through the PLAIN writer records no spec/histogram
-        (
-            events.limit(3)
-            .repartition(1)
-            .write.format("manifest_sink")
-            .option("path", path)
-            .mode("append")
-            .save()
-        )
+        save_manifest(events.limit(3).repartition(1), path)
         with pytest.raises(ValueError, match="no value-level"):
             table_partitions(path)
         tp = table_partitions(path, strict=False)
@@ -117,9 +101,9 @@ class TestHonestDegradation:
         # the accounted subset is still the full first commit
         assert sum(e["n_rows"] for e in tp["partitions"]) == events.count()
 
-    def test_tuple_cap_disables_histogram(self, registered, tmp_path):
+    def test_tuple_cap_disables_histogram(self, spark, tmp_path):
         path = str(tmp_path / "t")
-        spark = registered
+        spark = spark
         n = PART_VALUES_CAP + 10
         rows = [
             (datetime.datetime(2024, 1, 1) + datetime.timedelta(days=i), i)
@@ -135,23 +119,16 @@ class TestHonestDegradation:
         assert tp["partitions"] == []
 
     def test_rejects_tombstones_and_specless_tables(
-        self, registered, events, tmp_path
+        self, spark, events, tmp_path
     ):
         path = str(tmp_path / "t")
-        write_partitioned(registered, events, path, "ts", "days", n_files=5)
+        write_partitioned(spark, events, path, "ts", "days", n_files=5)
         delete_where(
-            registered, path, registered.createDataFrame([(1,)], "v int")
+            spark, path, spark.createDataFrame([(1,)], "v int")
         )
         with pytest.raises(ValueError, match="tombstones"):
             table_partitions(path)
         plain = str(tmp_path / "plain")
-        (
-            events.limit(3)
-            .repartition(1)
-            .write.format("manifest_sink")
-            .option("path", plain)
-            .mode("append")
-            .save()
-        )
+        save_manifest(events.limit(3).repartition(1), plain)
         with pytest.raises(ValueError, match="no partition transform"):
             table_partitions(plain)
