@@ -1111,7 +1111,15 @@ def _read_files(
     Each ``drops`` predicate removes its matching rows. They apply to
     each format's scan before the union: a predicate may name the
     scan's ``_metadata.file_name``, which does not resolve over the
-    union."""
+    union.
+
+    The scan is one task when the files fit one partition: when they
+    total no more than ``min(spark.sql.files.openCostInBytes,
+    spark.sql.files.maxPartitionBytes)`` it is coalesced to one
+    partition, so a group-by, global aggregate, sort or window over it
+    plans no exchange (one job, no shuffle). The driver stats the
+    files until the running total passes the limit; a larger read
+    keeps Spark's split planning."""
     names = sorted(names)
     if not names:
         return local_frame(spark, [], schema)
@@ -1128,7 +1136,14 @@ def _read_files(
         for drop in drops:
             p = p.filter(~drop)
         df = p if df is None else df.unionByName(p)
-    return df
+    conf = spark._jsparkSession.sessionState().conf()
+    limit = min(conf.filesOpenCostInBytes(), conf.filesMaxPartitionBytes())
+    total = 0
+    for f in pq + js:
+        total += os.path.getsize(f)
+        if total > limit:
+            return df
+    return df.coalesce(1)
 
 
 def _read_staged(path: str, name: str, asch, columns=None) -> "pa.Table":  # noqa: F821
@@ -1260,7 +1275,8 @@ def read_committed(
     the union of all commits with version <= as_of, so a reader can
     reproduce yesterday's training set after today's append.
     Driver-side listing is O(#manifests); the data read is ONE
-    parallel columnar scan of exactly the live files.
+    columnar scan of exactly the live files, run as one task when the
+    files fit one partition (:func:`_read_files`).
 
     Row-level DELETES (Iceberg-v2-style equality deletes, written via
     :func:`delete_where`) apply MERGE-ON-READ: the log folds in commit

@@ -11,7 +11,9 @@ They are exercised against DuckDB in
 
 Scale: identical discipline to the rest of the library — map-side
 combinable aggregates, broadcast scalar stats, per-card windows,
-decimal-exact money sums.
+decimal-exact money sums. An aggregate bounded by the clock (at most 25
+hours) is coalesced to one task before its sort or window, so it needs
+no second exchange.
 """
 
 from __future__ import annotations
@@ -29,37 +31,45 @@ def _vnd(col: str = "Amount_VND"):
 
 def q0_merchant_rollup(txns: DataFrame) -> DataFrame:
     """Q0 end-of-period rollup (requirements.md:10-13): per merchant,
-    total VND value + count, at day→month→year→total levels in one pass
-    (GROUPING SETS via rollup)."""
-    return (
-        txns.rollup("Merchant_Name", "Year", "Month", "Day")
-        .agg(
-            F.sum(_vnd()).cast("double").alias("total_vnd"),
-            F.count("*").alias("n_txns"),
-        )
+    total VND value + count, at day→month→year→total levels (GROUPING
+    SETS via rollup). The rollup runs over the merchant-day aggregate,
+    so its five-way row expansion sees one row per merchant and day,
+    not one per transaction; decimal sums add exactly."""
+    keys = ["Merchant_Name", "Year", "Month", "Day"]
+    daily = txns.groupBy(*keys).agg(
+        F.sum(_vnd()).alias("vnd"), F.count("*").alias("n")
+    )
+    return daily.rollup(*keys).agg(
+        F.sum("vnd").cast("double").alias("total_vnd"),
+        F.sum("n").alias("n_txns"),
     )
 
 
 def q1_busiest_hours(txns: DataFrame) -> DataFrame:
-    """Q1 busiest time of day (requirements.md:42)."""
+    """Q1 busiest time of day (requirements.md:42). The hourly
+    aggregate has at most 25 rows, so it is sorted in one task: no
+    range-partition sampling job and no second shuffle."""
     return (
         txns.groupBy("Hour")
         .agg(F.count("*").alias("n_txns"))
+        .coalesce(1)
         .orderBy(F.desc("n_txns"), F.asc("Hour"))
     )
 
 
 def q1b_anomalous_hours(txns: DataFrame, k_sigma: float = 2.0) -> DataFrame:
     """Q1 anomaly half (requirements.md:43): hours whose txn count
-    exceeds mean + k·σ across hours (1-row broadcast stats)."""
-    hourly = txns.groupBy("Hour").agg(F.count("*").alias("n_txns"))
-    stats = hourly.agg(
-        F.avg(F.col("n_txns").cast("double")).alias("mu"),
-        F.stddev_samp(F.col("n_txns").cast("double")).alias("sigma"),
-    )
+    exceeds mean + k·σ across hours. The hourly aggregate has at most
+    25 rows, so its stats are a window over all of them in one task."""
+    n = F.col("n_txns").cast("double")
+    every_hour = Window.partitionBy()
     return (
-        hourly.join(F.broadcast(stats))
-        .filter(F.col("n_txns").cast("double") > F.col("mu") + k_sigma * F.col("sigma"))
+        txns.groupBy("Hour")
+        .agg(F.count("*").alias("n_txns"))
+        .coalesce(1)
+        .withColumn("_mu", F.avg(n).over(every_hour))
+        .withColumn("_sigma", F.stddev_samp(n).over(every_hour))
+        .filter(n > F.col("_mu") + k_sigma * F.col("_sigma"))
         .select("Hour", "n_txns")
     )
 

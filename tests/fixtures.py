@@ -1,7 +1,10 @@
 """Synthetic raw-transaction rows exercising every routing path
-(FIXTURES.md §1). Self-contained — no dependency on the reference repo."""
+(FIXTURES.md §1), and helpers the tests share. Self-contained — no
+dependency on the reference repo."""
 
 from __future__ import annotations
+
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -101,3 +104,15 @@ def load_table(spark: SparkSession, sf_dir: str, table: str = "events") -> DataF
         elif f.name == "ts" and isinstance(f.dataType, LongType):
             df = df.withColumn(f.name, F.timestamp_micros(F.expr("ts div 1000")))
     return df
+
+
+def count_jobs(spark: SparkSession, fn):
+    """(fn's result, number of Spark jobs fn launched)."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

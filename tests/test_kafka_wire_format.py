@@ -9,7 +9,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from olap_project_spark.schemas import RAW_TRANSACTION_SCHEMA
 from olap_project_spark.streaming.pipeline import (
     decode_kafka_value,
     encode_kafka_payload,

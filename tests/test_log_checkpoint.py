@@ -8,7 +8,6 @@ time travel, branches, restores, vacuum, and corruption."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest

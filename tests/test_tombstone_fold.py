@@ -36,20 +36,9 @@ from olap_project_spark.export.manifest_sink import (
     save_manifest,
     vacuum_snapshots,
 )
+from tests.fixtures import count_jobs
 
 SCHEMA = "k int, j string, v string"
-
-
-def _jobs(spark, fn):
-    """(fn's result, number of Spark jobs fn launched)."""
-    sc = spark.sparkContext
-    group = f"tombstone-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _table(spark, path, n_deletes):
@@ -66,7 +55,7 @@ def test_local_key_delete_launches_no_job(spark, tmp_path):
     path = str(tmp_path / "t")
     _table(spark, path, 0)
     keys = spark.createDataFrame(pa.table({"k": pa.array([1, 2], pa.int32())}))
-    _, jobs = _jobs(spark, lambda: delete_where(spark, path, keys))
+    _, jobs = count_jobs(spark, lambda: delete_where(spark, path, keys))
     assert jobs == 0
     assert read_committed(spark, path, SCHEMA).count() == 54
 
@@ -76,8 +65,8 @@ def test_deletes_add_no_read_jobs(spark, tmp_path):
     plain, deleted = str(tmp_path / "plain"), str(tmp_path / "deleted")
     _table(spark, plain, 0)
     _table(spark, deleted, 3)
-    n0, jobs0 = _jobs(spark, lambda: read_committed(spark, plain, SCHEMA).count())
-    n3, jobs3 = _jobs(spark, lambda: read_committed(spark, deleted, SCHEMA).count())
+    n0, jobs0 = count_jobs(spark, lambda: read_committed(spark, plain, SCHEMA).count())
+    n3, jobs3 = count_jobs(spark, lambda: read_committed(spark, deleted, SCHEMA).count())
     assert (n0, n3) == (60, 51)
     assert jobs3 == jobs0
 
@@ -385,7 +374,7 @@ def test_maintain_materializes_without_a_job(spark, tmp_path):
     with open(spared, "rb") as f:
         spared_bytes = f.read()
 
-    report, jobs = _jobs(
+    report, jobs = count_jobs(
         spark, lambda: maintain(spark, path, SCHEMA, MaintenancePolicy(col="k"))
     )
     assert jobs == 0

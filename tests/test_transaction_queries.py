@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from olap_project_spark.queries import transactions as T
 from olap_project_spark.schemas import RAW_TRANSACTION_SCHEMA
 from olap_project_spark.transforms import clean
-from tests.fixtures import query_rows, raw_transactions_df
+from tests.fixtures import count_jobs, query_rows, raw_transactions_df
 
 FIXED_TS = "2024-01-15 08:30:20"
 
@@ -79,6 +79,34 @@ class TestTransactionQueries:
         got = rows_of(T.q1_busiest_hours(df), ["Hour", "n_txns"])
         want = sql_rows(con, "SELECT Hour, COUNT(*) FROM txns GROUP BY Hour")
         assert_rows_match(got, want)
+
+    @pytest.mark.parametrize("query, sql", [
+        (T.q1_busiest_hours,
+         "SELECT Hour, COUNT(*) AS n FROM txns GROUP BY Hour "
+         "ORDER BY n DESC, Hour ASC NULLS FIRST"),
+        (T.q1b_anomalous_hours, """
+            WITH hourly AS (SELECT Hour, COUNT(*) n FROM txns GROUP BY Hour),
+            s AS (SELECT AVG(CAST(n AS DOUBLE)) mu, stddev_samp(CAST(n AS DOUBLE)) sigma FROM hourly)
+            SELECT Hour, n FROM hourly, s WHERE CAST(n AS DOUBLE) > mu + 2*sigma
+        """),
+    ], ids=["q1", "q1b"])
+    def test_hourly_queries_over_many_partitions_run_two_jobs(
+        self, spark, fact, tmp_path, query, sql
+    ):
+        """Over a multi-partition scan the hourly aggregate (at most 25
+        rows) is sorted or windowed in one task: no range-partition
+        sampling job, no broadcast job, no second shuffle."""
+        df, con = fact
+        out = str(tmp_path / "parts")
+        df.repartition(4).write.parquet(out)
+        scan = spark.read.parquet(out)
+        assert scan.rdd.getNumPartitions() > 1
+        got, jobs = count_jobs(spark, lambda: [tuple(r) for r in query(scan).collect()])
+        assert jobs <= 2
+        want = [tuple(r) for r in con.execute(sql).fetchall()]
+        if query is T.q1b_anomalous_hours:
+            got, want = sorted(got, key=_none_safe_key), sorted(want, key=_none_safe_key)
+        assert got == want
 
     def test_q1b_anomalous_hours(self, fact):
         df, con = fact
